@@ -45,7 +45,7 @@ object Bench {
     // graph, corpus statistics (TF-IDF double agg + size-gated vocabulary
     // join). Round 4: the CC headline entry is the ALT-STAR variant
     // (q75, O(log n) rounds) — the pipeline default at scale; q68 stays
-    // in the correctness gate as the simple-recurrence proof.
+    // in the correctness gate over the same alt-star operator.
     "q57_bolton_lcl", "q58_curvilinear_regrid", "q75_altstar_components",
     "q79_tfidf",
     // Round 6: time the density-clustering operators every round —

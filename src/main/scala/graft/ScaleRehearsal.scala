@@ -778,7 +778,7 @@ object ScaleRehearsal {
         s"case when id % 997 = 0 and id < ${n}L then id + 8 " +
           "else id + 7 end as __h")
       var res: (Seq[String], Seq[String], Int, Long,
-        org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = null
+        org.apache.spark.sql.DataFrame, graft.core.Caching.Cached) = null
       try {
         timed("syndiff_run") {
           res = CatalogManifest.diffFp(spark, oldFp, curFp, sameVars = true,
@@ -807,7 +807,7 @@ object ScaleRehearsal {
               s"driver rows for $n stores — must be O(changed), " +
               s"not O(catalog)")
         }
-      } finally if (res != null) res._6.unpersist()
+      } finally if (res != null) res._6.release()
     }
 
     // ---- round 20: REAL-store refresh — wave + frame diff + re-scan ------

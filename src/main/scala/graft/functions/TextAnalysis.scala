@@ -237,17 +237,17 @@ object TextAnalysis {
     // and the unigram model re-reads the token arrays — without the
     // cache, column pruning specializes each branch's plan and the
     // tokenizer re-runs per branch, single-task on a one-split corpus.
-    // Cache holds tokens packed per doc; released by the consuming
-    // wrapper (Caching.releaseTracked).
-    // partition-VISIBLE floor cache (Caching.acquireFloorPartitioned):
+    // Cache holds tokens packed per doc; every cache here stays until
+    // the consuming wrapper releases it (Dedup.releaseCaches).
+    // partition-VISIBLE floor cache (Caching.persist keyed on doc_id):
     // the per-doc bigram aggregation clusters on (doc_id, w1, w2), which
     // hash(doc_id) satisfies — with a plain cache the AQE wrapper hides
     // the partitioning and the full bigram stream re-shuffles. The
     // tokenize runs in `narrow`, POST-shuffle, so a one-split corpus
     // tokenizes at cluster parallelism instead of on the scan's task
-    val t = graft.core.Caching.acquireFloorPartitioned(
+    val t = graft.core.Caching.persist(
       df.select(col(idCol).as("doc_id"), col(textCol)), Seq("doc_id"),
-      narrow = _.select(col("doc_id"), tokens(col(textCol)).as("toks")))
+      narrow = _.select(col("doc_id"), tokens(col(textCol)).as("toks"))).df
     // bigram formation as arrays_zip over two shifted slices — native
     // codegen'd expressions end to end (the transform/sequence/element_at
     // lambda form evaluated interpreted, and re-ran per consuming branch:
@@ -264,13 +264,13 @@ object TextAnalysis {
     // exactly twice (bigrams, unigrams); every model table is a
     // vocab-bounded aggregate over a cached frame. uni is cached too:
     // three scoring branches (w1 side, w2 side, corpus total) read it.
-    val perDoc = graft.core.Caching.acquireTracked(
-      bigs.groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("cnt")))
+    val perDoc = graft.core.Caching.persist(
+      bigs.groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("cnt"))).df
     val bigram = perDoc.groupBy("w1", "w2").agg(sum(col("cnt")).as("bcnt"))
       .where(col("bcnt") >= minBigramCount)
     val toks = t.select(explode(col("toks")).as("tok"))
-    val uni = graft.core.Caching.acquireTracked(
-      toks.groupBy("tok").agg(count(lit(1)).as("ucnt")))
+    val uni = graft.core.Caching.persist(
+      toks.groupBy("tok").agg(count(lit(1)).as("ucnt"))).df
     val total = uni.agg(sum("ucnt").cast("long").as("n_total"))
     val u1 = uni.select(col("tok").as("w1"), col("ucnt").as("ucnt1"))
     val u2 = uni.select(col("tok").as("w2"), col("ucnt").as("ucnt2"))
@@ -340,14 +340,14 @@ object TextAnalysis {
     // partition-VISIBLE floor cache: the whole scoring tail (per-(doc,
     // tok) counts -> per-(doc, class) term sums -> per-doc argmax)
     // clusters on doc_id; declaring the floor's hash(doc_id) through the
-    // cache (Caching.acquireFloorPartitioned) is what actually makes the
-    // tail exchange-free — a plain .persist() under AQE reports
+    // cache (Caching.persist keyed on doc_id) is what actually makes the
+    // tail exchange-free — a plain cache under AQE reports
     // UnknownPartitioning and every one of those aggregations
     // re-shuffles. Tokenize runs in `narrow`, post-shuffle, at cluster
     // parallelism.
-    val floored = graft.core.Caching.acquireFloorPartitioned(base, Seq("doc_id"),
+    val floored = graft.core.Caching.persist(base, Seq("doc_id"),
       narrow = _.select(col("doc_id"), col("label_true"), col("is_train"),
-        tokens(col(textCol)).as("toks")))
+        tokens(col(textCol)).as("toks"))).df
     val docTok = floored.select(col("doc_id"), col("label_true"), col("is_train"),
       explode(col("toks")).as("tok"))
     val trainTok = docTok.where(col("is_train"))
@@ -356,9 +356,9 @@ object TextAnalysis {
     // branches — without the cache each branch re-runs the full token
     // aggregation. vocab x classes rows, orders of magnitude smaller
     // than the corpus; released by the consuming wrapper.
-    val model = graft.core.Caching.acquireTracked(
+    val model = graft.core.Caching.persist(
       trainTok.groupBy(col("label_true").as("label"), col("tok"))
-        .agg(count(lit(1)).as("tcnt")))
+        .agg(count(lit(1)).as("tcnt"))).df
     // class-doc counts and the train-doc total in ONE linear aggregation
     // chain over the CACHED floored frame (collect_list over classes-many
     // rows is bounded): the previous shape re-scanned + re-pruned the
@@ -614,10 +614,10 @@ object TextAnalysis {
     // cache declaring hash(doc) — the top-k window partitioned by the
     // doc key then plans no exchange over the scoring join's streaming
     // side
-    val perTok = graft.core.Caching.acquireFloorPartitioned(
+    val perTok = graft.core.Caching.persist(
       df.select(col(idCol), col(textCol)), Seq(idCol),
       narrow = _.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
-        .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("tf")))
+        .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("tf"))).df
     val docFreq = perTok.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val n = df.select(count(lit(1)).as("n_docs"))
     // rank by the ROUNDED score: two tokens with mathematically equal

@@ -192,12 +192,12 @@ object BpeTrainer {
     // repartition exchange), and the cache declares hash(doc_id) — the
     // final per-doc stats groupBy(doc_id) then plans no exchange over
     // the vocab join's streaming side
-    val perDoc = graft.core.Caching.acquireFloorPartitioned(
+    val perDoc = graft.core.Caching.persist(
       df.select(col(idCol).as("doc_id"), col(textCol)), Seq("doc_id"),
       narrow = _.select(col("doc_id"),
           explode(regexp_extract_all(lower(col(textCol)),
             lit(ByteLevelPretokenRegex), lit(0))).as("tok"))
-        .groupBy("doc_id", "tok").agg(count(lit(1)).as("occ")))
+        .groupBy("doc_id", "tok").agg(count(lit(1)).as("occ"))).df
     // spread BELOW the distinct: the distinct's hash aggregation reuses
     // the spread's tok-keyed exchange (one exchange, one stage, where
     // distinct-then-respread planned two)

@@ -73,21 +73,21 @@ object Dbscan {
   private def clusterBinned(pts: DataFrame, eps: Double, minPts: Int,
       binDims: Int, checkpointDir: Option[String]): DataFrame = {
     val eps2 = eps * eps
-    val (joined, dist2, binnedC) = candidateJoin(pts, eps, binDims)
+    val (joined, dist2, _) = candidateJoin(pts, eps, binDims)
     // HALF pairs: each unordered ε-pair once (arbitrary orientation),
     // self-pairs (a,a) once — the exact distance runs once per unordered
     // pair; consumers re-symmetrize below (a cheap projection over the
     // cache, vs. paying dist2 on both orientations of every candidate).
-    // Caches are TRACKED (released by the consuming wrapper after the
-    // output is consumed), so the labeling tail no longer needs an eager
-    // materialization pass of its own just to release them early —
-    // dropping that checkpoint removes one full tail execution + action.
-    val pairsC = graft.core.Caching.acquireTracked(joined
+    // The bin and pair caches stay until the consuming wrapper releases
+    // them (Dedup.releaseCaches) after the output is consumed, so the
+    // labeling tail needs no eager materialization pass of its own just
+    // to release them early — that would cost one full tail execution +
+    // action.
+    val pairs = graft.core.Caching.persist(joined
       .where(dist2 <= eps2)
-      .select(col("a_id"), col("b_id")))
-    if (binnedC.owned) graft.core.Caching.register(binnedC.ds)
+      .select(col("a_id"), col("b_id"))).df
 
-    labelFromPairs(symmetrized(pairsC), minPts, checkpointDir)
+    labelFromPairs(symmetrized(pairs), minPts, checkpointDir)
   }
 
   /** Both orientations of every a != b row, self rows once — rebuilds the
@@ -117,14 +117,15 @@ object Dbscan {
     * bytes). Consumers needing the symmetric view re-derive it by a
     * map-side explode ([[symmetrized]]).
     * Returns (joined frame with a_id/av/b_id/bv, the dist2 column, and
-    * the binned frame's cache handle for the caller to release). */
+    * the binned frame's cache handle, which the caller may release
+    * early). */
   private[graft] def candidateJoin(pts: DataFrame, eps: Double, binDims: Int)
-      : (DataFrame, Column, graft.core.Caching.Cached[org.apache.spark.sql.Row]) = {
+      : (DataFrame, Column, graft.core.Caching.Cached) = {
     val cellCols = (0 until binDims).map(i =>
       floor(element_at(col("vec"), i + 1) / eps).cast("long").as(s"c$i"))
-    val binnedC = graft.core.Caching.acquire(
+    val binnedC = graft.core.Caching.persist(
       pts.select(col("pid") +: col("vec") +: cellCols: _*))
-    val binned = binnedC.ds
+    val binned = binnedC.df
     // home (all-zero) first, then every lex-positive offset: first
     // nonzero component is +1
     val offsets = Seq.fill(binDims)(0) +:
@@ -156,10 +157,10 @@ object Dbscan {
     * neighbor cluster; everything else is noise (-1). */
   private def labelFromPairs(pairs: DataFrame, minPts: Int,
       checkpointDir: Option[String]): DataFrame = {
-    val core = graft.core.Caching.acquireTracked(
+    val core = graft.core.Caching.persist(
       pairs.groupBy(col("a_id")).agg(count(lit(1)).as("deg"))
         .where(col("deg") >= minPts)
-        .select(col("a_id").as("pid")))
+        .select(col("a_id").as("pid"))).df
 
     val coreEdges = pairs
       .join(core.withColumnRenamed("pid", "a_id"), "a_id")
@@ -169,9 +170,9 @@ object Dbscan {
     val comp = Dedup.connectedComponentsAltStar(coreEdges, "a_id", "b_id",
       checkpointDir = checkpointDir)
     // singleton cores (no core neighbor) label themselves
-    val coreLabels = graft.core.Caching.acquireTracked(core
+    val coreLabels = graft.core.Caching.persist(core
       .join(comp.withColumnRenamed("node", "pid"), Seq("pid"), "left")
-      .select(col("pid"), coalesce(col("component"), col("pid")).as("cluster")))
+      .select(col("pid"), coalesce(col("component"), col("pid")).as("cluster"))).df
 
     // FUSED classification (one aggregation pass over the pair frame,
     // replacing the border/noise/union three-branch tail): every point
@@ -190,8 +191,8 @@ object Dbscan {
       .groupBy(col("a_id"))
       .agg(count(lit(1)).as("deg"),
         min(when(col("b_id") =!= col("a_id"), col("nbr_cluster"))).as("min_nbr"))
-    // lazily consumed: every persisted intermediate is TRACKED, released
-    // by the consuming wrapper after the output is read — the tail runs
+    // lazily consumed: every cache stays until the consuming wrapper
+    // releases it after the output is read — the tail runs
     // exactly once, in the consumer's own action (the former eager
     // truncation here executed the whole tail a second time just so the
     // caches could be released before returning)

@@ -21,22 +21,14 @@ import org.apache.spark.sql.functions._
 object Dedup {
   val P: Long = TextAnalysis.HashMod
 
-  /** Caches created by dedup operators on this thread (persisted shingle
-    * tables, component labels). A DataFrame result must stay cached until
-    * the caller consumes it, so the operator can't unpersist on return —
-    * wrappers that fully consume the result (Verify, Bench) call
-    * [[releaseCaches]] afterwards to stop cached blocks accumulating over
-    * a long-lived session. */
-  /** Register for deferred release ONLY caches this operator created —
-    * a caller-persisted frame re-derived here must survive
-    * [[releaseCaches]] (the ownership rule Caching.Cached encodes).
-    * The registry itself now lives in graft.core.Caching so non-dedup
-    * operators (e.g. the NB classifier's model table) share the same
-    * consume-then-release lifecycle. */
-  private def track(c: graft.core.Caching.Cached[org.apache.spark.sql.Row]): DataFrame = {
-    if (c.owned) graft.core.Caching.register(c.ds)
-    c.ds
-  }
+  /** Drop every cache the operators created on this thread
+    * ([[graft.core.Caching.persist]] registers each one it owns). A
+    * DataFrame result must stay cached until the caller consumes it, so
+    * an operator can't drop its caches on return — wrappers that fully
+    * consume the result (Verify, Bench) call this afterwards, also after
+    * a failed query, to stop cached blocks accumulating over a
+    * long-lived session. A cache the caller persisted is never
+    * registered, so it survives. */
   def releaseCaches(): Unit = graft.core.Caching.releaseTracked()
 
   /** MinHash parameter schedule: hash_i(x) = (a_i * x + b_i) mod P with
@@ -132,10 +124,10 @@ object Dedup {
     // Parallelism.floor: shingling is CPU-dense, so its parallelism must
     // come from the cluster, not from the scan's split count (a
     // single-file corpus otherwise shingles on one core).
-    val sh = track(graft.core.Caching.acquire(
+    val sh = graft.core.Caching.persist(
       graft.core.Parallelism.floor(df, col(idCol)).select(
       (col(idCol).as("doc") +: blockCols.map(col)) :+
-        shingleHashes(col(textCol), n).as("shingles"): _*)))
+        shingleHashes(col(textCol), n).as("shingles"): _*)).df
     val a = sh.select(col("doc").as("doc_a") +: col("shingles").as("sa") +:
       blockCols.map(col): _*)
     val b = sh.select(col("doc").as("doc_b") +: col("shingles").as("sb") +:
@@ -194,10 +186,10 @@ object Dedup {
     // when the shingle side is too big to broadcast, its exchange is
     // already satisfied by the declared layout and only the ids-only
     // candidate side shuffles
-    val sh = graft.core.Caching.acquireFloorPartitioned(
+    val sh = graft.core.Caching.persist(
       df.select(col(idCol).as("doc_id"), col(textCol)), Seq("doc_id"),
       narrow = _.select(col("doc_id"),
-        shingleHashes(col(textCol)).as("xs")))
+        shingleHashes(col(textCol)).as("xs"))).df
     val sigCols = minhashCols(col("xs"), k)
     val sig = sh.select(col("doc_id") +: sigCols.map { case (n, c) => c.as(n) }: _*)
     val sigRef = (0 until k).map(i => col(s"mh$i"))
@@ -243,9 +235,9 @@ object Dedup {
       broadcastShingles: Boolean = false): DataFrame = {
     require(k % bands == 0, "k must divide into equal bands")
     val r = k / bands
-    def prep(df: DataFrame) = graft.core.Caching.acquireFloorPartitioned(
+    def prep(df: DataFrame) = graft.core.Caching.persist(
       df.select(col(idCol).as("doc_id"), col(textCol)), Seq("doc_id"),
-      narrow = _.select(col("doc_id"), shingleHashes(col(textCol)).as("xs")))
+      narrow = _.select(col("doc_id"), shingleHashes(col(textCol)).as("xs"))).df
     val shA = prep(dfA); val shB = prep(dfB)
     def banded(sh: DataFrame, as: String) = {
       val sigCols = minhashCols(col("xs"), k)
@@ -283,93 +275,29 @@ object Dedup {
     train.join(dirty, train(idCol) === dirty("doc_a"), "left_anti")
   }
 
-  /** Near-dup CLUSTERS from near-dup PAIRS: connected components by
-    * iterative min-label propagation (each node repeatedly adopts the
-    * minimum label among itself and its neighbors until fixpoint). The
-    * dedup post-step every pipeline needs — pairs alone over-count:
-    * A~B, B~C must collapse to one canonical document {min id}.
+  /** Near-dup CLUSTERS from near-dup PAIRS — the dedup post-step every
+    * pipeline needs (pairs alone over-count: A~B, B~C must collapse to
+    * one canonical document {min id}) — by ALTERNATING
+    * large-star/small-star rounds (Kiveris et al. 2014, "Connected
+    * Components in MapReduce and Beyond"): converges in O(log n) rounds
+    * even on adversarially deep components (a path graph collapses by
+    * roughly halving its height every alternation), where min-label
+    * propagation needs O(diameter) rounds.
     *
-    * Converges in O(component diameter) rounds; near-dup components are
-    * shallow (similarity is near-transitive), so the driver-side loop is
-    * bounded and each round is one shuffle (join + min agg). At extreme
-    * scale the alternating large-star/small-star algorithm (Kiveris et
-    * al.) halves diameters per round — same join/agg shapes, more
-    * rounds-efficiency; this implementation keeps the simpler recurrence
-    * and asserts convergence within `maxIter`.
-    *
-    * Output: (node, component) with component = min node id reachable. */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 25, checkpointDir: Option[String] = None): DataFrame = {
-    val symC = graft.core.Caching.acquire(
-      pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-        .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst"))))
-    val sym = symC.ds
-    // eager lineage truncation per round: each round's plan references the
-    // previous labels twice, so without truncation the logical plan
-    // doubles every round. Default localCheckpoint (blocks reclaimed by
-    // the context cleaner, die with an executor); pass checkpointDir for
-    // reliable checkpoint() on a multi-node cluster (Checkpointing.scala).
-    // seed with min(self, neighbors) — the first propagation round folded
-    // into initialization
-    var labels = Checkpointing.truncate(
-      sym.groupBy(col("src")).agg(min(col("dst")).as("mn"))
-        .select(col("src").as("node"), least(col("src"), col("mn")).as("component")),
-      checkpointDir)
-    // labels only ever DECREASE (least of self and neighbor minima), so
-    // the decimal label sum is a complete convergence witness — one tiny
-    // aggregation per round instead of a self-join change count
-    // sum() over zero rows is SQL NULL — an empty pairs input (corpus with
-    // no near-dups) must converge to an empty labeling, not NPE
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("component").cast("decimal(38,0)"))).head().getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = labelSum(labels)
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIter) {
-      val nbrMin = sym.join(labels, col("dst") === col("node"))
-        .groupBy(col("src")).agg(min(col("component")).as("nbr_min"))
-      val updated = Checkpointing.truncate(
-        labels
-          .join(nbrMin.withColumnRenamed("src", "node"), Seq("node"), "left")
-          .select(col("node"),
-            least(col("component"), coalesce(col("nbr_min"), col("component"))).as("component")),
-        checkpointDir)
-      val newSum = labelSum(updated)
-      labels = updated
-      converged = newSum.compareTo(prevSum) == 0
-      prevSum = newSum
-      it += 1
-    }
-    require(converged, s"connected components did not converge in $maxIter rounds")
-    symC.release()
-    labels
-  }
-
-  /** Connected components by ALTERNATING large-star/small-star rounds
-    * (Kiveris et al. 2014, "Connected Components in MapReduce and
-    * Beyond") — the extreme-scale form of [[connectedComponents]]:
-    * converges in O(log n) rounds even on adversarially deep components
-    * (a path graph collapses by roughly halving its height every
-    * alternation), where min-label propagation needs O(diameter) rounds.
-    *
-    * Both operations are the same distributed shapes as the simple
-    * recurrence: a groupBy-min per node plus one equi-join — no new
+    * Both operations are the same distributed shapes as min-label
+    * propagation: a groupBy-min per node plus one equi-join — no new
     * shuffle patterns, just fewer rounds. Edges stay oriented
     * (larger, smaller) and deduped, so the edge set is monotonically
     * star-ified; at fixpoint every non-root points directly at its
     * component minimum.
     *
-    * Output: (node, component) with component = min reachable node id —
-    * label-for-label identical to [[connectedComponents]]
-    * (AltStarSpec proves equality on random graphs). */
+    * Output: (node, component) with component = min reachable node id,
+    * both int64 — label-for-label identical to the min-label fixpoint
+    * (AltStarSpec proves equality on random graphs). Self-pairs are
+    * ignored: a node appearing only as (a, a) gets no label row. */
   def connectedComponentsAltStar(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 50, checkpointDir: Option[String] = None): DataFrame =
     altStarWithRounds(pairs, aCol, bCol, maxIter, checkpointDir)._1
-
-  /** Measurement seam for graft.CcProbe (rounds + labels). */
-  private[graft] def probeAltStar(pairs: DataFrame, aCol: String, bCol: String)
-      : (DataFrame, Int) = altStarWithRounds(pairs, aCol, bCol, 50, None)
 
   private[operators] def altStarWithRounds(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int, checkpointDir: Option[String] = None): (DataFrame, Int) =
@@ -632,19 +560,19 @@ object Dedup {
     * per-doc arrays are cached pre-explode (parallelism-floored): the
     * occurrence-count side and the mark-back side both read this frame,
     * and without the cache the tokenize+hash pass re-runs per branch —
-    * single-task on a one-split corpus. Released by the consuming
-    * wrapper (Caching.releaseTracked). */
+    * single-task on a one-split corpus. Dropped by the consuming
+    * wrapper's [[releaseCaches]]. */
   private def ngramPositions(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame =
     // partition-VISIBLE floor cache (hash(doc_id) declared through the
     // cache; tokenize+hash runs post-shuffle in `narrow` at cluster
     // parallelism): the span-merge window partitioned by doc_id plans no
     // exchange when the duplicated-gram side broadcasts
-    graft.core.Caching.acquireFloorPartitioned(
+    graft.core.Caching.persist(
         df.select(col(idCol).as("doc_id"), col(textCol)), Seq("doc_id"),
         narrow = _.select(col("doc_id"),
           TextAnalysis.tokenNgramHashesAll(col(textCol), n).as("gs")))
-      .select(col("doc_id"), posexplode(col("gs")).as(Seq("pos", "g")))
+      .df.select(col("doc_id"), posexplode(col("gs")).as(Seq("pos", "g")))
 
   /** Exact-substring duplicated-span detection — the ExactSubstr side of
     * the published training-data dedup recipe (Lee et al. 2021,

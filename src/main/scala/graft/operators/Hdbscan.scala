@@ -93,11 +93,11 @@ object Hdbscan {
     // exact distance runs once per unordered pair; the directed view the
     // core-distance rank needs is re-derived by a map-side explode
     val (joined, dist2, binnedC) = Dbscan.candidateJoin(pts, epsMax, binDims)
-    val pairsC = graft.core.Caching.acquire(joined
+    val pairsC = graft.core.Caching.persist(joined
       .where(col("a_id") =!= col("b_id") && dist2 <= eps2)
       .select(col("a_id"), col("b_id"), sqrt(dist2).as("d")))
     // both orientations of every half row (self rows were filtered above)
-    val pairs = pairsC.ds.select(explode(array(
+    val pairs = pairsC.df.select(explode(array(
         struct(col("a_id"), col("b_id"), col("d")),
         struct(col("b_id").as("a_id"), col("a_id").as("b_id"), col("d")))).as("p"))
       .select(col("p.a_id").as("a_id"), col("p.b_id").as("b_id"), col("p.d").as("d"))
@@ -119,12 +119,12 @@ object Hdbscan {
       }
 
     // mutual reachability on undirected candidate edges
-    val mrC = graft.core.Caching.acquire(pairs.where(col("a_id") < col("b_id"))
+    val mrC = graft.core.Caching.persist(pairs.where(col("a_id") < col("b_id"))
       .join(core.select(col("pid").as("a_id"), col("core_d").as("ca")), "a_id")
       .join(core.select(col("pid").as("b_id"), col("core_d").as("cb")), "b_id")
       .select(col("a_id"), col("b_id"),
         greatest(col("d"), col("ca"), col("cb")).as("w")))
-    val mr = mrC.ds
+    val mr = mrC.df
 
     val (mst, mstComp) = boruvkaMst(mr, checkpointDir, maxLocalEdges)
 
@@ -244,12 +244,12 @@ object Hdbscan {
         mstLocal.toSeq.toDF("a", "b", "w"),
         compLocal.toSeq.toDF("node", "component"))
     }
-    val symC = graft.core.Caching.acquire(
+    val symC = graft.core.Caching.persist(
       edges.select(col("a_id").as("u"), col("b_id").as("v"), col("w"))
         .union(edges.select(col("b_id").as("u"), col("a_id").as("v"), col("w"))))
-    val sym = symC.ds
-    val nodesC = graft.core.Caching.acquire(sym.select(col("u")).distinct())
-    val nodes = nodesC.ds
+    val sym = symC.df
+    val nodesC = graft.core.Caching.persist(sym.select(col("u")).distinct())
+    val nodes = nodesC.df
     var comp = nodes.select(col("u").as("node"), col("u").as("component"))
     var mst: DataFrame = Checkpointing.truncate(
       spark.emptyDataFrame

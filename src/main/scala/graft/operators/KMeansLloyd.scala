@@ -65,9 +65,9 @@ object KMeansLloyd {
   def fit(df: DataFrame, idCol: String, vecCol: String, k: Int, dim: Int,
       seed: Long, rounds: Int): (Model, DataFrame) = {
     require(k > 0 && rounds >= 0, "k > 0, rounds >= 0")
-    val ptsC = graft.core.Caching.acquire(df.select(col(idCol).as("id"),
+    val ptsC = graft.core.Caching.persist(df.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v")))
-    val pts = ptsC.ds
+    val pts = ptsC.df
     try {
       var cents = initCentroids(pts, "id", "v", k, seed)
       require(cents.size == k, s"need >= $k rows to seed $k centroids")

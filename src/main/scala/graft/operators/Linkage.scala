@@ -16,17 +16,18 @@ import org.apache.spark.sql.functions._
   *  2. VERIFY: bounded edit distance (`levenshtein <= maxDist`) on the
   *     candidate stream only.
   *  3. CLUSTER: connected components over verified matches
-  *     ([[Dedup.connectedComponents]]); the min-id member names the
-  *     entity; unmatched records are their own entity.
+  *     ([[Dedup.connectedComponentsAltStar]], fed the strict a < b pairs
+  *     the blocking emits); the min-id member names the entity;
+  *     unmatched records are their own entity.
   *
   * Scale shape: blocking keys are integer/short-string equi-joins
   * (never a cross join — plan-sweep enforced); the verify predicate
   * runs on the blocked candidate stream; components are the
-  * lineage-truncated label loop. Block sizes bound task work — skewed
+  * lineage-truncated alt-star loop. Block sizes bound task work — skewed
   * blocks (a very common surname) are the q63 salting case.
   *
   * Every step is engine-exact (levenshtein is the classic DP metric in
-  * both engines; blocking/substr/min-label all integer/string ops), so
+  * both engines; blocking/substr/min-id all integer/string ops), so
   * a DuckDB oracle replays the whole resolution. */
 object Linkage {
 
@@ -51,7 +52,7 @@ object Linkage {
     val verified = cands
       .where(levenshtein(col("na"), col("nb")) <= maxDist)
       .select(col("a"), col("b"))
-    val labels = Dedup.connectedComponents(verified, "a", "b")
+    val labels = Dedup.connectedComponentsAltStar(verified, "a", "b")
     val resolved = base
       .join(labels, base("rid") === labels("node"), "left")
       .select(col("rid"),

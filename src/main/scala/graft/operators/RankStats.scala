@@ -47,9 +47,9 @@ object RankStats {
     * counts pass and the rank pass see the identical partitioning. */
   def globalNearestRankPercentile(df: DataFrame, v: Column, p: Double,
       tieBreak: Column): DataFrame = {
-    val ranged = graft.core.Caching.acquireTracked(
+    val ranged = graft.core.Caching.persist(
       df.repartitionByRange(df.sparkSession.sparkContext.defaultParallelism,
-        v, tieBreak).withColumn("__pid", spark_partition_id()))
+        v, tieBreak).withColumn("__pid", spark_partition_id())).df
     val pc = ranged.groupBy(col("__pid")).agg(count(lit(1)).as("__c"))
     val off = pc.as("a")
       .join(pc.as("b"), col("b.__pid") < col("a.__pid"), "left")

@@ -353,9 +353,9 @@ object Similarity {
     // and each read re-ran the labels-to-assigned join (plus the CC
     // labels join above it). Duplicate-member-sized; released by the
     // consuming wrapper.
-    val members = graft.core.Caching.acquireTracked(
+    val members = graft.core.Caching.persist(
       comp.select(col("node").as("id"), col("component"))
-        .join(assigned.select(col("id"), col("cent_sim").as("ms")), "id"))
+        .join(assigned.select(col("id"), col("cent_sim").as("ms")), "id")).df
     // election as one map-side-combined min_by aggregation — the window
     // form paid the same exchange plus a per-partition sort and a
     // filter scan; (ms, id) is unique per member so the argmin is the

@@ -147,11 +147,11 @@ object UnigramLM {
     // rows, tokenize post-shuffle, declare hash(doc_id) through the
     // cache): the final per-doc reassembly groupBy(doc_id) then plans
     // no exchange over the join-back's streaming side
-    val pre = graft.core.Caching.acquireFloorPartitioned(
+    val pre = graft.core.Caching.persist(
       df.select(col(idCol).as("doc_id"), col(textCol)), Seq("doc_id"),
       narrow = _.select(col("doc_id"),
         posexplode(split(TextAnalysis.normText(col(textCol)), "\\s+"))
-          .as(Seq("pos", "tok"))))
+          .as(Seq("pos", "tok")))).df
     // spread BELOW the distinct (its aggregation reuses the spread's
     // tok-keyed exchange — one exchange where distinct-then-respread
     // planned two)
@@ -211,11 +211,11 @@ object UnigramLM {
   def train(df: DataFrame, idCol: String, textCol: String,
       cfg: TrainConfig = TrainConfig()): Seq[Piece] = {
     val spark = df.sparkSession
-    val wordsC = graft.core.Caching.acquire(df.select(
+    val wordsC = graft.core.Caching.persist(df.select(
       explode(split(TextAnalysis.normText(col(textCol)), "\\s+")).as("tok"))
       .where(length(col("tok")).between(1, cfg.maxWordLen))
       .groupBy("tok").agg(count(lit(1)).as("wcnt")))
-    val words = wordsC.ds
+    val words = wordsC.df
     try {
       // seed: all substrings, occurrence-weighted — one explode + one
       // map-side-combinable sum over the word frame

@@ -468,7 +468,7 @@ object CoreQueries {
     // over `customer` with PLANTED single-char typos (head typo breaks
     // the prefix block, tail typo breaks the suffix block — the two
     // complementary blocking passes must both run to resolve every
-    // variant), levenshtein<=2 verify, min-label components. Name
+    // variant), levenshtein<=2 verify, alt-star components. Name
     // parts are pairwise edit-distance >= 3, so distinct names never
     // merge; identical synthesized names do (the intended semantics).
     // The oracle replays blocking, the DP metric, and the closure.

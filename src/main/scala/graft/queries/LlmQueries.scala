@@ -1659,8 +1659,8 @@ object LlmQueries {
     // ---- near-dup clusters: connected components over pair edges --------
     // The dedup post-step (pairs -> canonical doc per cluster); the
     // oracle computes the same components by recursive-CTE transitive
-    // closure + min, so the iterative min-label propagation is
-    // hash-verified against an independent algorithm.
+    // closure + min, so the alt-star components are hash-verified
+    // against an independent algorithm.
     QueryDef.sqlBacked(
       "q68_dedup_components",
       s"""WITH RECURSIVE pairsq AS (
@@ -1681,7 +1681,7 @@ object LlmQueries {
          |SELECT node, min(r) AS component FROM reach GROUP BY 1""".stripMargin) { (s, d) =>
       val pairs = Similarity.cosineNearDupPairs(Tables.embeddings(s, d),
         "vec_id", "embedding", "label", threshold = 0.3)
-      Dedup.connectedComponents(pairs, "id_a", "id_b")
+      Dedup.connectedComponentsAltStar(pairs, "id_a", "id_b")
     },
 
     // ---- corpus-overlap estimation from group sketches ------------------

@@ -584,7 +584,7 @@ object CatalogManifest {
       publish(spark,
         keepCols.unionByName(fresh.toDF().select(keepCols.columns.map(col): _*)),
         manifestPath, basedOn = Some(loadedGen))
-    } finally diff.unpersist()
+    } finally diff.release()
     (added.size, changed.size, removed, unchangedN.toInt)
   }
 
@@ -606,14 +606,14 @@ object CatalogManifest {
     * triple-matched row would permanently launder a change in the
     * triple's blind spot (equal-size rename, offsetting growth) as
     * verified. Returns (added, changed, removed, unchanged,
-    * unchangedFp, diff); the caller unpersists `diff` once done with
-    * `unchangedFp`, which reads through it. */
+    * unchangedFp, diff); the caller releases the cached `diff` once done
+    * with `unchangedFp`, which reads through it. */
   private[graft] def diffFp(spark: SparkSession,
       oldFp: org.apache.spark.sql.DataFrame,
       curFp: org.apache.spark.sql.DataFrame, sameVars: Boolean,
       legacyHashTripleFallback: Boolean)
       : (Seq[String], Seq[String], Int, Long,
-        org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+        org.apache.spark.sql.DataFrame, graft.core.Caching.Cached) = {
     val tripleDiffers = col("fpMtime") =!= col("__mt") ||
       col("fpBytes") =!= col("__by") || col("fpCount") =!= col("__n")
     val hashRowDiffers = tripleDiffers || col("fpHash") =!= col("__h")
@@ -627,8 +627,8 @@ object CatalogManifest {
     // AND kept duplicates rows in the published union. The old
     // driver-map diff collapsed such rows arbitrarily (last map put
     // wins); this collapses them the same way, visibly upstream.
-    val diff = oldFp.dropDuplicates("store").join(curFp, Seq("store"),
-        "full_outer")
+    val diffC = graft.core.Caching.persist(oldFp.dropDuplicates("store")
+      .join(curFp, Seq("store"), "full_outer")
       .withColumn("__status",
         when(col("__mt").isNull, "removed")
           .when(col("fpMtime").isNull, "added")
@@ -639,8 +639,8 @@ object CatalogManifest {
           // frame diff fails SAFE instead
           .when(lit(!sameVars) || coalesce(changedCond, lit(true)),
             "changed")
-          .otherwise("unchanged"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .otherwise("unchanged")))
+    val diff = diffC.df
     val toScan = diff.where(col("__status").isin("added", "changed"))
       .select("store", "__status").collect()
     val counts = diff.groupBy("__status").count().collect()
@@ -657,7 +657,7 @@ object CatalogManifest {
     val unchangedFp = diff.where(col("__status") === "unchanged")
       .select("store", "__mt", "__by", "__n", "__h")
     (added, changed, counts.getOrElse("removed", 0L).toInt,
-      counts.getOrElse("unchanged", 0L), unchangedFp, diff)
+      counts.getOrElse("unchanged", 0L), unchangedFp, diffC)
   }
 
   /** Schema compatibility for manifests written before `requestedVars`
@@ -1328,7 +1328,7 @@ object CatalogManifest {
         legacyHashTripleFallback = true)
     try {
       if (added.nonEmpty || changed.nonEmpty || removed > 0) {
-        val removedEx = diff.where(col("__status") === "removed")
+        val removedEx = diff.df.where(col("__status") === "removed")
           .select("store").orderBy("store").limit(3).collect()
           .map(_.getString(0))
         fail("the catalog changed since the manifest was built (" +
@@ -1337,7 +1337,7 @@ object CatalogManifest {
           s"removed: ${removedEx.mkString(",")}) — run " +
           s"CatalogManifest.refresh on $manifestPath")
       }
-    } finally diff.unpersist()
+    } finally diff.release()
   }
 
   /** Staleness check on an explicit fingerprint subset — what a

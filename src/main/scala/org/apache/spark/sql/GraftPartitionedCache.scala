@@ -41,23 +41,20 @@ import org.apache.spark.storage.StorageLevel
   */
 object GraftPartitionedCache {
 
-  /** Persisted partition-visible frame; `release()` drops the blocks. */
-  final class Handle(val df: Dataset[Row], rdd: RDD[InternalRow]) {
-    def release(): Unit = { rdd.unpersist(blocking = false); () }
-  }
-
   /** `df` hash-repartitioned into `n` partitions on `keys` (top-level
     * column names), transformed by the partitioning-preserving `narrow`
-    * pipeline, persisted at `level`, with the partitioning visible to
+    * pipeline, persisted MEMORY_AND_DISK, with the partitioning visible to
     * consumers. The plan materializes on first use like any cache build.
+    * Returns the frame and the persisted RDD (unpersisting the RDD drops
+    * the cache).
     *
     * `narrow` must keep the `keys` columns (same names) and must consist
     * only of partitioning-preserving operators — verified structurally
     * against the optimized logical plan, so an accidental join/window/
     * re-key inside `narrow` fails fast instead of mis-declaring. */
   def repartitionPersist(df: Dataset[Row], n: Int, keys: Seq[String],
-      level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-      narrow: Dataset[Row] => Dataset[Row] = identity): Handle = {
+      narrow: Dataset[Row] => Dataset[Row] = identity)
+      : (Dataset[Row], RDD[InternalRow]) = {
     require(keys.nonEmpty, "repartitionPersist needs at least one key")
     val fin = narrow(df.repartition(n, keys.map(df.col): _*))
       .asInstanceOf[classic.Dataset[Row]]
@@ -74,7 +71,7 @@ object GraftPartitionedCache {
     // rows out of the final stage are reused unsafe buffers — copy
     // before persisting (Dataset.checkpoint does the same)
     val rdd = qe.toRdd.map(_.copy())
-    rdd.persist(level)
+    rdd.persist(StorageLevel.MEMORY_AND_DISK)
     // originStats: without them the leaf reports the default
     // sizeInBytes (Long.MaxValue) and every downstream join of a frame
     // derived from this cache flips from broadcast to sort-merge
@@ -83,7 +80,7 @@ object GraftPartitionedCache {
     val lr = LogicalRDD(output, rdd,
       HashPartitioning(partExprs, n), Nil, isStreaming = false, None)(
       fin.sparkSession, Some(qe.optimizedPlan.stats), None)
-    new Handle(classic.Dataset.ofRows(fin.sparkSession, lr), rdd)
+    (classic.Dataset.ofRows(fin.sparkSession, lr), rdd)
   }
 
   /** Root-to-repartition walk: every operator above the repartition must

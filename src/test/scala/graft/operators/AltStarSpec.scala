@@ -22,7 +22,7 @@ class AltStarSpec extends SparkSpec {
         .filter { case (a, b) => a != b }
       if (edges.nonEmpty) {
         val df = edges.toDF("a", "b")
-        val expected = labelsOf(Dedup.connectedComponents(df, "a", "b"))
+        val expected = labelsOf(MinLabelCc.connectedComponents(df, "a", "b"))
         val got = labelsOf(Dedup.connectedComponentsAltStar(df, "a", "b"))
         assert(got == expected, s"trial $trial: alt-star labels diverge")
         Dedup.releaseCaches()
@@ -49,7 +49,7 @@ class AltStarSpec extends SparkSpec {
     val got = labelsOf(Dedup.connectedComponentsAltStar(df, "a", "b",
       checkpointDir = Some(dir)))
     assert(got == expected, "reliable-checkpoint run must match localCheckpoint run")
-    val ccGot = labelsOf(Dedup.connectedComponents(df, "a", "b",
+    val ccGot = labelsOf(MinLabelCc.connectedComponents(df, "a", "b",
       checkpointDir = Some(dir)))
     assert(ccGot == expected, "min-label CC with checkpointDir must match too")
     // the reliable path actually wrote RDD checkpoint files under dir
@@ -84,7 +84,7 @@ class AltStarSpec extends SparkSpec {
       val hub = ((1L to 200L).map(i => (0L, i)) ++
         Seq((300L, 301L), (301L, 302L), (200L, 300L))).toDF("a", "b")
       assert(labelsOf(Dedup.connectedComponentsAltStar(hub, "a", "b")) ==
-        labelsOf(Dedup.connectedComponents(hub, "a", "b")))
+        labelsOf(MinLabelCc.connectedComponents(hub, "a", "b")))
       Dedup.releaseCaches()
       val rnd = new scala.util.Random(20260819L)
       for (trial <- 0 until 3) {
@@ -95,7 +95,7 @@ class AltStarSpec extends SparkSpec {
         if (edges.nonEmpty) {
           val df = edges.toDF("a", "b")
           assert(labelsOf(Dedup.connectedComponentsAltStar(df, "a", "b")) ==
-            labelsOf(Dedup.connectedComponents(df, "a", "b")),
+            labelsOf(MinLabelCc.connectedComponents(df, "a", "b")),
             s"salted trial $trial diverges")
           Dedup.releaseCaches()
         }

@@ -179,7 +179,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // chain 1-2-3-4 (diameter 3), pair 10-11, self-contained 20-21-20
     val pairs = Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L), (20L, 21L))
       .toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(pairs, "id_a", "id_b")
+    val got = MinLabelCc.connectedComponents(pairs, "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L))
@@ -188,7 +188,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val longChain = (0L until 30L).sliding(2).map(s => (s(0), s(1))).toSeq
       .toDF("id_a", "id_b")
     intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(longChain, "id_a", "id_b", maxIter = 3)
+      MinLabelCc.connectedComponents(longChain, "id_a", "id_b", maxIter = 3)
     }
   }
 
@@ -368,7 +368,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // a corpus with zero near-dup pairs is the COMMON case for a clean
     // shard — must return empty, not NPE on the null sum-over-zero-rows
     val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    assert(Dedup.connectedComponents(empty, "id_a", "id_b").count() == 0L)
+    assert(MinLabelCc.connectedComponents(empty, "id_a", "id_b").count() == 0L)
     assert(Dedup.connectedComponentsAltStar(empty, "id_a", "id_b").count() == 0L)
   }
 }

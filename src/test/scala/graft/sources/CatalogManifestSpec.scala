@@ -1437,7 +1437,7 @@ class CatalogManifestSpec extends SparkSpec {
       assert(r1 == 5 && u1 == n - 5 - legacyCount - hashMovers)
       assert(CatalogManifest.lastDiffCollected == a1.length + c1.length + 4,
         s"collected ${CatalogManifest.lastDiffCollected} driver rows")
-    } finally d1.unpersist()
+    } finally d1.release()
     // read-guard semantics: a legacy row with an equal TRIPLE is
     // unchanged (the fallback compare), so only the hash movers with
     // nonzero stored hashes count
@@ -1447,12 +1447,12 @@ class CatalogManifestSpec extends SparkSpec {
       assert(a2.length == 5 && r2 == 5)
       assert(c2.length == (1000 until 1010).count(_ % 100 != 0), c2)
       assert(u2 == n - 5 - c2.length)
-    } finally d2.unpersist()
+    } finally d2.release()
     // different requested variables: every kept store re-scans
     val (a3, c3, r3, u3, _, d3) = CatalogManifest.diffFp(
       spark, oldFp, curFp, sameVars = false, legacyHashTripleFallback = false)
     try assert(a3.length == 5 && c3.length == n - 5 && r3 == 5 && u3 == 0)
-    finally d3.unpersist()
+    finally d3.release()
     // a NULL fp column (corrupt / foreign-written manifest row) must
     // fail SAFE — re-scan, never "unchanged": the comparison is
     // UNKNOWN, and stamping the fresh wave's hash onto an unverifiable
@@ -1468,7 +1468,7 @@ class CatalogManifestSpec extends SparkSpec {
         legacyHashTripleFallback = legacy)
       try assert(a4.isEmpty && c4 == Seq("/syn/x") && r4 == 0 && u4 == 0,
         s"legacy=$legacy: null-hash row must re-scan, got ($a4,$c4,$r4,$u4)")
-      finally d4.unpersist()
+      finally d4.release()
     }
   }
 
@@ -1551,7 +1551,7 @@ class CatalogManifestSpec extends SparkSpec {
         assert(r == oldStores.count(s => !curMap.contains(s)) &&
           u == both.count(s => !changedOf(s)),
           s"round $round counts ($r, $u)")
-      } finally d.unpersist()
+      } finally d.release()
     }
   }
 }
