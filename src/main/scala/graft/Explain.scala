@@ -4,23 +4,27 @@ import org.apache.spark.sql.SparkSession
 
 /** Plan-audit main: prints the formatted physical plan of each query (or
   * the ones given as args) so pushdown / broadcast / codegen coverage can
-  * be reviewed. `sbt "runMain graft.Explain q20_star_revenue"`. */
+  * be reviewed. AQE is off, so codegen stages and join strategies show
+  * statically — the same view PlanRegressionSpec asserts on.
+  * `sbt "runMain graft.Explain q20_star_revenue"`. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val names = if (args.nonEmpty) args.toSeq else Bench.headline
+    names.foreach(n => require(SparkEntry.queries.contains(n),
+      s"unknown query '$n' — known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val names = if (args.nonEmpty) args.toSeq else Bench.headline
-    names.foreach { n =>
+    try names.foreach { n =>
       println(s"\n===== $n =====")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")
     }
-    spark.stop()
+    finally spark.stop()
   }
 }

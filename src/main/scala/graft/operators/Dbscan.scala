@@ -142,10 +142,10 @@ object Dbscan {
         (0 until binDims).map(i => (col(s"c$i") + col("o").getField(s"d$i")).as(s"jc$i")): _*)
     val build = binned.select(col("pid").as("b_id") +: col("vec").as("bv") +:
       (0 until binDims).map(i => col(s"c$i").as(s"jc$i")): _*)
-    // native codegen'd loop (graft.plans.SqL2Dist) — bit-identical to
-    // aggregate(zip_with(av, bv, (x,y) => (x-y)*(x-y)), 0.0, +), which
-    // paid interpreted lambda eval per dimension per candidate PAIR
-    val dist2: Column = graft.plans.SqL2Dist.sqL2Col(col("av"), col("bv"))
+    // native loop — the zip_with fold paid interpreted lambda eval per
+    // dimension per candidate PAIR; vectors of differing lengths or with
+    // null elements get a null distance and never pair
+    val dist2: Column = Similarity.sqL2(col("av"), col("bv"))
     val joined = probes.join(build, (0 until binDims).map(i => s"jc$i"))
       .where(!col("home") || col("a_id") <= col("b_id"))
     (joined, dist2, binnedC)

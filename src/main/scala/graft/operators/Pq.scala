@@ -60,9 +60,9 @@ object Pq {
 
   /** PQ codes: per subspace the index of the first-minimum distance
     * (deterministic tie-break), as an array(M) of ints. Native one-pass
-    * kernel (graft.plans.PqEncode) — bit-identical to [[encodeHof]]
-    * (spec-proven), which paid M·K·SubDim interpreted lambda evals per
-    * row. */
+    * kernel (graft.plans.PqEncode) — bit-identical to [[encodeHof]] on
+    * null-free vectors of length Dim, null otherwise. The HOF form pays
+    * M·K·SubDim interpreted lambda evals per row. */
   def encode(vec: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     column(graft.plans.PqEncode(expression(vec), codebook))
@@ -79,12 +79,12 @@ object Pq {
   def lut(vec: Column): Column = flatten(distMat(vec))
 
   /** ADC distance of a code row against a probe's lookup table — the
-    * per-(probe, candidate) hot path. Native codegen'd loop
-    * (graft.plans.PqAdcDist), bit-identical to [[adcDistHof]]
-    * (spec-proven: identical left-to-right adds). */
+    * per-(probe, candidate) hot path. Native loop (graft.plans.PqAdcDist)
+    * — bit-identical to [[adcDistHof]] (identical left-to-right adds) on
+    * a null-free M·K table and M codes in [0, K), null otherwise. */
   def adcDist(lutCol: Column, codes: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-    column(graft.plans.PqAdcDist(expression(lutCol), expression(codes), K))
+    column(graft.plans.PqAdcDist(expression(lutCol), expression(codes), M, K))
   }
 
   /** HOF reference form of [[adcDist]] (cross-check oracle). */

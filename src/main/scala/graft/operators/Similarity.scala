@@ -21,11 +21,20 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Native codegen'd left fold (graft.plans.FloatDotProduct) —
-    * bit-identical to [[dotHof]], spec-proven. */
+  /** Native left fold (graft.plans.FloatDotProduct) — bit-identical to
+    * [[dotHof]] on equal-length null-free vectors, null otherwise
+    * (graft.plans.VectorKernel's contract). */
   def dot(a: Column, b: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     column(graft.plans.FloatDotProduct(expression(a), expression(b)))
+  }
+
+  /** Native squared L2 distance (graft.plans.SqL2Dist) — bit-identical to
+    * the `aggregate(zip_with(a, b, (x, y) => (x - y)²), 0.0, +)` fold on
+    * equal-length null-free vectors, null otherwise. */
+  def sqL2(a: Column, b: Column): Column = {
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    column(graft.plans.SqL2Dist(expression(a), expression(b)))
   }
 
   /** HOF reference form of [[dot]] (cross-check oracle). */
@@ -247,14 +256,17 @@ object Similarity {
       i.cast("int").as("cell")))
 
   /** Native argmin over [[cellDists]]: struct(d2, cell) of the nearest
-    * centroid as ONE codegen'd loop (graft.plans.CellArgmin) —
-    * bit-identical to `array_min(cellDists(...))`, spec-proven. The HOF
-    * form pays K·dim interpreted lambda evals per row (~310 µs/row at
-    * K=8, dim=64); assignment-heavy operators (IVF corpus side,
-    * SemDeDup blocking, prototype pruning, KMeans E-steps) route
-    * through this. */
-  def cellArgmin(vec: Column, cents: Seq[Seq[Double]]): Column =
-    graft.plans.CellArgmin.cellArgminCol(vec, cents)
+    * centroid as ONE loop (graft.plans.CellArgmin) — bit-identical to
+    * `array_min(cellDists(...))` on null-free vectors of the centroid
+    * dimension, null otherwise; `cents` must be non-empty and
+    * rectangular. The HOF form pays K·dim interpreted lambda evals per
+    * row (~310 µs/row at K=8, dim=64); assignment-heavy operators (IVF
+    * corpus side, SemDeDup blocking, prototype pruning, KMeans E-steps)
+    * route through this. */
+  def cellArgmin(vec: Column, cents: Seq[Seq[Double]]): Column = {
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    column(graft.plans.CellArgmin(expression(vec), cents))
+  }
 
   /** IVF with an EXPLICIT centroid index (the production shape: the index
     * is fit once — [[ivfTopK]] / Transforms.fitKmeans — persisted, and

@@ -63,11 +63,11 @@ object Sq8 {
   /** u8 code array for one vector: floor-of-shifted affine map, clamped;
     * a degenerate (constant) dimension codes to 0. Pure projection.
     * Native one-pass kernel (graft.plans.Sq8Encode) — bit-identical to
-    * [[encodeHof]] (spec-proven), which paid ~10 interpreted expression
-    * evals per DIMENSION per corpus row (two element_at literal picks,
-    * the affine map and the clamp chain, all inside an interpreted
-    * transform lambda) — the same per-corpus-row projection cost the PQ
-    * side removed with PqEncode. */
+    * [[encodeHof]] on null-free vectors of the model's dim, null
+    * otherwise. The HOF form pays ~10 interpreted expression evals per
+    * DIMENSION per corpus row (two element_at literal picks, the affine
+    * map and the clamp chain, all inside an interpreted transform
+    * lambda). */
   def encode(vec: Column, m: Model): Column = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     column(graft.plans.Sq8Encode(expression(vec), m.vmins, m.vmaxs))
@@ -108,8 +108,19 @@ object Sq8 {
       aggregate(codes, lit(0L), (acc, c) => acc + c).as("code_sum"))
   }
 
-  /** HOF reference form of the ADC squared-L2 (cross-check oracle for
-    * the native plans.Sq8AdcDist): dq_j computed INLINE per dimension —
+  /** Asymmetric squared L2 of a double probe vector against a code row,
+    * dequantizing each dimension in place. Native loop
+    * (graft.plans.Sq8AdcDist) — bit-identical to [[adcDistHof]] on
+    * null-free inputs of the model's dim, null otherwise; the HOF form
+    * pays interpreted lambda eval once per (probe, candidate) pair
+    * (~23 µs/pair at dim 64). */
+  def adcDist(qv: Column, codes: Column, m: Model): Column = {
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    column(graft.plans.Sq8AdcDist(expression(qv), expression(codes), m.vmins, m.vmaxs))
+  }
+
+  /** HOF reference form of [[adcDist]] (cross-check oracle): dq_j
+    * computed INLINE per dimension —
     * not element_at over a staged transform() array, which would rebuild
     * the whole array per pick, the documented O(dim^2) HOF trap. */
   def adcDistHof(qv: Column, codes: Column, m: Model): Column = {
@@ -149,11 +160,7 @@ object Sq8 {
         Similarity.cellDists(col(vecCol), cents)), 1, nProbe))
         .as("near"))
       .select(col("probe_id"), col("qv"), col("near.cell").as("cell"))
-    val d2 = {
-      import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-      column(graft.plans.Sq8AdcDist(expression(col("qv")),
-        expression(col("codes")), m.vmins, m.vmaxs))
-    }
+    val d2 = adcDist(col("qv"), col("codes"), m)
     val scored = coded.join(broadcast(p), "cell")
       .where(col("nid") =!= col("probe_id"))
       .withColumn("d_u", round(d2 * 1e6).cast("long"))
@@ -177,14 +184,7 @@ object Sq8 {
     val p = probes.select(col(idCol).as("probe_id"),
       transform(sequence(lit(1), lit(m.dim)),
         j => element_at(col(vecCol), j).cast("double")).as("qv"))
-    // native codegen'd loop (graft.plans.Sq8AdcDist) — bit-identical to
-    // [[adcDistHof]], spec-proven; the HOF form pays interpreted lambda
-    // eval once per (probe, candidate) pair (~23 µs/pair at dim 64).
-    val d2 = {
-      import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-      column(graft.plans.Sq8AdcDist(expression(col("qv")),
-        expression(col("codes")), m.vmins, m.vmaxs))
-    }
+    val d2 = adcDist(col("qv"), col("codes"), m)
     val scored = coded.crossJoin(broadcast(p))
       .where(col("nid") =!= col("probe_id"))
       .withColumn("d_u", round(d2 * 1e6).cast("long"))

@@ -1,10 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -19,31 +16,23 @@ import org.apache.spark.sql.types._
   * struct array per ROW and walks K·dim interpreted lambda evals —
   * measured ~310 µs/row at K=8, dim=64 on the x10 rehearsal (and the
   * KMeans fit pays it once per round per row at K=N/500). This is the
-  * same math as one codegen'd double loop over the referenced table.
+  * same math as one double loop over the referenced table.
   *
-  * Bit-parity with the HOF form (equal-length non-null arrays): d2 is
-  * the identical left-to-right fold from +0.0 of (cast(x) − c)², and
-  * keep-strictly-less over ascending cells IS the lexicographic
-  * (d2, cell) minimum. Spec-pinned native == HOF on float and double
-  * inputs; the q73/q96/q151/q162 oracles keep matching. Off-path:
-  * length truncates to min(vec, centroid) where zip_with would
-  * null-pad, and null elements read as 0 via the primitive getters. */
+  * Bit-parity with the HOF form: d2 is the identical left-to-right fold
+  * from +0.0 of (cast(x) − c)², and keep-strictly-less over ascending
+  * cells IS the lexicographic (d2, cell) minimum; the q73/q96/q151/q162
+  * oracles keep matching. The table must be non-empty and rectangular;
+  * the vector follows [[VectorKernel]]'s contract, its length the
+  * centroid dimension. */
 case class CellArgmin(child: Expression, cents: Seq[Seq[Double]])
-    extends UnaryExpression {
+    extends UnaryExpression with VectorKernel {
 
-  require(cents.nonEmpty, "empty centroid table")
+  require(cents.nonEmpty && cents.head.nonEmpty &&
+    cents.forall(_.length == cents.head.length),
+    "centroid table must be non-empty and rectangular")
 
-  private lazy val isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float|double>, got $t")
-  }
+  protected def elementTypes: Seq[Seq[DataType]] = Seq(VectorKernel.Floating)
+  protected def lengths: Seq[Int] = Seq(cents.head.length)
   override def dataType: DataType = StructType(Seq(
     StructField("d2", DoubleType, nullable = false),
     StructField("cell", IntegerType, nullable = false)))
@@ -52,19 +41,18 @@ case class CellArgmin(child: Expression, cents: Seq[Seq[Double]])
   private lazy val centsArr: Array[Array[Double]] =
     cents.map(_.toArray).toArray
 
-  override def nullSafeEval(a: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
+  def kernel(x: ArrayData): InternalRow = {
+    val xf = floats(0)
+    val n = x.numElements()
     var bestD = 0.0
     var bestC = -1
     var c = 0
     while (c < centsArr.length) {
       val cv = centsArr(c)
-      val n = math.min(xs.numElements(), cv.length)
       var acc = 0.0
       var j = 0
       while (j < n) {
-        val x = if (isFloat) xs.getFloat(j).toDouble else xs.getDouble(j)
-        val d = x - cv(j)
+        val d = at(x, j, xf) - cv(j)
         acc = acc + d * d
         j += 1
       }
@@ -73,46 +61,8 @@ case class CellArgmin(child: Expression, cents: Seq[Seq[Double]])
     }
     new GenericInternalRow(Array[Any](bestD, bestC))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val tbl = ctx.addReferenceObj("cells", centsArr, "double[][]")
-      val c = ctx.freshName("c")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      val cv = ctx.freshName("cv")
-      val bestD = ctx.freshName("bestD")
-      val bestC = ctx.freshName("bestC")
-      val getter = if (isFloat) s"(double) $a.getFloat($j)" else s"$a.getDouble($j)"
-      s"""
-         |double $bestD = 0.0;
-         |int $bestC = -1;
-         |for (int $c = 0; $c < $tbl.length; $c++) {
-         |  final double[] $cv = $tbl[$c];
-         |  final int $n = Math.min($a.numElements(), $cv.length);
-         |  double $acc = 0.0;
-         |  for (int $j = 0; $j < $n; $j++) {
-         |    final double $d = $getter - $cv[$j];
-         |    $acc = $acc + $d * $d;
-         |  }
-         |  if ($c == 0 || $acc < $bestD) { $bestD = $acc; $bestC = $c; }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |  new Object[]{ $bestD, $bestC });
-       """.stripMargin
-    })
+  protected def run(x: ArrayData, y: ArrayData): Any = kernel(x)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object CellArgmin {
-  import org.apache.spark.sql.{Column, GraftColumnBridge}
-
-  /** Column form: struct(d2 double, cell int) of the nearest centroid. */
-  def cellArgminCol(vec: Column, cents: Seq[Seq[Double]]): Column =
-    GraftColumnBridge.column(
-      CellArgmin(GraftColumnBridge.expression(vec), cents))
 }

@@ -1,15 +1,13 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Σ (double)a[i]·(double)b[i] over two Array[Float|Double] columns —
-  * the embedding dot product as one codegen'd loop. Each side may be
-  * float or double independently; float elements widen exactly (the
-  * same cast the HOF form applies), so the float×double case covers the
+  * the embedding dot product as one loop. Each side may be float or
+  * double independently; float elements widen exactly (the same cast the
+  * HOF form applies), so the float×double case covers the
   * vector-to-CENTROID similarity (centroids are double literals) with
   * the identical arithmetic.
   *
@@ -20,72 +18,32 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * count (measured ~6x on the label-blocked cosine join) — and the
   * centroid-similarity form evaluates once per corpus ROW.
   *
-  * Bit-parity (equal-length arrays with non-null elements — every
-  * embedding column in the engine): identical to the HOF form — a strict
-  * left-to-right fold starting from +0.0 with each term cast to double
-  * before multiply — so DuckDB's `list_reduce` comprehension oracle keeps
-  * matching (DedupSimilaritySpec asserts native == HOF on the real
-  * table, and float×double parity on random data). Off that path the two
-  * diverge by design: unequal lengths truncate to the shorter here
-  * (zip_with pads with null and the HOF fold returns NULL), and a null
-  * element reads as 0.0 via the primitive getters (the HOF returns
-  * NULL). */
+  * Bit-parity: a strict left-to-right fold starting from +0.0 with each
+  * term cast to double before multiply, as the HOF form — so DuckDB's
+  * `list_reduce` comprehension oracle keeps matching. Inputs follow
+  * [[VectorKernel]]'s contract, with the two lengths equal. */
 case class FloatDotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with VectorKernel {
 
-  private def elemOk(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-  private lazy val leftIsFloat = left.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  private lazy val rightIsFloat = right.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (elemOk(left.dataType) && elemOk(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<float|double> inputs, got " +
-        s"${left.dataType} and ${right.dataType}")
+  protected def elementTypes: Seq[Seq[DataType]] =
+    Seq(VectorKernel.Floating, VectorKernel.Floating)
+  protected def lengths: Seq[Int] = Seq(VectorKernel.Same, VectorKernel.Same)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "float_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+  def kernel(x: ArrayData, y: ArrayData): Double = {
+    val xf = floats(0)
+    val yf = floats(1)
+    val n = x.numElements()
     var acc = 0.0
     var i = 0
     while (i < n) {
-      val xv = if (leftIsFloat) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (rightIsFloat) y.getFloat(i).toDouble else y.getDouble(i)
-      acc = acc + xv * yv
+      acc = acc + at(x, i, xf) * at(y, i, yf)
       i += 1
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val xs = if (leftIsFloat) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      val ys = if (rightIsFloat) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         |final int $n = Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc = $acc + $xs * $ys;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+  protected def run(x: ArrayData, y: ArrayData): Any = kernel(x, y)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)

@@ -1,8 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -13,161 +11,104 @@ import org.apache.spark.sql.types._
   * Why native (SURVEY §4 tier b): the HOF form materializes an M×K
   * distance matrix per ROW through three nested interpreted lambdas
   * (M·K·SubDim element_at evals — the dominant stage of q117's corpus
-  * encode). This is the same math as one codegen'd triple loop over a
-  * referenced double[][][].
+  * encode). This is the same math as one triple loop over the codebook.
   *
-  * Bit-parity with the HOF form (full-length non-null vectors — the
-  * only rows the operator produces): per (s, k) the distance is the
+  * Bit-parity with the HOF form: per (s, k) the distance is the
   * identical left-to-right fold from +0.0 of (cast(x) − c)², and
   * keep-strictly-less over ascending k IS
-  * `array_position(ds, array_min(ds)) − 1` (first minimum). PqSpec
-  * pins native == HOF on random vectors; the q116/q117 oracles keep
-  * matching. Off-path: a short vector reads as 0 past its end via the
-  * primitive getters (the HOF form nulls the whole code row). */
+  * `array_position(ds, array_min(ds)) − 1` (first minimum); the
+  * q116/q117 oracles keep matching. The codebook must be non-empty and
+  * rectangular (M × K × SubDim); the vector follows [[VectorKernel]]'s
+  * contract, its length M·SubDim. */
 case class PqEncode(child: Expression, codebook: Seq[Seq[Seq[Double]]])
-    extends UnaryExpression {
+    extends UnaryExpression with VectorKernel {
 
-  require(codebook.nonEmpty && codebook.head.nonEmpty &&
-    codebook.head.head.nonEmpty, "empty PQ codebook")
+  require(codebook.nonEmpty && codebook.head.nonEmpty && codebook.head.head.nonEmpty &&
+    codebook.forall(s => s.length == codebook.head.length &&
+      s.forall(_.length == codebook.head.head.length)),
+    "PQ codebook must be non-empty and rectangular")
 
-  private lazy val isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
+  private def m = codebook.length
+  private def subDim = codebook.head.head.length
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float|double>, got $t")
-  }
+  protected def elementTypes: Seq[Seq[DataType]] = Seq(VectorKernel.Floating)
+  protected def lengths: Seq[Int] = Seq(m * subDim)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "pq_encode"
 
-  // flat [m][k][j] -> [m][k*subDim + j] so codegen references one double[][]
-  private lazy val m = codebook.length
-  private lazy val k = codebook.head.length
-  private lazy val subDim = codebook.head.head.length
-  private lazy val flat: Array[Array[Double]] =
-    codebook.map(_.flatten.toArray).toArray
+  private lazy val cb: Array[Array[Array[Double]]] =
+    codebook.map(_.map(_.toArray).toArray).toArray
 
-  override def nullSafeEval(a: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val nx = xs.numElements()
-    val out = new Array[Int](m)
+  def kernel(x: ArrayData): ArrayData = {
+    val xf = floats(0)
+    val out = new Array[Int](cb.length)
     var s = 0
-    while (s < m) {
-      val cb = flat(s)
+    while (s < cb.length) {
+      val sub = cb(s)
+      val base = s * sub(0).length
       var bestD = 0.0
       var bestK = -1
-      var kk = 0
-      while (kk < k) {
+      var k = 0
+      while (k < sub.length) {
+        val c = sub(k)
         var acc = 0.0
         var j = 0
-        while (j < subDim) {
-          val idx = s * subDim + j
-          val x = if (idx >= nx) 0.0
-            else if (isFloat) xs.getFloat(idx).toDouble else xs.getDouble(idx)
-          val d = x - cb(kk * subDim + j)
+        while (j < c.length) {
+          val d = at(x, base + j, xf) - c(j)
           acc = acc + d * d
           j += 1
         }
-        if (kk == 0 || acc < bestD) { bestD = acc; bestK = kk }
-        kk += 1
+        if (k == 0 || acc < bestD) { bestD = acc; bestK = k }
+        k += 1
       }
       out(s) = bestK
       s += 1
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val tbl = ctx.addReferenceObj("pqcb", flat, "double[][]")
-      val s = ctx.freshName("s"); val kk = ctx.freshName("kk")
-      val j = ctx.freshName("j"); val idx = ctx.freshName("idx")
-      val acc = ctx.freshName("acc"); val d = ctx.freshName("d")
-      val x = ctx.freshName("x"); val cb = ctx.freshName("cb")
-      val bestD = ctx.freshName("bestD"); val bestK = ctx.freshName("bestK")
-      val out = ctx.freshName("out"); val nx = ctx.freshName("nx")
-      val getter = if (isFloat) s"(double) $a.getFloat($idx)" else s"$a.getDouble($idx)"
-      s"""
-         |final int $nx = $a.numElements();
-         |final int[] $out = new int[$m];
-         |for (int $s = 0; $s < $m; $s++) {
-         |  final double[] $cb = $tbl[$s];
-         |  double $bestD = 0.0;
-         |  int $bestK = -1;
-         |  for (int $kk = 0; $kk < $k; $kk++) {
-         |    double $acc = 0.0;
-         |    for (int $j = 0; $j < $subDim; $j++) {
-         |      final int $idx = $s * $subDim + $j;
-         |      final double $x = ($idx >= $nx) ? 0.0 : $getter;
-         |      final double $d = $x - $cb[$kk * $subDim + $j];
-         |      $acc = $acc + $d * $d;
-         |    }
-         |    if ($kk == 0 || $acc < $bestD) { $bestD = $acc; $bestK = $kk; }
-         |  }
-         |  $out[$s] = $bestK;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+  protected def run(x: ArrayData, y: ArrayData): Any = kernel(x)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 /** ADC distance of a PQ code row against a probe's flattened lookup
-  * table: Σ_s lut[s·K + codes[s]] as one codegen'd loop — the kernel
-  * behind `operators/Pq.adcDist`, which the HOF form evaluated once per
+  * table: Σ_s lut[s·K + codes[s]] as one loop — the kernel behind
+  * `operators/Pq.adcDist`, which the HOF form evaluated once per
   * (probe, candidate) PAIR through an interpreted aggregate lambda.
-  * Bit-parity: identical left-to-right adds from +0.0. Off-path (short
-  * arrays / out-of-range code): contributes 0 where the HOF nulls. */
-case class PqAdcDist(left: Expression, right: Expression, kPerSub: Int)
-    extends BinaryExpression {
+  * Bit-parity: identical left-to-right adds from +0.0. Inputs follow
+  * [[VectorKernel]]'s contract: the LUT has M·K entries, the code row M,
+  * each code in [0, K). */
+case class PqAdcDist(left: Expression, right: Expression, m: Int, k: Int)
+    extends BinaryExpression with VectorKernel {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(IntegerType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<double>, array<int>), got $l and $r")
-    }
+  require(m > 0 && k > 0, "PQ shape must be positive")
+
+  protected def elementTypes: Seq[Seq[DataType]] = Seq(Seq(DoubleType), Seq(IntegerType))
+  protected def lengths: Seq[Int] = Seq(m * k, m)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "pq_adc_dist"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val lut = a.asInstanceOf[ArrayData]
-    val cs = b.asInstanceOf[ArrayData]
-    val nl = lut.numElements()
-    val m = cs.numElements()
+  override protected def inRange(lut: ArrayData, codes: ArrayData): Boolean = {
+    var s = 0
+    while (s < m) {
+      val c = codes.getInt(s)
+      if (c < 0 || c >= k) return false
+      s += 1
+    }
+    true
+  }
+
+  def kernel(lut: ArrayData, codes: ArrayData): Double = {
     var acc = 0.0
     var s = 0
     while (s < m) {
-      val idx = s * kPerSub + cs.getInt(s)
-      if (idx >= 0 && idx < nl) acc = acc + lut.getDouble(idx)
+      acc = acc + lut.getDouble(s * k + codes.getInt(s))
       s += 1
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val s = ctx.freshName("s"); val idx = ctx.freshName("idx")
-      val acc = ctx.freshName("acc"); val m = ctx.freshName("m")
-      val nl = ctx.freshName("nl")
-      s"""
-         |final int $m = $b.numElements();
-         |final int $nl = $a.numElements();
-         |double $acc = 0.0;
-         |for (int $s = 0; $s < $m; $s++) {
-         |  final int $idx = $s * $kPerSub + $b.getInt($s);
-         |  if ($idx >= 0 && $idx < $nl) $acc = $acc + $a.getDouble($idx);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+  protected def run(x: ArrayData, y: ArrayData): Any = kernel(x, y)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)

@@ -1,10 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** Squared L2 between a float-derived probe vector (array<double>) and
   * an SQ8 code row (array<long>), dequantizing each dimension in place
@@ -15,77 +13,41 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * Why native (SURVEY §4 tier b): the HOF form evaluates once per
   * (probe, candidate) PAIR and its lambda walks four element_at's per
   * dimension through interpreted eval — measured ~23 µs/pair at dim 64
-  * on the x10 rehearsal corpus. This is the same loop as one codegen'd
-  * pass with the model arrays as plan references.
+  * on the x10 rehearsal corpus. This is the same loop as one pass with
+  * the model arrays as plan references.
   *
-  * Bit-parity with the HOF fold in `operators/Sq8.adcTopK` (equal-length
-  * non-null arrays — the only inputs the operator produces): a strict
-  * left-to-right fold from +0.0 with the identical op order
-  * mn + (c·(mx−mn))/255, then diff·diff added — so the DuckDB oracle
-  * keeps matching (Sq8Spec asserts native == HOF on random vectors).
-  * Off that path it diverges by design: length truncates to the
-  * shortest of (arrays, model) and null elements read as 0 via the
-  * primitive getters (the HOF returns NULL). */
+  * Bit-parity with `operators/Sq8.adcDistHof`: a strict left-to-right
+  * fold from +0.0 with the identical op order mn + (c·(mx−mn))/255, then
+  * diff·diff added — so the DuckDB oracle keeps matching. Both inputs
+  * follow [[VectorKernel]]'s contract, their lengths the model's dim. */
 case class Sq8AdcDist(left: Expression, right: Expression,
     vmins: Seq[Double], vmaxs: Seq[Double])
-    extends BinaryExpression {
+    extends BinaryExpression with VectorKernel {
 
-  require(vmins.length == vmaxs.length, "model dims differ")
+  require(vmins.nonEmpty && vmins.length == vmaxs.length,
+    "SQ8 model bounds empty or mismatched")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<double>, array<long>), got $l and $r")
-    }
+  protected def elementTypes: Seq[Seq[DataType]] = Seq(Seq(DoubleType), Seq(LongType))
+  protected def lengths: Seq[Int] = Seq(vmins.length, vmins.length)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "sq8_adc_dist"
 
   private lazy val minsArr: Array[Double] = vmins.toArray
   private lazy val maxsArr: Array[Double] = vmaxs.toArray
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val qv = a.asInstanceOf[ArrayData]
-    val cs = b.asInstanceOf[ArrayData]
-    val n = math.min(math.min(qv.numElements(), cs.numElements()), minsArr.length)
+  def kernel(qv: ArrayData, codes: ArrayData): Double = {
     var acc = 0.0
     var i = 0
-    while (i < n) {
+    while (i < minsArr.length) {
       val mn = minsArr(i)
       val mx = maxsArr(i)
-      val dq = mn + cs.getLong(i).toDouble * (mx - mn) / 255.0
-      val diff = qv.getDouble(i) - dq
+      val diff = qv.getDouble(i) - (mn + codes.getLong(i).toDouble * (mx - mn) / 255.0)
       acc = acc + diff * diff
       i += 1
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val mins = ctx.addReferenceObj("sq8mins", minsArr, "double[]")
-      val maxs = ctx.addReferenceObj("sq8maxs", maxsArr, "double[]")
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val mn = ctx.freshName("mn")
-      val mx = ctx.freshName("mx")
-      val dq = ctx.freshName("dq")
-      val diff = ctx.freshName("diff")
-      s"""
-         |final int $n = Math.min(Math.min($a.numElements(), $b.numElements()), $mins.length);
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final double $mn = $mins[$i];
-         |  final double $mx = $maxs[$i];
-         |  final double $dq = $mn + (double) $b.getLong($i) * ($mx - $mn) / 255.0;
-         |  final double $diff = $a.getDouble($i) - $dq;
-         |  $acc = $acc + $diff * $diff;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+  protected def run(x: ArrayData, y: ArrayData): Any = kernel(x, y)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)

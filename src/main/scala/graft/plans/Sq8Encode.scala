@@ -1,14 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** SQ8 u8 quantization against plan-embedded per-dimension bounds: one
-  * codegen'd loop producing the code array — the kernel behind
-  * `operators/Sq8.encode`.
+  * loop producing the code array — the kernel behind `operators/Sq8.encode`.
   *
   * Why native (the PqEncode precedent, guide §4-analog): the HOF form is
   * `transform(sequence(1, dim), j => least(greatest(floor(t_j + 0.5),
@@ -17,87 +14,45 @@ import org.apache.spark.sql.types._
   * per-row projection every SQ8 index build (q160/q161/q169) pays over
   * the whole corpus.
   *
-  * Bit-parity with the HOF form (full-length non-null vectors — every
-  * embedding row in the engine): per dimension the operation sequence is
+  * Bit-parity with the HOF form: per dimension the operation sequence is
   * replicated STEP FOR STEP —
   *   t  = (mx == mn) ? 0.0 : ((double) v[j] − mn) · 255.0 / (mx − mn)
   *   fl = (long) Math.floor(t + 0.5)      // Spark floor(double): BIGINT
   *   code = (long) Math.min(Math.max((double) fl, 0.0), 255.0)
   * — the long conversion happens exactly where Spark's floor performs it
-  * (Java's (long) cast and Scala's .toLong share the NaN → 0 and ±Inf →
-  * Long.{Min,Max} semantics), so no NaN ever reaches the min/max chain,
-  * exactly as in the greatest/least chain over BIGINT-coerced doubles.
-  * Sq8EncodeSpec pins native == HOF on random, degenerate-dimension,
-  * NaN/Inf and clamp-edge vectors.
-  * Off-path: a short vector reads 0.0 past its end via the primitive
-  * getters (the HOF form emits null elements there); the operator only
-  * ever passes full-length vectors. */
+  * (Scala's .toLong has the NaN → 0 and ±Inf → Long.{Min,Max}
+  * semantics), so no NaN ever reaches the min/max chain, exactly as in
+  * the greatest/least chain over BIGINT-coerced doubles. The vector
+  * follows [[VectorKernel]]'s contract, its length the model's dim. */
 case class Sq8Encode(child: Expression, vmins: Seq[Double], vmaxs: Seq[Double])
-    extends UnaryExpression {
+    extends UnaryExpression with VectorKernel {
 
   require(vmins.nonEmpty && vmins.length == vmaxs.length,
     "SQ8 model bounds empty or mismatched")
 
-  private lazy val isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float|double>, got $t")
-  }
+  protected def elementTypes: Seq[Seq[DataType]] = Seq(VectorKernel.Floating)
+  protected def lengths: Seq[Int] = Seq(vmins.length)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "sq8_encode"
 
-  private lazy val dim = vmins.length
   private lazy val mnArr: Array[Double] = vmins.toArray
   private lazy val mxArr: Array[Double] = vmaxs.toArray
 
-  override def nullSafeEval(a: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val nx = xs.numElements()
-    val out = new Array[Long](dim)
+  def kernel(x: ArrayData): ArrayData = {
+    val xf = floats(0)
+    val out = new Array[Long](mnArr.length)
     var j = 0
-    while (j < dim) {
+    while (j < out.length) {
       val mn = mnArr(j)
       val mx = mxArr(j)
-      val x = if (j >= nx) 0.0
-        else if (isFloat) xs.getFloat(j).toDouble else xs.getDouble(j)
-      val t = if (mx == mn) 0.0 else (x - mn) * 255.0 / (mx - mn)
+      val t = if (mx == mn) 0.0 else (at(x, j, xf) - mn) * 255.0 / (mx - mn)
       val fl = math.floor(t + 0.5).toLong
       out(j) = math.min(math.max(fl.toDouble, 0.0), 255.0).toLong
       j += 1
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val mns = ctx.addReferenceObj("sq8mn", mnArr, "double[]")
-      val mxs = ctx.addReferenceObj("sq8mx", mxArr, "double[]")
-      val j = ctx.freshName("j"); val nx = ctx.freshName("nx")
-      val mn = ctx.freshName("mn"); val mx = ctx.freshName("mx")
-      val x = ctx.freshName("x"); val t = ctx.freshName("t")
-      val fl = ctx.freshName("fl")
-      val out = ctx.freshName("out")
-      val getter = if (isFloat) s"(double) $a.getFloat($j)" else s"$a.getDouble($j)"
-      s"""
-         |final int $nx = $a.numElements();
-         |final long[] $out = new long[$dim];
-         |for (int $j = 0; $j < $dim; $j++) {
-         |  final double $mn = $mns[$j];
-         |  final double $mx = $mxs[$j];
-         |  final double $x = ($j >= $nx) ? 0.0 : $getter;
-         |  final double $t = ($mx == $mn) ? 0.0 : ($x - $mn) * 255.0 / ($mx - $mn);
-         |  final long $fl = (long) Math.floor($t + 0.5);
-         |  $out[$j] = (long) Math.min(Math.max((double) $fl, 0.0), 255.0);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+  protected def run(x: ArrayData, y: ArrayData): Any = kernel(x)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

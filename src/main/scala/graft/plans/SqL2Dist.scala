@@ -1,88 +1,44 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
-/** Squared L2 distance between two numeric arrays as one codegen'd
-  * loop — the pair-verification kernel of the density-clustering
-  * family (DBSCAN/HDBSCAN candidate joins evaluate it once per
-  * candidate PAIR; the HOF `aggregate(zip_with(...))` form pays
-  * interpreted lambda eval per dimension per pair, the same shape
-  * `Sq8AdcDist`/`CellArgmin` replaced).
+/** Squared L2 distance between two numeric arrays as one loop — the
+  * pair-verification kernel of the density-clustering family
+  * (DBSCAN/HDBSCAN candidate joins evaluate it once per candidate PAIR;
+  * the HOF `aggregate(zip_with(...))` form pays interpreted lambda eval
+  * per dimension per pair, the same shape `Sq8AdcDist`/`CellArgmin`
+  * replaced).
   *
-  * Bit-parity with the HOF fold (equal-length non-null arrays): strict
-  * left-to-right accumulation from +0.0 of (x − y)² with float inputs
-  * widened per element — spec-pinned, so the q85/q87/q89 oracles keep
-  * matching. Off-path: length truncates to the shorter (zip_with
-  * null-pads), null elements read as 0 via the primitive getters. */
+  * Bit-parity with the HOF fold: strict left-to-right accumulation from
+  * +0.0 of (x − y)² with float inputs widened per element — so the
+  * q85/q87/q89 oracles keep matching. Inputs follow [[VectorKernel]]'s
+  * contract, with the two lengths equal. */
 case class SqL2Dist(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with VectorKernel {
 
-  private def elem(dt: DataType): Option[DataType] = dt match {
-    case ArrayType(FloatType, _) => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _ => None
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (elem(left.dataType), elem(right.dataType)) match {
-      case (Some(_), Some(_)) => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<float|double> inputs, got " +
-          s"${left.dataType} and ${right.dataType}")
-    }
+  protected def elementTypes: Seq[Seq[DataType]] =
+    Seq(VectorKernel.Floating, VectorKernel.Floating)
+  protected def lengths: Seq[Int] = Seq(VectorKernel.Same, VectorKernel.Same)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "sq_l2_dist"
 
-  private lazy val leftFloat = elem(left.dataType).contains(FloatType)
-  private lazy val rightFloat = elem(right.dataType).contains(FloatType)
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val ys = b.asInstanceOf[ArrayData]
-    val n = math.min(xs.numElements(), ys.numElements())
+  def kernel(x: ArrayData, y: ArrayData): Double = {
+    val xf = floats(0)
+    val yf = floats(1)
+    val n = x.numElements()
     var acc = 0.0
     var i = 0
     while (i < n) {
-      val x = if (leftFloat) xs.getFloat(i).toDouble else xs.getDouble(i)
-      val y = if (rightFloat) ys.getFloat(i).toDouble else ys.getDouble(i)
-      val d = x - y
+      val d = at(x, i, xf) - at(y, i, yf)
       acc = acc + d * d
       i += 1
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      val gx = if (leftFloat) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      val gy = if (rightFloat) s"(double) $b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         |final int $n = Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final double $d = $gx - $gy;
-         |  $acc = $acc + $d * $d;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+  protected def run(x: ArrayData, y: ArrayData): Any = kernel(x, y)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
-}
-
-object SqL2Dist {
-  import org.apache.spark.sql.{Column, GraftColumnBridge}
-
-  def sqL2Col(a: Column, b: Column): Column =
-    GraftColumnBridge.column(
-      SqL2Dist(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
 }

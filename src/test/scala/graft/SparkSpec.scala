@@ -14,4 +14,15 @@ trait SparkSpec extends AnyFunSuite {
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Runs `body` with whole-stage codegen off and expressions interpreted
+    * (`NO_CODEGEN`), then restores both confs to their previous values. */
+  def withoutCodegen[T](body: => T): T = {
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 }

@@ -46,7 +46,7 @@ class CellArgminSpec extends SparkSpec {
       zip_with(col("a"), col("b"), (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, v) => acc + v)
     val got = df.select(col("id"),
-      graft.plans.SqL2Dist.sqL2Col(col("a"), col("b")).as("n"), hof.as("h"))
+      Similarity.sqL2(col("a"), col("b")).as("n"), hof.as("h"))
       .as[(Long, Double, Double)].collect()
     got.foreach { case (id, n, h) =>
       assert(java.lang.Double.doubleToLongBits(n) ===
@@ -62,7 +62,7 @@ class CellArgminSpec extends SparkSpec {
           (x.cast("double") - y.cast("double"))),
       lit(0.0), (acc, v) => acc + v)
     val fgot = fdf.select(col("id"),
-      graft.plans.SqL2Dist.sqL2Col(col("a"), col("b")).as("n"), fhof.as("h"))
+      Similarity.sqL2(col("a"), col("b")).as("n"), fhof.as("h"))
       .as[(Long, Double, Double)].collect()
     fgot.foreach { case (id, n, h) =>
       assert(java.lang.Double.doubleToLongBits(n) ===

@@ -109,12 +109,7 @@ class Sq8Spec extends SparkSpec {
       .withColumn("pair", pmod(col("vec_id") + 7, lit(60L)))
     val other = paired.select(col("vec_id").as("pair"), col("codes").as("ocodes"))
     val joined = paired.join(other, "pair")
-    val native = {
-      import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-      column(graft.plans.Sq8AdcDist(expression(col("qv")),
-        expression(col("ocodes")), m.vmins, m.vmaxs))
-    }
-    val got = joined.select(col("vec_id"), native.as("n"),
+    val got = joined.select(col("vec_id"), Sq8.adcDist(col("qv"), col("ocodes"), m).as("n"),
       Sq8.adcDistHof(col("qv"), col("ocodes"), m).as("h"))
       .as[(Long, Double, Double)].collect()
     assert(got.length === 60)

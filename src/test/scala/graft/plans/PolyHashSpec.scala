@@ -22,9 +22,7 @@ class PolyHashSpec extends SparkSpec {
     def run(): Long = df.select(TextAnalysis.polyHash(col("s"))).as[Long].head()
     val withCodegen = run()
     assert(withCodegen == (7L * 31 + 'a') * 31 + 'b')
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try assert(run() == withCodegen)
-    finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    withoutCodegen(assert(run() == withCodegen))
     // empty string -> seed
     assert(Seq("").toDF("s").select(TextAnalysis.polyHash(col("s"))).as[Long].head() == 7L)
   }

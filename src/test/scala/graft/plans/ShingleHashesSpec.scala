@@ -82,10 +82,9 @@ class ShingleHashesSpec extends SparkSpec {
     val viaSql = spark.sql("SELECT shingle_hashes('abcab', 3)").as[Seq[Long]].head()
     val viaDf = Seq("abcab").toDF("s").select(Dedup.shingleHashes(col("s"))).as[Seq[Long]].head()
     assert(viaSql == viaDf && viaSql.length == 3) // abc, bca, cab
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
+    withoutCodegen {
       val interp = Seq("abcab").toDF("s").select(Dedup.shingleHashes(col("s"))).as[Seq[Long]].head()
       assert(interp == viaDf)
-    } finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
   }
 }

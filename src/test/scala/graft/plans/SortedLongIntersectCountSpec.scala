@@ -60,13 +60,7 @@ class SortedLongIntersectCountSpec extends SparkSpec {
         }
       }
       check()
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      try check()
-      finally {
-        spark.conf.set("spark.sql.codegen.wholeStage", "true")
-        spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-      }
+      withoutCodegen(check())
     }
   }
 
@@ -74,12 +68,6 @@ class SortedLongIntersectCountSpec extends SparkSpec {
     val df = Seq((Seq(1L, 5L, 9L), Seq(5L, 9L, 11L))).toDF("a", "b")
     def run(): Double = df.select(Dedup.jaccardSorted(col("a"), col("b"))).as[Double].head()
     val withCodegen = run()
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try assert(run() == withCodegen && withCodegen == 0.5)
-    finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    }
+    withoutCodegen(assert(run() == withCodegen && withCodegen == 0.5))
   }
 }

@@ -46,13 +46,7 @@ class Sq8EncodeSpec extends SparkSpec {
   }
 
   test("native == HOF on random + edge vectors (interpreted path)") {
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try assertParity()
-    finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    }
+    withoutCodegen(assertParity())
   }
 
   test("double-typed input arrays encode identically through both forms") {
