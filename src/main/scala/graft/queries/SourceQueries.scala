@@ -2071,7 +2071,7 @@ object SourceQueries {
           bounds = Map("x" -> (5.0, 25.0)),
           timeBounds = Map("time" ->
             ("2021-06-01 12:00:00", "2021-06-02 06:00:00")))
-        .select(element_at(split(col("path"), "/"), -1).as("scene"),
+        .select(substring_index(col("path"), "/", -1).as("scene"),
           col("time").as("ts"), col("x"), col("value"))
     },
 
@@ -2099,7 +2099,7 @@ object SourceQueries {
           bounds = Map("y" -> (100.0, 400.0), "x" -> (200.0, 500.0)),
           timeBounds = Map("time" ->
             ("2021-07-01 10:00:00", "2021-07-02 02:00:00")))
-        .select(element_at(split(col("path"), "/"), -1).as("scene"),
+        .select(substring_index(col("path"), "/", -1).as("scene"),
           floor(col("y") / 200).cast("long").as("ty"),
           floor(col("x") / 200).cast("long").as("tx"), col("value"))
         .groupBy("scene", "ty", "tx")
@@ -2181,7 +2181,7 @@ object SourceQueries {
         |  ('g2.nc', CAST(20 AS DOUBLE), CAST(14 AS DOUBLE))
         |) t(granule, x, value)""".stripMargin) { (s, d) =>
       graft.sources.GridOpen.netcdf3Catalog(s, ensureQ221Catalog(), "v")
-        .select(element_at(split(col("path"), "/"), -1).as("granule"),
+        .select(substring_index(col("path"), "/", -1).as("granule"),
           col("x"), col("value"))
     },
 
@@ -2212,7 +2212,7 @@ object SourceQueries {
       graft.sources.GridOpen.zarrCatalogFromManifest(s, ensureQ222Manifest(s),
           "lwp", timeBounds = Map("time" ->
             ("2021-01-05 02:00:00", "2021-01-06 23:00:00")))
-        .select(element_at(split(col("path"), "/"), -1).as("scene"),
+        .select(substring_index(col("path"), "/", -1).as("scene"),
           col("time").as("ts"), col("x"), col("value"))
     },
 
@@ -2250,7 +2250,7 @@ object SourceQueries {
       graft.sources.GridOpen.zarrVarsCatalogFromManifest(s,
           ensureQ224Manifest(s), Seq("t700", "t1000"),
           bounds = Map("y" -> (1000.0, 1100.0)))
-        .select(element_at(split(col("path"), "/"), -1).as("scene"),
+        .select(substring_index(col("path"), "/", -1).as("scene"),
           col("y"), col("x"),
           round((col("t700") * lit(1.107393475838283) - col("t1000")) *
             lit(1000000)).cast("long").as("lts_micro"))
@@ -2276,7 +2276,7 @@ object SourceQueries {
           "lwp", bounds = Map("y" -> (100.0, 400.0), "x" -> (200.0, 500.0)),
           timeBounds = Map("time" ->
             ("2021-07-01 10:00:00", "2021-07-02 02:00:00")))
-        .select(element_at(split(col("path"), "/"), -1).as("scene"),
+        .select(substring_index(col("path"), "/", -1).as("scene"),
           floor(col("y") / 200).cast("long").as("ty"),
           floor(col("x") / 200).cast("long").as("tx"), col("value"))
         .groupBy("scene", "ty", "tx")
@@ -2296,7 +2296,7 @@ object SourceQueries {
       graft.sources.GridOpen.zarrCatalogFromManifest(s, ensureQ226Manifest(s),
           "lwp", timeBounds = Map("time" ->
             ("2021-01-01 00:00:00", "2021-01-26 23:00:00")))
-        .select(element_at(split(col("path"), "/"), -1).as("scene"), col("value"))
+        .select(substring_index(col("path"), "/", -1).as("scene"), col("value"))
         .groupBy("scene")
         .agg(sum("value").as("sum_v"), count(lit(1)).as("n"))
     },
@@ -2341,10 +2341,10 @@ object SourceQueries {
         .zarrCatalogWithScenesFromManifest(s, ensureQ228Manifest(s), "lwp",
           timeBounds = q228TimeBounds)
       val px = pxRaw
-        .select(element_at(split(col("path"), "/"), -1).as("scene_id"),
+        .select(substring_index(col("path"), "/", -1).as("scene_id"),
           col("y"), col("x"), col("value"))
       val scenes = sceneList
-        .select(element_at(split(col("path"), "/"), -1).as("scene_id"))
+        .select(substring_index(col("path"), "/", -1).as("scene_id"))
         .withColumn("collection", Triplets.splitScenes(col("scene_id"), 42,
           Seq("train" -> 0.8, "study" -> 0.2)))
       val triplets = s.range(0, 6).select(col("id").as("triplet_id"))
@@ -2399,10 +2399,10 @@ object SourceQueries {
         .zarrCatalogWithScenesFromManifest(s, ensureQ228Manifest(s), "lwp",
           timeBounds = q229TimeBounds)
       val px = pxRaw229
-        .select(element_at(split(col("path"), "/"), -1).as("scene_id"),
+        .select(substring_index(col("path"), "/", -1).as("scene_id"),
           col("y"), col("x"), col("value"))
       val scenes = sceneList229
-        .select(element_at(split(col("path"), "/"), -1).as("scene_id"))
+        .select(substring_index(col("path"), "/", -1).as("scene_id"))
         .withColumn("nx", lit(8)).withColumn("ny", lit(8))
       val specs = Tiler.tileSpecs(scenes, col("nx"), col("ny"),
           tileN = 4, step = 2)
@@ -2450,7 +2450,7 @@ object SourceQueries {
         |FROM range(0,2) r1(j), range(0,5) r2(i)""".stripMargin) { (s, d) =>
       graft.sources.GridOpen.zarrVarsCatalog(s, ensureQ220Catalog(),
           Seq("t700", "t1000"), bounds = Map("y" -> (1000.0, 1100.0)))
-        .select(element_at(split(col("path"), "/"), -1).as("scene"),
+        .select(substring_index(col("path"), "/", -1).as("scene"),
           col("y"), col("x"),
           round((col("t700") * lit(1.107393475838283) - col("t1000")) *
             lit(1000000)).cast("long").as("lts_micro"))

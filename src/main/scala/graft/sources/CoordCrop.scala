@@ -101,22 +101,27 @@ object CoordCrop {
         }
     }
 
-  /** One zarr array's full values, idx-ordered, read driver-side (the
-    * 1-D coordinate arrays this serves are KB-scale). */
+  /** One zarr array's full values in global C order, absent chunks as
+    * fill, read driver-side (the 1-D coordinate arrays this serves are
+    * KB-scale): each chunk's block is copied into place run by run. */
   private[sources] def zarrArrayValues(store: String, name: String): Array[Double] = {
-    val meta = ZarrChunkIngest.metaOf(store, name)
-    val pairs: Array[(Long, Double)] = meta match {
+    import ZarrChunkIngest._
+    val meta = metaOf(store, name)
+    val (shape, _, fill) = dimsOf(meta)
+    val out = Array.fill(shape.product)(fill)
+    def scatter(b: Block): Unit = if (b.values != null)
+      foreachRun(b)((k0, g0, _, len) => System.arraycopy(b.values, k0, out, g0.toInt, len))
+    val stats = new ReadStats
+    meta match {
       case Right(m) if m.sharding.isDefined =>
         val handles = scala.collection.mutable.Map.empty[String, ByteStore.ReadAt]
-        try ZarrChunkIngest.innerElemsRun(
-            ZarrChunkIngest.shardInnerTasks(store, name).toIndexedSeq, m,
-            p => handles.getOrElseUpdate(p, ByteStore.open(p))).toArray
+        try innerBlocks(shardInnerTasks(store, name).toIndexedSeq, m, withValues = true,
+            p => handles.getOrElseUpdate(p, ByteStore.open(p)), stats).foreach(scatter)
         finally handles.values.foreach(_.close())
       case m =>
-        ZarrChunkIngest.chunkTasks(store, name).iterator
-          .flatMap(t => ZarrChunkIngest.chunkElems(t, m)).toArray
+        chunkTasks(store, name).foreach(t => scatter(chunkBlock(t, m, withValues = true, stats)))
     }
-    pairs.sortBy(_._1).map(_._2)
+    out
   }
 
   /** The `dataset` rows of the zarr mount at `store`, cropped to the

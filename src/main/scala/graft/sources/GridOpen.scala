@@ -546,7 +546,7 @@ object GridOpen {
     val pending = stores.filterNot(s => done(sceneOf(s)))
     if (pending.isEmpty) return Nil
     val df = openPending(pending)
-      .withColumn("scene", element_at(split(col("path"), "/"), -1))
+      .withColumn("scene", substring_index(col("path"), "/", -1))
     // per-writer dynamic overwrite: mutating the SESSION conf would
     // silently change the semantics of the caller's own later writes
     df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)

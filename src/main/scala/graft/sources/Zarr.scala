@@ -30,7 +30,43 @@ import org.json4s.jackson.JsonMethods
 object Zarr {
 
   final case class ArrayMeta(shape: Seq[Int], chunks: Seq[Int], dtype: String,
-      compressor: Option[String], fill: Double)
+      compressor: Option[String], fill: Double) {
+    /** `dtype` resolved once: `<f8` is kind 'f', 8 bytes, little-endian. */
+    lazy val elem: Elem = Elem(dtype(1), dtype.last.asDigit, dtype.head == '>')
+  }
+
+  /** An element type resolved once per array — kind ('f', 'i' or 'u'),
+    * byte width and byte order — shared by the v2 and v3 readers.
+    * [[decode]] picks the loop once per chunk, then converts every
+    * element of the chunk to Double in one primitive pass. */
+  private[sources] final case class Elem(kind: Char, size: Int, bigEndian: Boolean) {
+    def decode(bytes: Array[Byte], n: Int): Array[Double] = {
+      val bb = java.nio.ByteBuffer.wrap(bytes).order(
+        if (bigEndian) java.nio.ByteOrder.BIG_ENDIAN else java.nio.ByteOrder.LITTLE_ENDIAN)
+      val out = new Array[Double](n)
+      var k = 0
+      (kind, size) match {
+        case ('f', 8) => bb.asDoubleBuffer().get(out)
+        case ('f', 4) =>
+          val b = bb.asFloatBuffer(); while (k < n) { out(k) = b.get(k).toDouble; k += 1 }
+        case ('i', 8) =>
+          val b = bb.asLongBuffer(); while (k < n) { out(k) = b.get(k).toDouble; k += 1 }
+        case ('i', 4) =>
+          val b = bb.asIntBuffer(); while (k < n) { out(k) = b.get(k).toDouble; k += 1 }
+        case ('i', 2) =>
+          val b = bb.asShortBuffer(); while (k < n) { out(k) = b.get(k).toDouble; k += 1 }
+        case ('i', 1) => while (k < n) { out(k) = bytes(k).toDouble; k += 1 }
+        case ('u', 4) =>
+          val b = bb.asIntBuffer()
+          while (k < n) { out(k) = (b.get(k).toLong & 0xFFFFFFFFL).toDouble; k += 1 }
+        case ('u', 2) =>
+          val b = bb.asShortBuffer(); while (k < n) { out(k) = (b.get(k) & 0xFFFF).toDouble; k += 1 }
+        case ('u', 1) => while (k < n) { out(k) = (bytes(k) & 0xFF).toDouble; k += 1 }
+        case _ => fail(s"element type $this unsupported")
+      }
+      out
+    }
+  }
 
   private implicit val formats: Formats = DefaultFormats
 
@@ -124,25 +160,6 @@ object Zarr {
     }
   }
 
-  private def elemSize(dtype: String): Int = dtype.last match {
-    case '8' => 8; case '4' => 4; case '2' => 2; case '1' => 1
-  }
-
-  private def decodeElem(bb: java.nio.ByteBuffer, dtype: String, k: Int): Double = {
-    val es = elemSize(dtype)
-    dtype.drop(1) match {
-      case "f8" => bb.getDouble(k * es)
-      case "f4" => bb.getFloat(k * es).toDouble
-      case "i8" => bb.getLong(k * es).toDouble
-      case "i4" => bb.getInt(k * es).toDouble
-      case "i2" => bb.getShort(k * es).toDouble
-      case "i1" => bb.get(k * es).toDouble
-      case "u4" => (bb.getInt(k * es).toLong & 0xFFFFFFFFL).toDouble
-      case "u2" => (bb.getShort(k * es) & 0xFFFF).toDouble
-      case "u1" => (bb.get(k * es) & 0xFF).toDouble
-    }
-  }
-
   /** Decode ONE chunk file's raw bytes to its full chunk-sized value
     * array (pad regions included) — the [[ZarrChunkIngest]] unit. */
   private[sources] def decodeChunkBytes(raw: Array[Byte], meta: ArrayMeta): Array[Double] = {
@@ -152,14 +169,10 @@ object Zarr {
       case Some("zstd") => zstdInflate(raw)
       case _ => raw
     }
-    val es = elemSize(meta.dtype)
-    val expect = meta.chunks.product * es
-    if (bytes.length != expect)
-      fail(s"chunk has ${bytes.length} bytes, expected $expect")
-    val order = if (meta.dtype.head == '>') java.nio.ByteOrder.BIG_ENDIAN
-      else java.nio.ByteOrder.LITTLE_ENDIAN
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(order)
-    Array.tabulate(meta.chunks.product)(k => decodeElem(bb, meta.dtype, k))
+    val n = meta.chunks.product
+    if (bytes.length != n * meta.elem.size)
+      fail(s"chunk has ${bytes.length} bytes, expected ${n * meta.elem.size}")
+    meta.elem.decode(bytes, n)
   }
 
   /** Decode one array of any rank from `store/name`: full C-order
@@ -175,9 +188,6 @@ object Zarr {
     val nChunks = meta.shape.zip(meta.chunks).map { case (s, c) => (s + c - 1) / c }
     val strides = meta.shape.scanRight(1)(_ * _).tail // C-order global strides
     val cStrides = meta.chunks.scanRight(1)(_ * _).tail
-    val es = elemSize(meta.dtype)
-    val byteOrder = if (meta.dtype.head == '>') java.nio.ByteOrder.BIG_ENDIAN
-      else java.nio.ByteOrder.LITTLE_ENDIAN
 
     def chunkKeys(idx: List[Int], dim: Int): Seq[List[Int]] =
       if (dim == rank) Seq(idx.reverse)
@@ -186,17 +196,7 @@ object Zarr {
     chunkKeys(Nil, 0).foreach { ci =>
       val f = new java.io.File(d, ci.mkString("."))
       if (f.exists()) {
-        val raw = java.nio.file.Files.readAllBytes(f.toPath)
-        val bytes = meta.compressor match {
-          case Some("zlib") => inflate(raw)
-          case Some("blosc") => Blosc.decompress(raw)
-          case Some("zstd") => zstdInflate(raw)
-          case _ => raw
-        }
-        val expect = meta.chunks.product * es
-        if (bytes.length != expect)
-          fail(s"chunk ${f.getName} has ${bytes.length} bytes, expected $expect")
-        val bb = java.nio.ByteBuffer.wrap(bytes).order(byteOrder)
+        val vals = decodeChunkBytes(java.nio.file.Files.readAllBytes(f.toPath), meta)
         // walk chunk elements in C order; skip positions past the array edge
         val within = meta.chunks.product
         var k = 0
@@ -210,7 +210,7 @@ object Zarr {
             else g += global.toLong * strides(dim)
             dim += 1
           }
-          if (inBounds) out(g.toInt) = decodeElem(bb, meta.dtype, k)
+          if (inBounds) out(g.toInt) = vals(k)
           k += 1
         }
       }

@@ -54,7 +54,11 @@ object Zarr3 {
   final case class Meta(shape: Seq[Int], chunks: Seq[Int], dtype: String,
       bigEndian: Boolean, compress: Option[String], fill: Double,
       keySep: String, v2Keys: Boolean, sharding: Option[Sharding] = None,
-      dimNames: Seq[String] = Nil)
+      dimNames: Seq[String] = Nil) {
+    /** `dtype` resolved once (`bigEndian` is the inner pipeline's when
+      * sharded). */
+    lazy val elem: Zarr.Elem = Zarr.Elem(dtype.head, DtypeSizes(dtype), bigEndian)
+  }
 
   private implicit val formats: Formats = DefaultFormats
 
@@ -226,19 +230,6 @@ object Zarr3 {
     finally in.close()
   }
 
-  private def decodeElem(bb: java.nio.ByteBuffer, dtype: String, k: Int): Double =
-    dtype match {
-      case "float64" => bb.getDouble(k * 8)
-      case "float32" => bb.getFloat(k * 4).toDouble
-      case "int64" => bb.getLong(k * 8).toDouble
-      case "int32" => bb.getInt(k * 4).toDouble
-      case "int16" => bb.getShort(k * 2).toDouble
-      case "int8" => bb.get(k).toDouble
-      case "uint32" => (bb.getInt(k * 4).toLong & 0xFFFFFFFFL).toDouble
-      case "uint16" => (bb.getShort(k * 2) & 0xFFFF).toDouble
-      case "uint8" => (bb.get(k) & 0xFF).toDouble
-    }
-
   /** Decode ONE chunk file's raw bytes to its full chunk-sized value
     * array (pad regions included) — the [[ZarrChunkIngest]] unit. A
     * sharded array's chunk file is a SHARD: the inner-chunk index at
@@ -249,20 +240,15 @@ object Zarr3 {
       case Some(sh) => decodeShard(raw, meta, sh)
       case None =>
         val bytes = decompressBytes(raw, meta)
-        val es = DtypeSizes(meta.dtype)
-        val expect = meta.chunks.product * es
-        if (bytes.length != expect)
-          fail(s"chunk has ${bytes.length} bytes, expected $expect")
-        val order = if (meta.bigEndian) java.nio.ByteOrder.BIG_ENDIAN
-          else java.nio.ByteOrder.LITTLE_ENDIAN
-        val bb = java.nio.ByteBuffer.wrap(bytes).order(order)
-        Array.tabulate(meta.chunks.product)(k => decodeElem(bb, meta.dtype, k))
+        val n = meta.chunks.product
+        if (bytes.length != n * meta.elem.size)
+          fail(s"chunk has ${bytes.length} bytes, expected ${n * meta.elem.size}")
+        meta.elem.decode(bytes, n)
     }
 
   private val ShardMissing = -1L // index stores 2^64-1 for absent chunks
 
   private def decodeShard(raw: Array[Byte], meta: Meta, sh: Sharding): Array[Double] = {
-    val es = DtypeSizes(meta.dtype)
     val gridDims = meta.chunks.zip(sh.innerChunks).map { case (o, i) => o / i }
     val nInner = gridDims.product
     val indexLen = nInner * 16 + (if (sh.indexCrc) 4 else 0)
@@ -324,7 +310,6 @@ object Zarr3 {
     * shard-inner-parallel reads. */
   private[sources] def decodeInnerChunk(innerRaw: Array[Byte], meta: Meta,
       sh: Sharding): Array[Double] = {
-    val es = DtypeSizes(meta.dtype)
     val bytes = sh.innerCompress match {
       case None => innerRaw
       case Some("gzip") => gunzip(innerRaw)
@@ -332,13 +317,10 @@ object Zarr3 {
       case Some("zstd") => Zarr.zstdInflate(innerRaw)
       case Some(other) => fail(s"inner codec '$other' unsupported")
     }
-    val expect = sh.innerChunks.product * es
-    if (bytes.length != expect)
-      fail(s"inner chunk has ${bytes.length} bytes, expected $expect")
-    val order = if (sh.innerBigEndian) java.nio.ByteOrder.BIG_ENDIAN
-      else java.nio.ByteOrder.LITTLE_ENDIAN
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(order)
-    Array.tabulate(sh.innerChunks.product)(k => decodeElem(bb, meta.dtype, k))
+    val n = sh.innerChunks.product
+    if (bytes.length != n * meta.elem.size)
+      fail(s"inner chunk has ${bytes.length} bytes, expected ${n * meta.elem.size}")
+    meta.elem.decode(bytes, n)
   }
 
   /** Read a SHARD file's index only (its 16*nInner + optional-crc tail

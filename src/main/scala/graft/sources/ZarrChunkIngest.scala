@@ -69,69 +69,108 @@ object ZarrChunkIngest {
     }
   }
 
-  /** One chunk task's (global idx, value) elements, pad regions
-    * skipped; the chunk file is read + decoded here. Shared by the RDD
-    * ingest below and the [[ZarrDataSource]] DSv2 reader. */
-  private[sources] def chunkElems(t: ChunkTask,
-      meta: Either[Zarr.ArrayMeta, Zarr3.Meta]): Iterator[(Long, Double)] = {
-    val (shape, chunks, fill) = meta match {
-      case Left(m) => (m.shape, m.chunks, m.fill)
-      case Right(m) => (m.shape, m.chunks, m.fill)
-    }
-    val chunkFile = chunkPath(t, meta)
-    val decoded: Option[Array[Double]] =
-      if (!ByteStore.exists(chunkFile)) None
-      else Some(meta match {
-        case Left(m) => Zarr.decodeChunkBytes(ByteStore.readAllBytes(chunkFile), m)
-        case Right(m) => Zarr3.decodeChunkBytes(ByteStore.readAllBytes(chunkFile), m)
-      })
-    chunkIndexValues(shape, chunks, t.ci).map { case (g, k) =>
-      (g, decoded.map(_(k)).getOrElse(fill))
+  /** Chunks decoded and store bytes read by one reader, counted per
+    * chunk or per read span — the DSv2 scan reports them as its
+    * `chunksDecoded`/`bytesRead` metrics. */
+  private[sources] final class ReadStats {
+    var chunks = 0L
+    var bytes = 0L
+  }
+
+  /** One chunk, or one inner chunk of a shard, of array `dataset` in
+    * `store`: the box at `origin` with per-dimension `extent` (the chunk
+    * shape) inside the array `shape`, and its decoded values in C order
+    * over the full extent, pad region included. `values` is null when
+    * the chunk is absent (every element reads `fill`) or when the
+    * caller asked for indexes only (its bytes were never read). */
+  private[sources] final class Block(val store: String, val dataset: String,
+      val shape: Array[Long], val origin: Array[Long], val extent: Array[Int],
+      val values: Array[Double], val fill: Double) {
+    /** The box clipped to the array: in-bounds length per dimension. */
+    val clipped: Array[Int] = Array.tabulate(shape.length)(d =>
+      math.max(0L, math.min(extent(d).toLong, shape(d) - origin(d))).toInt)
+    /** In-bounds elements: the rows this block emits. */
+    def rows: Int = clipped.product
+  }
+
+  /** One innermost run of a block's in-bounds elements: `len` elements
+    * starting at within-block index `k0` and global linear index `g0`,
+    * whose per-dimension coordinates are `coords` (the last one
+    * advancing by 1 along the run). */
+  private[sources] trait RunVisitor {
+    def run(k0: Int, g0: Long, coords: Array[Long], len: Int): Unit
+  }
+
+  /** Walk block `b`'s in-bounds elements in C order, one call per
+    * innermost run, so callers copy or fill a whole run per call. Pad
+    * positions past the array edge are skipped; this walk fixes the row
+    * order of every reader (chunk order, then C order inside it). */
+  private[sources] def foreachRun(b: Block)(f: RunVisitor): Unit = {
+    if (b.rows == 0) return
+    val rank = b.shape.length
+    val strides = MountDsv2.rowStrides(b.shape.toSeq)
+    val within = b.extent.scanRight(1)(_ * _).tail
+    val local = new Array[Int](rank)
+    val coords = b.origin.clone()
+    val last = rank - 1
+    var more = true
+    while (more) {
+      var k0 = 0
+      var g0 = 0L
+      var d = 0
+      while (d < rank) { k0 += local(d) * within(d); g0 += coords(d) * strides(d); d += 1 }
+      f.run(k0, g0, coords, b.clipped(last))
+      // odometer over the outer dimensions
+      d = last - 1
+      while (d >= 0 && local(d) == b.clipped(d) - 1) {
+        local(d) = 0; coords(d) = b.origin(d); d -= 1
+      }
+      if (d < 0) more = false else { local(d) += 1; coords(d) += 1 }
     }
   }
 
-  /** Index-only walk of one chunk task: the chunk file's BYTES ARE
-    * NEVER READ — the grid is closed-form from metadata, so projections
-    * without `value` do metadata-proportional work. */
-  private[sources] def chunkIndexes(t: ChunkTask,
-      meta: Either[Zarr.ArrayMeta, Zarr3.Meta]): Iterator[Long] = {
-    val (shape, chunks) = meta match {
-      case Left(m) => (m.shape, m.chunks)
-      case Right(m) => (m.shape, m.chunks)
+  /** (shape, chunk shape, fill) of either version's metadata. */
+  private[sources] def dimsOf(meta: Either[Zarr.ArrayMeta, Zarr3.Meta]): (Seq[Int], Seq[Int], Double) =
+    meta match {
+      case Left(m) => (m.shape, m.chunks, m.fill)
+      case Right(m) => (m.shape, m.chunks, m.fill)
     }
-    chunkIndexValues(shape, chunks, t.ci).map(_._1)
+
+  /** One chunk task as a [[Block]]. With `withValues` the chunk file is
+    * read and decoded in one array-level pass (absent file: fill);
+    * without it the chunk file is never opened, so projections without
+    * `value` do metadata-proportional work. */
+  private[sources] def chunkBlock(t: ChunkTask, meta: Either[Zarr.ArrayMeta, Zarr3.Meta],
+      withValues: Boolean, stats: ReadStats): Block = {
+    val (shape, chunks, fill) = dimsOf(meta)
+    val values =
+      if (!withValues) null
+      else {
+        val chunkFile = chunkPath(t, meta)
+        if (!ByteStore.exists(chunkFile)) null
+        else {
+          val raw = ByteStore.readAllBytes(chunkFile)
+          stats.chunks += 1
+          stats.bytes += raw.length
+          meta match {
+            case Left(m) => Zarr.decodeChunkBytes(raw, m)
+            case Right(m) => Zarr3.decodeChunkBytes(raw, m)
+          }
+        }
+      }
+    new Block(t.store, t.dataset, shape.map(_.toLong).toArray,
+      t.ci.zip(chunks).map { case (c, w) => c.toLong * w }.toArray, chunks.toArray,
+      values, fill)
   }
 
   /** Inclusive [min, max] global-linear-index bounds of one chunk task
     * (closed-form — used by the mount's idx-range prune). */
   private[sources] def chunkIdxBounds(t: ChunkTask,
       meta: Either[Zarr.ArrayMeta, Zarr3.Meta]): (Long, Long) = {
-    val (shape, chunks) = meta match {
-      case Left(m) => (m.shape, m.chunks)
-      case Right(m) => (m.shape, m.chunks)
-    }
+    val (shape, chunks, _) = dimsOf(meta)
     MountDsv2.boxBounds(
       t.ci.zip(chunks).map { case (c, w) => c.toLong * w },
       chunks.map(_.toLong), shape.map(_.toLong))
-  }
-
-  /** In-bounds (global linear index, within-chunk index) pairs of one
-    * chunk at grid position `ci`. */
-  private def chunkIndexValues(shape: Seq[Int], chunks: Seq[Int],
-      ci: Seq[Int]): Iterator[(Long, Int)] = {
-    val strides = shape.scanRight(1)(_ * _).tail
-    val cStrides = chunks.scanRight(1)(_ * _).tail
-    (0 until chunks.product).iterator.flatMap { k =>
-      var g = 0L; var inBounds = true; var dim = 0
-      while (dim < shape.size && inBounds) {
-        val local = (k / cStrides(dim)) % chunks(dim)
-        val global = ci(dim) * chunks(dim) + local
-        if (global >= shape(dim)) inBounds = false
-        else g += global.toLong * strides(dim)
-        dim += 1
-      }
-      if (!inBounds) None else Some((g, k))
-    }
   }
 
   /** Phase 2 fan-out: decode each chunk independently. The per-task
@@ -150,14 +189,30 @@ object ZarrChunkIngest {
       .mapPartitions { it =>
         ByteStore.install(hconf) // executor JVMs have no session
         var cached: ((String, String), Either[Zarr.ArrayMeta, Zarr3.Meta]) = null
+        val stats = new ReadStats
         it.flatMap { t =>
           val key = (t.store, t.dataset)
           if (cached == null || cached._1 != key)
             cached = (key, metaOf(t.store, t.dataset))
-          chunkElems(t, cached._2).map { case (g, v) => (t.store, t.dataset, g, v) }
+          rowsOf(chunkBlock(t, cached._2, withValues = true, stats))
         }
       }
       .toDF("path", "dataset", "idx", "value")
+  }
+
+  /** A block's (path, dataset, idx, value) rows for the RDD ingests. */
+  private def rowsOf(b: Block): Iterator[(String, String, Long, Double)] = {
+    val rows = Array.newBuilder[(String, String, Long, Double)]
+    rows.sizeHint(b.rows)
+    foreachRun(b) { (k0, g0, _, len) =>
+      var j = 0
+      while (j < len) {
+        rows += ((b.store, b.dataset, g0 + j,
+          if (b.values == null) b.fill else b.values(k0 + j)))
+        j += 1
+      }
+    }
+    rows.result().iterator
   }
 
   /** One inner-chunk task inside one shard file: byte window [offset,
@@ -224,10 +279,7 @@ object ZarrChunkIngest {
   private[sources] def chunkBoxKeep(t: ChunkTask,
       meta: Either[Zarr.ArrayMeta, Zarr3.Meta],
       ranges: IndexedSeq[MountDsv2.IdxRange]): Boolean = {
-    val (shape, chunks) = meta match {
-      case Left(m) => (m.shape, m.chunks)
-      case Right(m) => (m.shape, m.chunks)
-    }
+    val (shape, chunks, _) = dimsOf(meta)
     MountDsv2.boxKeep(
       t.ci.zip(chunks).map { case (c, w) => c.toLong * w },
       chunks.map(_.toLong), shape.map(_.toLong), ranges)
@@ -258,10 +310,7 @@ object ZarrChunkIngest {
       meta: Either[Zarr.ArrayMeta, Zarr3.Meta],
       trees: Array[org.apache.spark.sql.sources.Filter]): Boolean =
     trees.isEmpty || {
-      val (shape, chunks) = meta match {
-        case Left(m) => (m.shape, m.chunks)
-        case Right(m) => (m.shape, m.chunks)
-      }
+      val (shape, chunks, _) = dimsOf(meta)
       MountDsv2.boxTreeKeep(trees, t.store, t.dataset, chunkIdxBounds(t, meta),
         t.ci.zip(chunks).map { case (c, w) => c.toLong * w },
         chunks.map(_.toLong), shape.map(_.toLong))
@@ -297,18 +346,6 @@ object ZarrChunkIngest {
   private[sources] def shardPathOf(t: InnerTask, meta: Zarr3.Meta): String =
     shardPath(t.store, t.dataset, meta, t.ci)
 
-  /** Decode one inner task from its raw byte window (None = absent ->
-    * fill). The decode half of [[innerElems]], split out so callers
-    * holding a coalesced multi-window buffer can slice and decode. */
-  private[sources] def innerDecode(t: InnerTask, meta: Zarr3.Meta,
-      raw: Option[Array[Byte]]): Iterator[(Long, Double)] = {
-    val sh = meta.sharding.getOrElse(fail("meta lost its sharding"))
-    val vals = raw.map(Zarr3.decodeInnerChunk(_, meta, sh))
-    innerIndexValues(meta, t.ci, t.gi).map { case (g, k) =>
-      (g, vals.map(_(k)).getOrElse(meta.fill))
-    }
-  }
-
   /** Validate task `t`'s byte window against the shard length
     * (subtraction form: offset + length can wrap past Long.MaxValue). */
   private[sources] def checkInnerWindow(t: InnerTask, shardLen: Long,
@@ -317,32 +354,30 @@ object ZarrChunkIngest {
       t.offset <= shardLen && t.length <= shardLen - t.offset,
       s"inner window (${t.offset}, ${t.length}) outside $shardFile")
 
-  /** One inner-chunk task's (global idx, value) elements: a positioned
-    * byte-range read through `handleFor` (caller manages handle reuse)
-    * + inner-pipeline decode; absent inner chunks emit fill. */
-  private[sources] def innerElems(t: InnerTask, meta: Zarr3.Meta,
-      handleFor: String => ByteStore.ReadAt): Iterator[(Long, Double)] =
-    if (innerMissing(t)) innerDecode(t, meta, None)
-    else {
-      val shardFile = shardPathOf(t, meta)
-      val h = handleFor(shardFile)
-      checkInnerWindow(t, h.length, shardFile)
-      innerDecode(t, meta, Some(h.readFully(t.offset, t.length.toInt)))
-    }
-
-  /** Coalesced decode of a run of inner tasks sharing (store, dataset),
-    * ideally (shard, offset)-ordered: segments by shard file, merges
-    * byte-adjacent windows ([[MountDsv2.coalesceWindows]]), one span
-    * read per group — inner chunks are written back-to-back, so a whole
-    * shard typically collapses to a single ranged read on an object
-    * store. Absent inner chunks emit fill without any read. Shared by
-    * the RDD ingest and the [[ZarrDataSource]] DSv2 reader. */
-  private[sources] def innerElemsRun(run: IndexedSeq[InnerTask], meta: Zarr3.Meta,
-      handleFor: String => ByteStore.ReadAt): Iterator[(Long, Double)] =
+  /** A run of inner tasks sharing (store, dataset), ideally (shard,
+    * offset)-ordered, as [[Block]]s in input order. With `withValues`
+    * it segments by shard file, merges byte-adjacent windows
+    * ([[MountDsv2.coalesceWindows]]) and issues one span read per group
+    * — inner chunks are written back-to-back, so a whole shard
+    * typically collapses to a single ranged read on an object store —
+    * then decodes each inner chunk in one array-level pass. Absent
+    * inner chunks read as fill without any read; without `withValues`
+    * no shard byte is read at all. */
+  private[sources] def innerBlocks(run: IndexedSeq[InnerTask], meta: Zarr3.Meta,
+      withValues: Boolean, handleFor: String => ByteStore.ReadAt,
+      stats: ReadStats): Iterator[Block] = {
+    val sh = meta.sharding.getOrElse(fail("meta lost its sharding"))
+    val shape = meta.shape.map(_.toLong).toArray
+    val extent = sh.innerChunks.toArray
+    def block(t: InnerTask, values: Array[Double]): Block =
+      new Block(t.store, t.dataset, shape,
+        Array.tabulate(extent.length)(d =>
+          t.ci(d).toLong * meta.chunks(d) + t.gi(d).toLong * extent(d)),
+        extent, values, meta.fill)
+    if (!withValues) return run.iterator.map(block(_, null))
     MountDsv2.runs(run)(t =>
         if (innerMissing(t)) null else shardPathOf(t, meta)).iterator.flatMap { seg =>
-      if (innerMissing(seg.head))
-        seg.iterator.flatMap(innerDecode(_, meta, None))
+      if (innerMissing(seg.head)) seg.iterator.map(block(_, null))
       else {
         val shardFile = shardPathOf(seg.head, meta)
         val h = handleFor(shardFile)
@@ -352,18 +387,17 @@ object ZarrChunkIngest {
           val gStart = seg(g.start).offset
           val gEnd = g.map(i => seg(i).offset + seg(i).length).max
           val buf = handleFor(shardFile).readFully(gStart, (gEnd - gStart).toInt)
-          g.iterator.flatMap { i =>
+          stats.bytes += buf.length
+          g.iterator.map { i =>
             val t = seg(i)
-            innerDecode(t, meta, Some(java.util.Arrays.copyOfRange(buf,
-              (t.offset - gStart).toInt, (t.offset - gStart + t.length).toInt)))
+            stats.chunks += 1
+            block(t, Zarr3.decodeInnerChunk(java.util.Arrays.copyOfRange(buf,
+              (t.offset - gStart).toInt, (t.offset - gStart + t.length).toInt), meta, sh))
           }
         }
       }
     }
-
-  /** Index-only walk of one inner-chunk task: no shard bytes read. */
-  private[sources] def innerIndexes(t: InnerTask, meta: Zarr3.Meta): Iterator[Long] =
-    innerIndexValues(meta, t.ci, t.gi).map(_._1)
+  }
 
   /** Inclusive [min, max] global-linear-index bounds of one inner-chunk
     * task (closed-form — used by the mount's idx-range prune). */
@@ -374,24 +408,6 @@ object ZarrChunkIngest {
         case ((c, w), (g, iw)) => c.toLong * w + g.toLong * iw
       },
       inner.map(_.toLong), meta.shape.map(_.toLong))
-  }
-
-  private def innerIndexValues(meta: Zarr3.Meta, ci: Seq[Int],
-      gi: Seq[Int]): Iterator[(Long, Int)] = {
-    val inner = meta.sharding.getOrElse(fail("meta lost its sharding")).innerChunks
-    val iStrides = inner.scanRight(1)(_ * _).tail
-    val strides = meta.shape.scanRight(1)(_ * _).tail
-    (0 until inner.product).iterator.flatMap { k =>
-      var g = 0L; var inBounds = true; var dim = 0
-      while (dim < meta.shape.size && inBounds) {
-        val local = (k / iStrides(dim)) % inner(dim)
-        val global = ci(dim) * meta.chunks(dim) + gi(dim) * inner(dim) + local
-        if (global >= meta.shape(dim)) inBounds = false
-        else g += global.toLong * strides(dim)
-        dim += 1
-      }
-      if (!inBounds) None else Some((g, k))
-    }
   }
 
   /** Phase 2 fan-out for sharded arrays: one positioned byte-range read
@@ -418,6 +434,7 @@ object ZarrChunkIngest {
       .sortWithinPartitions(col("store"), col("dataset"), col("ci"), col("offset"))
       .mapPartitions { it =>
         ByteStore.install(hconf) // executor JVMs have no session
+        val stats = new ReadStats
         var in: ByteStore.ReadAt = null
         def handleFor(p: String): ByteStore.ReadAt = {
           // one handle per shard file per run (HDF5ChunkIngest's
@@ -434,8 +451,7 @@ object ZarrChunkIngest {
               case Right(m) => m
               case Left(_) => fail("v2 store in shard-inner read")
             }
-            innerElemsRun(run, meta, handleFor)
-              .map { case (g, v) => (run.head.store, run.head.dataset, g, v) }
+            innerBlocks(run, meta, withValues = true, handleFor, stats).flatMap(rowsOf)
           }
         // close the last handle when the partition iterator drains
         new Iterator[(String, String, Long, Double)] {

@@ -74,19 +74,24 @@ object ZarrSink {
       jsonArray(shape, chunks, "<f8", zlibLevel, blosc, bloscCodec, bloscBitShuffle))
     ByteStore.writeString(ByteStore.join(d, ".zattrs"),
       s"""{"_ARRAY_DIMENSIONS": [${dims.map("\"" + _ + "\"").mkString(", ")}]}""")
-    val nChunks = shape.zip(chunks).map { case (s, c) => (s + c - 1) / c }
-    val strides = shape.scanRight(1)(_ * _).tail
-    val cStrides = chunks.scanRight(1)(_ * _).tail
-    def emit(ci: List[Int], dim: Int): Unit =
-      if (dim < shape.size) (0 until nChunks(dim)).foreach(i => emit(ci :+ i, dim + 1))
+    // arrays, not Lists: the per-element fill below indexes them O(1)
+    val rank = shape.size
+    val shp = shape.toArray
+    val chk = chunks.toArray
+    val nChunks = Array.tabulate(rank)(d => (shp(d) + chk(d) - 1) / chk(d))
+    val strides = shp.scanRight(1)(_ * _).tail
+    val cStrides = chk.scanRight(1)(_ * _).tail
+    val ci = new Array[Int](rank)
+    def emit(dim: Int): Unit =
+      if (dim < rank) (0 until nChunks(dim)).foreach { i => ci(dim) = i; emit(dim + 1) }
       else {
-        val chunk = Array.fill(chunks.product)(Double.NaN) // pad = fill
+        val chunk = Array.fill(chk.product)(Double.NaN) // pad = fill
         var k = 0
         while (k < chunk.length) {
           var g = 0L; var inBounds = true; var dd = 0
-          while (dd < shape.size && inBounds) {
-            val global = ci(dd) * chunks(dd) + (k / cStrides(dd)) % chunks(dd)
-            if (global >= shape(dd)) inBounds = false else g += global.toLong * strides(dd)
+          while (dd < rank && inBounds) {
+            val global = ci(dd) * chk(dd) + (k / cStrides(dd)) % chk(dd)
+            if (global >= shp(dd)) inBounds = false else g += global.toLong * strides(dd)
             dd += 1
           }
           if (inBounds) chunk(k) = values(g.toInt)
@@ -95,7 +100,7 @@ object ZarrSink {
         writeChunk(ByteStore.join(d, ci.mkString(".")), chunk, zlibLevel,
           blosc, bloscCodec, bloscBitShuffle)
       }
-    emit(Nil, 0)
+    emit(0)
   }
 
   /** One zarr store per scene under `outDir` (same input contract as

@@ -3,6 +3,8 @@ package graft.sources
 import java.nio.file.Files
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 /** Executed-path I/O asserts through the counting ByteStore: the
@@ -36,6 +38,34 @@ class IoCountingSpec extends SparkSpec {
     assert(r.opens(shard1) == 0 && r.reads(shard1) == 0 && r.bytes(shard1) == 0,
       s"pruned shard was touched: opens=${r.opens(shard1)} reads=${r.reads(shard1)}")
     assert(r.opens(shard0) > 0 && r.reads(shard0) > 0)
+  }
+
+  test("the zarr scan's chunksDecoded/bytesRead metrics equal the recorded chunk reads") {
+    // v2 store: planning reads only .zarray metadata, so every recorded
+    // read on a chunk file is the scan's own; the cnt array's absent
+    // chunk reads as fill and is neither read nor decoded
+    val store = "src/test/resources/fixtures/golden.zarr"
+    val chunkFiles = new java.io.File(store).listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles()).filterNot(_.getName.startsWith("."))
+      .map(_.getAbsolutePath).toSeq
+    def scanMetrics(df: DataFrame): (Long, Long) = {
+      val scan = df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }
+        .getOrElse(fail(s"no BatchScanExec in ${df.queryExecution.executedPlan}"))
+      (scan.metrics("chunksDecoded").value, scan.metrics("bytesRead").value)
+    }
+    def mount = spark.read.format("graft.sources.ZarrDataSource")
+      .option("path", store).load()
+    val values = mount.select("idx", "value")
+    val (rows, r) = recording(values.collect())
+    assert(rows.length == 30 + 7 + 3)
+    val (chunks, bytes) = scanMetrics(values)
+    assert(chunks == chunkFiles.size && chunkFiles.forall(r.reads(_) == 1),
+      s"chunksDecoded $chunks vs ${chunkFiles.map(r.reads)}")
+    assert(bytes > 0 && bytes == chunkFiles.map(r.bytes).sum)
+    // index-only: the grid is walked, no chunk is read or decoded
+    val idx = mount.select("idx")
+    assert(idx.collect().length == rows.length)
+    assert(scanMetrics(idx) == ((0L, 0L)))
   }
 
   test("back-to-back shard-inner chunks collapse to ONE span read per shard") {

@@ -3,13 +3,16 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 /** The DSv2 mount of the zarr chunk-parallel reader: format(...) read
   * semantics vs the library path (v2 whole-chunk AND v3 shard-inner
   * granularity), plan-phase pruning from pushed dataset/path filters,
   * and column pruning that provably never opens chunk files. */
-class ZarrDataSourceSpec extends SparkSpec {
+class ZarrDataSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val Fmt = "graft.sources.ZarrDataSource"
   private val V2Store = "src/test/resources/fixtures/golden.zarr"
@@ -254,5 +257,35 @@ class ZarrDataSourceSpec extends SparkSpec {
     assert(ds.select("dataset").distinct().collect().map(_.getString(0)).toSeq
       == Seq("wind"))
     assert(ds.count() == 6)
+  }
+
+  test("a manifest-planned catalog open plans a COLUMNAR zarr scan under ColumnarToRow") {
+    // the mount reads one batch per chunk; a scan that quietly fell
+    // back to rows would plan without the ColumnarToRow transition
+    val dir = Files.createTempDirectory("zarr-dsv2-columnar-plan").toString
+    val px = spark.range(2 * 6 * 4).select(
+      concat(lit("s"), expr("id div 24")).as("scene_id"),
+      expr("timestamp_seconds(1577836800)").as("time"),
+      (expr("id % 4") * 10.0).as("x"),
+      (expr("(id % 24) div 4") * 10.0).as("y"),
+      (col("id") * 0.5).as("value"))
+    ZarrSink.writeScenes(px, dir, "lwp", chunkRows = Some(4)).count()
+    val manifest = s"$dir/_manifest"
+    CatalogManifest.build(spark, "zarr", dir, Seq("lwp"), manifest)
+    val df = GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp",
+      bounds = Map("x" -> (0.0, 20.0)))
+    assert(df.collect().length == 2 * 6 * 3)
+    val plan = df.queryExecution.executedPlan
+    val scans = collect(plan) {
+      case b: BatchScanExec if b.scan.isInstanceOf[ZarrScan] => b
+    }
+    assert(scans.nonEmpty, plan.toString)
+    assert(scans.forall(_.supportsColumnar), plan.toString)
+    // the transition's child, seen through codegen's InputAdapter
+    val c2rInputs = collect(plan) { case c: ColumnarToRowExec => c.child match {
+      case i: InputAdapter => i.child
+      case other => other
+    } }
+    assert(scans.forall(s => c2rInputs.contains(s)), plan.toString)
   }
 }

@@ -152,4 +152,40 @@ class ZarrSpec extends SparkSpec {
     val e2 = intercept[IllegalArgumentException](Zarr.readArray(store, "lwp"))
     assert(e2.getMessage.contains("expected"))
   }
+
+  test("ZarrSink chunk files are byte-identical to the checked-in stores") {
+    // src/test/resources/fixtures/zarr_sink_bytes holds what the sink
+    // wrote for this fixed input before its chunk fill moved from List
+    // to array indexing: raw, zlib and blosc stores, ragged edge bands
+    val fixtures = new java.io.File("src/test/resources/fixtures/zarr_sink_bytes")
+    val (ny, nx) = (5, 7)
+    val px = (for (j <- 0 until ny; i <- 0 until nx)
+      yield ("s0", new java.sql.Timestamp(0L), i * 10.0, j * 5.0 - 2.5,
+        if ((j * nx + i) % 11 == 3) Double.NaN else (j * nx + i) * 0.25 - 3.0))
+      .toDF("scene_id", "time", "x", "y", "value")
+    val out = java.nio.file.Files.createTempDirectory("zarr-sink-bytes").toString
+    ZarrSink.writeScenes(px, s"$out/raw", "lwp", chunkRows = Some(2)).count()
+    ZarrSink.writeScenes(px, s"$out/zlib", "lwp", chunkRows = Some(3),
+      zlibLevel = Some(6)).count()
+    ZarrSink.writeScenes(px, s"$out/blosc_lz4", "lwp", chunkRows = Some(2),
+      blosc = true).count()
+    ZarrSink.writeScenes(px, s"$out/blosc_zstd_bit", "lwp", blosc = true,
+      bloscCodec = "zstd", bloscBitShuffle = true).count()
+    def files(root: java.io.File): Map[String, Seq[Byte]] = {
+      val base = root.toPath
+      val walk = java.nio.file.Files.walk(base)
+      try walk.filter(java.nio.file.Files.isRegularFile(_)).toArray.toSeq
+        .map(_.asInstanceOf[java.nio.file.Path])
+        .filterNot(_.getFileName.toString.endsWith(".crc"))
+        .map(p => base.relativize(p).toString ->
+          java.nio.file.Files.readAllBytes(p).toSeq).toMap
+      finally walk.close()
+    }
+    val want = files(fixtures)
+    val got = files(new java.io.File(out))
+    // lwp: .zarray + .zattrs per store, plus 3 + 2 + 3 + 1 chunk bands
+    assert(want.keySet.count(_.contains("/lwp/")) == 2 * 4 + 9)
+    assert(got.keySet == want.keySet)
+    want.foreach { case (k, v) => assert(got(k) == v, s"$k differs") }
+  }
 }
