@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints the formatted physical plan of each query (or
   * the ones given as args) so pushdown / broadcast / codegen coverage can
   * be reviewed. AQE is off, so codegen stages and join strategies show
@@ -13,14 +11,8 @@ object Explain {
     val names = if (args.nonEmpty) args.toSeq else Bench.headline
     names.foreach(n => require(SparkEntry.queries.contains(n),
       s"unknown query '$n' — known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("4", "4", "ERROR",
+      "spark.sql.adaptive.enabled" -> "false")
     try names.foreach { n =>
       println(s"\n===== $n =====")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

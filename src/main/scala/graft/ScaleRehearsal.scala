@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale rehearsal main (the round-3/round-4 verdict order): run the
@@ -94,15 +93,9 @@ object ScaleRehearsal {
     // partitions complete comfortably — the same sizing a 1000-executor
     // cluster sets via spark.sql.shuffle.partitions anyway
     val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-rehearsal")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus, shuffleParts, "WARN",
+      "spark.app.name" -> "graft-scale-rehearsal",
+      "spark.sql.adaptive.enabled" -> "true")
 
     // SPARK_GRAFT_OPS: comma-separated op names to run (default all) —
     // lets a failed stage be re-measured without repeating the others
@@ -521,7 +514,7 @@ object ScaleRehearsal {
     // local-FS CPU), and the planned partition count only the
     // SURVIVORS' intersecting chunks. Execution reads survivors only.
     if (wanted("catalog_crop")) {
-      import graft.sources.GridOpen
+      import graft.sources.{GridFormat, GridOpen}
       val n = (100 * mult).toInt
       val dir = java.nio.file.Files.createTempDirectory("graft-scale-cat").toString
       val (_, ny, nx) = RehearsalShape
@@ -529,7 +522,7 @@ object ScaleRehearsal {
       val expectedChunks = rehearsalSurvivingChunks(n)
       var df: org.apache.spark.sql.DataFrame = null
       timed("catalog_crop_plan") {
-        df = GridOpen.zarrCatalog(spark, dir, "lwp",
+        df = GridOpen.catalog(spark, GridFormat.Zarr, dir, "lwp",
           timeBounds = Map("time" ->
             ("2021-01-11 02:00:00", "2021-01-13 23:00:00")))
         df.rdd.getNumPartitions.toLong
@@ -570,13 +563,13 @@ object ScaleRehearsal {
       val tb = Map("time" -> ("2021-01-11 02:00:00", "2021-01-13 23:00:00"))
       var df: org.apache.spark.sql.DataFrame = null
       timed("manifest_plan") {
-        df = GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp",
+        df = GridOpen.catalogFromManifest(spark, manifest, "lwp",
           timeBounds = tb)
         df.rdd.getNumPartitions.toLong
       }
       // the repeat-query shape a scene DB exists for: plan again, warm
       timed("manifest_replan") {
-        GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp",
+        GridOpen.catalogFromManifest(spark, manifest, "lwp",
           timeBounds = tb).rdd.getNumPartitions.toLong
       }
       timed("manifest_exec") {
@@ -875,7 +868,7 @@ object ScaleRehearsal {
       val expected = (0 until n).map { i =>
         if (i % 28 < 26) nt.toLong * ny * nx else 0L }.sum
       def run(): Long =
-        GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp",
+        GridOpen.catalogFromManifest(spark, manifest, "lwp",
           timeBounds = tb, verifyFingerprints = false).count()
       val saved = GridOpen.residualJoinAbove
       try {

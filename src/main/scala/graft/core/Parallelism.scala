@@ -31,6 +31,9 @@ object Parallelism {
     if (df.rdd.getNumPartitions >= want) df else df.repartition(want, keys: _*)
   }
 
+  /** Rows per task [[spread]] budgets for. */
+  val SpreadRowsPerTask: Long = 4096L
+
   /** Hash spread on `keys` for CPU-dense projections that run on an
     * AGGREGATION's output (per-distinct-token DP folds, per-group model
     * evals): the aggregation's result is bytes-small, so adaptive
@@ -42,12 +45,11 @@ object Parallelism {
     * The partition count is ROW-ADAPTIVE (round-20 lesson: fanning a
     * vocab-sized fixture frame to 32 tasks cost more in dispatch than
     * the DP recovered — the driver measured q133 FASTER on 8 cores than
-    * 32): clamp(estimatedRows / spreadRowsPerTask, 1, default
+    * 32): clamp(estimatedRows / [[SpreadRowsPerTask]], 1, default
     * parallelism), rows estimated from the optimized plan's size stats
-    * and the schema's default row width. The per-task budget
-    * (`graft.parallelism.spreadRowsPerTask`, default 4096) reflects the
-    * ~10-100 µs/row cost of the merge-replay / Viterbi projections this
-    * serves; a trillion-token corpus's vocabulary estimates far above
+    * and the schema's default row width. The 4096-row budget reflects
+    * the ~10-100 µs/row cost of the merge-replay / Viterbi projections
+    * this serves; a trillion-token corpus's vocabulary estimates far above
     * parallelism × budget, so the 100 TB path still spreads cluster-wide.
     *
     * Callers should spread the frame FEEDING a distinct/aggregation keyed
@@ -55,14 +57,12 @@ object Parallelism {
     * spread's exchange instead of adding its own. */
   def spread(df: DataFrame, keys: Column*): DataFrame = {
     require(keys.nonEmpty, "spread needs a deterministic repartition key")
-    val sess = df.sparkSession
-    val want = sess.sparkContext.defaultParallelism.toLong
-    val perTask = sess.conf.get("graft.parallelism.spreadRowsPerTask", "4096").toLong
+    val want = df.sparkSession.sparkContext.defaultParallelism.toLong
     val stats = df.queryExecution.optimizedPlan.stats
     val rowBytes = math.max(8L, df.schema.map(_.dataType.defaultSize.toLong).sum + 8L)
     val estRows = stats.rowCount.map(r => BigInt(r.toString))
       .getOrElse(stats.sizeInBytes / rowBytes)
-    val n = ((estRows + perTask - 1) / perTask)
+    val n = ((estRows + SpreadRowsPerTask - 1) / SpreadRowsPerTask)
       .min(want).max(1L).toInt
     df.repartition(n, keys: _*)
   }

@@ -143,20 +143,11 @@ object TextAnalysis {
   /** Position-ordered (NON-distinct) n-gram hashes: element i is the
     * hash of the gram starting at token i — a posexplode index IS the
     * position. Native zero-allocation kernel
-    * (graft.plans.TokenNgramHashes); [[tokenNgramHashesAllHof]] is the
-    * spec-proven bit-identical HOF reference. */
+    * (graft.plans.TokenNgramHashes); `HofForms.tokenNgramHashesAllHof` (test sources)
+    * is the spec-proven bit-identical HOF reference. */
   def tokenNgramHashesAll(c: Column, n: Int): Column = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     column(graft.plans.TokenNgramHashes(expression(tokens(c)), n))
-  }
-
-  /** HOF reference form of [[tokenNgramHashesAll]] (cross-check oracle). */
-  def tokenNgramHashesAllHof(c: Column, n: Int): Column = {
-    val toks = tokens(c)
-    when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => polyHash(concat_ws(" ", slice(toks, i + lit(1), lit(n))))))
-      .otherwise(array().cast("array<long>"))
   }
 
   /** Benchmark decontamination: per train document, the number of its

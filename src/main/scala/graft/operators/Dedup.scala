@@ -52,28 +52,16 @@ object Dedup {
     column(graft.plans.ShingleHashes(expression(textCol), n))
   }
 
-  /** The HOF reference form of [[shingleHashes]] (kept as the
-    * cross-check oracle for the native expression). */
-  def shingleHashesHof(textCol: Column, n: Int = 3): Column =
-    sort_array(array_distinct(
-      transform(TextAnalysis.charNgrams(textCol, n), s => TextAnalysis.polyHash(s))))
-
   /** MinHash signature as k scalar columns mh0..mh{k-1} over the hashed
     * shingle set in column `xs`. Native one-pass kernel
     * (graft.plans.MinHashSig): k accumulators in one array walk instead
-    * of k transform+array_min passes; bit-identical to [[minhashColsHof]]
+    * of k transform+array_min passes; bit-identical to `HofForms.minhashColsHof`
     * (spec-proven — shared coefficient schedule). */
   def minhashCols(xs: Column, k: Int): Seq[(String, Column)] = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     val sig = column(graft.plans.MinHashSig(expression(xs), k))
     (0 until k).map(i => s"mh$i" -> element_at(sig, i + 1))
   }
-
-  /** HOF reference form of [[minhashCols]] (cross-check oracle). */
-  def minhashColsHof(xs: Column, k: Int): Seq[(String, Column)] =
-    (0 until k).map { i =>
-      s"mh$i" -> array_min(transform(xs, x => (lit(aCoef(i)) * x + lit(bCoef(i))) % P))
-    }
 
   /** LSH band hash for band b of r consecutive minhashes. */
   def bandHash(sig: Seq[Column], b: Int, r: Int): Column =
@@ -546,7 +534,8 @@ object Dedup {
 
   /** 16-bit SimHash over distinct whitespace tokens: bit j set iff more
     * than half the token hashes have bit j set. Native one-pass majority
-    * kernel (graft.plans.SimHash16) — the HOF form walks the hash array
+    * kernel (graft.plans.SimHash16) — its HOF reference
+    * (`HofForms.simhash16Hof`, test sources) walks the hash array
     * once per bit. */
   def simhash16(textCol: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
@@ -872,17 +861,5 @@ object Dedup {
         array_join(col("kept"), "\n").as("text_dedup"),
         size(col("ls")).cast("long").as("n_lines"),
         size(col("kept")).cast("long").as("n_kept"))
-  }
-
-  /** HOF reference form of [[simhash16]] (cross-check oracle). */
-  def simhash16Hof(textCol: Column): Column = {
-    val toks = array_distinct(TextAnalysis.tokens(textCol))
-    val hs = transform(toks, t => TextAnalysis.polyHash(t) % 65536)
-    val n = size(toks)
-    (0 until 16).map { j =>
-      val pow = 1L << j
-      when(lit(2) * size(filter(hs, h => (h.cast("long") / pow).cast("long") % 2 === 1)) > n, lit(pow))
-        .otherwise(lit(0L))
-    }.reduce(_ + _)
   }
 }

@@ -60,18 +60,13 @@ object Pq {
 
   /** PQ codes: per subspace the index of the first-minimum distance
     * (deterministic tie-break), as an array(M) of ints. Native one-pass
-    * kernel (graft.plans.PqEncode) — bit-identical to [[encodeHof]] on
+    * kernel (graft.plans.PqEncode) — bit-identical to `HofForms.pqEncodeHof` (test sources) on
     * null-free vectors of length Dim, null otherwise. The HOF form pays
     * M·K·SubDim interpreted lambda evals per row. */
   def encode(vec: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     column(graft.plans.PqEncode(expression(vec), codebook))
   }
-
-  /** HOF reference form of [[encode]] (cross-check oracle). */
-  def encodeHof(vec: Column): Column =
-    transform(distMat(vec), ds =>
-      (array_position(ds, array_min(ds)) - 1).cast("int"))
 
   /** Flattened per-probe ADC lookup table: lut[s*K + k + 1] = d(s,k).
     * Stays the HOF form: evaluated once per PROBE (the broadcast side),
@@ -80,17 +75,12 @@ object Pq {
 
   /** ADC distance of a code row against a probe's lookup table — the
     * per-(probe, candidate) hot path. Native loop (graft.plans.PqAdcDist)
-    * — bit-identical to [[adcDistHof]] (identical left-to-right adds) on
+    * — bit-identical to `HofForms.pqAdcDistHof` (test sources; identical left-to-right adds) on
     * a null-free M·K table and M codes in [0, K), null otherwise. */
   def adcDist(lutCol: Column, codes: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     column(graft.plans.PqAdcDist(expression(lutCol), expression(codes), M, K))
   }
-
-  /** HOF reference form of [[adcDist]] (cross-check oracle). */
-  def adcDistHof(lutCol: Column, codes: Column): Column =
-    aggregate(sequence(lit(0), lit(M - 1)), lit(0.0), (acc, s) =>
-      acc + element_at(lutCol, s * lit(K) + element_at(codes, s + 1) + 1))
 
   /** Encode a corpus: (idCol, c0..c{M-1}) — pure projection. */
   def encodeDf(df: DataFrame, idCol: String, vecCol: String): DataFrame = {

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** Native left fold (graft.plans.FloatDotProduct) — bit-identical to
-    * [[dotHof]] on equal-length null-free vectors, null otherwise
+    * `HofForms.dotHof` (test sources) on equal-length null-free vectors, null otherwise
     * (graft.plans.VectorKernel's contract). */
   def dot(a: Column, b: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
@@ -36,12 +36,6 @@ object Similarity {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     column(graft.plans.SqL2Dist(expression(a), expression(b)))
   }
-
-  /** HOF reference form of [[dot]] (cross-check oracle). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -416,17 +410,6 @@ object Similarity {
       dot(col("v"), centArr)
         / (col("nv") * element_at(typedlit(centNorms), col("cell") + 1)), 6))
   }
-
-  /** HOF reference form of [[withCentSim]]'s similarity expression
-    * (cross-check oracle, spec-pinned): interpreted folds for both the
-    * dot and the centroid self-norm. */
-  private[operators] def centSimHof(v: Column, centArr: Column, nv: Column): Column =
-    round(
-      aggregate(zip_with(v, centArr, (x, c) => x.cast("double") * c),
-        lit(0.0), (acc, p) => acc + p)
-        / (nv *
-          sqrt(aggregate(transform(centArr, c => c * c),
-            lit(0.0), (acc, p) => acc + p))), 6)
 
   /** [[semDedup]] stage 2: within-cell near-dup pairs — MUST stay an
     * integer cell equi-join (plan-asserted in PlanRegressionSpec). */

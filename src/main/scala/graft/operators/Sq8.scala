@@ -63,7 +63,7 @@ object Sq8 {
   /** u8 code array for one vector: floor-of-shifted affine map, clamped;
     * a degenerate (constant) dimension codes to 0. Pure projection.
     * Native one-pass kernel (graft.plans.Sq8Encode) — bit-identical to
-    * [[encodeHof]] on null-free vectors of the model's dim, null
+    * `HofForms.sq8EncodeHof` (test sources) on null-free vectors of the model's dim, null
     * otherwise. The HOF form pays ~10 interpreted expression evals per
     * DIMENSION per corpus row (two element_at literal picks, the affine
     * map and the clamp chain, all inside an interpreted transform
@@ -71,19 +71,6 @@ object Sq8 {
   def encode(vec: Column, m: Model): Column = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     column(graft.plans.Sq8Encode(expression(vec), m.vmins, m.vmaxs))
-  }
-
-  /** HOF reference form of [[encode]] (cross-check oracle). */
-  def encodeHof(vec: Column, m: Model): Column = {
-    val mns = typedlit(m.vmins)
-    val mxs = typedlit(m.vmaxs)
-    transform(sequence(lit(1), lit(m.dim)), j => {
-      val mn = element_at(mns, j)
-      val mx = element_at(mxs, j)
-      val t = when(mx === mn, lit(0.0))
-        .otherwise((element_at(vec, j).cast("double") - mn) * lit(255.0) / (mx - mn))
-      least(greatest(floor(t + lit(0.5)), lit(0.0)), lit(255.0)).cast("long")
-    })
   }
 
   /** Dequantized vector from a code array: mn + code * (mx - mn) / 255.
@@ -110,29 +97,13 @@ object Sq8 {
 
   /** Asymmetric squared L2 of a double probe vector against a code row,
     * dequantizing each dimension in place. Native loop
-    * (graft.plans.Sq8AdcDist) — bit-identical to [[adcDistHof]] on
+    * (graft.plans.Sq8AdcDist) — bit-identical to `HofForms.sq8AdcDistHof` (test sources) on
     * null-free inputs of the model's dim, null otherwise; the HOF form
     * pays interpreted lambda eval once per (probe, candidate) pair
     * (~23 µs/pair at dim 64). */
   def adcDist(qv: Column, codes: Column, m: Model): Column = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     column(graft.plans.Sq8AdcDist(expression(qv), expression(codes), m.vmins, m.vmaxs))
-  }
-
-  /** HOF reference form of [[adcDist]] (cross-check oracle): dq_j
-    * computed INLINE per dimension —
-    * not element_at over a staged transform() array, which would rebuild
-    * the whole array per pick, the documented O(dim^2) HOF trap. */
-  def adcDistHof(qv: Column, codes: Column, m: Model): Column = {
-    val mns = typedlit(m.vmins)
-    val mxs = typedlit(m.vmaxs)
-    aggregate(sequence(lit(1), lit(m.dim)), lit(0.0), (acc, j) => {
-      val dqj = element_at(mns, j) +
-        element_at(codes, j) *
-          (element_at(mxs, j) - element_at(mns, j)) / lit(255.0)
-      val diff = element_at(qv, j) - dqj
-      acc + diff * diff
-    })
   }
 
   /** IVF-SQ8: the production compressed-ANN index shape — a coarse

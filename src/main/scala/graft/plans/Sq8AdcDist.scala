@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   * on the x10 rehearsal corpus. This is the same loop as one pass with
   * the model arrays as plan references.
   *
-  * Bit-parity with `operators/Sq8.adcDistHof`: a strict left-to-right
+  * Bit-parity with `HofForms.sq8AdcDistHof` (test sources): a strict left-to-right
   * fold from +0.0 with the identical op order mn + (c·(mx−mn))/255, then
   * diff·diff added — so the DuckDB oracle keeps matching. Both inputs
   * follow [[VectorKernel]]'s contract, their lengths the model's dim. */

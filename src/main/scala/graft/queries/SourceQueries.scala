@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.core.Projection.{DegPerRad, RadPerDeg}
-import graft.sources.Calendars
+import graft.sources.{Calendars, GridFormat}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2067,7 +2067,7 @@ object SourceQueries {
         |    CAST(i*10 AS DOUBLE),
         |    CAST(200 + j*3 + i AS DOUBLE)
         |  FROM range(0,2) r1(j), range(1,3) r2(i))""".stripMargin) { (s, d) =>
-      graft.sources.GridOpen.zarrCatalog(s, ensureQ216Catalog(), "lwp",
+      graft.sources.GridOpen.catalog(s, GridFormat.Zarr, ensureQ216Catalog(), "lwp",
           bounds = Map("x" -> (5.0, 25.0)),
           timeBounds = Map("time" ->
             ("2021-06-01 12:00:00", "2021-06-02 06:00:00")))
@@ -2095,7 +2095,7 @@ object SourceQueries {
         |    CAST(100 + j*8 + i AS DOUBLE)
         |  FROM range(1,5) r1(j), range(2,6) r2(i))
         |GROUP BY scene, ty, tx""".stripMargin) { (s, d) =>
-      graft.sources.GridOpen.zarrCatalog(s, ensureQ217Catalog(), "lwp",
+      graft.sources.GridOpen.catalog(s, GridFormat.Zarr, ensureQ217Catalog(), "lwp",
           bounds = Map("y" -> (100.0, 400.0), "x" -> (200.0, 500.0)),
           timeBounds = Map("time" ->
             ("2021-07-01 10:00:00", "2021-07-02 02:00:00")))
@@ -2147,7 +2147,7 @@ object SourceQueries {
         |FROM range(1,4) r1(j), range(0,5) r2(i)""".stripMargin) { (s, d) =>
       // micro-unit integerization: FMA vs non-FMA evaluation differs in
       // the last ulp between engines; the compare is on exact BIGINTs
-      graft.sources.GridOpen.zarrVars(s, ensureQ219Vars(),
+      graft.sources.GridOpen.openVars(s, GridFormat.Zarr, ensureQ219Vars(),
           Seq("t700", "t1000"), bounds = Map("y" -> (100.0, 300.0)))
         .select(col("y"), col("x"),
           round((col("t700") * lit(1.107393475838283) - col("t1000")) *
@@ -2180,7 +2180,7 @@ object SourceQueries {
         |  ('g2.nc', CAST(10 AS DOUBLE), CAST(12 AS DOUBLE)),
         |  ('g2.nc', CAST(20 AS DOUBLE), CAST(14 AS DOUBLE))
         |) t(granule, x, value)""".stripMargin) { (s, d) =>
-      graft.sources.GridOpen.netcdf3Catalog(s, ensureQ221Catalog(), "v")
+      graft.sources.GridOpen.catalog(s, GridFormat.NetCDF3, ensureQ221Catalog(), "v")
         .select(substring_index(col("path"), "/", -1).as("granule"),
           col("x"), col("value"))
     },
@@ -2209,7 +2209,7 @@ object SourceQueries {
         |    CAST(i*1000 + r*3 + c AS DOUBLE)
         |  FROM range(0,120) t(i), range(0,4) r1(r), range(0,3) r2(c)
         |  WHERE i % 28 = 5)""".stripMargin) { (s, d) =>
-      graft.sources.GridOpen.zarrCatalogFromManifest(s, ensureQ222Manifest(s),
+      graft.sources.GridOpen.catalogFromManifest(s, ensureQ222Manifest(s),
           "lwp", timeBounds = Map("time" ->
             ("2021-01-05 02:00:00", "2021-01-06 23:00:00")))
         .select(substring_index(col("path"), "/", -1).as("scene"),
@@ -2218,7 +2218,7 @@ object SourceQueries {
 
     // ---- scene-idempotent materialization (the luigi contract) ------------
     // A turnkey catalog slice materialized as a scene-partitioned
-    // parquet table via GridOpen.materializeZarrCatalog (skip-if-
+    // parquet table via GridOpen.materialize (skip-if-
     // present per scene, reference pipeline/regridding.py:93-117);
     // the oracle pins the TABLE's contents — GridMaterializeSpec pins
     // the incremental I/O behavior (free re-runs, single-scene repair).
@@ -2247,7 +2247,7 @@ object SourceQueries {
         |  CAST(round(((280 + (j*5+i)*0.5) * 1.107393475838283
         |       - (295 + (j*5+i)*0.25)) * 1000000) AS BIGINT) AS lts_micro
         |FROM range(0,2) r1(j), range(0,5) r2(i)""".stripMargin) { (s, d) =>
-      graft.sources.GridOpen.zarrVarsCatalogFromManifest(s,
+      graft.sources.GridOpen.varsCatalogFromManifest(s,
           ensureQ224Manifest(s), Seq("t700", "t1000"),
           bounds = Map("y" -> (1000.0, 1100.0)))
         .select(substring_index(col("path"), "/", -1).as("scene"),
@@ -2272,7 +2272,7 @@ object SourceQueries {
         |    CAST(100 + j*8 + i AS DOUBLE)
         |  FROM range(1,5) r1(j), range(2,6) r2(i))
         |GROUP BY scene, ty, tx""".stripMargin) { (s, d) =>
-      graft.sources.GridOpen.zarrCatalogFromManifest(s, ensureQ225Manifest(s),
+      graft.sources.GridOpen.catalogFromManifest(s, ensureQ225Manifest(s),
           "lwp", bounds = Map("y" -> (100.0, 400.0), "x" -> (200.0, 500.0)),
           timeBounds = Map("time" ->
             ("2021-07-01 10:00:00", "2021-07-02 02:00:00")))
@@ -2293,7 +2293,7 @@ object SourceQueries {
       """SELECT printf('bc%03d.zarr', CAST(i AS INT)) AS scene,
         |  CAST(i*1000*12 + 66 AS DOUBLE) AS sum_v, CAST(12 AS BIGINT) AS n
         |FROM range(0,300) t(i) WHERE i % 28 < 26""".stripMargin) { (s, d) =>
-      graft.sources.GridOpen.zarrCatalogFromManifest(s, ensureQ226Manifest(s),
+      graft.sources.GridOpen.catalogFromManifest(s, ensureQ226Manifest(s),
           "lwp", timeBounds = Map("time" ->
             ("2021-01-01 00:00:00", "2021-01-26 23:00:00")))
         .select(substring_index(col("path"), "/", -1).as("scene"), col("value"))
@@ -2305,7 +2305,7 @@ object SourceQueries {
     // The aux-fields flow's OUTPUT pinned: members of the manifest
     // (xv2 lacks t1000 — not a member, never materialized) land as a
     // scene-partitioned WIDE parquet table via
-    // materializeZarrVarsCatalogFromManifest; the oracle pins the
+    // GridOpen.materializeVarsFromManifest; the oracle pins the
     // table's contents. GridMaterializeSpec pins the incremental I/O.
     QueryDef.sqlBacked(
       "q227_manifest_vars_materialized",
@@ -2448,7 +2448,7 @@ object SourceQueries {
         |  CAST(round(((280 + (j*5+i)*0.5) * 1.107393475838283
         |       - (295 + (j*5+i)*0.25)) * 1000000) AS BIGINT) AS lts_micro
         |FROM range(0,2) r1(j), range(0,5) r2(i)""".stripMargin) { (s, d) =>
-      graft.sources.GridOpen.zarrVarsCatalog(s, ensureQ220Catalog(),
+      graft.sources.GridOpen.varsCatalog(s, GridFormat.Zarr, ensureQ220Catalog(),
           Seq("t700", "t1000"), bounds = Map("y" -> (1000.0, 1100.0)))
         .select(substring_index(col("path"), "/", -1).as("scene"),
           col("y"), col("x"),
@@ -2521,7 +2521,7 @@ object SourceQueries {
           ("time", Seq(2), Seq("time"), Array(0.0, 12.0),
             s""", "units": "hours since 2021-02-0${i + 1}""""),
           ("x", Seq(3), Seq("x"), Array(0.0, 10.0, 20.0), "")))
-      graft.sources.GridOpen.materializeZarrCatalog(s, dir, "lwp", out)
+      graft.sources.GridOpen.materialize(s, GridFormat.Zarr, dir, "lwp", out)
     }
     out
   }
@@ -2954,7 +2954,7 @@ object SourceQueries {
       val manifest = s"$dir/_manifest"
       graft.sources.CatalogManifest.build(s, "zarr", dir,
         Seq("t700", "t1000"), manifest)
-      graft.sources.GridOpen.materializeZarrVarsCatalogFromManifest(s,
+      graft.sources.GridOpen.materializeVarsFromManifest(s,
         manifest, Seq("t700", "t1000"), out)
     }
     out

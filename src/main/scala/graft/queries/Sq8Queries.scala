@@ -16,8 +16,8 @@ object Sq8Queries {
 
   private val Dim = 64
 
-  /** Fold-form dot product over dims 1..n (matches Similarity.dot /
-    * dotHof token-for-token). */
+  /** Fold-form dot product over dims 1..n (matches Similarity.dot and its
+    * test reference `HofForms.dotHof` token-for-token). */
   private def dotN(a: String, b: String, n: Int): String =
     s"list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
       s"[CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE) FOR i IN range(1, ${n + 1})]), " +

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * it forever after: convml-data builds a per-scene source database
   * (pipeline/scene_sources.py:96-156) behind a skip-if-present DB
   * target (utils/luigi.py:91-117), so repeat pipeline runs never
-  * re-probe the raw stores. The live `GridOpen.*Catalog` opens instead
+  * re-probe the raw stores. The live `GridOpen.catalog` opens instead
   * re-read every store's KB-scale coordinate metadata per query —
   * fine at 100 scenes, minutes of driver latency at a 10^5-scene
   * 100 TB catalog. This module closes that gap:
@@ -70,57 +70,18 @@ object CatalogManifest {
     if (old._4 == 0L) (old._1, old._2, old._3) != ((cur._1, cur._2, cur._3))
     else old != cur
 
-  private val Formats = Set("zarr", "netcdf3", "hdf5")
-
-  private def checkFormat(format: String): Unit =
-    if (!Formats(format)) fail(s"unknown format '$format' (zarr/netcdf3/hdf5)")
-
-  /** The stores under `dir`: zarr scene-store roots, or the resolved
-    * per-scene files of a file catalog. */
-  private[sources] def storesOf(format: String, dir: String): Seq[String] =
-    format match {
-      case "zarr" => ZarrDataSource.discover(dir).map(_._1).distinct.sorted
-      case _ => CoordCrop.catalogFiles(dir)
-    }
-
-  /** The variables one store holds (what membership means per format:
-    * zarr arrays, netCDF-3 header variables, HDF5 datasets carrying a
-    * DIMENSION_LIST). */
-  private def variablesIn(format: String, store: String): Set[String] =
-    format match {
-      case "zarr" => ZarrDataSource.arraysIn(store).toSet
-      case "netcdf3" => NetCDF3ChunkIngest.headerOf(store).vars.map(_.name).toSet
-      case _ =>
-        val in = new PagedFileInput(store)
-        try HDF5.dimensionNames(in).keySet finally in.close()
-    }
-
-  private def rawAxesOf(format: String, store: String,
-      v: String): Seq[GridOpen.RawAxis] = format match {
-    case "zarr" => GridOpen.zarrRawAxes(store, v)
-    case "netcdf3" => GridOpen.netcdf3RawAxes(store, v)
-    case _ => GridOpen.hdf5RawAxes(store, v)
-  }
-
-  private def cfAttrsOf(format: String, store: String,
-      v: String): CfDecode.CfAttrs = format match {
-    case "zarr" => CfDecode.zarrCfAttrs(store, v)
-    case "netcdf3" => CfDecode.netcdf3CfAttrs(store, v)
-    case _ => CfDecode.hdf5CfAttrs(store, v)
-  }
-
   /** Scan ONE store's metadata into manifest rows — only the requested
     * variables it actually holds (membership is per variable, so a
     * catalog can hold heterogeneous scene files). */
-  private[sources] def scanStore(format: String, dir: String, store: String,
+  private def scanStore(format: GridFormat, dir: String, store: String,
       variables: Seq[String]): Seq[Entry] = {
-    val present = variablesIn(format, store)
+    val present = format.variablesIn(store)
     val (mt, bytes, count, fh) = ByteStore.treeStat(store)
     val sortedVars = variables.sorted
     variables.filter(present).map { v =>
-      val a = cfAttrsOf(format, store, v)
-      Entry(store, v, format, dir, mt, bytes, count, fh,
-        rawAxesOf(format, store, v), a.scale, a.offset, a.fill,
+      val a = format.cfAttrs(store, v)
+      Entry(store, v, format.name, dir, mt, bytes, count, fh,
+        format.rawAxes(store, v), a.scale, a.offset, a.fill,
         a.unsignedModulus, sortedVars)
     }
   }
@@ -503,19 +464,19 @@ object CatalogManifest {
   def build(spark: SparkSession, format: String, dir: String,
       variables: Seq[String], manifestPath: String,
       distributeAbove: Int = 512): Long = {
-    checkFormat(format)
+    val fmt = GridFormat.named(format)
     require(variables.nonEmpty, "catalog manifest: no variables requested")
-    val stores = storesOf(format, dir)
+    val stores = fmt.stores(dir)
     require(stores.nonEmpty, s"catalog manifest: no stores under $dir")
     publish(spark,
-      entriesFor(spark, format, dir, stores, variables, distributeAbove).toDF(),
+      entriesFor(spark, fmt, dir, stores, variables, distributeAbove).toDF(),
       manifestPath)
     read(spark, manifestPath).count()
   }
 
   /** The metadata wave over `stores`: parMap on the driver below the
     * threshold, a distributed Spark job above it. */
-  private def entriesFor(spark: SparkSession, format: String, dir: String,
+  private def entriesFor(spark: SparkSession, format: GridFormat, dir: String,
       stores: Seq[String], variables: Seq[String],
       distributeAbove: Int): Dataset[Entry] = {
     import spark.implicits._
@@ -546,14 +507,14 @@ object CatalogManifest {
   def refresh(spark: SparkSession, format: String, dir: String,
       variables: Seq[String], manifestPath: String,
       distributeAbove: Int = 512): (Int, Int, Int, Int) = {
-    checkFormat(format)
+    val fmt = GridFormat.named(format)
     require(variables.nonEmpty, "catalog manifest: no variables requested")
     val (old, loadedGen) = loadWithGen(spark, manifestPath)
     onManifestLoaded()
     val oldVars = old.select("requestedVars").distinct().collect()
       .flatMap(_.getSeq[String](0)).toSet
     val sameVars = oldVars == variables.toSet
-    val stores = storesOf(format, dir)
+    val stores = fmt.stores(dir)
     // the old-vs-current diff runs as a FRAME JOIN ([[diffFp]]): the
     // per-store fingerprints never materialize in driver maps — the
     // driver collects only the added+changed names (the re-scan list)
@@ -564,7 +525,7 @@ object CatalogManifest {
       diffFp(spark, oldFp, fpWaveDf(spark, stores), sameVars,
         legacyHashTripleFallback = false)
     try {
-      val fresh = entriesFor(spark, format, dir, added ++ changed, variables,
+      val fresh = entriesFor(spark, fmt, dir, added ++ changed, variables,
         distributeAbove)
       // kept rows' fp columns refresh from the wave already run — a
       // kept row is always hash-verified (legacy hash-less rows re-scan
@@ -844,7 +805,7 @@ object CatalogManifest {
       bounds: Map[String, (Double, Double)],
       timeBounds: Map[String, (String, String)],
       verifyFingerprints: Boolean = true)
-      : (Seq[GridOpen.StoreMeta], String, String, Seq[(String, Fp)]) = {
+      : (Seq[GridOpen.StoreMeta], GridFormat, String, Seq[(String, Fp)]) = {
     import spark.implicits._
     val df = load(spark, manifestPath)
       .where(col("variable") === variable)
@@ -912,7 +873,7 @@ object CatalogManifest {
       .distinct
     if (verifyFingerprints)
       checkFresh(spark, survivorFps, manifestPath)
-    val (format, dir) = (full.head._1.format, full.head._1.dir)
+    val (format, dir) = (GridFormat.named(full.head._1.format), full.head._1.dir)
     // interned: metas share classified-axis seqs and attr objects
     // across stores (a broad open's result is O(stores) StoreMeta
     // shells + O(distinct grids) everything else)
@@ -1171,7 +1132,7 @@ object CatalogManifest {
       bounds: Map[String, (Double, Double)],
       timeBounds: Map[String, (String, String)],
       verifyFingerprints: Boolean = true)
-      : (Seq[(String, Seq[GridOpen.Axis], Seq[CfDecode.CfAttrs])], String,
+      : (Seq[(String, Seq[GridOpen.Axis], Seq[CfDecode.CfAttrs])], GridFormat,
         String, Seq[(String, Fp)]) = {
     import spark.implicits._
     require(variables.nonEmpty, "catalog manifest: no variables requested")
@@ -1265,7 +1226,7 @@ object CatalogManifest {
     if (verifyFingerprints)
       checkFresh(spark, survivorFps, manifestPath)
     val fullByStore = full.groupBy(_._1.store)
-    val (format, dir) = (full.head._1.format, full.head._1.dir)
+    val (format, dir) = (GridFormat.named(full.head._1.format), full.head._1.dir)
     val intern = new MetaInterner // shared axes/attrs across stores
     val metas = fullByStore.keySet.toSeq.sorted.map { s =>
       val rows = fullByStore(s)
@@ -1300,7 +1261,7 @@ object CatalogManifest {
     * offending stores when the manifest is out of date. */
   def checkCatalogFresh(spark: SparkSession, format: String, dir: String,
       manifestPath: String): Unit = {
-    checkFormat(format)
+    val fmt = GridFormat.named(format)
     // the same frame-join diff as [[refresh]] — no driver fingerprint
     // maps — with the read-guard legacy semantics: a pre-hash row
     // (hash 0) compares the aggregate triple instead of reporting
@@ -1313,7 +1274,7 @@ object CatalogManifest {
     // reads — "added" classifies on the old side's null alone.
     val oldFp = load(spark, manifestPath)
       .select("store", "fpMtime", "fpBytes", "fpCount", "fpHash").distinct()
-    val stores = storesOf(format, dir)
+    val stores = fmt.stores(dir)
     import spark.implicits._
     val curNames = spark.createDataset(stores).toDF("store")
     val known = curNames

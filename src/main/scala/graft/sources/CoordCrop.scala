@@ -247,17 +247,17 @@ object CoordCrop {
     }
   }
 
-  // ---- Catalog (dir-of-stores) crop --------------------------------------
+  // ---- Catalog (dir-of-stores) crop predicate ----------------------------
   //
   // The reference's unit of organization is a CATALOG of per-scene
   // stores (convml-data pipeline/utils.py:51-77 fans one store per
   // scene; utils/luigi.py:29-47 opens them one file at a time). A
   // time-interval + bbox query over such a catalog must prune whole
-  // STORES at plan time: read each store's KB-scale coordinate
-  // metadata in one parMap latency wave, drop stores whose coordinate
-  // ranges provably miss the bounds, and push each survivor's own
-  // per-dimension index ranges. The whole decision lands as ONE
-  // disjunction
+  // STORES at plan time: [[GridOpen.catalog]] reads each store's
+  // KB-scale coordinate metadata in one parMap latency wave, drops
+  // stores whose coordinate ranges provably miss the bounds, and
+  // pushes each survivor's own per-dimension index ranges. The whole
+  // decision lands as ONE disjunction
   //     (path = s1 AND dK BETWEEN ...) OR (path = s2 AND ...)
   // which the mounts prune on at store, array, and chunk granularity
   // ([[MountDsv2.mayMatch]]) and Spark re-checks residually on every
@@ -290,128 +290,19 @@ object CoordCrop {
       })
     }
 
-  /** Time bounds -> numeric, routed by the axis's own calendar attr:
-    * standard/absent through [[CfTime]] (Gregorian instants),
-    * fixed-length model calendars through [[CfCalendar]] (calendar
-    * datetimes), anything else refuses loudly. */
-  private[sources] def timeRange(units: Option[String], calendar: Option[String],
-      t0: String, t1: String, where: String): (Double, Double) = {
-    val u = units.getOrElse(fail(s"$where carries no units attribute"))
-    if (CfTime.isStandardCalendar(calendar)) CfTime.numericRange(u, t0, t1)
-    else if (CfCalendar.supported(calendar.get))
-      CfCalendar.numericRange(u, calendar.get, t0, t1)
-    else fail(s"$where uses calendar '${calendar.get}' — not standard, " +
-      "not a fixed-length model calendar")
-  }
-
-  /** Resolve the caller's bounds against ONE store: numeric `bounds`
-    * pass through; `timeBounds` (instants) map through THAT store's
-    * own `units`/`calendar` attributes (scene files routinely differ
-    * in epoch; model output differs in calendar). Returns per-axis
-    * index ranges; None for an axis with no in-range values (the
-    * store is then excluded). */
-  private def storeRanges(dims: Seq[String],
-      bounds: Map[String, (Double, Double)],
-      timeBounds: Map[String, (String, String)],
-      attrsOf: String => (Option[String], Option[String]),
-      valuesOf: String => Array[Double]): Seq[(Int, Option[(Int, Int)])] = {
-    val overlap = bounds.keySet.intersect(timeBounds.keySet)
-    if (overlap.nonEmpty)
-      fail(s"axes ${overlap.mkString(",")} given both numeric and time bounds")
-    val resolved = bounds.toSeq ++ timeBounds.toSeq.map { case (n, (t0, t1)) =>
-      val (u, c) = attrsOf(n)
-      (n, timeRange(u, c, t0, t1, s"axis '$n'"))
-    }
-    resolved.sortBy(_._1).map { case (name, b) =>
-      val k = dims.indexOf(name)
-      checkDim(k, name, dims)
-      (k, valueRangeToIdx(valuesOf(name), b._1, b._2))
-    }
-  }
-
-  private def surviving(perStore: Seq[(String, Seq[(Int, Option[(Int, Int)])])])
-      : Seq[(String, Seq[(Int, (Int, Int))])] =
-    perStore.collect { case (s, rs) if rs.forall(_._2.isDefined) =>
-      (s, rs.map { case (k, r) => (k, r.get) })
-    }
-
-  /** Catalog crop over a DIR of zarr scene stores: `bounds` are
-    * coordinate values, `timeBounds` ISO instants decoded through each
-    * store's own `units`. Stores whose coordinates provably miss never
-    * plan a chunk (their metadata is read once, in the wave; their
-    * data never); survivors prune per-dimension on their own grids. */
-  def zarrCatalog(spark: SparkSession, dir: String, dataset: String,
-      bounds: Map[String, (Double, Double)],
-      timeBounds: Map[String, (String, String)] = Map.empty): DataFrame = {
-    val base = spark.read.format("graft.sources.ZarrDataSource")
-      .option("path", dir).load()
-      .where(col("dataset") === dataset)
-    // no bounds = nothing to prune on: skip the wave AND the would-be
-    // path-only disjunction (O(stores) expression for zero pruning)
-    if (bounds.isEmpty && timeBounds.isEmpty) return base
-    val stores = ZarrDataSource.discover(dir)
-      .collect { case (s, a) if a == dataset => s }.distinct
-    require(stores.nonEmpty, s"coord crop: no '$dataset' arrays under $dir")
-    val perStore = ByteStore.parMap(stores) { s =>
-      (s, storeRanges(zarrDimNames(s, dataset), bounds, timeBounds,
-        n => CfTime.zarrTimeAttrs(s, n), n => zarrArrayValues(s, n)))
-    }
-    base.where(catalogPredicate(surviving(perStore)))
-  }
-
   /** A bare directory means every file in it; anything else passes
-    * through as the glob/file the mounts already accept. Returns the
-    * normalized pattern (what the mount must be given, so its planned
-    * `path` strings match the predicate's) plus the resolved files. */
-  private def filesOf(dirOrGlob: String): (String, Seq[String]) = {
-    val pat = if (ByteStore.isDirectory(dirOrGlob))
-      ByteStore.join(dirOrGlob, "*") else dirOrGlob
-    (pat, HDF5ChunkIngest.resolvePaths(pat))
-  }
+    * through as the glob/file the mounts already accept. This is the
+    * pattern a file mount must be given, so its planned `path` strings
+    * match the crop predicate's. */
+  private[sources] def catalogGlob(dirOrGlob: String): String =
+    if (ByteStore.isDirectory(dirOrGlob)) ByteStore.join(dirOrGlob, "*")
+    else dirOrGlob
 
   /** The resolved per-scene files of a file-based catalog (what the
-    * file mounts will plan over) — [[GridOpen]]'s store list. */
+    * file mounts will plan over) — [[GridFormat]]'s store list. */
   private[sources] def catalogFiles(dirOrGlob: String): Seq[String] = {
-    val (_, paths) = filesOf(dirOrGlob)
+    val paths = HDF5ChunkIngest.resolvePaths(catalogGlob(dirOrGlob))
     require(paths.nonEmpty, s"coord crop: no files under $dirOrGlob")
     paths
-  }
-
-  /** Catalog crop over a DIR (or glob) of netCDF classic scene files. */
-  def netcdf3Catalog(spark: SparkSession, dir: String, varName: String,
-      bounds: Map[String, (Double, Double)],
-      timeBounds: Map[String, (String, String)] = Map.empty): DataFrame = {
-    val (pat, paths) = filesOf(dir)
-    require(paths.nonEmpty, s"coord crop: no files under $dir")
-    val base = spark.read.format("graft.sources.NetCDF3DataSource")
-      .option("path", pat).load()
-      .where(col("dataset") === varName)
-    if (bounds.isEmpty && timeBounds.isEmpty) return base
-    val perStore = ByteStore.parMap(paths) { p =>
-      val h = NetCDF3ChunkIngest.headerOf(p)
-      val v = h.vars.find(_.name == varName)
-        .getOrElse(fail(s"variable '$varName' not in $p"))
-      (p, storeRanges(v.dimIds.map(h.dims(_).name), bounds, timeBounds,
-        n => CfTime.netcdf3TimeAttrs(p, n), n => nc3VarValues(p, n)))
-    }
-    base.where(catalogPredicate(surviving(perStore)))
-  }
-
-  /** Catalog crop over a DIR (or glob) of netCDF-4/HDF5 scene files,
-    * axes named by each file's own dimension scales. */
-  def hdf5Catalog(spark: SparkSession, dir: String, dataset: String,
-      bounds: Map[String, (Double, Double)],
-      timeBounds: Map[String, (String, String)] = Map.empty): DataFrame = {
-    val (pat, paths) = filesOf(dir)
-    require(paths.nonEmpty, s"coord crop: no files under $dir")
-    val base = spark.read.format("graft.sources.Hdf5DataSource")
-      .option("path", pat).load()
-      .where(col("dataset") === dataset)
-    if (bounds.isEmpty && timeBounds.isEmpty) return base
-    val perStore = ByteStore.parMap(paths) { p =>
-      (p, storeRanges(hdf5DimNames(p, dataset), bounds, timeBounds,
-        n => CfTime.hdf5TimeAttrs(p, n), n => hdf5DatasetValues(p, n)))
-    }
-    base.where(catalogPredicate(surviving(perStore)))
   }
 }

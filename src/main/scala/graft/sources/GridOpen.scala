@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * coordinates). The pieces exist separately in this repo (dimension
   * names, [[CoordCrop]] value crops, [[CfDecode]] mask-and-scale,
   * [[CfTime]]/[[CfCalendar]] axes); this composes them into ONE call
-  * per mount:
+  * per shape, the storage format a [[GridFormat]] value:
   *
-  *   GridOpen.zarr(spark, store, "lwp",
+  *   GridOpen.open(spark, GridFormat.Zarr, store, "lwp",
   *     timeBounds = Map("time" -> ("2020-01-01", "2020-01-02")),
   *     bounds = Map("y" -> (300.0, 600.0)))
   *
@@ -32,7 +32,8 @@ import org.apache.spark.sql.functions._
   * as a `try_element_at` over a literal array (KB-scale coords, the 1M
   * guard of [[CfTime.timestampFromValues]]).
   *
-  * The `*Catalog` variants lift the same shape over a DIR of per-scene
+  * The shapes: [[open]] and [[openVars]] read one store; [[catalog]]
+  * and [[varsCatalog]] lift the same shape over a DIR of per-scene
   * stores (the reference's catalog layout): store-level pruning via
   * the pushed per-store disjunction, then per-store coordinate decode
   * via BROADCAST joins on (path, dK) — per-store epochs, calendars and
@@ -41,13 +42,13 @@ import org.apache.spark.sql.functions._
   * the literal codegen'd expression when uniform and broadcast per
   * store when granules carry their own scales.
   *
-  * The `*FromManifest` variants plan the SAME opens from a persisted
-  * [[CatalogManifest]] (the reference's scene DB): ZERO per-store
-  * metadata reads per query, explicit member lists to the mounts (no
-  * discovery walk), and a survivor-only staleness guard (excluded
-  * stores are never re-checked — see `zarrCatalogFromManifest` for
-  * the blind spot that buys). The
-  * `materialize*` entry points write catalog slices as scene-
+  * The `*FromManifest` shapes plan the SAME opens from a persisted
+  * [[CatalogManifest]] (the reference's scene DB), whose `format`
+  * column names the [[GridFormat]]: ZERO per-store metadata reads per
+  * query, explicit member lists to the mounts (no discovery walk), and
+  * a survivor-only staleness guard (excluded stores are never
+  * re-checked — see [[catalogFromManifest]] for the blind spot that
+  * buys). The `materialize*` shapes write catalog slices as scene-
   * partitioned parquet tables under the luigi skip-if-present
   * contract — missing scenes only, dynamic partition overwrite,
   * idempotent retries.
@@ -94,7 +95,7 @@ object GridOpen {
   /** The mounts expose [[MountDsv2.DimCols]] positions only; a rank
     * beyond that cannot be named, cropped, or decoded by this surface —
     * refuse with the domain message instead of an index error. */
-  private def checkRank(rank: Int, where: String): Unit =
+  private[sources] def checkRank(rank: Int, where: String): Unit =
     if (rank > MountDsv2.DimCols.length)
       fail(s"$where has rank $rank — the grid open surfaces " +
         s"${MountDsv2.DimCols.mkString("/")} only; read the mount " +
@@ -113,7 +114,7 @@ object GridOpen {
     case _ => false
   }
 
-  // ---- per-mount axis discovery (driver-side, KB-scale metadata) ---------
+  // ---- per-store axis discovery (driver-side, KB-scale metadata) ---------
 
   /** One axis in UNCLASSIFIED form — exactly what a store's metadata
     * says (raw `units`/`calendar` attrs), with no decode decision
@@ -128,58 +129,8 @@ object GridOpen {
       if (r.coords.isEmpty) NotTime
       else classify(r.units, r.calendar, s"$store/${r.name}")))
 
-  private[sources] def zarrRawAxes(store: String, dataset: String): Seq[RawAxis] = {
-    val dims = CoordCrop.zarrDimNames(store, dataset)
-    checkRank(dims.length, s"$store/$dataset")
-    dims.zipWithIndex.map { case (n, k) =>
-      val node = ByteStore.join(store, n)
-      val hasCoord = ByteStore.isFile(ByteStore.join(node, ".zarray")) ||
-        ByteStore.isFile(ByteStore.join(node, "zarr.json"))
-      if (!hasCoord) RawAxis(k, n, None, None, None)
-      else {
-        val (u, c) = CfTime.zarrTimeAttrs(store, n)
-        RawAxis(k, n, u, c, Some(CoordCrop.zarrArrayValues(store, n)))
-      }
-    }
-  }
-
-  private[sources] def zarrAxes(store: String, dataset: String): Seq[Axis] =
-    classifyAxes(zarrRawAxes(store, dataset), store)
-
-  private[sources] def hdf5RawAxes(path: String, dataset: String): Seq[RawAxis] = {
-    val dims = CoordCrop.hdf5DimNames(path, dataset)
-    checkRank(dims.length, s"$path/$dataset")
-    dims.zipWithIndex.map { case (n, k) =>
-      if (n.startsWith("<unnamed")) RawAxis(k, s"dim_$k", None, None, None)
-      else {
-        val (u, c) = CfTime.hdf5TimeAttrs(path, n)
-        RawAxis(k, n, u, c, Some(CoordCrop.hdf5DatasetValues(path, n)))
-      }
-    }
-  }
-
-  private[sources] def hdf5Axes(path: String, dataset: String): Seq[Axis] =
-    classifyAxes(hdf5RawAxes(path, dataset), path)
-
-  private[sources] def netcdf3RawAxes(path: String, varName: String): Seq[RawAxis] = {
-    val h = NetCDF3ChunkIngest.headerOf(path)
-    val v = h.vars.find(_.name == varName)
-      .getOrElse(fail(s"variable '$varName' not in $path"))
-    checkRank(v.dimIds.length, s"$path/$varName")
-    v.dimIds.zipWithIndex.map { case (id, k) =>
-      val n = h.dims(id).name
-      if (!h.vars.exists(cv => cv.name == n && cv.dimIds == Seq(id)))
-        RawAxis(k, n, None, None, None)
-      else {
-        val (u, c) = CfTime.netcdf3TimeAttrs(path, n)
-        RawAxis(k, n, u, c, Some(CoordCrop.nc3VarValues(path, n)))
-      }
-    }
-  }
-
-  private[sources] def netcdf3Axes(path: String, varName: String): Seq[Axis] =
-    classifyAxes(netcdf3RawAxes(path, varName), path)
-
+  private def axesOf(format: GridFormat, store: String, variable: String): Seq[Axis] =
+    classifyAxes(format.rawAxes(store, variable), store)
   // ---- shared decoration --------------------------------------------------
 
   /** The decode expression for one axis over the mount's `dK` column:
@@ -240,326 +191,25 @@ object GridOpen {
       axes.map(ax => col(s"`${ax.name}`")) :+ col("value")): _*)
   }
 
-  // ---- single-store turnkeys ----------------------------------------------
+  // ---- single-store opens -------------------------------------------------
 
-  /** Open one zarr store's `dataset` with named/typed coordinates,
-    * mask-and-scale, and pushed value/time crops. */
-  def zarr(spark: SparkSession, store: String, dataset: String,
+  /** Open one store's `dataset` — a zarr store, a netCDF classic file,
+    * or a netCDF-4/HDF5 file (axes from its dimension scales) — with
+    * named/typed coordinates, mask-and-scale, and pushed value/time
+    * crops. */
+  def open(spark: SparkSession, format: GridFormat, store: String,
+      dataset: String,
       bounds: Map[String, (Double, Double)] = Map.empty,
       timeBounds: Map[String, (String, String)] = Map.empty): DataFrame = {
-    val axes = zarrAxes(store, dataset)
+    val axes = axesOf(format, store, dataset)
     val nb = resolveBounds(axes, bounds, timeBounds, store)
     val cropped =
       if (nb.isEmpty)
-        spark.read.format("graft.sources.ZarrDataSource")
-          .option("path", store).load().where(col("dataset") === dataset)
-      else CoordCrop.zarr(spark, store, dataset, nb)
-    decorate(cropped, axes, CfDecode.zarrCfAttrs(store, dataset))
+        format.reader(spark).option("path", store).load()
+          .where(col("dataset") === dataset)
+      else format.crop(spark, store, dataset, axes, nb)
+    decorate(cropped, axes, format.cfAttrs(store, dataset))
   }
-
-  /** Open one netCDF-4/HDF5 file's `dataset` (axes from its dimension
-    * scales) with named/typed coordinates, mask-and-scale, and pushed
-    * crops. */
-  def hdf5(spark: SparkSession, path: String, dataset: String,
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty): DataFrame = {
-    val axes = hdf5Axes(path, dataset)
-    val nb = resolveBounds(axes, bounds, timeBounds, path)
-    val cropped =
-      if (nb.isEmpty)
-        spark.read.format("graft.sources.Hdf5DataSource")
-          .option("path", path).load().where(col("dataset") === dataset)
-      else CoordCrop.hdf5(spark, path, dataset,
-        axes.map(_.name), nb)
-    decorate(cropped, axes, CfDecode.hdf5CfAttrs(path, dataset))
-  }
-
-  /** Open one netCDF classic file's `varName` with named/typed
-    * coordinates, mask-and-scale, and pushed crops. */
-  def netcdf3(spark: SparkSession, path: String, varName: String,
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty): DataFrame = {
-    val axes = netcdf3Axes(path, varName)
-    val nb = resolveBounds(axes, bounds, timeBounds, path)
-    val cropped =
-      if (nb.isEmpty)
-        spark.read.format("graft.sources.NetCDF3DataSource")
-          .option("path", path).load().where(col("dataset") === varName)
-      else CoordCrop.netcdf3(spark, path, varName, nb)
-    decorate(cropped, axes, CfDecode.netcdf3CfAttrs(path, varName))
-  }
-
-  // ---- scene-idempotent materialization (the luigi contract) ---------------
-
-  private def sceneOf(store: String): String =
-    store.stripSuffix("/").split('/').last
-
-  /** Materialize a zarr catalog slice as a scene-partitioned parquet
-    * table, SCENE-IDEMPOTENTLY — the luigi skip-if-present contract
-    * the reference's whole pipeline is built on (every task re-checks
-    * its target, convml-data pipeline/regridding.py:93-117,
-    * dataset/fetch_source_data.py:7-14), on the turnkey open:
-    *
-    *  - scenes already materialized under `outPath` are skipped
-    *    ENTIRELY — their stores' metadata and data are never read
-    *    (the pending wave runs over MISSING scenes only, and the mount
-    *    receives exactly the pending members via the explicit `arrays`
-    *    option);
-    *  - missing scenes open, decode, and write through dynamic
-    *    partition overwrite, so a retry after a mid-write failure is
-    *    idempotent at scene granularity — "re-run the world" becomes
-    *    "append yesterday's scenes".
-    *
-    * Returns the newly materialized scene names. A scene whose rows
-    * are all pruned by the bounds writes no partition and is re-probed
-    * (metadata-only) on the next run; the manifest variant excludes
-    * such scenes at plan time instead. */
-  def materializeZarrCatalog(spark: SparkSession, dir: String, dataset: String,
-      outPath: String,
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty): Seq[String] = {
-    val stores = ZarrDataSource.discover(dir)
-      .collect { case (s, a) if a == dataset => s }.distinct.sorted
-    require(stores.nonEmpty, s"grid open: no '$dataset' arrays under $dir")
-    materializeScenes(spark, stores, outPath) { pending =>
-      val perStore = ByteStore.parMap(pending)(s =>
-        StoreMeta(s, zarrAxes(s, dataset), CfDecode.zarrCfAttrs(s, dataset)))
-      catalogOpen(spark, extra =>
-        spark.read.format("graft.sources.ZarrDataSource")
-          .option("path", dir)
-          .option("arrays", pending.map(s => s + "\t" + dataset).mkString("\n"))
-          .options(extra)
-          .load().where(col("dataset") === dataset),
-        perStore, bounds, timeBounds)
-    }
-  }
-
-  /** [[materializeZarrCatalog]] planned from a persisted
-    * [[CatalogManifest]]: pending-scene selection AND their crop/decode
-    * metadata come from the manifest, so even the pending wave costs
-    * zero per-store metadata reads — pending scenes pay exactly their
-    * data chunks. Scenes the bounds exclude are not pending at all. */
-  def materializeZarrCatalogFromManifest(spark: SparkSession,
-      manifestPath: String, dataset: String, outPath: String,
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty,
-      verifyFingerprints: Boolean = true): Seq[String] =
-    materializeFromManifest(spark, manifestPath, dataset, outPath, "zarr",
-      bounds, timeBounds, verifyFingerprints) { (dir, pending, extra) =>
-      spark.read.format("graft.sources.ZarrDataSource")
-        .option("path", dir)
-        .option("arrays", pending.map(s => s + "\t" + dataset).mkString("\n"))
-        .options(extra)
-        .load().where(col("dataset") === dataset)
-    }
-
-  /** [[materializeNetcdf3Catalog]] planned from a persisted manifest:
-    * pending-scene selection AND crop/decode metadata come from the
-    * manifest — zero per-store metadata reads even on the pending
-    * wave; the mount receives the pending files as an explicit list. */
-  def materializeNetcdf3CatalogFromManifest(spark: SparkSession,
-      manifestPath: String, varName: String, outPath: String,
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty,
-      verifyFingerprints: Boolean = true): Seq[String] =
-    materializeFromManifest(spark, manifestPath, varName, outPath, "netcdf3",
-      bounds, timeBounds, verifyFingerprints) { (_, pending, extra) =>
-      spark.read.format("graft.sources.NetCDF3DataSource")
-        .option("path", pending.mkString("\n") + "\n").options(extra)
-        .load().where(col("dataset") === varName)
-    }
-
-  /** [[materializeHdf5Catalog]] planned from a persisted manifest. */
-  def materializeHdf5CatalogFromManifest(spark: SparkSession,
-      manifestPath: String, dataset: String, outPath: String,
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty,
-      verifyFingerprints: Boolean = true): Seq[String] =
-    materializeFromManifest(spark, manifestPath, dataset, outPath, "hdf5",
-      bounds, timeBounds, verifyFingerprints) { (_, pending, extra) =>
-      spark.read.format("graft.sources.Hdf5DataSource")
-        .option("path", pending.mkString("\n") + "\n").options(extra)
-        .load().where(col("dataset") === dataset)
-    }
-
-  /** The shared manifest-planned materialize skeleton: plan from the
-    * manifest, verify freshness of every NOT-yet-done envelope
-    * survivor (a stale store the exact prune would wrongly drop must
-    * refuse — but a done scene's later change must not wedge a
-    * skip-everything re-run), drop scenes whose exact ranges are
-    * empty (they must never be pending — they would "re-materialize",
-    * emptily, every run), then open ONLY the pending members through
-    * `mountPending(dir, pending, extraOpts)`. */
-  private def materializeFromManifest(spark: SparkSession,
-      manifestPath: String, variable: String, outPath: String,
-      wantFormat: String,
-      bounds: Map[String, (Double, Double)],
-      timeBounds: Map[String, (String, String)],
-      verifyFingerprints: Boolean)(
-      mountPending: (String, Seq[String], Map[String, String]) => DataFrame)
-      : Seq[String] = {
-    val (metas0, format, dir, survivorFps) = CatalogManifest.planStores(
-      spark, manifestPath, variable, bounds, timeBounds,
-      verifyFingerprints = false)
-    require(format == wantFormat, s"grid open: manifest $manifestPath " +
-      s"holds '$format' stores, not $wantFormat")
-    if (verifyFingerprints) {
-      val done = graft.pipeline.Incremental
-        .completedPartitions(spark, outPath, "scene")
-      CatalogManifest.checkFreshSubset(spark,
-        survivorFps.filterNot { case (s, _) => done(sceneOf(s)) },
-        manifestPath)
-    }
-    val exact = survivingRanges(metas0.map(m => (m.store, m.axes)),
-      bounds, timeBounds).map(_._1).toSet
-    val metas = metas0.filter(m => exact(m.store))
-    materializeScenes(spark, metas.map(_.store), outPath) { pending =>
-      val pendingSet = pending.toSet
-      catalogOpen(spark, extra => mountPending(dir, pending, extra),
-        metas.filter(m => pendingSet(m.store)), bounds, timeBounds)
-    }
-  }
-
-  /** File-catalog sibling of [[materializeZarrCatalog]]: netCDF classic
-    * scene files, scene = file name. */
-  def materializeNetcdf3Catalog(spark: SparkSession, dir: String,
-      varName: String, outPath: String,
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty): Seq[String] = {
-    val paths = CoordCrop.catalogFiles(dir)
-    materializeScenes(spark, paths, outPath) { pending =>
-      val perStore = ByteStore.parMap(pending)(p =>
-        StoreMeta(p, netcdf3Axes(p, varName), CfDecode.netcdf3CfAttrs(p, varName)))
-      catalogOpen(spark, extra =>
-        spark.read.format("graft.sources.NetCDF3DataSource")
-          .option("path", pending.mkString("\n") + "\n").options(extra)
-          .load().where(col("dataset") === varName),
-        perStore, bounds, timeBounds)
-    }
-  }
-
-  /** File-catalog sibling of [[materializeZarrCatalog]]: netCDF-4/HDF5
-    * scene files, scene = file name. */
-  def materializeHdf5Catalog(spark: SparkSession, dir: String,
-      dataset: String, outPath: String,
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty): Seq[String] = {
-    val paths = CoordCrop.catalogFiles(dir)
-    materializeScenes(spark, paths, outPath) { pending =>
-      val perStore = ByteStore.parMap(pending)(p =>
-        StoreMeta(p, hdf5Axes(p, dataset), CfDecode.hdf5CfAttrs(p, dataset)))
-      catalogOpen(spark, extra =>
-        spark.read.format("graft.sources.Hdf5DataSource")
-          .option("path", pending.mkString("\n") + "\n").options(extra)
-          .load().where(col("dataset") === dataset),
-        perStore, bounds, timeBounds)
-    }
-  }
-
-  /** Scene-idempotent materialize of the MULTI-VARIABLE catalog — the
-    * aux-fields flow persisted per scene (the reference derives and
-    * writes per-scene aux variables behind luigi targets,
-    * convml-data pipeline/embeddings/aux_fields/data.py:33-295) —
-    * planned from a persisted manifest: zero per-store metadata reads,
-    * pending scenes pay their data chunks only, and the wide
-    * (path, idx, <dims>, <vars>) frame lands scene-partitioned under
-    * the skip-if-present contract. */
-  def materializeZarrVarsCatalogFromManifest(spark: SparkSession,
-      manifestPath: String, variables: Seq[String], outPath: String,
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty,
-      verifyFingerprints: Boolean = true): Seq[String] =
-    materializeVarsFromManifest(spark, manifestPath, variables, outPath,
-      "zarr", bounds, timeBounds, verifyFingerprints) { (dir, pending, extra) =>
-      spark.read.format("graft.sources.ZarrDataSource")
-        .option("path", dir)
-        .option("arrays", pending.flatMap(s =>
-          variables.map(v => s + "\t" + v)).mkString("\n"))
-        .options(extra)
-        .load()
-    }
-
-  /** Multi-variable manifest materialize over netCDF classic scene
-    * files. */
-  def materializeNetcdf3VarsCatalogFromManifest(spark: SparkSession,
-      manifestPath: String, variables: Seq[String], outPath: String,
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty,
-      verifyFingerprints: Boolean = true): Seq[String] =
-    materializeVarsFromManifest(spark, manifestPath, variables, outPath,
-      "netcdf3", bounds, timeBounds, verifyFingerprints) { (_, pending, extra) =>
-      spark.read.format("graft.sources.NetCDF3DataSource")
-        .option("path", pending.mkString("\n") + "\n").options(extra).load()
-    }
-
-  /** Multi-variable manifest materialize over netCDF-4/HDF5 scene
-    * files. */
-  def materializeHdf5VarsCatalogFromManifest(spark: SparkSession,
-      manifestPath: String, variables: Seq[String], outPath: String,
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty,
-      verifyFingerprints: Boolean = true): Seq[String] =
-    materializeVarsFromManifest(spark, manifestPath, variables, outPath,
-      "hdf5", bounds, timeBounds, verifyFingerprints) { (_, pending, extra) =>
-      spark.read.format("graft.sources.Hdf5DataSource")
-        .option("path", pending.mkString("\n") + "\n").options(extra).load()
-    }
-
-  /** [[materializeFromManifest]]'s multi-variable sibling: same
-    * contract (not-yet-done survivor verification, exact-empty scenes
-    * never pending, explicit pending member lists), feeding
-    * [[varsCatalogFrom]] per pending wave. */
-  private def materializeVarsFromManifest(spark: SparkSession,
-      manifestPath: String, variables: Seq[String], outPath: String,
-      wantFormat: String,
-      bounds: Map[String, (Double, Double)],
-      timeBounds: Map[String, (String, String)],
-      verifyFingerprints: Boolean)(
-      mountPending: (String, Seq[String], Map[String, String]) => DataFrame)
-      : Seq[String] = {
-    val (metas0, format, dir, survivorFps) = CatalogManifest.planVarsStores(
-      spark, manifestPath, variables, bounds, timeBounds,
-      verifyFingerprints = false)
-    require(format == wantFormat, s"grid open: manifest $manifestPath " +
-      s"holds '$format' stores, not $wantFormat")
-    if (verifyFingerprints) {
-      val done = graft.pipeline.Incremental
-        .completedPartitions(spark, outPath, "scene")
-      CatalogManifest.checkFreshSubset(spark,
-        survivorFps.filterNot { case (s, _) => done(sceneOf(s)) },
-        manifestPath)
-    }
-    val exact = survivingRanges(metas0.map(m => (m._1, m._2)),
-      bounds, timeBounds).map(_._1).toSet
-    val metas = metas0.filter(m => exact(m._1))
-    materializeScenes(spark, metas.map(_._1), outPath) { pending =>
-      val pendingSet = pending.toSet
-      varsCatalogFrom(spark, metas.filter(m => pendingSet(m._1)), variables,
-        extra => mountPending(dir, pending, extra), bounds, timeBounds)
-    }
-  }
-
-  private def materializeScenes(spark: SparkSession, stores: Seq[String],
-      outPath: String)(openPending: Seq[String] => DataFrame): Seq[String] = {
-    val done = graft.pipeline.Incremental
-      .completedPartitions(spark, outPath, "scene")
-    val pending = stores.filterNot(s => done(sceneOf(s)))
-    if (pending.isEmpty) return Nil
-    val df = openPending(pending)
-      .withColumn("scene", substring_index(col("path"), "/", -1))
-    // per-writer dynamic overwrite: mutating the SESSION conf would
-    // silently change the semantics of the caller's own later writes
-    df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("scene").parquet(outPath)
-    // report what actually MATERIALIZED: a pending scene whose rows
-    // were all pruned writes no partition (and is re-probed next run)
-    val nowDone = graft.pipeline.Incremental
-      .completedPartitions(spark, outPath, "scene")
-    pending.map(sceneOf).filter(nowDone)
-  }
-
-  // ---- multi-variable open (the xr.Dataset shape) --------------------------
 
   /** Open SEVERAL variables of one store as one wide DataFrame —
     * `(path, idx, <dims>, <one column per variable>)` — the
@@ -573,51 +223,23 @@ object GridOpen {
     * map-side partial agg, one exchange, NO self-joins (k variables
     * via joins would be k scans + k exchanges). Variables must share
     * the store's grid (same dimension names, same coords). */
-  def zarrVars(spark: SparkSession, store: String, variables: Seq[String],
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty): DataFrame =
-    multiVar(spark, variables,
-      v => zarrAxes(store, v), v => CfDecode.zarrCfAttrs(store, v),
-      spark.read.format("graft.sources.ZarrDataSource")
-        .option("path", store).load(), store,
-      bounds, timeBounds)
-
-  /** Multi-variable open over one netCDF-4/HDF5 file. */
-  def hdf5Vars(spark: SparkSession, path: String, variables: Seq[String],
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty): DataFrame =
-    multiVar(spark, variables,
-      v => hdf5Axes(path, v), v => CfDecode.hdf5CfAttrs(path, v),
-      spark.read.format("graft.sources.Hdf5DataSource")
-        .option("path", path).load(), path,
-      bounds, timeBounds)
-
-  /** Multi-variable open over one netCDF classic file. */
-  def netcdf3Vars(spark: SparkSession, path: String, variables: Seq[String],
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty): DataFrame =
-    multiVar(spark, variables,
-      v => netcdf3Axes(path, v), v => CfDecode.netcdf3CfAttrs(path, v),
-      spark.read.format("graft.sources.NetCDF3DataSource")
-        .option("path", path).load(), path,
-      bounds, timeBounds)
-
-  private def multiVar(spark: SparkSession, variables: Seq[String],
-      axesOf: String => Seq[Axis], attrsOf: String => CfDecode.CfAttrs,
-      mount: DataFrame, where: String,
+  def openVars(spark: SparkSession, format: GridFormat, store: String,
+      variables: Seq[String],
       bounds: Map[String, (Double, Double)] = Map.empty,
       timeBounds: Map[String, (String, String)] = Map.empty): DataFrame = {
     require(variables.nonEmpty, "grid open: no variables requested")
-    val perVar = ByteStore.parMap(variables)(v => (v, axesOf(v), attrsOf(v)))
+    val perVar = ByteStore.parMap(variables)(v =>
+      (v, axesOf(format, store, v), format.cfAttrs(store, v)))
     val axes = perVar.head._2
     perVar.foreach { case (v, ax, _) =>
       if (ax.map(_.name) != axes.map(_.name) ||
         !ax.zip(axes).forall { case (a, b) => coordsEq(a.coords, b.coords) })
-        fail(s"variable '$v' in $where is not on the shared grid " +
+        fail(s"variable '$v' in $store is not on the shared grid " +
           s"(${axes.map(_.name).mkString(",")}) — multi-open needs one grid")
     }
-    val nb = resolveBounds(axes, bounds, timeBounds, where)
-    var df = mount.where(col("dataset").isin(variables: _*))
+    val nb = resolveBounds(axes, bounds, timeBounds, store)
+    var df = format.reader(spark).option("path", store).load()
+      .where(col("dataset").isin(variables: _*))
     // pushable per-dim predicates from the shared coords (same
     // interval-location as CoordCrop; chunks of EVERY variable prune)
     nb.foreach { case (name, (lo, hi)) =>
@@ -647,6 +269,144 @@ object GridOpen {
       variables.map(v => col(s"`$v`"))): _*)
   }
 
+  // ---- scene-idempotent materialization (the luigi contract) ---------------
+
+  private def sceneOf(store: String): String =
+    store.stripSuffix("/").split('/').last
+
+  /** Materialize a catalog slice as a scene-partitioned parquet table,
+    * SCENE-IDEMPOTENTLY — the luigi skip-if-present contract the
+    * reference's whole pipeline is built on (every task re-checks its
+    * target, convml-data pipeline/regridding.py:93-117,
+    * dataset/fetch_source_data.py:7-14), on the turnkey open:
+    *
+    *  - scenes already materialized under `outPath` are skipped
+    *    ENTIRELY — their stores' metadata and data are never read
+    *    (the pending wave runs over MISSING scenes only, and the mount
+    *    receives exactly the pending members as an explicit list);
+    *  - missing scenes open, decode, and write through dynamic
+    *    partition overwrite, so a retry after a mid-write failure is
+    *    idempotent at scene granularity — "re-run the world" becomes
+    *    "append yesterday's scenes".
+    *
+    * A scene is a zarr store or a scene file (scene = file name).
+    * Returns the newly materialized scene names. A scene whose rows
+    * are all pruned by the bounds writes no partition and is re-probed
+    * (metadata-only) on the next run; the manifest shape excludes such
+    * scenes at plan time instead. */
+  def materialize(spark: SparkSession, format: GridFormat, dir: String,
+      dataset: String, outPath: String,
+      bounds: Map[String, (Double, Double)] = Map.empty,
+      timeBounds: Map[String, (String, String)] = Map.empty): Seq[String] =
+    materializeScenes(spark, format.holding(dir, dataset), outPath) { pending =>
+      catalogOpen(spark, extra =>
+        format.mountMembers(spark, dir, pending, Seq(dataset)).options(extra)
+          .load().where(col("dataset") === dataset),
+        metaWave(format, pending, dataset), bounds, timeBounds)
+    }
+
+  /** [[materialize]] planned from a persisted [[CatalogManifest]]:
+    * pending-scene selection AND their crop/decode metadata come from
+    * the manifest, so even the pending wave costs zero per-store
+    * metadata reads — pending scenes pay exactly their data chunks.
+    * Scenes the bounds exclude are not pending at all. The staleness
+    * guard verifies every NOT-yet-done envelope survivor (a stale store
+    * the exact prune would wrongly drop must refuse — but a done
+    * scene's later change must not wedge a skip-everything re-run);
+    * scenes whose exact ranges are empty are never pending (they would
+    * "re-materialize", emptily, every run). */
+  def materializeFromManifest(spark: SparkSession,
+      manifestPath: String, dataset: String, outPath: String,
+      bounds: Map[String, (Double, Double)] = Map.empty,
+      timeBounds: Map[String, (String, String)] = Map.empty,
+      verifyFingerprints: Boolean = true): Seq[String] = {
+    val (metas0, format, dir, survivorFps) = CatalogManifest.planStores(
+      spark, manifestPath, dataset, bounds, timeBounds,
+      verifyFingerprints = false)
+    if (verifyFingerprints)
+      checkPendingFresh(spark, manifestPath, outPath, survivorFps)
+    val exact = survivingRanges(metas0.map(m => (m.store, m.axes)),
+      bounds, timeBounds).map(_._1).toSet
+    val metas = metas0.filter(m => exact(m.store))
+    materializeScenes(spark, metas.map(_.store), outPath) { pending =>
+      val pendingSet = pending.toSet
+      catalogOpen(spark, extra =>
+        format.mountMembers(spark, dir, pending, Seq(dataset)).options(extra)
+          .load().where(col("dataset") === dataset),
+        metas.filter(m => pendingSet(m.store)), bounds, timeBounds)
+    }
+  }
+
+  /** [[materializeFromManifest]] under its former zarr-only name; the
+    * benchmark calls it. */
+  def materializeZarrCatalogFromManifest(spark: SparkSession,
+      manifestPath: String, dataset: String, outPath: String,
+      bounds: Map[String, (Double, Double)] = Map.empty,
+      timeBounds: Map[String, (String, String)] = Map.empty,
+      verifyFingerprints: Boolean = true): Seq[String] =
+    materializeFromManifest(spark, manifestPath, dataset, outPath, bounds,
+      timeBounds, verifyFingerprints)
+
+  /** Scene-idempotent materialize of the MULTI-VARIABLE catalog — the
+    * aux-fields flow persisted per scene (the reference derives and
+    * writes per-scene aux variables behind luigi targets,
+    * convml-data pipeline/embeddings/aux_fields/data.py:33-295) —
+    * planned from a persisted manifest: zero per-store metadata reads,
+    * pending scenes pay their data chunks only, and the wide
+    * (path, idx, <dims>, <vars>) frame lands scene-partitioned under
+    * the skip-if-present contract of [[materializeFromManifest]]. */
+  def materializeVarsFromManifest(spark: SparkSession,
+      manifestPath: String, variables: Seq[String], outPath: String,
+      bounds: Map[String, (Double, Double)] = Map.empty,
+      timeBounds: Map[String, (String, String)] = Map.empty,
+      verifyFingerprints: Boolean = true): Seq[String] = {
+    val (metas0, format, dir, survivorFps) = CatalogManifest.planVarsStores(
+      spark, manifestPath, variables, bounds, timeBounds,
+      verifyFingerprints = false)
+    if (verifyFingerprints)
+      checkPendingFresh(spark, manifestPath, outPath, survivorFps)
+    val exact = survivingRanges(metas0.map(m => (m._1, m._2)),
+      bounds, timeBounds).map(_._1).toSet
+    val metas = metas0.filter(m => exact(m._1))
+    materializeScenes(spark, metas.map(_._1), outPath) { pending =>
+      val pendingSet = pending.toSet
+      varsCatalogFrom(spark, metas.filter(m => pendingSet(m._1)), variables,
+        extra => format.mountMembers(spark, dir, pending, variables)
+          .options(extra).load(),
+        bounds, timeBounds)
+    }
+  }
+
+  /** The materialize staleness guard: the fingerprints of envelope
+    * survivors whose scene is not yet under `outPath`. */
+  private def checkPendingFresh(spark: SparkSession, manifestPath: String,
+      outPath: String, survivorFps: Seq[(String, (Long, Long, Long, Long))]): Unit = {
+    val done = graft.pipeline.Incremental
+      .completedPartitions(spark, outPath, "scene")
+    CatalogManifest.checkFreshSubset(spark,
+      survivorFps.filterNot { case (s, _) => done(sceneOf(s)) },
+      manifestPath)
+  }
+
+  private def materializeScenes(spark: SparkSession, stores: Seq[String],
+      outPath: String)(openPending: Seq[String] => DataFrame): Seq[String] = {
+    val done = graft.pipeline.Incremental
+      .completedPartitions(spark, outPath, "scene")
+    val pending = stores.filterNot(s => done(sceneOf(s)))
+    if (pending.isEmpty) return Nil
+    val df = openPending(pending)
+      .withColumn("scene", substring_index(col("path"), "/", -1))
+    // per-writer dynamic overwrite: mutating the SESSION conf would
+    // silently change the semantics of the caller's own later writes
+    df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("scene").parquet(outPath)
+    // report what actually MATERIALIZED: a pending scene whose rows
+    // were all pruned writes no partition (and is re-probed next run)
+    val nowDone = graft.pipeline.Incremental
+      .completedPartitions(spark, outPath, "scene")
+    pending.map(sceneOf).filter(nowDone)
+  }
   // ---- catalog turnkeys (dir of per-scene stores) --------------------------
 
   /** One store's catalog metadata: its axes (names, coords, time
@@ -656,67 +416,35 @@ object GridOpen {
   private[graft] final case class StoreMeta(store: String, axes: Seq[Axis],
       attrs: CfDecode.CfAttrs)
 
-  /** Open a CATALOG of zarr scene stores as one DataFrame with
-    * named/typed coordinates. ONE metadata wave over the stores feeds
-    * BOTH the store-level crop (stores whose coordinates provably miss
-    * the bounds never plan; survivors push their own per-dimension
-    * index ranges as one disjunction) and the decoration (coordinates
-    * decode per store via broadcast joins on `(path, dK)`, so scenes
-    * with different epochs/calendars/grids compose without per-store
-    * expression trees). Axis names and time-kinds must agree across
-    * stores (a heterogeneous catalog fails loudly); per-store pack
-    * attrs broadcast when they differ (the CERES per-file-scales
-    * pattern, convml-data sources/ceres_syn1deg_modis/extract.py:7-69)
-    * and fold as the literal codegen'd expression when uniform. */
-  def zarrCatalog(spark: SparkSession, dir: String, dataset: String,
+  /** ONE live metadata wave over `stores`: each store's `dataset` axes
+    * and pack attrs. */
+  private def metaWave(format: GridFormat, stores: Seq[String],
+      dataset: String): Seq[StoreMeta] =
+    ByteStore.parMap(stores)(s =>
+      StoreMeta(s, axesOf(format, s, dataset), format.cfAttrs(s, dataset)))
+
+  /** Open a CATALOG of scene stores (zarr stores, or a DIR or glob of
+    * scene files) as one DataFrame with named/typed coordinates. ONE
+    * metadata wave over the stores feeds BOTH the store-level crop
+    * (stores whose coordinates provably miss the bounds never plan;
+    * survivors push their own per-dimension index ranges as one
+    * disjunction) and the decoration (coordinates decode per store via
+    * broadcast joins on `(path, dK)`, so scenes with different
+    * epochs/calendars/grids compose without per-store expression
+    * trees). Axis names and time-kinds must agree across stores (a
+    * heterogeneous catalog fails loudly); per-store pack attrs
+    * broadcast when they differ (the CERES per-file-scales pattern,
+    * convml-data sources/ceres_syn1deg_modis/extract.py:7-69) and fold
+    * as the literal codegen'd expression when uniform. */
+  def catalog(spark: SparkSession, format: GridFormat, dir: String,
+      dataset: String,
       bounds: Map[String, (Double, Double)] = Map.empty,
       timeBounds: Map[String, (String, String)] = Map.empty): DataFrame = {
-    val stores = ZarrDataSource.discover(dir)
-      .collect { case (s, a) if a == dataset => s }.distinct
-    require(stores.nonEmpty, s"grid open: no '$dataset' arrays under $dir")
-    val perStore = ByteStore.parMap(stores)(s =>
-      StoreMeta(s, zarrAxes(s, dataset), CfDecode.zarrCfAttrs(s, dataset)))
+    val stores = format.holding(dir, dataset)
     catalogOpen(spark, extra =>
-      spark.read.format("graft.sources.ZarrDataSource")
-        .option("path", dir)
-        // the members are already discovered — hand them to the scan so
-        // plan time pays ONE discovery walk, not two
-        .option("arrays", stores.map(s => s + "\t" + dataset).mkString("\n"))
-        .options(extra)
+      format.mountCatalog(spark, dir, stores, Seq(dataset)).options(extra)
         .load().where(col("dataset") === dataset),
-      perStore, bounds, timeBounds)
-  }
-
-  /** Catalog variant over a DIR (or glob) of netCDF classic scene
-    * files. */
-  def netcdf3Catalog(spark: SparkSession, dir: String, varName: String,
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty): DataFrame = {
-    val paths = CoordCrop.catalogFiles(dir)
-    val pat = if (ByteStore.isDirectory(dir)) ByteStore.join(dir, "*") else dir
-    val perStore = ByteStore.parMap(paths)(p =>
-      StoreMeta(p, netcdf3Axes(p, varName), CfDecode.netcdf3CfAttrs(p, varName)))
-    catalogOpen(spark, extra =>
-      spark.read.format("graft.sources.NetCDF3DataSource")
-        .option("path", pat).options(extra).load()
-        .where(col("dataset") === varName),
-      perStore, bounds, timeBounds)
-  }
-
-  /** Catalog variant over a DIR (or glob) of netCDF-4/HDF5 scene
-    * files. */
-  def hdf5Catalog(spark: SparkSession, dir: String, dataset: String,
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty): DataFrame = {
-    val paths = CoordCrop.catalogFiles(dir)
-    val pat = if (ByteStore.isDirectory(dir)) ByteStore.join(dir, "*") else dir
-    val perStore = ByteStore.parMap(paths)(p =>
-      StoreMeta(p, hdf5Axes(p, dataset), CfDecode.hdf5CfAttrs(p, dataset)))
-    catalogOpen(spark, extra =>
-      spark.read.format("graft.sources.Hdf5DataSource")
-        .option("path", pat).options(extra).load()
-        .where(col("dataset") === dataset),
-      perStore, bounds, timeBounds)
+      metaWave(format, stores, dataset), bounds, timeBounds)
   }
 
   /** Resolve the caller's bounds against EACH store's own axes (scene
@@ -899,14 +627,15 @@ object GridOpen {
 
   // ---- manifest-planned catalog opens --------------------------------------
 
-  /** Open a zarr scene catalog FROM A PERSISTED MANIFEST
-    * ([[CatalogManifest]]): store-level crop, pack decode and
-    * coordinate decoration all plan from the manifest — ZERO per-store
-    * metadata reads — and the mount receives the surviving member
-    * arrays EXPLICITLY (`arrays` option), skipping the discovery walk
-    * too. A 10^5-scene catalog query costs one manifest parquet read
-    * instead of 10^5 KB-scale store reads; EXCLUDED scenes cost
-    * nothing at all (CatalogManifestSpec pins the I/O counts).
+  /** Open a scene catalog FROM A PERSISTED MANIFEST
+    * ([[CatalogManifest]]), in the format its `format` column names:
+    * store-level crop, pack decode and coordinate decoration all plan
+    * from the manifest — ZERO per-store metadata reads — and the mount
+    * receives the surviving members EXPLICITLY (zarr `arrays`, a file
+    * list), skipping the discovery walk too. A 10^5-scene catalog query
+    * costs one manifest parquet read instead of 10^5 KB-scale store
+    * reads; EXCLUDED scenes cost nothing at all (CatalogManifestSpec
+    * pins the I/O counts).
     *
     * Staleness: the default guard fingerprints the SURVIVORS only. A
     * store the manifest excludes that changed since the build — or a
@@ -915,26 +644,16 @@ object GridOpen {
     * [[CatalogManifest.checkCatalogFresh]] first when a query must
     * detect added/changed/removed stores (O(catalog) LIST/HEAD round
     * trips — the exclusion blind spot is the price of zero-cost
-    * exclusion). Applies to every `*FromManifest` open below. */
-  def zarrCatalogFromManifest(spark: SparkSession, manifestPath: String,
+    * exclusion). Applies to every `*FromManifest` open. */
+  def catalogFromManifest(spark: SparkSession, manifestPath: String,
       dataset: String,
       bounds: Map[String, (Double, Double)] = Map.empty,
       timeBounds: Map[String, (String, String)] = Map.empty,
-      verifyFingerprints: Boolean = true): DataFrame = {
-    val (metas, format, dir, _) =
-      CatalogManifest.planStores(spark, manifestPath, dataset, bounds,
-        timeBounds, verifyFingerprints)
-    require(format == "zarr",
-      s"grid open: manifest $manifestPath holds '$format' stores, not zarr")
-    val arrays = metas.map(m => s"${m.store}\t$dataset").mkString("\n")
-    catalogOpen(spark, extra =>
-      spark.read.format("graft.sources.ZarrDataSource")
-        .option("path", dir).option("arrays", arrays).options(extra).load()
-        .where(col("dataset") === dataset),
-      metas, bounds, timeBounds)
-  }
+      verifyFingerprints: Boolean = true): DataFrame =
+    manifestCatalog(spark, manifestPath, dataset, bounds, timeBounds,
+      verifyFingerprints)._1
 
-  /** [[zarrCatalogFromManifest]] AND the surviving-scene list from ONE
+  /** [[catalogFromManifest]] AND the surviving-scene list from ONE
     * planning pass. Pipelines that need both (triplet sampling, sliding
     * windows, per-scene materialize lists) previously planned the
     * catalog twice — two manifest reads, two probe collects and two
@@ -943,32 +662,50 @@ object GridOpen {
     * same survivor set the data open mounts, so results are identical
     * to the two-call form; the staleness guard runs once (on this call)
     * instead of once on the data open and zero times on the list. */
-  def zarrCatalogWithScenesFromManifest(spark: SparkSession,
+  def catalogWithScenesFromManifest(spark: SparkSession,
       manifestPath: String, dataset: String,
       bounds: Map[String, (Double, Double)] = Map.empty,
       timeBounds: Map[String, (String, String)] = Map.empty,
       verifyFingerprints: Boolean = true): (DataFrame, DataFrame) = {
     import spark.implicits._
+    val (px, scenes) = manifestCatalog(spark, manifestPath, dataset, bounds,
+      timeBounds, verifyFingerprints)
+    (px, spark.createDataset(scenes).toDF("path"))
+  }
+
+  /** [[catalogWithScenesFromManifest]] under its former zarr-only name;
+    * the benchmark calls it. */
+  def zarrCatalogWithScenesFromManifest(spark: SparkSession,
+      manifestPath: String, dataset: String,
+      bounds: Map[String, (Double, Double)] = Map.empty,
+      timeBounds: Map[String, (String, String)] = Map.empty,
+      verifyFingerprints: Boolean = true): (DataFrame, DataFrame) =
+    catalogWithScenesFromManifest(spark, manifestPath, dataset, bounds,
+      timeBounds, verifyFingerprints)
+
+  /** The manifest-planned catalog open and its surviving stores,
+    * store-sorted: `fps` names the REAL envelope survivors, while the
+    * metas may carry the schema-fallback store when everything pruned
+    * (not a survivor). */
+  private def manifestCatalog(spark: SparkSession, manifestPath: String,
+      dataset: String,
+      bounds: Map[String, (Double, Double)],
+      timeBounds: Map[String, (String, String)],
+      verifyFingerprints: Boolean): (DataFrame, Seq[String]) = {
     val (metas, format, dir, fps) =
       CatalogManifest.planStores(spark, manifestPath, dataset, bounds,
         timeBounds, verifyFingerprints)
-    require(format == "zarr",
-      s"grid open: manifest $manifestPath holds '$format' stores, not zarr")
-    val arrays = metas.map(m => s"${m.store}\t$dataset").mkString("\n")
     val px = catalogOpen(spark, extra =>
-      spark.read.format("graft.sources.ZarrDataSource")
-        .option("path", dir).option("arrays", arrays).options(extra).load()
-        .where(col("dataset") === dataset),
+      format.mountMembers(spark, dir, metas.map(_.store), Seq(dataset))
+        .options(extra).load().where(col("dataset") === dataset),
       metas, bounds, timeBounds)
     val surviving = fps.map(_._1).distinct.toSet
-    val scenes =
-      spark.createDataset(metas.map(_.store).filter(surviving)).toDF("path")
-    (px, scenes)
+    (px, metas.map(_.store).filter(surviving))
   }
 
   /** The SURVIVING scene stores of a manifest-planned catalog crop —
-    * the metadata-plane scene list, one row (`path`) per store the
-    * crop would open, with ZERO per-store storage reads. Pipelines
+    * the metadata-plane scene list, one row (`path`) per store or file
+    * the crop would open, with ZERO per-store storage reads. Pipelines
     * that enumerate per-scene work (sliding-window specs, triplet
     * sampling, per-scene materialize lists) should start HERE rather
     * than scanning pixels and `distinct`-ing the scene column: at
@@ -977,26 +714,14 @@ object GridOpen {
     * own planning; empty when every store prunes.
     * `verifyFingerprints` defaults OFF because the paired data open
     * runs the staleness guard itself — enable it when this list is
-    * used standalone. */
-  def zarrCatalogScenesFromManifest(spark: SparkSession, manifestPath: String,
-      dataset: String,
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty,
-      verifyFingerprints: Boolean = false): DataFrame =
-    catalogScenesFromManifest(spark, manifestPath, dataset, bounds,
-      timeBounds, verifyFingerprints, expectFormat = Some("zarr"))
-
-  /** Format-agnostic [[zarrCatalogScenesFromManifest]]: the scene list
-    * is pure manifest metadata, so one entry point serves zarr,
-    * netCDF-3, and HDF5 catalogs alike (`path` rows name stores or
-    * files per the manifest's own format). `expectFormat` asserts the
-    * manifest holds the format the caller's downstream open expects. */
+    * used standalone. `expectFormat` asserts the manifest holds the
+    * format the caller's downstream open expects. */
   def catalogScenesFromManifest(spark: SparkSession, manifestPath: String,
       dataset: String,
       bounds: Map[String, (Double, Double)] = Map.empty,
       timeBounds: Map[String, (String, String)] = Map.empty,
       verifyFingerprints: Boolean = false,
-      expectFormat: Option[String] = None): DataFrame = {
+      expectFormat: Option[GridFormat] = None): DataFrame = {
     import spark.implicits._
     val (metas, format, _, fps) =
       CatalogManifest.planStores(spark, manifestPath, dataset, bounds,
@@ -1009,99 +734,22 @@ object GridOpen {
     spark.createDataset(metas.map(_.store).filter(surviving)).toDF("path")
   }
 
-  /** Manifest-planned catalog open over netCDF classic scene files:
-    * the mount receives the surviving files as an explicit list (no
-    * dir listing), headers are read for survivors only. */
-  def netcdf3CatalogFromManifest(spark: SparkSession, manifestPath: String,
-      varName: String,
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty,
-      verifyFingerprints: Boolean = true): DataFrame = {
-    val (metas, format, _, _) =
-      CatalogManifest.planStores(spark, manifestPath, varName, bounds,
-        timeBounds, verifyFingerprints)
-    require(format == "netcdf3",
-      s"grid open: manifest $manifestPath holds '$format' stores, not netcdf3")
-    catalogOpen(spark, extra =>
-      spark.read.format("graft.sources.NetCDF3DataSource")
-        .option("path", metas.map(_.store).mkString("\n") + "\n")
-        .options(extra).load().where(col("dataset") === varName),
-      metas, bounds, timeBounds)
-  }
-
-  /** Manifest-planned catalog open over netCDF-4/HDF5 scene files. */
-  def hdf5CatalogFromManifest(spark: SparkSession, manifestPath: String,
-      dataset: String,
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty,
-      verifyFingerprints: Boolean = true): DataFrame = {
-    val (metas, format, _, _) =
-      CatalogManifest.planStores(spark, manifestPath, dataset, bounds,
-        timeBounds, verifyFingerprints)
-    require(format == "hdf5",
-      s"grid open: manifest $manifestPath holds '$format' stores, not hdf5")
-    catalogOpen(spark, extra =>
-      spark.read.format("graft.sources.Hdf5DataSource")
-        .option("path", metas.map(_.store).mkString("\n") + "\n")
-        .options(extra).load().where(col("dataset") === dataset),
-      metas, bounds, timeBounds)
-  }
-
   /** Multi-variable CATALOG open FROM A PERSISTED MANIFEST — the
     * aux-fields-over-all-scenes flow with ZERO per-store metadata
     * reads: membership (stores holding ALL variables), the store-level
     * crop, shared-grid verification, per-variable pack attrs, and the
     * coordinate decode all come from the manifest; the mount receives
-    * every surviving (store, variable) pair explicitly. */
-  def zarrVarsCatalogFromManifest(spark: SparkSession, manifestPath: String,
+    * every surviving member explicitly (no dir listing, no membership
+    * header reads). */
+  def varsCatalogFromManifest(spark: SparkSession, manifestPath: String,
       variables: Seq[String],
       bounds: Map[String, (Double, Double)] = Map.empty,
       timeBounds: Map[String, (String, String)] = Map.empty,
       verifyFingerprints: Boolean = true): DataFrame = {
     val (metas, format, dir, _) = CatalogManifest.planVarsStores(spark,
       manifestPath, variables, bounds, timeBounds, verifyFingerprints)
-    require(format == "zarr",
-      s"grid open: manifest $manifestPath holds '$format' stores, not zarr")
-    val arrays = metas.flatMap(m => variables.map(v => s"${m._1}\t$v"))
-      .mkString("\n")
     varsCatalogFrom(spark, metas, variables, extra =>
-      spark.read.format("graft.sources.ZarrDataSource")
-        .option("path", dir).option("arrays", arrays).options(extra).load(),
-      bounds, timeBounds)
-  }
-
-  /** Multi-variable manifest catalog over netCDF classic scene files
-    * (explicit file list — no dir listing, no membership header
-    * reads). */
-  def netcdf3VarsCatalogFromManifest(spark: SparkSession, manifestPath: String,
-      variables: Seq[String],
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty,
-      verifyFingerprints: Boolean = true): DataFrame = {
-    val (metas, format, _, _) = CatalogManifest.planVarsStores(spark,
-      manifestPath, variables, bounds, timeBounds, verifyFingerprints)
-    require(format == "netcdf3",
-      s"grid open: manifest $manifestPath holds '$format' stores, not netcdf3")
-    varsCatalogFrom(spark, metas, variables, extra =>
-      spark.read.format("graft.sources.NetCDF3DataSource")
-        .option("path", metas.map(_._1).mkString("\n") + "\n")
-        .options(extra).load(),
-      bounds, timeBounds)
-  }
-
-  /** Multi-variable manifest catalog over netCDF-4/HDF5 scene files. */
-  def hdf5VarsCatalogFromManifest(spark: SparkSession, manifestPath: String,
-      variables: Seq[String],
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty,
-      verifyFingerprints: Boolean = true): DataFrame = {
-    val (metas, format, _, _) = CatalogManifest.planVarsStores(spark,
-      manifestPath, variables, bounds, timeBounds, verifyFingerprints)
-    require(format == "hdf5",
-      s"grid open: manifest $manifestPath holds '$format' stores, not hdf5")
-    varsCatalogFrom(spark, metas, variables, extra =>
-      spark.read.format("graft.sources.Hdf5DataSource")
-        .option("path", metas.map(_._1).mkString("\n") + "\n")
+      format.mountMembers(spark, dir, metas.map(_._1), variables)
         .options(extra).load(),
       bounds, timeBounds)
   }
@@ -1169,7 +817,8 @@ object GridOpen {
     * flow (convml-data pipeline/embeddings/aux_fields/data.py:33-295
     * derives per-scene aux variables across the whole dataset): every
     * variable of every scene store in ONE frame, store-pruned by the
-    * bounds, pivoted wide, coordinates decoded per store.
+    * bounds, pivoted wide, coordinates decoded per store. Stores
+    * lacking any requested variable are not members.
     *
     * 100 TB shape: one metadata wave over stores x variables, ONE scan
     * (`dataset IN` + the per-store crop disjunction pushed, so
@@ -1180,99 +829,28 @@ object GridOpen {
     * attrs fold as the CASE when uniform across stores and broadcast
     * per (path, dataset) when they differ; variables must share each
     * store's grid; axis names/time-kinds must match catalog-wide. */
-  def zarrVarsCatalog(spark: SparkSession, dir: String,
+  def varsCatalog(spark: SparkSession, format: GridFormat, dir: String,
       variables: Seq[String],
       bounds: Map[String, (Double, Double)] = Map.empty,
       timeBounds: Map[String, (String, String)] = Map.empty): DataFrame = {
     require(variables.nonEmpty, "grid open: no variables requested")
-    val stores = ZarrDataSource.discover(dir)
-      .collect { case (s, a) if variables.contains(a) => (s, a) }
-      .groupBy(_._1).collect {
-        case (s, as) if variables.forall(v => as.exists(_._2 == v)) => s
-      }.toSeq.sorted
-    require(stores.nonEmpty,
-      s"grid open: no store under $dir holds all of ${variables.mkString(",")}")
-    varsCatalog(spark, stores, variables,
-      (st, v) => zarrAxes(st, v), (st, v) => CfDecode.zarrCfAttrs(st, v),
-      extra => spark.read.format("graft.sources.ZarrDataSource")
-        .option("path", dir)
-        .option("arrays", stores.flatMap(st =>
-          variables.map(v => st + "\t" + v)).mkString("\n"))
-        .options(extra)
-        .load(),
-      bounds, timeBounds)
-  }
-
-  /** Multi-variable catalog over a DIR (or glob) of netCDF classic
-    * scene files. Files lacking any requested variable are not
-    * members. */
-  def netcdf3VarsCatalog(spark: SparkSession, dir: String,
-      variables: Seq[String],
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty): DataFrame = {
-    require(variables.nonEmpty, "grid open: no variables requested")
-    val all = CoordCrop.catalogFiles(dir)
-    // membership is one header read per file — a latency round trip on
-    // an object store, so the scan must ride the parMap wave, not N x RTT
-    val stores = ByteStore.parMap(all) { p =>
-      val names = NetCDF3ChunkIngest.headerOf(p).vars.map(_.name).toSet
-      (p, variables.forall(names))
-    }.collect { case (p, true) => p }
-    require(stores.nonEmpty,
-      s"grid open: no file under $dir holds all of ${variables.mkString(",")}")
-    // the mount plans over the same normalized pattern the membership
-    // filter resolved, and the disjunction's paths prune non-members
-    val pat = if (ByteStore.isDirectory(dir)) ByteStore.join(dir, "*") else dir
-    varsCatalog(spark, stores, variables,
-      (p, v) => netcdf3Axes(p, v), (p, v) => CfDecode.netcdf3CfAttrs(p, v),
-      extra => spark.read.format("graft.sources.NetCDF3DataSource")
-        .option("path", pat).options(extra).load(),
-      bounds, timeBounds)
-  }
-
-  /** Multi-variable catalog over a DIR (or glob) of netCDF-4/HDF5
-    * scene files. */
-  def hdf5VarsCatalog(spark: SparkSession, dir: String,
-      variables: Seq[String],
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty): DataFrame = {
-    require(variables.nonEmpty, "grid open: no variables requested")
-    val all = CoordCrop.catalogFiles(dir)
-    // same wave discipline as the netCDF-3 membership scan above
-    val stores = ByteStore.parMap(all) { p =>
-      val in = new PagedFileInput(p)
-      val names = try HDF5.dimensionNames(in).keySet finally in.close()
-      (p, variables.forall(names))
-    }.collect { case (p, true) => p }
-    require(stores.nonEmpty,
-      s"grid open: no file under $dir holds all of ${variables.mkString(",")}")
-    val pat = if (ByteStore.isDirectory(dir)) ByteStore.join(dir, "*") else dir
-    varsCatalog(spark, stores, variables,
-      (p, v) => hdf5Axes(p, v), (p, v) => CfDecode.hdf5CfAttrs(p, v),
-      extra => spark.read.format("graft.sources.Hdf5DataSource")
-        .option("path", pat).options(extra).load(),
-      bounds, timeBounds)
-  }
-
-  private def varsCatalog(spark: SparkSession, stores: Seq[String],
-      variables: Seq[String],
-      axesOf: (String, String) => Seq[Axis],
-      attrsOf: (String, String) => CfDecode.CfAttrs,
-      mkMount: Map[String, String] => DataFrame,
-      bounds: Map[String, (Double, Double)],
-      timeBounds: Map[String, (String, String)]): DataFrame = {
+    val stores = format.holdingAll(dir, variables)
     // one wave: per store, every variable's axes + attrs
     val perStore = ByteStore.parMap(stores) { st =>
-      val axesPerVar = variables.map(v => axesOf(st, v))
+      val axesPerVar = variables.map(v => axesOf(format, st, v))
       axesPerVar.tail.zip(variables.tail).foreach { case (ax, v) =>
         if (ax.map(_.name) != axesPerVar.head.map(_.name) ||
           !ax.zip(axesPerVar.head).forall { case (a, b) =>
             coordsEq(a.coords, b.coords) })
           fail(s"variable '$v' in $st is not on the store's shared grid")
       }
-      (st, axesPerVar.head, variables.map(v => attrsOf(st, v)))
+      (st, axesPerVar.head, variables.map(v => format.cfAttrs(st, v)))
     }
-    varsCatalogFrom(spark, perStore, variables, mkMount, bounds, timeBounds)
+    // the mount plans over the same listing the membership resolved,
+    // and the crop's paths prune non-members
+    varsCatalogFrom(spark, perStore, variables, extra =>
+      format.mountCatalog(spark, dir, stores, variables).options(extra).load(),
+      bounds, timeBounds)
   }
 
   /** The post-wave multi-variable catalog body, shared by the live

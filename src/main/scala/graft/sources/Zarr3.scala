@@ -525,32 +525,14 @@ object Zarr3 {
     val meta = Meta(shape, chunks, "float64", bigEndian = false,
       compress = gzipLevel.map(_ => "gzip"), fill = Double.NaN,
       keySep = "/", v2Keys = false)
-    val nChunks = shape.zip(chunks).map { case (s, c) => (s + c - 1) / c }
-    val strides = shape.scanRight(1)(_ * _).tail
-    val cStrides = chunks.scanRight(1)(_ * _).tail
-    def emit(ci: List[Int], dim: Int): Unit =
-      if (dim < shape.size) (0 until nChunks(dim)).foreach(i => emit(ci :+ i, dim + 1))
-      else {
-        val chunk = Array.fill(chunks.product)(Double.NaN)
-        var k = 0
-        while (k < chunk.length) {
-          var g = 0L; var inBounds = true; var dd = 0
-          while (dd < shape.size && inBounds) {
-            val global = ci(dd) * chunks(dd) + (k / cStrides(dd)) % chunks(dd)
-            if (global >= shape(dd)) inBounds = false else g += global.toLong * strides(dd)
-            dd += 1
-          }
-          if (inBounds) chunk(k) = values(g.toInt)
-          k += 1
-        }
-        val bytes = innerChunks match {
-          case None => encodeValues(chunk, gzipLevel)
-          case Some(ic) => encodeShard(chunk, chunks, ic, gzipLevel)
-        }
-        val f = chunkKey(meta, ci).split('/').foldLeft(d)(ByteStore.join)
-        ByteStore.writeAllBytes(f, bytes) // create() mkdirs parents
+    ZarrSink.foreachChunk(shape, chunks, values) { (ci, chunk) =>
+      val bytes = innerChunks match {
+        case None => encodeValues(chunk, gzipLevel)
+        case Some(ic) => encodeShard(chunk, chunks, ic, gzipLevel)
       }
-    emit(Nil, 0)
+      val f = chunkKey(meta, ci.toList).split('/').foldLeft(d)(ByteStore.join)
+      ByteStore.writeAllBytes(f, bytes) // create() mkdirs parents
+    }
   }
 
   /** One v3 store per scene — same input/output contract as

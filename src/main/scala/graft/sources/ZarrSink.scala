@@ -74,6 +74,19 @@ object ZarrSink {
       jsonArray(shape, chunks, "<f8", zlibLevel, blosc, bloscCodec, bloscBitShuffle))
     ByteStore.writeString(ByteStore.join(d, ".zattrs"),
       s"""{"_ARRAY_DIMENSIONS": [${dims.map("\"" + _ + "\"").mkString(", ")}]}""")
+    foreachChunk(shape, chunks, values) { (ci, chunk) =>
+      writeChunk(ByteStore.join(d, ci.mkString(".")), chunk, zlibLevel,
+        blosc, bloscCodec, bloscBitShuffle)
+    }
+  }
+
+  /** The chunk fill both zarr writers share: walks the chunk grid of a
+    * C-order `values` array of `shape` in C order and hands each chunk
+    * index with its full `chunks`-shaped block, the out-of-bounds edge
+    * padded with NaN (the writers' fill value). The index array is
+    * reused across calls. */
+  private[sources] def foreachChunk(shape: Seq[Int], chunks: Seq[Int],
+      values: Array[Double])(write: (Array[Int], Array[Double]) => Unit): Unit = {
     // arrays, not Lists: the per-element fill below indexes them O(1)
     val rank = shape.size
     val shp = shape.toArray
@@ -97,8 +110,7 @@ object ZarrSink {
           if (inBounds) chunk(k) = values(g.toInt)
           k += 1
         }
-        writeChunk(ByteStore.join(d, ci.mkString(".")), chunk, zlibLevel,
-          blosc, bloscCodec, bloscBitShuffle)
+        write(ci, chunk)
       }
     emit(0)
   }

@@ -83,7 +83,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val mismatches = emb.select(
       Similarity.dot(col("embedding"), col("embedding")).as("native"),
-      Similarity.dotHof(col("embedding"), col("embedding")).as("hof"))
+      HofForms.dotHof(col("embedding"), col("embedding")).as("hof"))
       .where(col("native") =!= col("hof")).count()
     assert(mismatches == 0, s"$mismatches rows diverge between native and HOF dot")
   }
@@ -96,7 +96,7 @@ class DedupSimilaritySpec extends SparkSpec {
         x => x.cast("double") * 1.7 - 0.3))
     val mismatches = emb.select(
       Similarity.dot(col("embedding"), col("cd")).as("native"),
-      Similarity.dotHof(col("embedding"), col("cd")).as("hof"))
+      HofForms.dotHof(col("embedding"), col("cd")).as("hof"))
       .where(col("native") =!= col("hof")).count()
     assert(mismatches == 0, s"$mismatches rows diverge on float x double dot")
   }
@@ -117,7 +117,7 @@ class DedupSimilaritySpec extends SparkSpec {
       round(Similarity.dot(col("embedding"), centArr)
         / (col("nv") * element_at(typedlit(centNorms), col("cell") + 1)), 6)
         .as("native"),
-      Similarity.centSimHof(col("embedding"), centArr, col("nv")).as("hof"))
+      HofForms.centSimHof(col("embedding"), centArr, col("nv")).as("hof"))
       .where(col("native") =!= col("hof")).count()
     assert(mismatches == 0, s"$mismatches rows diverge on cent_sim")
   }

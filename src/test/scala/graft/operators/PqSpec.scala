@@ -104,7 +104,7 @@ class PqSpec extends SparkSpec {
     val df = rows.toDF("vec_id", "embedding")
     val both = df.select(col("vec_id"),
         Pq.encode(col("embedding")).as("native"),
-        Pq.encodeHof(col("embedding")).as("hof"))
+        HofForms.pqEncodeHof(col("embedding")).as("hof"))
       .as[(Long, Seq[Int], Seq[Int])].collect()
     both.foreach { case (id, n, h) => assert(n == h, s"vec $id: $n != $h") }
   }
@@ -120,7 +120,7 @@ class PqSpec extends SparkSpec {
     val b = coded.select(col("vec_id").as("nid"), col("codes"))
     val diff = a.crossJoin(b)
       .select(Pq.adcDist(col("lut"), col("codes")).as("native"),
-        Pq.adcDistHof(col("lut"), col("codes")).as("hof"))
+        HofForms.pqAdcDistHof(col("lut"), col("codes")).as("hof"))
       .where(col("native") =!= col("hof") ||
         col("native").isNull =!= col("hof").isNull)
     assert(diff.isEmpty, "native and HOF adcDist diverged")

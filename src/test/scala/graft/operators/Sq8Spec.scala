@@ -110,7 +110,7 @@ class Sq8Spec extends SparkSpec {
     val other = paired.select(col("vec_id").as("pair"), col("codes").as("ocodes"))
     val joined = paired.join(other, "pair")
     val got = joined.select(col("vec_id"), Sq8.adcDist(col("qv"), col("ocodes"), m).as("n"),
-      Sq8.adcDistHof(col("qv"), col("ocodes"), m).as("h"))
+      HofForms.sq8AdcDistHof(col("qv"), col("ocodes"), m).as("h"))
       .as[(Long, Double, Double)].collect()
     assert(got.length === 60)
     got.foreach { case (id, n, h) =>

@@ -185,7 +185,7 @@ class VectorKernelSpec extends SparkSpec {
     vec(r, 1).length == vec(r, 2).length && nullFree(r, 1) && nullFree(r, 2)
 
   test("FloatDotProduct: codegen == interpreted == Similarity.dotHof") {
-    check(pairGen, Similarity.dot(v(0), v(1)), Similarity.dotHof(v(0), v(1)),
+    check(pairGen, Similarity.dot(v(0), v(1)), HofForms.dotHof(v(0), v(1)),
       samePairContract)
   }
 
@@ -230,7 +230,7 @@ class VectorKernelSpec extends SparkSpec {
       t <- floating
       b <- batch(Seq(t), lengthNear(dim)
         .flatMap(vector(_, Gen.frequency(2 -> ordinary, 3 -> edge))).map(x => Seq(as(t, x))))
-    } yield (b, Sq8.encode(v(0), m), Sq8.encodeHof(v(0), m),
+    } yield (b, Sq8.encode(v(0), m), HofForms.sq8EncodeHof(v(0), m),
       (r: Row) => vec(r, 1).length == dim && nullFree(r, 1)))
   }
 
@@ -247,7 +247,7 @@ class VectorKernelSpec extends SparkSpec {
         qv <- lengthNear(dim).flatMap(vector(_, ordinary))
         codes <- lengthNear(dim).flatMap(Gen.listOfN(_, code))
       } yield Seq(qv, codes))
-    } yield (b, Sq8.adcDist(v(0), v(1), m), Sq8.adcDistHof(v(0), v(1), m),
+    } yield (b, Sq8.adcDist(v(0), v(1), m), HofForms.sq8AdcDistHof(v(0), v(1), m),
       (r: Row) => vec(r, 1).length == dim && vec(r, 2).length == dim &&
         nullFree(r, 1) && nullFree(r, 2)))
   }
@@ -259,7 +259,7 @@ class VectorKernelSpec extends SparkSpec {
           1 -> Gen.const(Pq.Dim - 1), 1 -> Gen.const(Pq.Dim + 1), 1 -> Gen.const(Pq.SubDim))
         .flatMap(vector(_, ordinary)).map(x => Seq(as(t, x))))
     } yield b
-    check(gen, Pq.encode(v(0)), Pq.encodeHof(v(0)),
+    check(gen, Pq.encode(v(0)), HofForms.pqEncodeHof(v(0)),
       r => vec(r, 1).length == Pq.Dim && nullFree(r, 1))
   }
 
@@ -272,7 +272,7 @@ class VectorKernelSpec extends SparkSpec {
       lut <- lengthNear(Pq.M * Pq.K).flatMap(vector(_, ordinary))
       codes <- lengthNear(Pq.M).flatMap(Gen.listOfN(_, code))
     } yield Seq(lut, codes))
-    check(gen, Pq.adcDist(v(0), v(1)), Pq.adcDistHof(v(0), v(1)), r =>
+    check(gen, Pq.adcDist(v(0), v(1)), HofForms.pqAdcDistHof(v(0), v(1)), r =>
       vec(r, 1).length == Pq.M * Pq.K && vec(r, 2).length == Pq.M &&
         nullFree(r, 1) && nullFree(r, 2) &&
         vec(r, 2).forall { case c: Int => c >= 0 && c < Pq.K; case _ => false })

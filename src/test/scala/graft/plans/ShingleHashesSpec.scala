@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.operators.Dedup
+import graft.operators.{Dedup, HofForms}
 import org.apache.spark.sql.functions._
 
 class ShingleHashesSpec extends SparkSpec {
@@ -11,7 +11,7 @@ class ShingleHashesSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001").select("text")
     val diff = docs.select(
       Dedup.shingleHashes(col("text")).as("fast"),
-      Dedup.shingleHashesHof(col("text")).as("ref"))
+      HofForms.shingleHashesHof(col("text")).as("ref"))
       .where(col("fast") =!= col("ref")).count()
     assert(diff == 0)
   }
@@ -21,7 +21,7 @@ class ShingleHashesSpec extends SparkSpec {
     val df = cases.toDF("s")
     val rows = df.select(col("s"),
       Dedup.shingleHashes(col("s")).as("fast"),
-      Dedup.shingleHashesHof(col("s")).as("ref")).collect()
+      HofForms.shingleHashesHof(col("s")).as("ref")).collect()
     rows.foreach { r =>
       assert(r.getSeq[Long](1) == r.getSeq[Long](2), s"mismatch for '${r.getString(0)}'")
     }
@@ -37,7 +37,7 @@ class ShingleHashesSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001").select("text")
     val xs = Dedup.shingleHashes(col("text"))
     val fast = Dedup.minhashCols(xs, 8)
-    val ref = Dedup.minhashColsHof(xs, 8)
+    val ref = HofForms.minhashColsHof(xs, 8)
     val diff = docs.select(
       (fast.map { case (n, c) => c.as(n + "_f") } ++
         ref.map { case (n, c) => c.as(n + "_r") }): _*)
@@ -62,13 +62,13 @@ class ShingleHashesSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001").select("text")
     val diff = docs.select(
       Dedup.simhash16(col("text")).as("fast"),
-      Dedup.simhash16Hof(col("text")).as("ref"))
+      HofForms.simhash16Hof(col("text")).as("ref"))
       .where(col("fast") =!= col("ref")).count()
     assert(diff == 0)
     // empty text: split yields [""], so the "majority" is the single
     // empty-token hash (seed 7) — the HOF form agrees
     val z = Seq("").toDF("text")
-      .select(Dedup.simhash16(col("text")).as("f"), Dedup.simhash16Hof(col("text")).as("r"))
+      .select(Dedup.simhash16(col("text")).as("f"), HofForms.simhash16Hof(col("text")).as("r"))
       .collect().head
     assert(z.getLong(0) == z.getLong(1) && z.getLong(0) == 7L)
   }

@@ -1,10 +1,10 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.operators.Sq8
+import graft.operators.{HofForms, Sq8}
 import org.apache.spark.sql.functions._
 
-/** Native Sq8Encode vs the HOF reference form (Sq8.encodeHof): the codes
+/** Native Sq8Encode vs the HOF reference form (HofForms.sq8EncodeHof): the codes
   * must be bit-identical on every vector the operator can produce,
   * including the degenerate (mx == mn) dimension, clamp edges (values
   * outside the fitted bounds) and non-finite elements, on BOTH the
@@ -36,7 +36,7 @@ class Sq8EncodeSpec extends SparkSpec {
     val df = rows.toDF("vec_id", "embedding")
     val diff = df.select(
       Sq8.encode(col("embedding"), model).as("fast"),
-      Sq8.encodeHof(col("embedding"), model).as("ref"))
+      HofForms.sq8EncodeHof(col("embedding"), model).as("ref"))
       .where(not(col("fast") <=> col("ref"))).count()
     assert(diff == 0, "native Sq8Encode diverged from the HOF form")
   }
@@ -55,7 +55,7 @@ class Sq8EncodeSpec extends SparkSpec {
         transform(col("embedding"), x => x.cast("double")).as("embedding"))
     val diff = df.select(
       Sq8.encode(col("embedding"), model).as("fast"),
-      Sq8.encodeHof(col("embedding"), model).as("ref"))
+      HofForms.sq8EncodeHof(col("embedding"), model).as("ref"))
       .where(not(col("fast") <=> col("ref"))).count()
     assert(diff == 0)
   }

@@ -2,6 +2,7 @@ package graft.plans
 
 import graft.SparkSpec
 import graft.functions.TextAnalysis
+import graft.operators.HofForms
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
@@ -13,7 +14,7 @@ class TokenNgramHashesSpec extends SparkSpec {
     for (n <- Seq(3, 5)) {
       val diff = docs.select(
         TextAnalysis.tokenNgramHashesAll(col("text"), n).as("fast"),
-        TextAnalysis.tokenNgramHashesAllHof(col("text"), n).as("ref"))
+        HofForms.tokenNgramHashesAllHof(col("text"), n).as("ref"))
         .where(col("fast") =!= col("ref")).count()
       assert(diff == 0, s"n=$n")
     }

@@ -5,15 +5,17 @@ import java.nio.file.{Files, Paths}
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Catalog-level value crop: a DIR of per-scene stores (the
-  * reference's one-store-per-scene layout) filtered by coordinate
-  * values / time instants. The per-store decision (read each store's
+/** Catalog-level value crop through [[GridOpen.catalog]]: a DIR of
+  * per-scene stores (the reference's one-store-per-scene layout)
+  * filtered by coordinate values / time instants. The per-store decision (read each store's
   * KB-scale coordinate metadata in one wave, exclude stores that
   * provably miss, push each survivor's own index ranges) must land as
   * ONE pushed disjunction that prunes at store, array, and chunk
   * granularity — verified here by row values (per-store grids differ),
   * plan partition counts, the pushed-filter string, and EXECUTED
-  * I/O counts (an excluded store's data chunks are never opened). */
+  * I/O counts (an excluded store's data chunks are never opened).
+  * Rows compare on (path, idx): idx is the element's C-order index in
+  * its array, so on a (9, 6) grid (y, x) is idx y * 6 + x. */
 class CatalogCropSpec extends SparkSpec {
 
   private def recording[T](f: => T): (T, ByteStore.IoRecorder) = {
@@ -37,7 +39,7 @@ class CatalogCropSpec extends SparkSpec {
   test("zarr catalog bbox: non-intersecting stores' data is NEVER opened") {
     val dir = Files.createTempDirectory("graft-catcrop-z").toString
     writeSceneCatalog(dir)
-    val df = CoordCrop.zarrCatalog(spark, dir, "lwp",
+    val df = GridOpen.catalog(spark, GridFormat.Zarr, dir, "lwp",
       Map("y" -> (1200.0, 1500.0), "x" -> (100.0, 300.0)))
     // a SINGLE surviving store folds to plain conjuncts (Catalyst
     // simplifies the one-branch disjunction) — the path equality and
@@ -46,21 +48,21 @@ class CatalogCropSpec extends SparkSpec {
     assert(plan.contains("EqualTo(path") && plan.contains("GreaterThanOrEqual(d0,2)"),
       s"single-survivor crop did not push:\n$plan")
     val (rows, r) = recording {
-      df.select("path", "d0", "d1", "value").collect()
+      df.select("path", "idx", "value").collect()
     }
     // only s1 (y = 1000..1800) intersects [1200, 1500]: y idx 2..5, x idx 1..3
     assert(rows.nonEmpty && rows.forall(_.getString(0).endsWith("s1.zarr")))
-    assert(rows.map(x => (x.getLong(1), x.getLong(2))).toSet ==
-      (for (y <- 2L to 5L; x <- 1L to 3L) yield (y, x)).toSet)
+    assert(rows.map(_.getLong(1)).toSet ==
+      (for (y <- 2L to 5L; x <- 1L to 3L) yield y * 6 + x).toSet)
     // residual parity: values equal a brute-force value filter
     val brute = spark.read.format("graft.sources.ZarrDataSource")
       .option("path", s"$dir/s1.zarr").load()
       .where(col("dataset") === "lwp" &&
         (col("d0") * 100.0 + 1000.0).between(1200.0, 1500.0) &&
         (col("d1") * 100.0).between(100.0, 300.0))
-      .select("d0", "d1", "value").collect()
-      .map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))).sorted
-    assert(rows.map(x => (x.getLong(1), x.getLong(2), x.getDouble(3)))
+      .select("idx", "value").collect()
+      .map(x => (x.getLong(0), x.getDouble(1))).sorted
+    assert(rows.map(x => (x.getLong(1), x.getDouble(2)))
       .sorted.sameElements(brute))
     // EXECUTED I/O: excluded stores' chunk data never opened (their
     // metadata was read once, in the planning wave)
@@ -73,7 +75,7 @@ class CatalogCropSpec extends SparkSpec {
     // surviving store: y idx 2..5 over chunkRows=3 -> chunk rows 0 and 1
     // both plan (idx 2 in chunk 0; 3..5 in chunk 1) — but a tighter crop
     // y in [1300, 1500] (idx 3..5) plans chunk row 1 only
-    val tight = CoordCrop.zarrCatalog(spark, dir, "lwp",
+    val tight = GridOpen.catalog(spark, GridFormat.Zarr, dir, "lwp",
       Map("y" -> (1300.0, 1500.0), "x" -> (100.0, 300.0)))
     val (tRows, tr) = recording { tight.select("value").collect() }
     assert(tRows.length == 9)
@@ -85,7 +87,7 @@ class CatalogCropSpec extends SparkSpec {
   test("zarr catalog: an all-miss crop is provably empty (no store plans)") {
     val dir = Files.createTempDirectory("graft-catcrop-z0").toString
     writeSceneCatalog(dir)
-    val df = CoordCrop.zarrCatalog(spark, dir, "lwp",
+    val df = GridOpen.catalog(spark, GridFormat.Zarr, dir, "lwp",
       Map("y" -> (9000.0, 9900.0)))
     assert(df.count() == 0)
   }
@@ -130,7 +132,7 @@ class CatalogCropSpec extends SparkSpec {
     writeTimeStore(dir, "sC", "hours since 2021-01-03",
       Array(0.0, 6.0, 12.0, 18.0), xs, 300.0)
     // [Jan 1 12:00, Jan 2 06:00]: sA rows 2-3, sB rows 0-1, sC nothing
-    val df = CoordCrop.zarrCatalog(spark, dir, "lwp", Map.empty,
+    val df = GridOpen.catalog(spark, GridFormat.Zarr, dir, "lwp", Map.empty,
       timeBounds = Map("time" ->
         ("2021-01-01 12:00:00", "2021-01-02 06:00:00")))
     // TWO survivors with DIFFERENT index ranges: the pushed filter is
@@ -139,11 +141,13 @@ class CatalogCropSpec extends SparkSpec {
     assert(plan.contains("pushed=") && plan.contains("Or("),
       s"per-store disjunction did not push:\n$plan")
     val (rows, r) = recording {
-      df.select("path", "d0").collect()
+      df.select("path", "idx").collect()
         .map(x => (x.getString(0).split('/').last, x.getLong(1)))
     }
-    assert(rows.toSet == Set(("sA.zarr", 2L), ("sA.zarr", 3L),
-      ("sB.zarr", 0L), ("sB.zarr", 1L)))
+    // (time, x) on a (4, 3) grid: idx = time * 3 + x
+    assert(rows.toSet == Set(2L, 3L).flatMap(t => (0L to 2L).map(x =>
+      ("sA.zarr", t * 3 + x))) ++ Set(0L, 1L).flatMap(t => (0L to 2L).map(x =>
+      ("sB.zarr", t * 3 + x))))
     assert(rows.length == 12) // 4 surviving rows x 3 x-columns
     val sCChunk = new java.io.File(s"$dir/sC.zarr/lwp/0.0").getAbsolutePath
     assert(r.opens(sCChunk) == 0, "time-excluded store had data opened")
@@ -164,14 +168,15 @@ class CatalogCropSpec extends SparkSpec {
       shardInnerRows = Some(1)).count()
     val r = ByteStore.startRecording()
     val rows = try {
-      CoordCrop.zarrCatalog(spark, dir, "lwp",
+      GridOpen.catalog(spark, GridFormat.Zarr, dir, "lwp",
           Map("y" -> (1100.0, 1400.0), "x" -> (100.0, 200.0)))
-        .select("path", "d0", "d1", "value").collect()
+        .select("path", "idx", "value").collect()
     } finally ByteStore.stopRecording()
-    // only v1 (y = 1000..1700) intersects: y idx 1..4, x idx 1..2
+    // only v1 (y = 1000..1700) intersects: y idx 1..4, x idx 1..2 on
+    // an (8, 4) grid
     assert(rows.nonEmpty && rows.forall(_.getString(0).endsWith("v1.zarr")))
-    assert(rows.map(x => (x.getLong(1), x.getLong(2))).toSet ==
-      (for (y <- 1L to 4L; x <- 1L to 2L) yield (y, x)).toSet)
+    assert(rows.map(_.getLong(1)).toSet ==
+      (for (y <- 1L to 4L; x <- 1L to 2L) yield y * 4 + x).toSet)
     // excluded stores' shard files: never opened, not even index tails
     for (s <- Seq("v0", "v2")) {
       val shards = Option(new java.io.File(s"$dir/$s.zarr/lwp/c").listFiles())
@@ -212,7 +217,7 @@ class CatalogCropSpec extends SparkSpec {
     }
     // [2000-02-29, 2000-03-02] in 360_day: cA (epoch 02-28) keeps
     // t 1..3 (02-29, 02-30, 03-01); cB (epoch 02-30) keeps t 0..2
-    val df = GridOpen.zarrCatalog(spark, dir, "lwp",
+    val df = GridOpen.catalog(spark, GridFormat.Zarr, dir, "lwp",
       timeBounds = Map("time" -> ("2000-02-29", "2000-03-02")))
     assert(df.schema("time").dataType == org.apache.spark.sql.types.StringType)
     val rows = df.select("path", "time").distinct().collect()
@@ -241,14 +246,15 @@ class CatalogCropSpec extends SparkSpec {
     }
     ncFile("a.nc", "hours since 2022-03-01", Array(0.0, 6.0, 12.0, 18.0), 10.0)
     ncFile("b.nc", "hours since 2022-03-02", Array(0.0, 6.0, 12.0, 18.0), 20.0)
-    val df = CoordCrop.netcdf3Catalog(spark, dir, "lwp", Map.empty,
+    val df = GridOpen.catalog(spark, GridFormat.NetCDF3, dir, "lwp", Map.empty,
       timeBounds = Map("time" -> ("2022-03-01 10:00:00", "2022-03-02 01:00:00")))
-    val rows = df.select("path", "d0", "value").collect()
+    val rows = df.select("path", "idx", "value").collect()
       .map(x => (x.getString(0).split('/').last, x.getLong(1), x.getDouble(2)))
-    // a.nc: records 2-3 (12:00, 18:00); b.nc: record 0 (00:00)
+    // a.nc: records 2-3 (12:00, 18:00); b.nc: record 0 (00:00); two
+    // elements per record, idx = record * 2 + x
     assert(rows.toSet == Set(
-      ("a.nc", 2L, 14.0), ("a.nc", 3L, 16.0), ("a.nc", 2L, 15.0), ("a.nc", 3L, 17.0),
-      ("b.nc", 0L, 20.0), ("b.nc", 0L, 21.0)))
+      ("a.nc", 4L, 14.0), ("a.nc", 6L, 16.0), ("a.nc", 5L, 15.0), ("a.nc", 7L, 17.0),
+      ("b.nc", 0L, 20.0), ("b.nc", 1L, 21.0)))
   }
 
   test("HDF5 catalog: dimension-scale axes + per-file units") {
@@ -270,20 +276,21 @@ class CatalogCropSpec extends SparkSpec {
     }
     h5File("a.h5", "days since 2023-05-01", Array(0.0, 1.0, 2.0, 3.0), 10.0)
     h5File("b.h5", "days since 2023-05-10", Array(0.0, 1.0, 2.0, 3.0), 20.0)
-    val df = CoordCrop.hdf5Catalog(spark, dir, "v", Map.empty,
+    val df = GridOpen.catalog(spark, GridFormat.Hdf5, dir, "v", Map.empty,
       timeBounds = Map("time" -> ("2023-05-03", "2023-05-11")))
-    // a.h5: days 2-3 (May 3, 4); b.h5: days 0-1 (May 10, 11)
-    val rows = df.select("path", "d0").collect()
+    // a.h5: days 2-3 (May 3, 4); b.h5: days 0-1 (May 10, 11); two
+    // elements per day, idx = day * 2 + x
+    val rows = df.select("path", "idx").collect()
       .map(x => (x.getString(0).split('/').last, x.getLong(1)))
-    assert(rows.toSet == Set(("a.h5", 2L), ("a.h5", 3L),
-      ("b.h5", 0L), ("b.h5", 1L)))
+    assert(rows.toSet == Set(("a.h5", 4L), ("a.h5", 5L), ("a.h5", 6L),
+      ("a.h5", 7L), ("b.h5", 0L), ("b.h5", 1L), ("b.h5", 2L), ("b.h5", 3L)))
     assert(rows.length == 8)
     // chunk prune inside survivors: (1,2) chunks, 2 of 4 rows each ->
     // 4 chunks total plan
     assert(df.rdd.getNumPartitions <= 4)
     // both numeric and time bounds on one axis is a loud error
     val e = intercept[IllegalArgumentException] {
-      CoordCrop.hdf5Catalog(spark, dir, "v", Map("time" -> (0.0, 1.0)),
+      GridOpen.catalog(spark, GridFormat.Hdf5, dir, "v", Map("time" -> (0.0, 1.0)),
         timeBounds = Map("time" -> ("2023-05-03", "2023-05-04")))
     }
     assert(e.getMessage.contains("both numeric and time bounds"))

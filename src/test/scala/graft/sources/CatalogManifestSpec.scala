@@ -64,7 +64,7 @@ class CatalogManifestSpec extends SparkSpec {
     // live rows (this session pays the per-store wave) — recorded for
     // the relative metadata-op claim below
     val (live, liveRec) = recording {
-      GridOpen.zarrCatalog(spark, dir, "lwp", timeBounds = tb)
+      GridOpen.catalog(spark, GridFormat.Zarr, dir, "lwp", timeBounds = tb)
         .collect().map(r => (r.getString(0), r.getLong(1),
           r.getTimestamp(2).toInstant.toString, r.getDouble(3), r.getDouble(4)))
         .sortBy(r => (r._1, r._2))
@@ -76,7 +76,7 @@ class CatalogManifestSpec extends SparkSpec {
     val savedThreshold = CatalogManifest.collectAllBelow
     CatalogManifest.collectAllBelow = 0
     val ((got, pushedCollected), rec) = try recording {
-      val rows = GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp",
+      val rows = GridOpen.catalogFromManifest(spark, manifest, "lwp",
           timeBounds = tb)
         .collect().map(r => (r.getString(0), r.getLong(1),
           r.getTimestamp(2).toInstant.toString, r.getDouble(3), r.getDouble(4)))
@@ -86,7 +86,7 @@ class CatalogManifestSpec extends SparkSpec {
     assert(got.toSeq == live.toSeq)
     // and the SMALL-catalog regime (the default here) returns the
     // same rows through its single-collect plan
-    val small = GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp",
+    val small = GridOpen.catalogFromManifest(spark, manifest, "lwp",
         timeBounds = tb)
       .collect().map(r => (r.getString(0), r.getLong(1),
         r.getTimestamp(2).toInstant.toString, r.getDouble(3), r.getDouble(4)))
@@ -152,13 +152,13 @@ class CatalogManifestSpec extends SparkSpec {
       assert(touched.isEmpty, s"unchanged sc00$k was read: $touched")
     }
     // the refreshed manifest plans with sc001's NEW bytes
-    val df = GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp",
+    val df = GridOpen.catalogFromManifest(spark, manifest, "lwp",
       timeBounds = Map("time" -> ("2021-01-02 00:00:00", "2021-01-02 18:00:00")))
     val vals = df.collect().map(_.getDouble(4)).sorted
     assert(vals.toSeq == (0 until 12).map(9000.0 + _),
       s"refresh did not pick up sc001's new data: ${vals.take(5).mkString(",")}")
     // and the added store is a member now
-    val all = GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp")
+    val all = GridOpen.catalogFromManifest(spark, manifest, "lwp")
     assert(all.select("path").distinct().count() == 6) // 4 + changed + added
   }
 
@@ -184,12 +184,12 @@ class CatalogManifestSpec extends SparkSpec {
     val tb = Map("time" -> ("2022-03-01 12:00:00", "2022-03-02 00:00:00"))
     // the x axis has NO coordinate variable, so it surfaces as its
     // LONG index — exactly like the live open
-    val live = GridOpen.netcdf3Catalog(spark, dir, "lwp", timeBounds = tb)
+    val live = GridOpen.catalog(spark, GridFormat.NetCDF3, dir, "lwp", timeBounds = tb)
       .collect().map(r => (r.getString(0).split('/').last,
         r.getTimestamp(2).toInstant.toString, r.getLong(3), r.getDouble(4)))
       .sorted
     val (got, rec) = recording {
-      GridOpen.netcdf3CatalogFromManifest(spark, manifest, "lwp", timeBounds = tb)
+      GridOpen.catalogFromManifest(spark, manifest, "lwp", timeBounds = tb)
         .collect().map(r => (r.getString(0).split('/').last,
           r.getTimestamp(2).toInstant.toString, r.getLong(3), r.getDouble(4)))
         .sorted
@@ -216,7 +216,7 @@ class CatalogManifestSpec extends SparkSpec {
     // expectFormat guards a mismatched downstream open
     val fe = intercept[IllegalArgumentException] {
       GridOpen.catalogScenesFromManifest(spark, manifest, "lwp",
-        timeBounds = tb, expectFormat = Some("zarr")).count()
+        timeBounds = tb, expectFormat = Some(GridFormat.Zarr)).count()
     }
     assert(fe.getMessage.contains("holds 'netcdf3' stores, not zarr"),
       fe.getMessage)
@@ -232,7 +232,7 @@ class CatalogManifestSpec extends SparkSpec {
     CatalogManifest.read(spark, manifest).drop("requestedVars")
       .write.parquet(legacy)
     // plans fine
-    assert(GridOpen.zarrCatalogFromManifest(spark, legacy, "lwp")
+    assert(GridOpen.catalogFromManifest(spark, legacy, "lwp")
       .count() == 36)
     // refresh treats the unknown request set as a full re-scan and
     // rewrites in the current schema
@@ -262,7 +262,7 @@ class CatalogManifestSpec extends SparkSpec {
     assert((added, changed, removed, unchanged) == ((0, 4, 0, 0)),
       s"got ($added, $changed, $removed, $unchanged)")
     // and the new variable is now queryable from the manifest
-    val xs = GridOpen.zarrCatalogFromManifest(spark, manifest, "x")
+    val xs = GridOpen.catalogFromManifest(spark, manifest, "x")
     assert(xs.select("path").distinct().count() == 4)
     assert(xs.count() == 12) // 4 stores x 3 x-values
   }
@@ -277,29 +277,29 @@ class CatalogManifestSpec extends SparkSpec {
     // invisible to the plan (its fingerprint is never even checked)
     ByteStore.writeString(s"$dir/sc005.zarr/lwp/.zattrs",
       """{"_ARRAY_DIMENSIONS": ["time","x"], "note": "excluded-edit"}""")
-    assert(GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp",
+    assert(GridOpen.catalogFromManifest(spark, manifest, "lwp",
       timeBounds = tb).count() > 0)
     // a change to a SURVIVOR refuses loudly — a silently stale manifest
     // would crop with yesterday's coordinates
     ByteStore.writeString(s"$dir/sc002.zarr/lwp/.zattrs",
       """{"_ARRAY_DIMENSIONS": ["time","x"], "note": "survivor-edit"}""")
     val e = intercept[IllegalArgumentException](
-      GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp", timeBounds = tb))
+      GridOpen.catalogFromManifest(spark, manifest, "lwp", timeBounds = tb))
     assert(e.getMessage.contains("sc002") && e.getMessage.contains("refresh"),
       s"wanted the staleness message, got: ${e.getMessage}")
     // the explicit escape hatch for immutable catalogs plans anyway
-    assert(GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp",
+    assert(GridOpen.catalogFromManifest(spark, manifest, "lwp",
       timeBounds = tb, verifyFingerprints = false).count() > 0)
     // a crop that prunes EVERYTHING still plans (empty) — staleness of
     // stores the plan will not read cannot refuse the query
-    assert(GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp",
+    assert(GridOpen.catalogFromManifest(spark, manifest, "lwp",
       timeBounds = Map("time" ->
         ("1999-01-01 00:00:00", "1999-01-02 00:00:00"))).count() == 0)
     // refresh heals: only the two edited stores re-scan
     val (added, changed, removed, unchanged) =
       CatalogManifest.refresh(spark, "zarr", dir, Seq("lwp"), manifest)
     assert((added, changed, removed, unchanged) == ((0, 2, 0, 4)))
-    assert(GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp",
+    assert(GridOpen.catalogFromManifest(spark, manifest, "lwp",
       timeBounds = tb).count() > 0)
   }
 
@@ -337,10 +337,10 @@ class CatalogManifestSpec extends SparkSpec {
     val manifest = s"$dir/_manifest"
     CatalogManifest.build(spark, "zarr", dir, Seq("t700", "t1000"), manifest)
     val b = Map("y" -> (1000.0, 1100.0))
-    val live = GridOpen.zarrVarsCatalog(spark, dir, Seq("t700", "t1000"),
+    val live = GridOpen.varsCatalog(spark, GridFormat.Zarr, dir, Seq("t700", "t1000"),
       bounds = b).collect().map(_.toString).sorted
     val (got, rec) = recording {
-      GridOpen.zarrVarsCatalogFromManifest(spark, manifest,
+      GridOpen.varsCatalogFromManifest(spark, manifest,
         Seq("t700", "t1000"), bounds = b)
         .collect().map(_.toString).sorted
     }
@@ -625,7 +625,7 @@ class CatalogManifestSpec extends SparkSpec {
     // per-store epochs still decode per store (units survive per row)
     assert(metas.map(_.axes(0).time).distinct.size == 12)
     // and values still round-trip exactly (the shared arrays are real)
-    assert(GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp")
+    assert(GridOpen.catalogFromManifest(spark, manifest, "lwp")
       .count() == 144)
   }
 
@@ -642,7 +642,7 @@ class CatalogManifestSpec extends SparkSpec {
     CatalogManifest.build(spark, "zarr", dir, Seq("lwp"), manifest)
     // a BROAD window: days 1-10 of the 12 epochs survive
     val tb = Map("time" -> ("2021-01-01 00:00:00", "2021-01-10 23:00:00"))
-    def run() = GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp",
+    def run() = GridOpen.catalogFromManifest(spark, manifest, "lwp",
       timeBounds = tb)
     val orDf = run()
     // (a BroadcastHashJoin exists in BOTH forms — the per-epoch time
@@ -667,7 +667,7 @@ class CatalogManifestSpec extends SparkSpec {
     writeZarrCatalog(dir2, 8)
     val manifest2 = s"$dir2/_manifest"
     CatalogManifest.build(spark, "zarr", dir2, Seq("lwp", "x"), manifest2)
-    def runVars() = GridOpen.zarrVarsCatalogFromManifest(spark, manifest2,
+    def runVars() = GridOpen.varsCatalogFromManifest(spark, manifest2,
       Seq("lwp"), timeBounds = tb)
     val varsOr = runVars().collect().map(_.toString).sorted
     try {
@@ -698,13 +698,13 @@ class CatalogManifestSpec extends SparkSpec {
     CatalogManifest.build(spark, "zarr", dir, Seq("lwp"), manifest)
     // layout: a pointer + one complete generation, no top-level data
     assert(genNumOf(pointedGen(manifest)) == 0)
-    assert(GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp").count() == 36)
+    assert(GridOpen.catalogFromManifest(spark, manifest, "lwp").count() == 36)
     // a KILLED refresh = a partial next generation with no pointer
     // flip: readers are untouched (they resolve the pointer, which
     // still names the old COMPLETE generation)
     ByteStore.writeString(s"$manifest/_gen-00000001/part-00000-junk.parquet",
       "NOT PARQUET — a refresh died mid-write")
-    assert(GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp").count() == 36)
+    assert(GridOpen.catalogFromManifest(spark, manifest, "lwp").count() == 36)
     // the next refresh recovers: it overwrites the orphan generation
     // and flips the pointer only once the new one is complete
     ByteStore.writeString(s"$dir/sc001.zarr/lwp/.zattrs",
@@ -713,7 +713,7 @@ class CatalogManifestSpec extends SparkSpec {
       CatalogManifest.refresh(spark, "zarr", dir, Seq("lwp"), manifest)
     assert((a1, c1, r1, u1) == ((0, 1, 0, 2)))
     assert(genNumOf(pointedGen(manifest)) == 1)
-    assert(GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp").count() == 36)
+    assert(GridOpen.catalogFromManifest(spark, manifest, "lwp").count() == 36)
     // the previous generation is retained ONE publish (grace window
     // for in-flight readers); older ones are deleted after the flip
     assert(genDirNums(manifest).contains(0))
@@ -725,7 +725,7 @@ class CatalogManifestSpec extends SparkSpec {
     // a corrupt pointer refuses loudly instead of planning from junk
     ByteStore.writeString(s"$manifest/_current", "gen-not-a-pointer")
     val e = intercept[IllegalArgumentException](
-      GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp").count())
+      GridOpen.catalogFromManifest(spark, manifest, "lwp").count())
     assert(e.getMessage.contains("pointer"))
   }
 
@@ -737,7 +737,7 @@ class CatalogManifestSpec extends SparkSpec {
     // fabricate the legacy layout: data files at the TOP level
     val legacy = s"$dir/_legacy_layout"
     CatalogManifest.read(spark, manifest).write.parquet(legacy)
-    assert(GridOpen.zarrCatalogFromManifest(spark, legacy, "lwp").count() == 36)
+    assert(GridOpen.catalogFromManifest(spark, legacy, "lwp").count() == 36)
     val (a, c, r, u) =
       CatalogManifest.refresh(spark, "zarr", dir, Seq("lwp"), legacy)
     assert((a, c, r, u) == ((0, 0, 0, 3)))
@@ -746,7 +746,7 @@ class CatalogManifestSpec extends SparkSpec {
     val leftovers = ByteStore.list(legacy)
       .filter(e => !e.isDir && e.name != "_current").map(_.name)
     assert(leftovers.isEmpty, s"legacy data files survived: $leftovers")
-    assert(GridOpen.zarrCatalogFromManifest(spark, legacy, "lwp").count() == 36)
+    assert(GridOpen.catalogFromManifest(spark, legacy, "lwp").count() == 36)
   }
 
   test("checkCatalogFresh: the opt-in full-catalog guard catches what survivor-only cannot") {
@@ -760,7 +760,7 @@ class CatalogManifestSpec extends SparkSpec {
     ByteStore.writeString(s"$dir/sc003.zarr/lwp/.zattrs",
       """{"_ARRAY_DIMENSIONS": ["time","x"], "note": "excluded-change"}""")
     val tb = Map("time" -> ("2021-01-01 00:00:00", "2021-01-01 23:00:00"))
-    assert(GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp",
+    assert(GridOpen.catalogFromManifest(spark, manifest, "lwp",
       timeBounds = tb).count() > 0)
     // ... while the full-catalog check refuses, naming the store
     val e = intercept[IllegalArgumentException](
@@ -822,11 +822,11 @@ class CatalogManifestSpec extends SparkSpec {
     val legacy = s"$dir/_prehash"
     CatalogManifest.read(spark, manifest).drop("fpHash").write.parquet(legacy)
     // plans fine, and the staleness guard still works on the triple
-    assert(GridOpen.zarrCatalogFromManifest(spark, legacy, "lwp").count() == 36)
+    assert(GridOpen.catalogFromManifest(spark, legacy, "lwp").count() == 36)
     ByteStore.writeString(s"$dir/sc001.zarr/lwp/.zattrs",
       """{"_ARRAY_DIMENSIONS": ["time","x"], "note": "bigger now"}""")
     val e = intercept[IllegalArgumentException](
-      GridOpen.zarrCatalogFromManifest(spark, legacy, "lwp").count())
+      GridOpen.catalogFromManifest(spark, legacy, "lwp").count())
     assert(e.getMessage.contains("refresh"))
     // refresh treats EVERY hash-less row as changed and re-scans it:
     // stamping the fresh hash onto a triple-matched legacy row would
@@ -971,7 +971,7 @@ class CatalogManifestSpec extends SparkSpec {
         p.contains("/lwp/") && p.split('/').last.matches("\\d+\\.\\d+"))
     def run(): (Seq[(String, Double)], Set[String]) = {
       val (rows, rec) = recording {
-        GridOpen.zarrCatalog(spark, dir, "lwp", timeBounds = tb)
+        GridOpen.catalog(spark, GridFormat.Zarr, dir, "lwp", timeBounds = tb)
           .collect().map(r => (r.getString(0), r.getDouble(4)))
           .sortBy(x => (x._1, x._2)).toSeq
       }
@@ -1008,19 +1008,19 @@ class CatalogManifestSpec extends SparkSpec {
     val saved = CatalogManifest.fpDistributeAbove
     CatalogManifest.fpDistributeAbove = 0 // force the Spark-job wave
     try {
-      assert(GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp")
+      assert(GridOpen.catalogFromManifest(spark, manifest, "lwp")
         .count() == 48)
       assert(CatalogManifest.refresh(spark, "zarr", dir, Seq("lwp"), manifest)
         == ((0, 0, 0, 4)))
       ByteStore.writeString(s"$dir/sc001.zarr/lwp/.zattrs",
         """{"_ARRAY_DIMENSIONS": ["time","x"], "note": "edited"}""")
       val e = intercept[IllegalArgumentException](
-        GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp").count())
+        GridOpen.catalogFromManifest(spark, manifest, "lwp").count())
       assert(e.getMessage.contains("sc001") && e.getMessage.contains("refresh"),
         e.getMessage)
       assert(CatalogManifest.refresh(spark, "zarr", dir, Seq("lwp"), manifest)
         == ((0, 1, 0, 3)))
-      assert(GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp")
+      assert(GridOpen.catalogFromManifest(spark, manifest, "lwp")
         .count() == 48)
     } finally CatalogManifest.fpDistributeAbove = saved
   }
@@ -1049,7 +1049,7 @@ class CatalogManifestSpec extends SparkSpec {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       try {
         val (rows, rec) = recording {
-          GridOpen.zarrCatalog(spark, dir, "lwp", bounds = bounds)
+          GridOpen.catalog(spark, GridFormat.Zarr, dir, "lwp", bounds = bounds)
             .select(col("path"), col("value")).collect()
             .map(r => (r.getString(0).split('/').last, r.getDouble(1)))
             .sortBy(identity).toSeq
@@ -1097,11 +1097,11 @@ class CatalogManifestSpec extends SparkSpec {
       val (metas, format, _, fps) =
         CatalogManifest.planStores(spark, manifest, "lwp", Map.empty,
           Map.empty)
-      assert(metas.length == 12 && fps.length == 12 && format == "zarr")
+      assert(metas.length == 12 && fps.length == 12 && format == GridFormat.Zarr)
       assert(CatalogManifest.lastPhase1Collected == 0,
         s"broad phase 1 collected ${CatalogManifest.lastPhase1Collected}")
       // and the full open still answers identically to the live one
-      assert(GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp")
+      assert(GridOpen.catalogFromManifest(spark, manifest, "lwp")
         .count() == 144)
       assert(CatalogManifest.lastPhase1Collected == 0)
     } finally CatalogManifest.collectAllBelow = saved
@@ -1171,7 +1171,7 @@ class CatalogManifestSpec extends SparkSpec {
     val manifest = s"file:$dir/_manifest"
     CatalogManifest.build(spark, "zarr", dir, Seq("lwp"), manifest)
     CatalogManifest.refresh(spark, "zarr", dir, Seq("lwp"), manifest)
-    assert(GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp")
+    assert(GridOpen.catalogFromManifest(spark, manifest, "lwp")
       .count() == 24)
     val leftovers = new java.io.File(s"$dir/_manifest").listFiles()
       .map(_.getName).filter(n => n.startsWith("_current.") || n == ".crc")
@@ -1191,12 +1191,12 @@ class CatalogManifestSpec extends SparkSpec {
     assert(new java.io.File(s"$manifest/$cur")
       .renameTo(new java.io.File(s"$manifest/$legacyName")))
     ByteStore.writeString(s"$manifest/_current", legacyName)
-    assert(GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp")
+    assert(GridOpen.catalogFromManifest(spark, manifest, "lwp")
       .count() == 24)
     // and a refresh on top publishes the NEXT (suffixed) generation
     CatalogManifest.refresh(spark, "zarr", dir, Seq("lwp"), manifest)
     assert(genNumOf(pointedGen(manifest)) == 1)
-    assert(GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp")
+    assert(GridOpen.catalogFromManifest(spark, manifest, "lwp")
       .count() == 24)
   }
 
@@ -1482,7 +1482,7 @@ class CatalogManifestSpec extends SparkSpec {
     // computed with ZERO per-store reads (manifest parquet only)
     val tb = Map("time" -> ("2021-01-02 00:00:00", "2021-01-03 23:00:00"))
     val (scenes, rec) = recording {
-      GridOpen.zarrCatalogScenesFromManifest(spark, manifest, "lwp",
+      GridOpen.catalogScenesFromManifest(spark, manifest, "lwp",
         timeBounds = tb).as[String].collect().toSeq.sorted
     }
     assert(scenes.map(_.split('/').last) == Seq("sc001.zarr", "sc002.zarr"))
@@ -1490,17 +1490,17 @@ class CatalogManifestSpec extends SparkSpec {
       p.contains(".zarr") && !p.contains("_manifest"))
     assert(storeReads.isEmpty, s"scene list touched stores: $storeReads")
     // everything pruned -> empty list (never the schema-fallback store)
-    assert(GridOpen.zarrCatalogScenesFromManifest(spark, manifest, "lwp",
+    assert(GridOpen.catalogScenesFromManifest(spark, manifest, "lwp",
       timeBounds = Map("time" ->
         ("2030-01-01 00:00:00", "2030-01-02 00:00:00"))).isEmpty)
     // the guard is opt-in here (the paired data open runs its own):
     // default OFF ignores a store change; ON refuses like the open
     ByteStore.writeString(s"$dir/sc001.zarr/lwp/.zattrs",
       """{"_ARRAY_DIMENSIONS": ["time","x"], "note": "drifted"}""")
-    assert(GridOpen.zarrCatalogScenesFromManifest(spark, manifest, "lwp",
+    assert(GridOpen.catalogScenesFromManifest(spark, manifest, "lwp",
       timeBounds = tb).count() == 2)
     val e = intercept[IllegalArgumentException] {
-      GridOpen.zarrCatalogScenesFromManifest(spark, manifest, "lwp",
+      GridOpen.catalogScenesFromManifest(spark, manifest, "lwp",
         timeBounds = tb, verifyFingerprints = true).count()
     }
     assert(e.getMessage.contains("changed since the manifest was built"),

@@ -46,7 +46,7 @@ class GridMaterializeSpec extends SparkSpec {
     writeCatalog(dir, 4)
     val out = s"$dir/_out"
     // first run: all 4 scenes
-    val first = GridOpen.materializeZarrCatalog(spark, dir, "lwp", out)
+    val first = GridOpen.materialize(spark, GridFormat.Zarr, dir, "lwp", out)
     assert(first.sorted == (0 until 4).map(i => s"sm$i.zarr"))
     val table = spark.read.parquet(out)
     assert(table.columns.toSet ==
@@ -55,7 +55,7 @@ class GridMaterializeSpec extends SparkSpec {
     val want = table.orderBy("scene", "idx").collect().map(_.toString)
     // re-run: nothing pending, and NO store is opened or read
     val (second, rec2) = recording {
-      GridOpen.materializeZarrCatalog(spark, dir, "lwp", out)
+      GridOpen.materialize(spark, GridFormat.Zarr, dir, "lwp", out)
     }
     assert(second.isEmpty)
     val touched2 = rec2.pathsTouched.filter(_.contains(".zarr"))
@@ -72,7 +72,7 @@ class GridMaterializeSpec extends SparkSpec {
         .map(f => (f.getName, f.lastModified())).toSet
     }.toMap
     val (third, rec3) = recording {
-      GridOpen.materializeZarrCatalog(spark, dir, "lwp", out)
+      GridOpen.materialize(spark, GridFormat.Zarr, dir, "lwp", out)
     }
     assert(third == Seq("sm2.zarr"))
     val touched3 = rec3.pathsTouched.filter(_.contains(".zarr"))
@@ -106,7 +106,7 @@ class GridMaterializeSpec extends SparkSpec {
         numRecs = 2))
     nc("a.nc", 1, 10.0); nc("b.nc", 2, 20.0); nc("c.nc", 3, 30.0)
     val out = s"$dir/_out"
-    assert(GridOpen.materializeNetcdf3Catalog(spark, s"$dir/*.nc", "lwp", out)
+    assert(GridOpen.materialize(spark, GridFormat.NetCDF3, s"$dir/*.nc", "lwp", out)
       .sorted == Seq("a.nc", "b.nc", "c.nc"))
     assert(spark.read.parquet(out).count() == 12)
     def rmTree(p: java.nio.file.Path): Unit =
@@ -114,7 +114,7 @@ class GridMaterializeSpec extends SparkSpec {
         .forEach(f => { Files.delete(f); () })
     rmTree(Paths.get(s"$out/scene=b.nc"))
     val (again, rec) = recording {
-      GridOpen.materializeNetcdf3Catalog(spark, s"$dir/*.nc", "lwp", out)
+      GridOpen.materialize(spark, GridFormat.NetCDF3, s"$dir/*.nc", "lwp", out)
     }
     assert(again == Seq("b.nc"))
     val touched = rec.pathsTouched.filter(_.endsWith(".nc"))
@@ -142,7 +142,7 @@ class GridMaterializeSpec extends SparkSpec {
     val out = s"$dir/_out"
     // the window excludes c.nc (day 7): never pending, never touched
     val tb = Map("time" -> ("2022-03-01 00:00:00", "2022-03-02 23:00:00"))
-    assert(GridOpen.materializeNetcdf3CatalogFromManifest(spark, manifest,
+    assert(GridOpen.materializeFromManifest(spark, manifest,
       "lwp", out, timeBounds = tb).sorted == Seq("a.nc", "b.nc"))
     assert(spark.read.parquet(out).count() == 8)
     // repair one file: the pending wave touches ONLY it
@@ -151,7 +151,7 @@ class GridMaterializeSpec extends SparkSpec {
         .forEach(f => { Files.delete(f); () })
     rmTree(Paths.get(s"$out/scene=b.nc"))
     val (again, rec) = recording {
-      GridOpen.materializeNetcdf3CatalogFromManifest(spark, manifest, "lwp",
+      GridOpen.materializeFromManifest(spark, manifest, "lwp",
         out, timeBounds = tb)
     }
     assert(again == Seq("b.nc"))
@@ -160,7 +160,7 @@ class GridMaterializeSpec extends SparkSpec {
       s"other files touched: ${touched.filterNot(_.endsWith("b.nc"))}")
     // idempotent completion; the hdf5 sibling shares the skeleton and
     // is exercised by the hdf5 manifest-open specs
-    assert(GridOpen.materializeNetcdf3CatalogFromManifest(spark, manifest,
+    assert(GridOpen.materializeFromManifest(spark, manifest,
       "lwp", out, timeBounds = tb).isEmpty)
     assert(spark.read.parquet(out).count() == 8)
   }
@@ -200,7 +200,7 @@ class GridMaterializeSpec extends SparkSpec {
     val manifest = s"$dir/_manifest"
     CatalogManifest.build(spark, "zarr", dir, Seq("t700", "t1000"), manifest)
     val out = s"$dir/_out"
-    val first = GridOpen.materializeZarrVarsCatalogFromManifest(spark,
+    val first = GridOpen.materializeVarsFromManifest(spark,
       manifest, Seq("t700", "t1000"), out)
     assert(first.sorted == Seq("xa.zarr", "xb.zarr"))
     val tbl = spark.read.parquet(out)
@@ -217,7 +217,7 @@ class GridMaterializeSpec extends SparkSpec {
         .forEach(f => { Files.delete(f); () })
     rmTree(Paths.get(s"$out/scene=xb.zarr"))
     val (again, rec) = recording {
-      GridOpen.materializeZarrVarsCatalogFromManifest(spark, manifest,
+      GridOpen.materializeVarsFromManifest(spark, manifest,
         Seq("t700", "t1000"), out)
     }
     assert(again == Seq("xb.zarr"))
@@ -225,7 +225,7 @@ class GridMaterializeSpec extends SparkSpec {
     assert(touched.forall(_.contains("xb.zarr")),
       s"other scenes touched: ${touched.filterNot(_.contains("xb.zarr"))}")
     // idempotent completion
-    assert(GridOpen.materializeZarrVarsCatalogFromManifest(spark, manifest,
+    assert(GridOpen.materializeVarsFromManifest(spark, manifest,
       Seq("t700", "t1000"), out).isEmpty)
     assert(spark.read.parquet(out).count() == 12)
   }
@@ -238,7 +238,7 @@ class GridMaterializeSpec extends SparkSpec {
     val out = s"$dir/_out"
     // bounds exclude sm3 (its epoch is Feb 4) -> it is never pending
     val tb = Map("time" -> ("2021-02-01 00:00:00", "2021-02-03 23:00:00"))
-    val first = GridOpen.materializeZarrCatalogFromManifest(spark, manifest,
+    val first = GridOpen.materializeFromManifest(spark, manifest,
       "lwp", out, timeBounds = tb)
     assert(first.sorted == Seq("sm0.zarr", "sm1.zarr", "sm2.zarr"))
     // repair one scene: the pending wave touches ONLY that scene, and
@@ -250,7 +250,7 @@ class GridMaterializeSpec extends SparkSpec {
         .forEach(f => { Files.delete(f); () })
     rmTree(Paths.get(s"$out/scene=sm1.zarr"))
     val (again, rec) = recording {
-      GridOpen.materializeZarrCatalogFromManifest(spark, manifest, "lwp", out,
+      GridOpen.materializeFromManifest(spark, manifest, "lwp", out,
         timeBounds = tb)
     }
     assert(again == Seq("sm1.zarr"))
@@ -262,7 +262,7 @@ class GridMaterializeSpec extends SparkSpec {
     assert(coordTouched.isEmpty,
       s"manifest materialize re-read coordinate metadata: $coordTouched")
     // idempotent completion
-    assert(GridOpen.materializeZarrCatalogFromManifest(spark, manifest, "lwp",
+    assert(GridOpen.materializeFromManifest(spark, manifest, "lwp",
       out, timeBounds = tb).isEmpty)
     assert(spark.read.parquet(out).count() == 18)
     // bounds that exclude EVERY scene: nothing pending, nothing
@@ -270,23 +270,23 @@ class GridMaterializeSpec extends SparkSpec {
     // treated as pending)
     val out2 = s"$dir/_out2"
     val never = Map("time" -> ("1999-01-01 00:00:00", "1999-01-02 00:00:00"))
-    assert(GridOpen.materializeZarrCatalogFromManifest(spark, manifest, "lwp",
+    assert(GridOpen.materializeFromManifest(spark, manifest, "lwp",
       out2, timeBounds = never).isEmpty)
-    assert(GridOpen.materializeZarrCatalogFromManifest(spark, manifest, "lwp",
+    assert(GridOpen.materializeFromManifest(spark, manifest, "lwp",
       out2, timeBounds = never).isEmpty)
     // staleness of a DONE scene must not wedge a skip-everything
     // re-run; staleness of a PENDING scene must still refuse
     ByteStore.writeString(s"$dir/sm0.zarr/lwp/.zattrs",
       """{"_ARRAY_DIMENSIONS": ["time","x"], "note": "late-edit"}""")
-    assert(GridOpen.materializeZarrCatalogFromManifest(spark, manifest, "lwp",
+    assert(GridOpen.materializeFromManifest(spark, manifest, "lwp",
       out, timeBounds = tb).isEmpty) // sm0 done -> not verified
     rmTree(Paths.get(s"$out/scene=sm0.zarr")) // now sm0 IS pending
     val e = intercept[IllegalArgumentException](
-      GridOpen.materializeZarrCatalogFromManifest(spark, manifest, "lwp",
+      GridOpen.materializeFromManifest(spark, manifest, "lwp",
         out, timeBounds = tb))
     assert(e.getMessage.contains("sm0") && e.getMessage.contains("refresh"))
     CatalogManifest.refresh(spark, "zarr", dir, Seq("lwp"), manifest)
-    assert(GridOpen.materializeZarrCatalogFromManifest(spark, manifest, "lwp",
+    assert(GridOpen.materializeFromManifest(spark, manifest, "lwp",
       out, timeBounds = tb) == Seq("sm0.zarr"))
   }
 
@@ -301,7 +301,7 @@ class GridMaterializeSpec extends SparkSpec {
     // exact coordinate -> sm0 is an envelope survivor the exact prune
     // drops; sm1 (Feb 2 epoch) is envelope-pruned outright
     val tb = Map("time" -> ("2021-02-01 02:00:00", "2021-02-01 09:00:00"))
-    assert(GridOpen.materializeZarrCatalogFromManifest(spark, manifest, "lwp",
+    assert(GridOpen.materializeFromManifest(spark, manifest, "lwp",
       out, timeBounds = tb).isEmpty)
     // sm0 changes: a re-run must REFUSE — with the manifest's old
     // coords it was dropped by the exact prune, but the changed store
@@ -310,12 +310,12 @@ class GridMaterializeSpec extends SparkSpec {
     ByteStore.writeString(s"$dir/sm0.zarr/lwp/.zattrs",
       """{"_ARRAY_DIMENSIONS": ["time","x"], "note": "drifted"}""")
     val e = intercept[IllegalArgumentException](
-      GridOpen.materializeZarrCatalogFromManifest(spark, manifest, "lwp",
+      GridOpen.materializeFromManifest(spark, manifest, "lwp",
         out, timeBounds = tb))
     assert(e.getMessage.contains("sm0") && e.getMessage.contains("refresh"))
     // refresh heals; the (unchanged-coords) scene is still exact-pruned
     CatalogManifest.refresh(spark, "zarr", dir, Seq("lwp"), manifest)
-    assert(GridOpen.materializeZarrCatalogFromManifest(spark, manifest, "lwp",
+    assert(GridOpen.materializeFromManifest(spark, manifest, "lwp",
       out, timeBounds = tb).isEmpty)
   }
 
@@ -329,9 +329,9 @@ class GridMaterializeSpec extends SparkSpec {
         NetCDF3.VarSpec("x", Seq("x"), NetCDF3.NcDouble, Nil, Array(0.0, 1.0)),
         NetCDF3.VarSpec("v", Seq("x"), NetCDF3.NcDouble, Nil, Array(7.0, 8.0)))))
     val out = s"$dir/_out"
-    assert(GridOpen.materializeNetcdf3Catalog(spark, s"$dir/*.nc", "v", out)
+    assert(GridOpen.materialize(spark, GridFormat.NetCDF3, s"$dir/*.nc", "v", out)
       == Seq("a+b.nc"))
-    assert(GridOpen.materializeNetcdf3Catalog(spark, s"$dir/*.nc", "v", out)
+    assert(GridOpen.materialize(spark, GridFormat.NetCDF3, s"$dir/*.nc", "v", out)
       .isEmpty, "the '+' scene must be recognized as done")
     assert(spark.read.parquet(out).count() == 2)
   }

@@ -31,7 +31,7 @@ class GridOpenSpec extends SparkSpec {
           NetCDF3.Attr("scale_factor", NetCDF3.NcDouble, Array(0.5)),
           NetCDF3.Attr("add_offset", NetCDF3.NcDouble, Array(2.0))), raw)),
       numRecs = 4))
-    val df = GridOpen.netcdf3(spark, p.toString, "lwp",
+    val df = GridOpen.open(spark, GridFormat.NetCDF3, p.toString, "lwp",
       bounds = Map("x" -> (150.0, 300.0)),
       timeBounds = Map("time" -> ("2024-02-01 06:00:00", "2024-02-01 18:00:00")))
     assert(df.columns.toSeq == Seq("path", "idx", "time", "x", "value"))
@@ -61,7 +61,7 @@ class GridOpenSpec extends SparkSpec {
       (expr("id div 4") * 20.0).as("y"),
       (col("id") * 1.0).as("value"))
     ZarrSink.writeScenes(grid, dir, "lwp").count()
-    val df = GridOpen.zarr(spark, s"$dir/s0.zarr", "lwp")
+    val df = GridOpen.open(spark, GridFormat.Zarr, s"$dir/s0.zarr", "lwp")
     assert(df.columns.toSeq == Seq("path", "idx", "y", "x", "value"))
     val rows = df.orderBy("idx").collect()
       .map(r => (r.getDouble(2), r.getDouble(3), r.getDouble(4)))
@@ -69,7 +69,7 @@ class GridOpenSpec extends SparkSpec {
     assert(rows(0) == ((0.0, 100.0, 0.0)))
     assert(rows(11) == ((40.0, 130.0, 11.0)))
     // a bounded open prunes AND decodes the same way
-    val cropped = GridOpen.zarr(spark, s"$dir/s0.zarr", "lwp",
+    val cropped = GridOpen.open(spark, GridFormat.Zarr, s"$dir/s0.zarr", "lwp",
       bounds = Map("y" -> (20.0, 40.0), "x" -> (110.0, 120.0)))
     val got = cropped.collect().map(r => (r.getDouble(2), r.getDouble(3), r.getDouble(4)))
     assert(got.toSet == rows.filter(r =>
@@ -89,7 +89,7 @@ class GridOpenSpec extends SparkSpec {
       HDF5.DsSpec("x", Seq(2), Array(7.0, 9.0),
         attrs = Seq(HDF5.WAttrString("NAME", "x")))))
     val p = Paths.get(dir, "t.h5"); Files.write(p, bytes)
-    val df = GridOpen.hdf5(spark, p.toString, "v")
+    val df = GridOpen.open(spark, GridFormat.Hdf5, p.toString, "v")
     assert(df.columns.toSeq == Seq("path", "idx", "time", "x", "value"))
     val rows = df.orderBy("idx").collect()
       .map(r => (r.getTimestamp(2).toInstant.toString, r.getDouble(3)))
@@ -115,7 +115,7 @@ class GridOpenSpec extends SparkSpec {
       numRecs = 6))
     // calendar bounds crop + decode through the turnkey: 02-28..03-01
     // covers 02-28, 02-29, 02-30, 03-01 (360_day februaries have 30 days)
-    val df = GridOpen.netcdf3(spark, p.toString, "v",
+    val df = GridOpen.open(spark, GridFormat.NetCDF3, p.toString, "v",
       timeBounds = Map("time" -> ("2000-02-28", "2000-03-01")))
     assert(df.schema("time").dataType == org.apache.spark.sql.types.StringType)
     val times = df.select("time").distinct().collect().map(_.getString(0)).sorted
@@ -143,7 +143,7 @@ class GridOpenSpec extends SparkSpec {
         numRecs = 4))
     nc("a.nc", 1, 10.0)
     nc("b.nc", 2, 20.0)
-    val ncDf = GridOpen.netcdf3Catalog(spark, ncDir, "lwp",
+    val ncDf = GridOpen.catalog(spark, GridFormat.NetCDF3, ncDir, "lwp",
       timeBounds = Map("time" -> ("2022-03-01 12:00:00", "2022-03-02 00:00:00")))
     val ncRows = ncDf.collect().map(r => (r.getString(0).split('/').last,
       r.getTimestamp(2).toInstant.toString, r.getDouble(4))).sorted
@@ -168,7 +168,7 @@ class GridOpenSpec extends SparkSpec {
           attrs = Seq(HDF5.WAttrString("NAME", "x"))))))
     h5("a.h5", 1, 10.0)
     h5("b.h5", 5, 20.0)
-    val h5Df = GridOpen.hdf5Catalog(spark, h5Dir, "v",
+    val h5Df = GridOpen.catalog(spark, GridFormat.Hdf5, h5Dir, "v",
       timeBounds = Map("time" -> ("2023-06-03", "2023-06-06")))
     // a.h5: days 2-3 (Jun 3, 4); b.h5: days 0-1 (Jun 5, 6)
     val h5Rows = h5Df.collect().map(r => (r.getString(0).split('/').last,
@@ -195,7 +195,7 @@ class GridOpenSpec extends SparkSpec {
         attrs = Seq(HDF5.WAttrString("NAME", "x")))),
       deflate = true)
     val p = Paths.get(dir, "grouped.h5"); Files.write(p, bytes)
-    val df = GridOpen.hdf5(spark, p.toString, "model/t2m",
+    val df = GridOpen.open(spark, GridFormat.Hdf5, p.toString, "model/t2m",
       bounds = Map("model/y" -> (20.0, 40.0), "model/x" -> (35.0, 75.0)))
     // group-path dim names become (escaped) column names
     assert(df.columns.toSeq == Seq("path", "idx", "model/y", "model/x", "value"))
@@ -233,7 +233,7 @@ class GridOpenSpec extends SparkSpec {
         NetCDF3.VarSpec("t1000", Seq("y", "x"), NetCDF3.NcDouble, Seq(
           NetCDF3.Attr("scale_factor", NetCDF3.NcDouble, Array(0.5)),
           NetCDF3.Attr("add_offset", NetCDF3.NcDouble, Array(5.0))), t1000))))
-    val df = GridOpen.netcdf3Vars(spark, p.toString, Seq("t700", "t1000"),
+    val df = GridOpen.openVars(spark, GridFormat.NetCDF3, p.toString, Seq("t700", "t1000"),
       bounds = Map("x" -> (100.0, 300.0)))
     assert(df.columns.toSeq == Seq("path", "idx", "y", "x", "t700", "t1000"))
     val rows = df.orderBy("idx").collect().map { r =>
@@ -255,7 +255,7 @@ class GridOpenSpec extends SparkSpec {
     assert(exchanges == 1, s"expected exactly 1 exchange (the pivot), got $exchanges")
     // a variable off the shared grid refuses loudly
     val e = intercept[IllegalArgumentException](
-      GridOpen.netcdf3Vars(spark, p.toString, Seq("t700", "y")))
+      GridOpen.openVars(spark, GridFormat.NetCDF3, p.toString, Seq("t700", "y")))
     assert(e.getMessage.contains("shared grid"))
   }
 
@@ -293,7 +293,7 @@ class GridOpenSpec extends SparkSpec {
     store("mB", 1000.0, 200.0, withT1000 = true)
     store("mC", 2000.0, 300.0, withT1000 = false)
     // y in [1000, 1100]: only mB's rows 0-1 (mA misses, mC not a member)
-    val df = GridOpen.zarrVarsCatalog(spark, dir, Seq("t700", "t1000"),
+    val df = GridOpen.varsCatalog(spark, GridFormat.Zarr, dir, Seq("t700", "t1000"),
       bounds = Map("y" -> (1000.0, 1100.0)))
     assert(df.columns.toSeq == Seq("path", "idx", "y", "x", "t700", "t1000"))
     val rows = df.collect().map { r =>
@@ -327,7 +327,7 @@ class GridOpenSpec extends SparkSpec {
     nc("m0.nc", 100.0, withB = true)
     nc("m1.nc", 200.0, withB = true)
     nc("m2.nc", 300.0, withB = false) // not a member: lacks 'b'
-    val df = GridOpen.netcdf3VarsCatalog(spark, dir, Seq("a", "b"))
+    val df = GridOpen.varsCatalog(spark, GridFormat.NetCDF3, dir, Seq("a", "b"))
     assert(df.columns.toSeq == Seq("path", "idx", "x", "a", "b"))
     val rows = df.collect().map(r => (r.getString(0).split('/').last,
       r.getDouble(2), r.getDouble(3), r.getDouble(4))).sorted
@@ -357,7 +357,7 @@ class GridOpenSpec extends SparkSpec {
         numRecs = 4))
     nc("a.nc", 10.0)
     nc("b.nc", 20.0)
-    val df = GridOpen.netcdf3Catalog(spark, dir, "lwp",
+    val df = GridOpen.catalog(spark, GridFormat.NetCDF3, dir, "lwp",
       timeBounds = Map("time" -> ("2022-03-01 06:00:00", "2022-03-01 12:00:00")))
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"homogeneous catalog must not join:\n${plan.take(1500)}")
@@ -398,7 +398,7 @@ class GridOpenSpec extends SparkSpec {
     store("sA", "hours since 2021-01-01", 100.0)
     store("sB", "hours since 2021-01-02", 200.0)
     store("sC", "hours since 2021-01-03", 300.0)
-    val df = GridOpen.zarrCatalog(spark, dir, "lwp",
+    val df = GridOpen.catalog(spark, GridFormat.Zarr, dir, "lwp",
       timeBounds = Map("time" -> ("2021-01-01 12:00:00", "2021-01-02 06:00:00")))
     assert(df.columns.toSeq == Seq("path", "idx", "time", "x", "value"))
     val rows = df.collect().map { r =>
@@ -431,7 +431,7 @@ class GridOpenSpec extends SparkSpec {
       vars = Seq(NetCDF3.VarSpec("v", Seq("a", "b", "c", "d", "e"),
         NetCDF3.NcDouble, Nil, Array.tabulate(32)(_ * 1.0)))))
     val e = intercept[IllegalArgumentException](
-      GridOpen.netcdf3(spark, p.toString, "v"))
+      GridOpen.open(spark, GridFormat.NetCDF3, p.toString, "v"))
     assert(e.getMessage.contains("rank 5") && e.getMessage.contains("d0"),
       s"wanted the domain message, got: ${e.getMessage}")
   }
@@ -450,7 +450,7 @@ class GridOpenSpec extends SparkSpec {
           Array.tabulate(4)(_ * 1.0))),
       numRecs = 2))
     val e = intercept[IllegalArgumentException](
-      GridOpen.netcdf3(spark, p.toString, "v"))
+      GridOpen.open(spark, GridFormat.NetCDF3, p.toString, "v"))
     assert(e.getMessage.contains("months"),
       s"wanted the unsupported-step message, got: ${e.getMessage}")
   }
@@ -477,14 +477,14 @@ class GridOpenSpec extends SparkSpec {
         numRecs = 2))
     nc("a.nc", 10.0)
     nc("b.nc", 20.0)
-    val df = GridOpen.netcdf3Catalog(spark, dir, "a",
+    val df = GridOpen.catalog(spark, GridFormat.NetCDF3, dir, "a",
       timeBounds = Map("time" -> ("2022-03-01 00:00:00", "2022-03-01 06:00:00")))
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("Join"),
       s"NaN coord pushed a homogeneous catalog onto joins:\n${plan.take(1500)}")
     assert(df.count() == 12)
     // multi-variable open on the NaN-bearing shared grid succeeds
-    val mv = GridOpen.netcdf3Vars(spark, s"$dir/a.nc", Seq("a", "b"))
+    val mv = GridOpen.openVars(spark, GridFormat.NetCDF3, s"$dir/a.nc", Seq("a", "b"))
     assert(mv.columns.toSeq == Seq("path", "idx", "time", "x", "a", "b"))
     assert(mv.count() == 6)
   }
@@ -507,7 +507,7 @@ class GridOpenSpec extends SparkSpec {
             NetCDF3.Attr("_FillValue", NetCDF3.NcDouble, Array(fill))), raw))))
     nc("g0.nc", 0.5, 2.0, -99.0, Array(4.0, -99.0, 8.0))
     nc("g1.nc", 0.1, 100.0, -1.0, Array(30.0, 40.0, -1.0))
-    val df = GridOpen.netcdf3Catalog(spark, dir, "v")
+    val df = GridOpen.catalog(spark, GridFormat.NetCDF3, dir, "v")
     val rows = df.collect().map { r =>
       (r.getString(0).split('/').last, r.getDouble(2),
         if (r.isNullAt(3)) None else Some(r.getDouble(3)))

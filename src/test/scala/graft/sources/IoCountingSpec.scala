@@ -169,7 +169,7 @@ class IoCountingSpec extends SparkSpec {
     val manifest = s"$dir/_manifest"
     CatalogManifest.build(spark, "netcdf3", s"$dir/*.nc", Seq("v"), manifest)
     val (got, rec) = recording {
-      GridOpen.netcdf3CatalogFromManifest(spark, manifest, "v",
+      GridOpen.catalogFromManifest(spark, manifest, "v",
           timeBounds = Map("time" ->
             ("2022-05-03 00:00:00", "2022-05-03 03:00:00")))
         .agg(sum(col("value"))).head.getDouble(0)

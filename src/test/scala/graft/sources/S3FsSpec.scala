@@ -68,7 +68,7 @@ class S3FsSpec extends SparkSpec {
     assert(fileLen > 4L * 1024 * 1024)
     S3Fs.reset() // the write is not the claim
     // the crop keeps 4 of 64 records
-    val got = GridOpen.netcdf3(spark, s"s3test:$dir/big.nc", "v",
+    val got = GridOpen.open(spark, GridFormat.NetCDF3, s"s3test:$dir/big.nc", "v",
       timeBounds = Map("time" ->
         ("2022-01-01 00:00:00", "2022-01-01 03:00:00")))
       .agg(sum(col("value"))).collect()(0).getDouble(0)
@@ -118,7 +118,7 @@ class S3FsSpec extends SparkSpec {
     val saved = GridOpen.residualJoinAbove
     val got = try {
       GridOpen.residualJoinAbove = 0 // force the join form at 2 survivors
-      GridOpen.netcdf3Catalog(spark, s"s3test:$dir/*.nc", "v",
+      GridOpen.catalog(spark, GridFormat.NetCDF3, s"s3test:$dir/*.nc", "v",
         timeBounds = Map("time" ->
           ("2022-01-01 00:00:00", "2022-01-02 03:00:00")))
         .groupBy(col("path")).agg(count(lit(1)).as("n"))
@@ -167,7 +167,7 @@ class S3FsSpec extends SparkSpec {
       assert(CoordCrop.nc3VarValues(s"s3test:$dir/c.nc", "lwp").nonEmpty)
       // the manifest-planned open never lists: full, correct rows for
       // the manifested members while the window is open
-      val got = GridOpen.netcdf3CatalogFromManifest(spark, manifest, "lwp")
+      val got = GridOpen.catalogFromManifest(spark, manifest, "lwp")
         .collect().map(r => (r.getString(0).split('/').last, r.getDouble(4)))
         .sorted
       assert(got.map(_._1).distinct.toSeq == Seq("a.nc", "b.nc"))
@@ -178,7 +178,7 @@ class S3FsSpec extends SparkSpec {
       spark, "netcdf3", s"s3test:$dir/*.nc", Seq("lwp"), manifest)
     assert((added, changed, removed, unchanged) == ((1, 0, 0, 2)),
       s"got ($added, $changed, $removed, $unchanged)")
-    val all = GridOpen.netcdf3CatalogFromManifest(spark, manifest, "lwp")
+    val all = GridOpen.catalogFromManifest(spark, manifest, "lwp")
     assert(all.select("path").distinct().count() == 3)
   }
 }

@@ -108,7 +108,7 @@ class SlowFsSpec extends SparkSpec {
     val rtt = 10L
     SlowFs.reset(rtt)
     val t0 = System.nanoTime()
-    val df = CoordCrop.zarrCatalog(spark, s"slowfs:$dir", "lwp",
+    val df = GridOpen.catalog(spark, GridFormat.Zarr, s"slowfs:$dir", "lwp",
       Map("y" -> (2200.0, 2500.0))) // only s2 intersects
     val rows = df.select("path", "value").collect()
     val wallMs = (System.nanoTime() - t0) / 1000000
@@ -153,7 +153,7 @@ class SlowFsSpec extends SparkSpec {
     val rtt = 20L
     SlowFs.reset(rtt)
     val t0 = System.nanoTime()
-    val df = GridOpen.netcdf3VarsCatalog(spark, s"slowfs:$dir", Seq("a", "b"))
+    val df = GridOpen.varsCatalog(spark, GridFormat.NetCDF3, s"slowfs:$dir", Seq("a", "b"))
     val wallMs = (System.nanoTime() - t0) / 1000000
     val nOps = SlowFs.opCount.get()
     SlowFs.reset(0)

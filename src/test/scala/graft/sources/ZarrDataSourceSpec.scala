@@ -272,7 +272,7 @@ class ZarrDataSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     ZarrSink.writeScenes(px, dir, "lwp", chunkRows = Some(4)).count()
     val manifest = s"$dir/_manifest"
     CatalogManifest.build(spark, "zarr", dir, Seq("lwp"), manifest)
-    val df = GridOpen.zarrCatalogFromManifest(spark, manifest, "lwp",
+    val df = GridOpen.catalogFromManifest(spark, manifest, "lwp",
       bounds = Map("x" -> (0.0, 20.0)))
     assert(df.collect().length == 2 * 6 * 3)
     val plan = df.queryExecution.executedPlan

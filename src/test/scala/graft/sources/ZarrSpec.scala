@@ -153,16 +153,31 @@ class ZarrSpec extends SparkSpec {
     assert(e2.getMessage.contains("expected"))
   }
 
+  /** The fixed scene both sink byte checks write: a 5 x 7 grid, NaN
+    * every 11th cell, ragged against every band height used below. */
+  private def sinkBytesInput = (for (j <- 0 until 5; i <- 0 until 7)
+    yield ("s0", new java.sql.Timestamp(0L), i * 10.0, j * 5.0 - 2.5,
+      if ((j * 7 + i) % 11 == 3) Double.NaN else (j * 7 + i) * 0.25 - 3.0))
+    .toDF("scene_id", "time", "x", "y", "value")
+
+  /** Every file under `root` (checksum sidecars excluded), by relative
+    * path. */
+  private def filesUnder(root: String): Map[String, Seq[Byte]] = {
+    val base = new java.io.File(root).toPath
+    val walk = java.nio.file.Files.walk(base)
+    try walk.filter(java.nio.file.Files.isRegularFile(_)).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filterNot(_.getFileName.toString.endsWith(".crc"))
+      .map(p => base.relativize(p).toString ->
+        java.nio.file.Files.readAllBytes(p).toSeq).toMap
+    finally walk.close()
+  }
+
   test("ZarrSink chunk files are byte-identical to the checked-in stores") {
     // src/test/resources/fixtures/zarr_sink_bytes holds what the sink
     // wrote for this fixed input before its chunk fill moved from List
     // to array indexing: raw, zlib and blosc stores, ragged edge bands
-    val fixtures = new java.io.File("src/test/resources/fixtures/zarr_sink_bytes")
-    val (ny, nx) = (5, 7)
-    val px = (for (j <- 0 until ny; i <- 0 until nx)
-      yield ("s0", new java.sql.Timestamp(0L), i * 10.0, j * 5.0 - 2.5,
-        if ((j * nx + i) % 11 == 3) Double.NaN else (j * nx + i) * 0.25 - 3.0))
-      .toDF("scene_id", "time", "x", "y", "value")
+    val px = sinkBytesInput
     val out = java.nio.file.Files.createTempDirectory("zarr-sink-bytes").toString
     ZarrSink.writeScenes(px, s"$out/raw", "lwp", chunkRows = Some(2)).count()
     ZarrSink.writeScenes(px, s"$out/zlib", "lwp", chunkRows = Some(3),
@@ -171,20 +186,37 @@ class ZarrSpec extends SparkSpec {
       blosc = true).count()
     ZarrSink.writeScenes(px, s"$out/blosc_zstd_bit", "lwp", blosc = true,
       bloscCodec = "zstd", bloscBitShuffle = true).count()
-    def files(root: java.io.File): Map[String, Seq[Byte]] = {
-      val base = root.toPath
-      val walk = java.nio.file.Files.walk(base)
-      try walk.filter(java.nio.file.Files.isRegularFile(_)).toArray.toSeq
-        .map(_.asInstanceOf[java.nio.file.Path])
-        .filterNot(_.getFileName.toString.endsWith(".crc"))
-        .map(p => base.relativize(p).toString ->
-          java.nio.file.Files.readAllBytes(p).toSeq).toMap
-      finally walk.close()
-    }
-    val want = files(fixtures)
-    val got = files(new java.io.File(out))
+    val want = filesUnder("src/test/resources/fixtures/zarr_sink_bytes")
+    val got = filesUnder(out)
     // lwp: .zarray + .zattrs per store, plus 3 + 2 + 3 + 1 chunk bands
     assert(want.keySet.count(_.contains("/lwp/")) == 2 * 4 + 9)
+    assert(got.keySet == want.keySet)
+    want.foreach { case (k, v) => assert(got(k) == v, s"$k differs") }
+  }
+
+  /** Writes the v3 sink's stores for [[sinkBytesInput]] under `out`:
+    * plain raw and gzip bands, and sharded raw and gzip stores (ragged
+    * last shard, inner chunks of two rows). */
+  private def writeZarr3SinkStores(out: String): Unit = {
+    val px = sinkBytesInput
+    Zarr3.writeScenes(px, s"$out/raw", "lwp", chunkRows = Some(2)).count()
+    Zarr3.writeScenes(px, s"$out/gzip", "lwp", chunkRows = Some(3),
+      gzipLevel = Some(6)).count()
+    Zarr3.writeScenes(px, s"$out/sharded", "lwp", chunkRows = Some(4),
+      shardInnerRows = Some(2)).count()
+    Zarr3.writeScenes(px, s"$out/sharded_gzip", "lwp", chunkRows = Some(4),
+      gzipLevel = Some(6), shardInnerRows = Some(2)).count()
+  }
+
+  test("Zarr3 sink chunk and shard files are byte-identical to the checked-in stores") {
+    // src/test/resources/fixtures/zarr3_sink_bytes holds what the v3
+    // sink wrote for this input while its chunk fill indexed Lists
+    val out = java.nio.file.Files.createTempDirectory("zarr3-sink-bytes").toString
+    writeZarr3SinkStores(out)
+    val want = filesUnder("src/test/resources/fixtures/zarr3_sink_bytes")
+    val got = filesUnder(out)
+    // lwp: zarr.json per store, plus 3 + 2 chunk bands and 2 + 2 shards
+    assert(want.keySet.count(_.contains("/lwp/")) == 4 + 9)
     assert(got.keySet == want.keySet)
     want.foreach { case (k, v) => assert(got(k) == v, s"$k differs") }
   }
