@@ -1057,10 +1057,11 @@ object SourceQueries {
 
     // ---- S12 scale: shard-INNER-chunk-parallel zarr v3 ingest -----------
     // The q159 pattern one level deeper: a consolidated SHARDED store
-    // (ZEP-2) read with one task per INNER chunk — phase 1 touches only
-    // each shard's crc32c-verified (offset, nbytes) index tail (KBs per
-    // shard regardless of shard size), phase 2 does positioned
-    // byte-window reads + inner-pipeline decode. This is the at-scale
+    // (ZEP-2) read through the grid scan with one task per INNER chunk —
+    // planning touches only each shard's crc32c-verified (offset,
+    // nbytes) index tail (KBs per shard regardless of shard size), the
+    // readers do coalesced byte-window reads + inner-pipeline decode,
+    // and the plan carries no exchange. This is the at-scale
     // posture sharding exists for: object counts stay low (few shard
     // files) while task granularity stays the inner grid. Oracle states
     // the planted series; the hash proves index walk -> window read ->
@@ -1070,7 +1071,7 @@ object SourceQueries {
       """SELECT CAST(j AS BIGINT) AS y, CAST(i AS BIGINT) AS x,
         |  CAST(j * 10 + i AS DOUBLE) * 0.25 - 20.0 AS lwp
         |FROM range(0,48) r1(j), range(0,10) r2(i)""".stripMargin) { (s, d) =>
-      import graft.sources.{Zarr3, ZarrChunkIngest}
+      import graft.sources.Zarr3
       import s.implicits._
       val dir = java.nio.file.Files.createTempDirectory("graft-q188").toString
       val (ny, nx) = (48, 10)
@@ -1081,20 +1082,21 @@ object SourceQueries {
       // 12-row shards of 4-row inner chunks: 4 shard files, 12 tasks
       Zarr3.writeScenes(px, dir, "lwp", chunkRows = Some(12),
         gzipLevel = Some(6), shardInnerRows = Some(4)).count()
-      ZarrChunkIngest.readValuesShardInner(s, s"$dir/cz.zarr", "lwp")
+      GridFormat.Zarr.reader(s).option("path", s"$dir/cz.zarr").load()
+        .where(col("dataset") === "lwp")
         .select((col("idx") / nx).cast("long").as("y"),
           (col("idx") % nx).cast("long").as("x"),
           col("value").as("lwp"))
     },
 
     // ---- S9b scale: chunk-parallel HDF5 ingest (consolidated stores) ----
-    // The q91 series read through HDF5ChunkIngest's two-phase path
-    // instead of whole-file decode: phase 1 parses superblock + object
+    // The q91 series read through the grid scan's chunk-parallel path
+    // instead of whole-file decode: planning parses superblock + object
     // headers + EA chunk index through a PagedFileInput on the driver
     // (metadata pages only — HDF5ChunkIngestSpec asserts the touched
-    // fraction), phase 2 fans the 192-chunk map out across executors,
-    // each task doing positioned byte-range reads + per-chunk
-    // deflate+shuffle decode. This is the ingest shape for consolidated
+    // fraction) and slices the 192-chunk map into partitions, no
+    // exchange; each reader does coalesced positioned byte-range reads
+    // + per-chunk deflate+shuffle decode. This is the ingest shape for consolidated
     // netCDF-4 stores bigger than one task (no reference analog —
     // utils/luigi.py:29-47 opens whole files via xarray). The oracle
     // states the series analytically, so the hash proves manifest
@@ -1104,13 +1106,14 @@ object SourceQueries {
       """SELECT CAST(t AS BIGINT) AS tstep, CAST(j AS BIGINT) AS y, CAST(i AS BIGINT) AS x,
         |  CAST((t*12 + j)*16 + i AS DOUBLE) * 0.0625 - 100.0 AS lwp
         |FROM range(0,24) r1(t), range(0,12) r2(j), range(0,16) r3(i)""".stripMargin) { (s, d) =>
-      import graft.sources.{HDF5, HDF5ChunkIngest}
+      import graft.sources.HDF5
       val dir = java.nio.file.Files.createTempDirectory("graft-q129").toString
       val bytes = HDF5.writeUnlimited(Seq(HDF5.DsSpec("lwp", Seq(24, 12, 16),
         Array.tabulate(24 * 12 * 16)(_ * 0.0625 - 100.0), chunkDims = Some(Seq(2, 3, 4)))),
         deflate = true, shuffle = true)
       java.nio.file.Files.write(java.nio.file.Paths.get(dir, "consolidated.h5"), bytes)
-      HDF5ChunkIngest.readValues(s, s"$dir/consolidated.h5", Some("lwp"))
+      GridFormat.Hdf5.reader(s).option("path", s"$dir/consolidated.h5").load()
+        .where(col("dataset") === "lwp")
         .select(
           expr("idx div 192").as("tstep"),
           expr("(idx div 16) % 12").as("y"),
@@ -1119,14 +1122,14 @@ object SourceQueries {
     },
 
     // ---- S9b scale: the DSv2 mount of the chunk-parallel HDF5 path ------
-    // q129's two-phase read through spark.read.format: split planning is
+    // q129's chunk-parallel read with a pushed filter: split planning is
     // the manifest's chunk map (one byte-adjacent task run per
     // InputPartition), and the dataset filter pushes into the PLAN phase
     // — the decoy dataset's chunks are never planned, let alone read
     // (Hdf5DataSourceSpec proves payload bytes stay untouched under
     // index-only projections). The oracle states the lwp series
     // analytically, so the hash proves pruning dropped no lwp chunk and
-    // the DSv2 row assembly matches the library path value-exactly.
+    // the DSv2 row assembly is value-exact.
     QueryDef.sqlBacked(
       "q191_hdf5_dsv2_pruned",
       """SELECT CAST(j AS BIGINT) AS y, CAST(i AS BIGINT) AS x,
@@ -1377,9 +1380,10 @@ object SourceQueries {
 
     // ---- S12 scale: chunk-parallel zarr store ingest --------------------
     // The third chunk-parallel sibling (q129 HDF5, q153 netCDF-3): one
-    // consolidated 48x10 v3 store (12 row-band chunks, gzip) read with
-    // one decode task per chunk — the grid IS zarr's designed unit of
-    // parallelism, phase 1 is a KB metadata parse. Oracle states the
+    // consolidated 48x10 v3 store (12 row-band chunks, gzip) read through
+    // the grid scan, one decode task per chunk — the grid IS zarr's
+    // designed unit of parallelism, planning is a KB metadata parse.
+    // Oracle states the
     // planted series; the hash proves key enumeration, per-chunk gzip
     // decode, pad skipping and linear-index reassembly.
     QueryDef.sqlBacked(
@@ -1387,7 +1391,7 @@ object SourceQueries {
       """SELECT CAST(j AS BIGINT) AS y, CAST(i AS BIGINT) AS x,
         |  CAST(j * 10 + i AS DOUBLE) * 0.25 - 20.0 AS lwp
         |FROM range(0,48) r1(j), range(0,10) r2(i)""".stripMargin) { (s, d) =>
-      import graft.sources.{Zarr3, ZarrChunkIngest}
+      import graft.sources.Zarr3
       import s.implicits._
       val dir = java.nio.file.Files.createTempDirectory("graft-q159").toString
       val (ny, nx) = (48, 10)
@@ -1396,7 +1400,8 @@ object SourceQueries {
           (j * nx + i) * 0.25 - 20.0))
         .toDF("scene_id", "time", "x", "y", "value")
       Zarr3.writeScenes(px, dir, "lwp", chunkRows = Some(4), gzipLevel = Some(6)).count()
-      ZarrChunkIngest.readValues(s, s"$dir/cz.zarr", "lwp")
+      GridFormat.Zarr.reader(s).option("path", s"$dir/cz.zarr").load()
+        .where(col("dataset") === "lwp")
         .select(expr(s"idx div $nx").as("y"), (col("idx") % nx).as("x"),
           col("value").as("lwp"))
     },
@@ -1405,8 +1410,8 @@ object SourceQueries {
     // The q129 shape for the CLASSIC format: a consolidated 40-record
     // CDF store (two record variables, so the general padded multi-var
     // record stride is in play) written by the Scala writer, then read
-    // through NetCDF3ChunkIngest's two-phase path — header-only parse
-    // on the driver, record-batch tasks fanned out by (path, recStart),
+    // through the grid scan — header-only parse on the driver, 1 KB
+    // record-batch tasks sliced into partitions with no exchange,
     // positioned reads per record. The oracle states the planted series
     // analytically, so the hash proves header geometry, record-offset
     // arithmetic and linear-index reassembly exactly.
@@ -1415,7 +1420,7 @@ object SourceQueries {
       """SELECT CAST(t AS BIGINT) AS tstep, CAST(j AS BIGINT) AS y, CAST(i AS BIGINT) AS x,
         |  CAST((t*6 + j)*5 + i AS DOUBLE) * 0.5 - 10.0 AS flux
         |FROM range(0,40) r1(t), range(0,6) r2(j), range(0,5) r3(i)""".stripMargin) { (s, d) =>
-      import graft.sources.{NetCDF3, NetCDF3ChunkIngest}
+      import graft.sources.NetCDF3
       val dir = java.nio.file.Files.createTempDirectory("graft-q153").toString
       val (nrec, ny, nx) = (40, 6, 5)
       val bytes = NetCDF3.write(
@@ -1428,8 +1433,9 @@ object SourceQueries {
             Array.tabulate(nrec)(_ * 0.25))),
         numRecs = nrec)
       java.nio.file.Files.write(java.nio.file.Paths.get(dir, "consolidated.nc"), bytes)
-      NetCDF3ChunkIngest.readValues(s, s"$dir/consolidated.nc", "flux",
-        targetBytes = 1024)
+      GridFormat.NetCDF3.reader(s).option("path", s"$dir/consolidated.nc")
+        .option("targetBytes", "1024").load()
+        .where(col("dataset") === "flux")
         .select(
           expr(s"idx div ${ny * nx}").as("tstep"),
           expr(s"(idx div $nx) % $ny").as("y"),
@@ -1685,8 +1691,7 @@ object SourceQueries {
     },
 
     // ---- S9 scale: the DSv2 mount of the netCDF-3 record path -----------
-    // q153's two-phase read through spark.read.format — the fourth
-    // mount sibling (HDF5/Arrow/zarr/netCDF-3): split planning is the
+    // q153's grid-scan read with a pushed filter: split planning is the
     // header's closed-form record-offset arithmetic, the dataset filter
     // pushes into the PLAN phase (the decoy record variable's tasks are
     // never planned; NetCDF3DataSourceSpec proves payload bytes stay
@@ -1839,7 +1844,7 @@ object SourceQueries {
         |WHERE j*100.0 BETWEEN 300.0 AND 600.0
         |  AND i*100.0 BETWEEN 100.0 AND 300.0""".stripMargin) { (s, d) =>
       val store = ensureQ194Zarr(s) + "/zd0.zarr"
-      graft.sources.CoordCrop.zarr(s, store, "lwp",
+      graft.sources.CoordCrop.crop(s, GridFormat.Zarr, store, "lwp",
           Map("y" -> (300.0, 600.0), "x" -> (100.0, 300.0)))
         .select(col("d0").as("y"), col("d1").as("x"), col("value"))
     },
@@ -1856,7 +1861,7 @@ object SourceQueries {
         |FROM range(0,8) r1(t), range(0,6) r2(j), range(0,5) r3(i)
         |WHERE 100 + t*10 BETWEEN 120 AND 155
         |  AND j*2.0 BETWEEN 2.0 AND 7.0""".stripMargin) { (s, d) =>
-      graft.sources.CoordCrop.netcdf3(s, ensureQ205Nc(), "sst",
+      graft.sources.CoordCrop.crop(s, GridFormat.NetCDF3, ensureQ205Nc(), "sst",
           Map("time" -> (120.0, 155.0), "y" -> (2.0, 7.0)))
         .select(col("d0").as("tstep"), col("d1").as("y"),
           col("d2").as("x"), col("value").as("sst"))
@@ -1875,8 +1880,8 @@ object SourceQueries {
         |FROM range(0,8) r1(j), range(0,12) r2(i)
         |WHERE j*1.5 BETWEEN 6.0 AND 10.5
         |  AND (11-i)*0.25 BETWEEN 0.75 AND 2.0""".stripMargin) { (s, d) =>
-      graft.sources.CoordCrop.hdf5(s, ensureQ202H5(), "var", Seq("y", "x"),
-          Map("y" -> (6.0, 10.5), "x" -> (0.75, 2.0)))
+      graft.sources.CoordCrop.crop(s, GridFormat.Hdf5, ensureQ202H5(), "var",
+          Map("y" -> (6.0, 10.5), "x" -> (0.75, 2.0)), dims = Seq("y", "x"))
         .select(col("d0").as("y"), col("d1").as("x"), col("value"))
     },
 
@@ -1896,7 +1901,7 @@ object SourceQueries {
         |FROM range(0,6) r1(j), range(0,10) r2(i)
         |WHERE 10 + j*10 BETWEEN 20 AND 40
         |  AND 5 + i*10 BETWEEN 35 AND 75""".stripMargin) { (s, d) =>
-      graft.sources.CoordCrop.hdf5Netcdf4(s, ensureQ207NcdimH5(), "tair",
+      graft.sources.CoordCrop.crop(s, GridFormat.Hdf5, ensureQ207NcdimH5(), "tair",
           Map("y" -> (20.0, 40.0), "x" -> (35.0, 75.0)))
         .select(col("d0").as("y"), col("d1").as("x"), col("value"))
     },
@@ -1960,7 +1965,7 @@ object SourceQueries {
       val units = CfTime.hdf5Units(path, "time")
       val (lo, hi) = CfTime.numericRange(units,
         "2020-01-01 06:00:00", "2020-01-01T18:00:00Z")
-      CoordCrop.hdf5Netcdf4(s, path, "tair", Map("time" -> (lo, hi)))
+      CoordCrop.crop(s, GridFormat.Hdf5, path, "tair", Map("time" -> (lo, hi)))
         .select(CfTime.hdf5AffineTimestamp(path, "time", col("d0")).as("ts"),
           col("d1").as("x"), col("value"))
     },
@@ -1978,7 +1983,7 @@ object SourceQueries {
         |FROM range(0,6) r1(j), range(0,10) r2(i)
         |WHERE 10 + j*10 BETWEEN 20 AND 40
         |  AND 5 + i*10 BETWEEN 35 AND 75""".stripMargin) { (s, d) =>
-      graft.sources.CoordCrop.hdf5Netcdf4(s, ensureQ212GroupH5(), "model/t2m",
+      graft.sources.CoordCrop.crop(s, GridFormat.Hdf5, ensureQ212GroupH5(), "model/t2m",
           Map("model/y" -> (20.0, 40.0), "model/x" -> (35.0, 75.0)))
         .select(col("d0").as("y"), col("d1").as("x"), col("value"))
     },
@@ -2000,7 +2005,7 @@ object SourceQueries {
       val units = CfTime.zarrUnits(store, "y")
       val (lo, hi) = CfTime.numericRange(units,
         "2021-03-01 03:00:00", "2021-03-01 05:00:00")
-      CoordCrop.zarr(s, store, "lwp", Map("y" -> (lo, hi)))
+      CoordCrop.crop(s, GridFormat.Zarr, store, "lwp", Map("y" -> (lo, hi)))
         .select(CfTime.zarrAffineTimestamp(store, "y", col("d0")).as("ts"),
           col("d1").as("x"), col("value"))
     },
@@ -2021,7 +2026,7 @@ object SourceQueries {
       val units = CfTime.netcdf3Units(path, "time")
       val (lo, hi) = CfTime.numericRange(units,
         "2022-05-10 00:45:00", "2022-05-10T02:30:00Z")
-      CoordCrop.netcdf3(s, path, "flux", Map("time" -> (lo, hi)))
+      CoordCrop.crop(s, GridFormat.NetCDF3, path, "flux", Map("time" -> (lo, hi)))
         .select(CfTime.netcdf3AffineTimestamp(path, "time", col("d0")).as("ts"),
           col("d1").as("x"), col("value").as("flux"))
     },
@@ -2125,7 +2130,7 @@ object SourceQueries {
       val units = "days since 2000-02-25"
       val (lo, hi) = CfCalendar.numericRange(units, "360_day",
         "2000-02-28", "2000-03-02")
-      CoordCrop.netcdf3(s, path, "v", Map("time" -> (lo, hi)))
+      CoordCrop.crop(s, GridFormat.NetCDF3, path, "v", Map("time" -> (lo, hi)))
         .select(CfCalendar.datetimeFromValues(col("d0"), units, "360_day",
           Array.tabulate(8)(_.toDouble)).as("dt"),
           col("d1").as("x"), col("value"))

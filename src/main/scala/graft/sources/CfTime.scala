@@ -173,7 +173,7 @@ object CfTime {
   def hdf5AffineTimestamp(path: String, coordDataset: String,
       dimCol: Column): Column = {
     val units = hdf5Units(path, coordDataset)
-    val coords = CoordCrop.hdf5DatasetValues(path, coordDataset)
+    val coords = GridFormat.Hdf5.arrayValues(path, coordDataset)
     val (first, stride) = affineOf(coords).getOrElse(
       fail(s"$path/$coordDataset is not evenly spaced — decode values row-wise"))
     affineTimestamp(dimCol, units, first, stride)
@@ -183,7 +183,7 @@ object CfTime {
   def zarrAffineTimestamp(store: String, coordArray: String,
       dimCol: Column): Column = {
     val units = zarrUnits(store, coordArray)
-    val coords = CoordCrop.zarrArrayValues(store, coordArray)
+    val coords = GridFormat.Zarr.arrayValues(store, coordArray)
     val (first, stride) = affineOf(coords).getOrElse(
       fail(s"$store/$coordArray is not evenly spaced — decode values row-wise"))
     affineTimestamp(dimCol, units, first, stride)
@@ -193,7 +193,7 @@ object CfTime {
   def netcdf3AffineTimestamp(path: String, coordVar: String,
       dimCol: Column): Column = {
     val units = netcdf3Units(path, coordVar)
-    val coords = CoordCrop.nc3VarValues(path, coordVar)
+    val coords = GridFormat.NetCDF3.arrayValues(path, coordVar)
     val (first, stride) = affineOf(coords).getOrElse(
       fail(s"$path/$coordVar is not evenly spaced — decode values row-wise"))
     affineTimestamp(dimCol, units, first, stride)

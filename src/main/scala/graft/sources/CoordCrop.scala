@@ -22,10 +22,13 @@ import org.apache.spark.sql.functions._
   *
   * Dimension names come from the store's own metadata: zarr v3
   * `dimension_names`, zarr v2 xarray `_ARRAY_DIMENSIONS` in `.zattrs`,
-  * the netCDF-3 header's dimension table. HDF5 carries no names our
-  * writer emits, so its variant takes the caller's dimension→coord-
-  * dataset mapping explicitly (the dimension-scale convention, minus
-  * the attribute plumbing). Exactness never depends on the mapping:
+  * the netCDF-3 header's dimension table, HDF5's netCDF-4 dimension
+  * scales (`DIMENSION_LIST`). An HDF5 file without dimension scales
+  * takes the caller's dimension→coord-dataset mapping explicitly (the
+  * dimension-scale convention, minus the attribute plumbing).
+  * [[GridOpen]] crops from the coordinates its axes read already holds;
+  * [[crop]] is the same crop over the raw mount rows. Exactness never
+  * depends on the mapping:
   * every predicate this helper adds is a normal residual-checked
   * filter — a wrong coord array can only change which rows SURVIVE,
   * identically in plan prune and residual re-check.
@@ -76,7 +79,30 @@ object CoordCrop {
         s"${MountDsv2.DimCols.mkString("/")} only")
   }
 
-  // ---- zarr --------------------------------------------------------------
+  /** The `dataset` rows of the `format` mount at ONE `store`, cropped to
+    * the named coordinate-value `bounds` (inclusive). Each bound becomes
+    * a pushable `dK` range, so only box-intersecting chunks PLAN (a
+    * netCDF-3 record-dimension bound prunes record batches; trailing-dim
+    * bounds stay residual-exact over the record slabs). The axes are the
+    * variable's own dimension names ([[GridFormat.dimNames]]) unless
+    * `dims` names axis k's 1-D coordinate variable explicitly — the
+    * dimension-scale convention for HDF5 files without DIMENSION_LIST.
+    * Unlike [[GridOpen.open]], the rows stay the raw mount's: no named
+    * axes, no mask-and-scale. */
+  def crop(spark: SparkSession, format: GridFormat, store: String, dataset: String,
+      bounds: Map[String, (Double, Double)], dims: Seq[String] = Nil): DataFrame = {
+    val names = if (dims.nonEmpty) dims else format.dimNames(store, dataset)
+    val base = format.reader(spark).option("path", store).load()
+      .where(col("dataset") === dataset)
+    // parMap: each bound dim costs its coordinate variable's reads
+    ByteStore.parMap(bounds.toSeq.sortBy(_._1)) { case (name, b) =>
+      val k = names.indexOf(name)
+      checkDim(k, name, names)
+      (k, format.arrayValues(store, name), b)
+    }.foldLeft(base) { case (df, (k, coords, b)) => df.where(dimPredicate(k, coords, b)) }
+  }
+
+  // ---- dimension names ---------------------------------------------------
 
   /** The array's dimension names: v3 `dimension_names`, v2 xarray
     * `_ARRAY_DIMENSIONS` from `.zattrs`. */
@@ -101,139 +127,24 @@ object CoordCrop {
         }
     }
 
-  /** One zarr array's full values in global C order, absent chunks as
-    * fill, read driver-side (the 1-D coordinate arrays this serves are
-    * KB-scale): each chunk's block is copied into place run by run. */
-  private[sources] def zarrArrayValues(store: String, name: String): Array[Double] = {
-    import ZarrChunkIngest._
-    val meta = metaOf(store, name)
-    val (shape, _, fill) = dimsOf(meta)
-    val out = Array.fill(shape.product)(fill)
-    def scatter(b: Block): Unit = if (b.values != null)
-      foreachRun(b)((k0, g0, _, len) => System.arraycopy(b.values, k0, out, g0.toInt, len))
-    val stats = new ReadStats
-    meta match {
-      case Right(m) if m.sharding.isDefined =>
-        val handles = scala.collection.mutable.Map.empty[String, ByteStore.ReadAt]
-        try innerBlocks(shardInnerTasks(store, name).toIndexedSeq, m, withValues = true,
-            p => handles.getOrElseUpdate(p, ByteStore.open(p)), stats).foreach(scatter)
-        finally handles.values.foreach(_.close())
-      case m =>
-        chunkTasks(store, name).foreach(t => scatter(chunkBlock(t, m, withValues = true, stats)))
-    }
-    out
-  }
-
-  /** The `dataset` rows of the zarr mount at `store`, cropped to the
-    * named coordinate-value `bounds` (inclusive). Each bound becomes a
-    * pushable `dK` range, so only box-intersecting chunks PLAN. */
-  def zarr(spark: SparkSession, store: String, dataset: String,
-      bounds: Map[String, (Double, Double)]): DataFrame = {
-    val dims = zarrDimNames(store, dataset)
-    var df = spark.read.format("graft.sources.ZarrDataSource")
-      .option("path", store).load()
-      .where(col("dataset") === dataset)
-    // parMap: each bound dim costs a meta read + a coord-chunk read
-    val preds = ByteStore.parMap(bounds.toSeq.sortBy(_._1)) { case (name, b) =>
-      val k = dims.indexOf(name)
-      checkDim(k, name, dims)
-      (k, zarrArrayValues(store, name), b)
-    }
-    preds.foreach { case (k, coords, b) =>
-      df = df.where(dimPredicate(k, coords, b))
-    }
-    df
-  }
-
-  // ---- netCDF-3 ----------------------------------------------------------
-
-  /** One netCDF-3 variable's full values, idx-ordered, read driver-side
-    * through the record-task machinery (so record-dim coordinate
-    * variables' strided slabs read correctly and coalesced). */
-  private[sources] def nc3VarValues(path: String, name: String): Array[Double] = {
-    val tasks = NetCDF3ChunkIngest.recordTasks(Seq(path), name)
-    val in = ByteStore.open(path)
-    try tasks.iterator.flatMap(t => NetCDF3ChunkIngest.taskValues(t, in))
-      .toArray.sortBy(_._1).map(_._2)
-    finally in.close()
-  }
-
-  /** The `varName` rows of the netCDF-3 mount at `path` (ONE store — the
-    * classic-format header names the dims), cropped to coordinate-value
-    * `bounds`. The record-dimension bound prunes record batches at plan
-    * time; trailing-dim bounds push as `dK` ranges (residual-exact
-    * always, pruning where the mount's record slabs allow). */
-  def netcdf3(spark: SparkSession, path: String, varName: String,
-      bounds: Map[String, (Double, Double)]): DataFrame = {
+  /** A netCDF-3 variable's dimension names from the header; a bounded
+    * name must also be a 1-D coordinate variable over its dimension. */
+  private[sources] def nc3DimNames(path: String, varName: String): Seq[String] = {
     val h = NetCDF3ChunkIngest.headerOf(path)
     val v = h.vars.find(_.name == varName)
       .getOrElse(fail(s"variable '$varName' not in $path"))
-    val dims = v.dimIds.map(h.dims(_).name)
-    var df = spark.read.format("graft.sources.NetCDF3DataSource")
-      .option("path", path).load()
-      .where(col("dataset") === varName)
-    val preds = ByteStore.parMap(bounds.toSeq.sortBy(_._1)) { case (name, b) =>
-      val k = dims.indexOf(name)
-      checkDim(k, name, dims)
-      if (!h.vars.exists(cv => cv.name == name && cv.dimIds == Seq(v.dimIds(k))))
-        fail(s"no 1-D coordinate variable '$name' in $path")
-      (k, nc3VarValues(path, name), b)
+    v.dimIds.map { id =>
+      val n = h.dims(id).name
+      if (h.vars.exists(cv => cv.name == n && cv.dimIds == Seq(id))) n
+      else s"<no coordinate variable '$n'>"
     }
-    preds.foreach { case (k, coords, b) =>
-      df = df.where(dimPredicate(k, coords, b))
-    }
-    df
   }
 
-  // ---- HDF5 --------------------------------------------------------------
-
-  /** One 1-D HDF5 dataset's full values, idx-ordered, read driver-side
-    * from its chunk manifest. */
-  private[sources] def hdf5DatasetValues(path: String, name: String): Array[Double] = {
-    val tasks = HDF5ChunkIngest.chunkTasks(Seq(path), Some(name))
-    if (tasks.isEmpty) fail(s"no dataset '$name' in $path")
-    val in = ByteStore.open(path)
-    try tasks.iterator.flatMap { t =>
-      val v = HDF5.H5Var(t.dataset, t.dims, t.chunkDims, t.dtClass, t.dtSize,
-        t.bigEndian, t.filters, t.signedInt)
-      HDF5.decodeChunk(in.readFully(t.offset, t.nbytes.toInt), v, t.origin)
-    }.toArray.sortBy(_._1).map(_._2)
-    finally in.close()
-  }
-
-  /** The `dataset` rows of the HDF5 mount at `path`, cropped to
-    * coordinate-value `bounds`. HDF5 stores don't carry dimension names
-    * our decoder surfaces, so `dims` is the caller's axis→coordinate-
-    * dataset mapping (dimension-scale convention): `dims(k)` names the
-    * 1-D dataset holding axis k's coordinates. */
-  def hdf5(spark: SparkSession, path: String, dataset: String,
-      dims: Seq[String], bounds: Map[String, (Double, Double)]): DataFrame = {
-    var df = spark.read.format("graft.sources.Hdf5DataSource")
-      .option("path", path).load()
-      .where(col("dataset") === dataset)
-    val preds = ByteStore.parMap(bounds.toSeq.sortBy(_._1)) { case (name, b) =>
-      val k = dims.indexOf(name)
-      checkDim(k, name, dims)
-      (k, hdf5DatasetValues(path, name), b)
-    }
-    preds.foreach { case (k, coords, b) =>
-      df = df.where(dimPredicate(k, coords, b))
-    }
-    df
-  }
-
-  /** [[hdf5]] with the axis mapping discovered from the file's own
-    * netCDF-4 dimension scales: the dataset's `DIMENSION_LIST`
-    * attribute names the 1-D coordinate datasets per axis (what xarray
-    * surfaces as the variable's dims — the reference's netCDF-4 open
-    * path). Fails loudly when the variable carries no DIMENSION_LIST
-    * or a bounded axis has no attached scale. */
-  def hdf5Netcdf4(spark: SparkSession, path: String, dataset: String,
-      bounds: Map[String, (Double, Double)]): DataFrame = {
-    val dims = hdf5DimNames(path, dataset)
-    hdf5(spark, path, dataset, dims, bounds)
-  }
-
+  /** The HDF5 dataset's axes from its netCDF-4 dimension scales: the
+    * dataset's `DIMENSION_LIST` attribute names the 1-D coordinate
+    * datasets per axis (what xarray surfaces as the variable's dims —
+    * the reference's netCDF-4 open path). Fails loudly when the variable
+    * carries no DIMENSION_LIST. */
   private[sources] def hdf5DimNames(path: String, dataset: String): Seq[String] = {
     val in = new PagedFileInput(path)
     val dimNames = try {

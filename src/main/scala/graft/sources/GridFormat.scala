@@ -1,13 +1,15 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.{DataFrameReader, SparkSession}
 
 /** The storage format of a gridded store or scene catalog: zarr stores,
   * netCDF classic files, or netCDF-4/HDF5 files. [[GridOpen]] takes it
   * as a value (a manifest-planned open reads it from the manifest's own
   * `format` column) and each case owns the primitives that differ by
   * format: raw axes, CF pack attrs, store listing, variable membership,
-  * and the mount over a member list. */
+  * the mount over a member list, and the grid scan's two format steps —
+  * [[plan]] (stores to pruned chunk tasks) and [[decode]] (tasks to
+  * blocks). Everything else about a read is [[GridScan]]'s. */
 sealed abstract class GridFormat(val name: String, source: String)
     extends Product with Serializable {
 
@@ -20,6 +22,10 @@ sealed abstract class GridFormat(val name: String, source: String)
   /** One variable's CF pack attrs. */
   def cfAttrs(store: String, variable: String): CfDecode.CfAttrs
 
+  /** One variable's dimension names, axis by axis — the names
+    * [[CoordCrop.crop]] bounds by. */
+  def dimNames(store: String, variable: String): Seq[String]
+
   /** The stores under `dir`: zarr scene-store roots, or the resolved
     * per-scene files of a file catalog. */
   def stores(dir: String): Seq[String]
@@ -30,9 +36,6 @@ sealed abstract class GridFormat(val name: String, source: String)
   /** The stores under `dir` holding every one of `variables`. */
   def holdingAll(dir: String, variables: Seq[String]): Seq[String]
 
-  /** The stores a live single-variable catalog open over `dir` mounts. */
-  def holding(dir: String, variable: String): Seq[String]
-
   /** The mount over an explicit member list: no listing, no discovery. */
   def mountMembers(spark: SparkSession, dir: String, members: Seq[String],
       variables: Seq[String]): DataFrameReader
@@ -41,10 +44,28 @@ sealed abstract class GridFormat(val name: String, source: String)
   def mountCatalog(spark: SparkSession, dir: String, members: Seq[String],
       variables: Seq[String]): DataFrameReader
 
-  /** One store's `variable` rows cropped to coordinate-value `bounds`
-    * (see [[CoordCrop]]); `axes` are the variable's axes. */
-  def crop(spark: SparkSession, store: String, variable: String,
-      axes: Seq[GridOpen.Axis], bounds: Map[String, (Double, Double)]): DataFrame
+  /** Plan the mount at `path` (with its `options`) on the driver: its
+    * stores' chunk tasks surviving `prune`, as lists of one task kind
+    * each ([[GridScan]] slices each list into its own partitions). */
+  private[sources] def plan(path: String, options: Map[String, String],
+      prune: GridScan.Prune): Seq[Seq[GridScan.Task]]
+
+  /** Decode one partition's tasks (all of one kind, in plan order) into
+    * blocks; without `withValues` no payload byte is read. */
+  private[sources] def decode(tasks: Seq[GridScan.Task], withValues: Boolean,
+      stats: GridScan.ReadStats, files: GridScan.OpenFiles): Iterator[GridScan.Block]
+
+  /** Every block of one variable of one store, values read. */
+  protected def arrayBlocks(store: String, variable: String,
+      files: GridScan.OpenFiles): Iterator[GridScan.Block]
+
+  /** One variable's full values in global C order, read driver-side
+    * (the KB-scale 1-D coordinate arrays of the axes): the blocks of its
+    * unpruned plan, decoded into place. */
+  def arrayValues(store: String, variable: String): Array[Double] = {
+    val files = new GridScan.OpenFiles
+    try GridScan.scatter(arrayBlocks(store, variable, files)) finally files.close()
+  }
 
   override def toString: String = name
 }
@@ -56,7 +77,7 @@ object GridFormat {
     * `path` plus every (store, variable) pair as `arrays`. */
   case object Zarr extends GridFormat("zarr", "graft.sources.ZarrDataSource") {
     def rawAxes(store: String, variable: String): Seq[GridOpen.RawAxis] = {
-      val dims = CoordCrop.zarrDimNames(store, variable)
+      val dims = dimNames(store, variable)
       GridOpen.checkRank(dims.length, s"$store/$variable")
       dims.zipWithIndex.map { case (n, k) =>
         val node = ByteStore.join(store, n)
@@ -65,26 +86,26 @@ object GridFormat {
         if (!hasCoord) GridOpen.RawAxis(k, n, None, None, None)
         else {
           val (u, c) = CfTime.zarrTimeAttrs(store, n)
-          GridOpen.RawAxis(k, n, u, c, Some(CoordCrop.zarrArrayValues(store, n)))
+          GridOpen.RawAxis(k, n, u, c, Some(arrayValues(store, n)))
         }
       }
     }
     def cfAttrs(store: String, variable: String): CfDecode.CfAttrs =
       CfDecode.zarrCfAttrs(store, variable)
+    def dimNames(store: String, variable: String): Seq[String] =
+      CoordCrop.zarrDimNames(store, variable)
     def stores(dir: String): Seq[String] =
-      ZarrDataSource.discover(dir).map(_._1).distinct.sorted
+      ZarrChunkIngest.discover(dir).map(_._1).distinct.sorted
     def variablesIn(store: String): Set[String] =
-      ZarrDataSource.arraysIn(store).toSet
+      ZarrChunkIngest.arraysIn(store).toSet
     def holdingAll(dir: String, variables: Seq[String]): Seq[String] = {
-      val found = ZarrDataSource.discover(dir).groupBy(_._1).collect {
+      val found = ZarrChunkIngest.discover(dir).groupBy(_._1).collect {
         case (s, as) if variables.forall(v => as.exists(_._2 == v)) => s
       }.toSeq.sorted
       require(found.nonEmpty,
         s"grid open: no store under $dir holds all of ${variables.mkString(",")}")
       found
     }
-    def holding(dir: String, variable: String): Seq[String] =
-      holdingAll(dir, Seq(variable))
     def mountMembers(spark: SparkSession, dir: String, members: Seq[String],
         variables: Seq[String]): DataFrameReader =
       reader(spark).option("path", dir)
@@ -95,9 +116,15 @@ object GridFormat {
     def mountCatalog(spark: SparkSession, dir: String, members: Seq[String],
         variables: Seq[String]): DataFrameReader =
       mountMembers(spark, dir, members, variables)
-    def crop(spark: SparkSession, store: String, variable: String,
-        axes: Seq[GridOpen.Axis], bounds: Map[String, (Double, Double)]): DataFrame =
-      CoordCrop.zarr(spark, store, variable, bounds)
+    private[sources] def plan(path: String, options: Map[String, String],
+        prune: GridScan.Prune): Seq[Seq[GridScan.Task]] =
+      ZarrChunkIngest.plan(path, options, prune)
+    private[sources] def decode(tasks: Seq[GridScan.Task], withValues: Boolean,
+        stats: GridScan.ReadStats, files: GridScan.OpenFiles): Iterator[GridScan.Block] =
+      ZarrChunkIngest.decode(tasks, withValues, stats, files)
+    protected def arrayBlocks(store: String, variable: String,
+        files: GridScan.OpenFiles): Iterator[GridScan.Block] =
+      ZarrChunkIngest.arrayBlocks(store, variable, files)
   }
 
   /** A catalog of per-scene files: a dir (every file in it) or a glob.
@@ -115,9 +142,6 @@ object GridFormat {
         s"grid open: no file under $dir holds all of ${variables.mkString(",")}")
       found
     }
-    // every file, unread: the open's own axes read fails loudly on a
-    // file lacking the variable, so no membership wave is paid
-    def holding(dir: String, variable: String): Seq[String] = stores(dir)
     def mountMembers(spark: SparkSession, dir: String, members: Seq[String],
         variables: Seq[String]): DataFrameReader =
       reader(spark).option("path", members.mkString("\n") + "\n")
@@ -140,45 +164,63 @@ object GridFormat {
           GridOpen.RawAxis(k, n, None, None, None)
         else {
           val (u, c) = CfTime.netcdf3TimeAttrs(path, n)
-          GridOpen.RawAxis(k, n, u, c, Some(CoordCrop.nc3VarValues(path, n)))
+          GridOpen.RawAxis(k, n, u, c, Some(arrayValues(path, n)))
         }
       }
     }
     def cfAttrs(path: String, variable: String): CfDecode.CfAttrs =
       CfDecode.netcdf3CfAttrs(path, variable)
+    def dimNames(path: String, variable: String): Seq[String] =
+      CoordCrop.nc3DimNames(path, variable)
     def variablesIn(path: String): Set[String] =
       NetCDF3ChunkIngest.headerOf(path).vars.map(_.name).toSet
-    def crop(spark: SparkSession, path: String, variable: String,
-        axes: Seq[GridOpen.Axis], bounds: Map[String, (Double, Double)]): DataFrame =
-      CoordCrop.netcdf3(spark, path, variable, bounds)
+    private[sources] def plan(path: String, options: Map[String, String],
+        prune: GridScan.Prune): Seq[Seq[GridScan.Task]] =
+      NetCDF3ChunkIngest.plan(path,
+        options.get("targetBytes").map(_.toLong).getOrElse(4L << 20), prune)
+    private[sources] def decode(tasks: Seq[GridScan.Task], withValues: Boolean,
+        stats: GridScan.ReadStats, files: GridScan.OpenFiles): Iterator[GridScan.Block] =
+      NetCDF3ChunkIngest.decode(tasks, withValues, stats, files)
+    protected def arrayBlocks(path: String, variable: String,
+        files: GridScan.OpenFiles): Iterator[GridScan.Block] =
+      NetCDF3ChunkIngest.arrayBlocks(path, variable, files)
   }
 
   /** netCDF-4/HDF5 scene files, axes named by their dimension scales. */
   case object Hdf5 extends FileFormat("hdf5", "graft.sources.Hdf5DataSource") {
     def rawAxes(path: String, variable: String): Seq[GridOpen.RawAxis] = {
-      val dims = CoordCrop.hdf5DimNames(path, variable)
+      val dims = dimNames(path, variable)
       GridOpen.checkRank(dims.length, s"$path/$variable")
       dims.zipWithIndex.map { case (n, k) =>
         if (n.startsWith("<unnamed")) GridOpen.RawAxis(k, s"dim_$k", None, None, None)
         else {
           val (u, c) = CfTime.hdf5TimeAttrs(path, n)
-          GridOpen.RawAxis(k, n, u, c, Some(CoordCrop.hdf5DatasetValues(path, n)))
+          GridOpen.RawAxis(k, n, u, c, Some(arrayValues(path, n)))
         }
       }
     }
     def cfAttrs(path: String, variable: String): CfDecode.CfAttrs =
       CfDecode.hdf5CfAttrs(path, variable)
+    def dimNames(path: String, variable: String): Seq[String] =
+      CoordCrop.hdf5DimNames(path, variable)
     // datasets carrying a DIMENSION_LIST
     def variablesIn(path: String): Set[String] = {
       val in = new PagedFileInput(path)
       try HDF5.dimensionNames(in).keySet finally in.close()
     }
-    def crop(spark: SparkSession, path: String, variable: String,
-        axes: Seq[GridOpen.Axis], bounds: Map[String, (Double, Double)]): DataFrame =
-      CoordCrop.hdf5(spark, path, variable, axes.map(_.name), bounds)
+    private[sources] def plan(path: String, options: Map[String, String],
+        prune: GridScan.Prune): Seq[Seq[GridScan.Task]] =
+      HDF5ChunkIngest.plan(path, prune)
+    private[sources] def decode(tasks: Seq[GridScan.Task], withValues: Boolean,
+        stats: GridScan.ReadStats, files: GridScan.OpenFiles): Iterator[GridScan.Block] =
+      HDF5ChunkIngest.decode(tasks, withValues, stats, files)
+    protected def arrayBlocks(path: String, variable: String,
+        files: GridScan.OpenFiles): Iterator[GridScan.Block] =
+      HDF5ChunkIngest.arrayBlocks(path, variable, files)
   }
 
-  private val all: Seq[GridFormat] = Seq(Zarr, NetCDF3, Hdf5)
+  /** Every format, in the order unknown-name messages list them. */
+  private[sources] val all: Seq[GridFormat] = Seq(Zarr, NetCDF3, Hdf5)
 
   /** The format a name (as persisted in a manifest) stands for; an
     * unknown name fails loudly. */

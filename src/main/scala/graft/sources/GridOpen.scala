@@ -203,13 +203,22 @@ object GridOpen {
       timeBounds: Map[String, (String, String)] = Map.empty): DataFrame = {
     val axes = axesOf(format, store, dataset)
     val nb = resolveBounds(axes, bounds, timeBounds, store)
-    val cropped =
-      if (nb.isEmpty)
-        format.reader(spark).option("path", store).load()
-          .where(col("dataset") === dataset)
-      else format.crop(spark, store, dataset, axes, nb)
+    val cropped = crop(format.reader(spark).option("path", store).load()
+      .where(col("dataset") === dataset), axes, nb, store)
     decorate(cropped, axes, format.cfAttrs(store, dataset))
   }
+
+  /** The pushable per-dim predicates of numeric bounds `nb`, built from
+    * the coordinates `axes` already hold: chunks that miss the crop
+    * never plan. */
+  private def crop(df: DataFrame, axes: Seq[Axis],
+      nb: Map[String, (Double, Double)], store: String): DataFrame =
+    nb.toSeq.sortBy(_._1).foldLeft(df) { case (d, (name, (lo, hi))) =>
+      val ax = axes.find(_.name == name).getOrElse(
+        fail(s"dimension '$name' not among ${axes.map(_.name)} in $store"))
+      val cs = ax.coords.getOrElse(fail(s"axis '$name' in $store has no coords"))
+      d.where(CoordCrop.dimRangePredicate(ax.k, cs, lo, hi))
+    }
 
   /** Open SEVERAL variables of one store as one wide DataFrame —
     * `(path, idx, <dims>, <one column per variable>)` — the
@@ -238,15 +247,9 @@ object GridOpen {
           s"(${axes.map(_.name).mkString(",")}) — multi-open needs one grid")
     }
     val nb = resolveBounds(axes, bounds, timeBounds, store)
-    var df = format.reader(spark).option("path", store).load()
-      .where(col("dataset").isin(variables: _*))
-    // pushable per-dim predicates from the shared coords (same
-    // interval-location as CoordCrop; chunks of EVERY variable prune)
-    nb.foreach { case (name, (lo, hi)) =>
-      val ax = axes.find(_.name == name).get
-      val cs = ax.coords.getOrElse(fail(s"axis '$name' has no coords"))
-      df = df.where(CoordCrop.dimRangePredicate(ax.k, cs, lo, hi))
-    }
+    // the shared coords crop the chunks of EVERY variable
+    val df = crop(format.reader(spark).option("path", store).load()
+      .where(col("dataset").isin(variables: _*)), axes, nb, store)
     // per-variable mask-and-scale, folded into one CASE projection
     val decoded = perVar.foldLeft(lit(null).cast("double")) {
       case (acc, (v, _, attrs)) =>
@@ -298,7 +301,7 @@ object GridOpen {
       dataset: String, outPath: String,
       bounds: Map[String, (Double, Double)] = Map.empty,
       timeBounds: Map[String, (String, String)] = Map.empty): Seq[String] =
-    materializeScenes(spark, format.holding(dir, dataset), outPath) { pending =>
+    materializeScenes(spark, format.stores(dir), outPath) { pending =>
       catalogOpen(spark, extra =>
         format.mountMembers(spark, dir, pending, Seq(dataset)).options(extra)
           .load().where(col("dataset") === dataset),
@@ -440,7 +443,7 @@ object GridOpen {
       dataset: String,
       bounds: Map[String, (Double, Double)] = Map.empty,
       timeBounds: Map[String, (String, String)] = Map.empty): DataFrame = {
-    val stores = format.holding(dir, dataset)
+    val stores = format.stores(dir)
     catalogOpen(spark, extra =>
       format.mountCatalog(spark, dir, stores, Seq(dataset)).options(extra)
         .load().where(col("dataset") === dataset),

@@ -198,30 +198,60 @@ object HDF5 {
         refs.result())
     }
 
-  /** Phase-2 per-chunk decode: inverse filters (reverse pipeline order)
-    * + element decode of ONE stored chunk, emitted as (global row-major
-    * linear index, value) with ragged-edge positions clipped. A pure
-    * function of the chunk bytes + manifest row — no file metadata —
-    * so it runs executor-side with only a positioned byte-range read. */
-  def decodeChunk(raw: Array[Byte], v: H5Var, origin: Seq[Long]): Iterator[(Long, Double)] = {
+  /** Decode ONE stored chunk: inverse filters (reverse pipeline order),
+    * then its elements over the full chunk extent in C order (pad
+    * included) in one primitive loop, the element type (class, size,
+    * sign, endian) resolved once per chunk. A pure function of the
+    * chunk bytes + manifest row — no file metadata — so it runs
+    * executor-side with only a positioned byte-range read. */
+  def chunkValues(raw: Array[Byte], v: H5Var): Array[Double] = {
     val chunkBytes = defilter(v.name, raw, v.filters, v.dtSize, v.signedInt)
-    val nChunkElems = v.chunkDims.product
-    require(chunkBytes.length == nChunkElems * v.dtSize,
+    val n = v.chunkDims.product
+    require(chunkBytes.length == n * v.dtSize,
       s"dataset ${v.name}: chunk decodes to ${chunkBytes.length} bytes, " +
-        s"expected ${nChunkElems * v.dtSize}")
+        s"expected ${n * v.dtSize}")
     val bb = ByteBuffer.wrap(chunkBytes).order(
       if (v.bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
-    chunkPositions(v, origin).map { case (gi, ci) =>
-      (gi, elemAt(bb, v.name, v.dtClass, v.dtSize, v.signedInt, ci))
+    val out = new Array[Double](n)
+    var i = 0
+    (v.dtClass, v.dtSize) match {
+      case (1, 8) => bb.asDoubleBuffer().get(out)
+      case (1, 4) =>
+        val b = bb.asFloatBuffer(); while (i < n) { out(i) = b.get(i); i += 1 }
+      case (0, 1) => // the netCDF-classic byte type (packed data)
+        if (v.signedInt) while (i < n) { out(i) = chunkBytes(i); i += 1 }
+        else while (i < n) { out(i) = chunkBytes(i) & 0xff; i += 1 }
+      case (0, 2) => // int16 — THE CF packed-variable type
+        val b = bb.asShortBuffer()
+        if (v.signedInt) while (i < n) { out(i) = b.get(i); i += 1 }
+        else while (i < n) { out(i) = b.get(i) & 0xffff; i += 1 }
+      case (0, 4) =>
+        val b = bb.asIntBuffer()
+        if (v.signedInt) while (i < n) { out(i) = b.get(i); i += 1 }
+        else while (i < n) { out(i) = (b.get(i) & 0xffffffffL).toDouble; i += 1 }
+      case (0, 8) =>
+        val b = bb.asLongBuffer()
+        while (i < n) {
+          val x = b.get(i)
+          out(i) =
+            if (v.signedInt || x >= 0) x.toDouble
+            // unsigned with the top bit set: split off 2^63 so the Double
+            // carries the unsigned magnitude
+            else (x & Long.MaxValue).toDouble + 9.223372036854775808e18
+          i += 1
+        }
+      case other => throw new IllegalArgumentException(
+        s"dataset ${v.name}: unsupported type class/size $other")
     }
+    out
   }
 
-  /** Global row-major indexes this chunk contributes (ragged edges
-    * clipped), WITHOUT touching chunk bytes — a pure function of the
-    * manifest row, so an index-only projection never reads or
-    * decompresses payload data. */
-  def chunkGlobalIndexes(v: H5Var, origin: Seq[Long]): Iterator[Long] =
-    chunkPositions(v, origin).map(_._1)
+  /** [[chunkValues]] as (global row-major linear index, value) pairs,
+    * ragged-edge positions clipped. */
+  def decodeChunk(raw: Array[Byte], v: H5Var, origin: Seq[Long]): Iterator[(Long, Double)] = {
+    val values = chunkValues(raw, v)
+    chunkPositions(v, origin).map { case (gi, ci) => (gi, values(ci)) }
+  }
 
   /** (global row-major index, chunk-local element index) for every
     * in-bounds position of the chunk at `origin`. */

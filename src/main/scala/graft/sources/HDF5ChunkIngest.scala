@@ -1,55 +1,53 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import GridScan.{Block, OpenFiles, Prune, ReadStats, Task}
 
-/** Chunk-parallel HDF5/netCDF-4 ingest — the consolidated-store path.
+/** HDF5/netCDF-4's plan and decode for the grid scan ([[GridScan]]) —
+  * the consolidated-store path.
   *
   * [[NetCDFIngest]] parallelizes per FILE (`binaryFile` -> whole-file
   * decode): right for archives of O(GB) granules (the reference's
   * world — one file per scene, utils/luigi.py:29-47), wrong for one
   * large consolidated store, whose whole-file decode would pin a
   * single task's memory and, past 2 GB, overflow a Java byte array.
-  * This source splits the read the way [[Zarr.readScenes]] does:
+  * The grid scan splits the read instead:
   *
-  *  - phase 1 (driver): [[PagedFileInput]] -> [[HDF5.manifest]] —
+  *  - plan (driver): [[PagedFileInput]] -> [[HDF5.manifest]] —
   *    superblock, object headers, chunk indexes. Touches only the
   *    pages metadata lives on (HDF5ChunkIngestSpec asserts the
   *    fraction), never chunk payloads, so a manifest of a store far
-  *    bigger than driver memory stays cheap;
-  *  - phase 2 (executors): the chunk map becomes a Dataset,
-  *    range-partitioned on (path, offset) so each task's reads are
-  *    byte-adjacent; every task does positioned reads of its chunks'
-  *    ranges and decodes them independently (deflate/shuffle are
-  *    per-chunk by construction — no cross-chunk state, no shuffle
-  *    until the first keyed operator downstream).
+  *    bigger than driver memory stays cheap. Tasks are (path,
+  *    offset)-sorted, so each partition's positioned reads advance
+  *    monotonically through one file region;
+  *  - decode (executors): byte-adjacent chunk windows coalesce into one
+  *    positioned read per span ([[MountDsv2.coalesceWindows]]), so
+  *    request counts track spans, not chunks, and each chunk defilters
+  *    (deflate/shuffle/... are per-chunk by construction) and decodes in
+  *    one primitive loop ([[HDF5.chunkValues]]).
   *
   * Executors open the file by path through the [[ByteStore]] seam:
   * plain paths read via java.io (local FS / NFS), scheme'd URIs
   * (`file://`/`hdfs://`/`s3a://`) via `org.apache.hadoop.fs` — object
-  * stores mount directly, no fuse layer needed. (The sinks write
-  * through the same seam, so the whole interchange family targets URI
-  * stores symmetrically.) At 100 TB
-  * the same two-phase shape holds: manifests are KB-scale per store,
-  * the chunk map is what actually distributes, and byte-adjacent
-  * chunks coalesce into one positioned read per span
-  * ([[MountDsv2.coalesceWindows]]) so request counts track spans, not
-  * chunks.
+  * stores mount directly, no fuse layer needed.
   */
 object HDF5ChunkIngest {
 
-  /** One executor decode task: a chunk plus everything needed to decode
-    * it with no further metadata access. */
+  /** One decode task: a chunk plus everything needed to decode it with
+    * no further metadata access. */
   final case class ChunkTask(
       path: String, dataset: String, dims: Seq[Long], chunkDims: Seq[Int],
       dtClass: Int, dtSize: Int, bigEndian: Boolean, signedInt: Boolean,
       filters: Seq[HDF5.H5Filter],
-      origin: Seq[Long], offset: Long, nbytes: Long)
+      origin: Seq[Long], offset: Long, nbytes: Long) extends Task {
+    def variable: HDF5.H5Var = HDF5.H5Var(dataset, dims, chunkDims, dtClass,
+      dtSize, bigEndian, filters, signedInt)
+  }
 
-  /** Phase 1: metadata-only chunk map of every HDF5 file in `paths`.
-    * Driver-side work is proportional to metadata size, not file size,
-    * and per-file manifests walk in one [[ByteStore.parMap]] wave —
-    * plan-time latency on an object store is ~one file's metadata
-    * round trips, not file-count × RTT. Order stays path-sorted. */
+  /** Metadata-only chunk map of every HDF5 file in `paths`. Driver-side
+    * work is proportional to metadata size, not file size, and per-file
+    * manifests walk in one [[ByteStore.parMap]] wave — plan-time latency
+    * on an object store is ~one file's metadata round trips, not
+    * file-count × RTT. Order stays path-sorted. */
   def chunkTasks(paths: Seq[String], varName: Option[String] = None): Seq[ChunkTask] =
     ByteStore.parMap(paths.sorted) { p =>
       val in = new PagedFileInput(p)
@@ -68,60 +66,53 @@ object HDF5ChunkIngest {
   def resolvePaths(pathGlob: String): Seq[String] =
     ByteStore.resolveGlob(pathGlob)
 
-  /** Phase 2 fan-out: (path, dataset, idx, value) rows where `idx` is
-    * the global row-major linear element index. One task decodes only
-    * its own chunks — peak memory per task is one stored chunk. */
-  def readValues(spark: SparkSession, pathGlob: String,
-      varName: Option[String] = None, partitions: Int = 0): DataFrame = {
-    import spark.implicits._
-    val tasks = chunkTasks(resolvePaths(pathGlob), varName)
-    require(tasks.nonEmpty, s"no HDF5 chunks matched $pathGlob / $varName")
-    val par = if (partitions > 0) partitions
-      else math.max(1, math.min(tasks.size, spark.sparkContext.defaultParallelism))
-    val hconf = ByteStore.confSnapshot(spark)
-    spark.createDataset(tasks)
-      .repartitionByRange(par, $"path", $"offset")
-      // sort so a partition walks each file once, byte-ascending: ONE
-      // open/close per (path, partition) instead of per chunk (a 100k-
-      // chunk store would otherwise pay 100k open/close syscalls per
-      // executor pass), and the positioned reads advance monotonically —
-      // the access pattern OS readahead actually helps
-      .sortWithinPartitions($"path", $"offset")
-      .mapPartitions { it =>
-        ByteStore.install(hconf) // executor JVMs have no session
-        var cur: ByteStore.ReadAt = null
-        def fileFor(p: String): ByteStore.ReadAt = {
-          if (cur == null || cur.path != p) {
-            if (cur != null) cur.close()
-            cur = ByteStore.open(p)
-          }
-          cur
-        }
-        // close the last handle when the task ends (also on failure —
-        // the iterator itself has no terminal hook under interruption)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => if (cur != null) cur.close()))
-        // tasks are (path, offset)-sorted: coalesce byte-adjacent chunk
-        // windows into ONE positioned read per span (the DSv2 reader's
-        // request-count discipline, MountDsv2.coalesceWindows)
-        MountDsv2.runs(it.toSeq)(_.path).iterator.flatMap { run =>
-          val windows = run.map(t => (t.offset, t.nbytes))
-          MountDsv2.coalesceWindows(windows).iterator.flatMap { g =>
-            val gStart = run(g.start).offset
-            val gEnd = g.map(i => run(i).offset + run(i).nbytes).max
-            val buf = fileFor(run.head.path).readFully(gStart, (gEnd - gStart).toInt)
-            g.iterator.flatMap { i =>
-              val t = run(i)
-              val raw = java.util.Arrays.copyOfRange(buf,
-                (t.offset - gStart).toInt, (t.offset - gStart + t.nbytes).toInt)
-              val v = HDF5.H5Var(t.dataset, t.dims, t.chunkDims, t.dtClass,
-                t.dtSize, t.bigEndian, t.filters, t.signedInt)
-              HDF5.decodeChunk(raw, v, t.origin)
-                .map { case (gi, x) => (t.path, t.dataset, gi, x) }
-            }
-          }
+  /** The mount's chunk tasks: files the pushed filters exclude never
+    * have their manifest read; chunks prune on their box. */
+  private[sources] def plan(path: String, prune: Prune): Seq[Seq[Task]] = {
+    val paths = resolvePaths(path).filter(prune.store)
+    Seq(chunkTasks(paths)
+      .filter(t => prune.variable(t.path, t.dataset) &&
+        prune.box(t.path, t.dataset, t.origin, t.chunkDims.map(_.toLong), t.dims))
+      .sortBy(t => (t.path, t.offset)))
+  }
+
+  private def block(t: ChunkTask, values: Array[Double]): Block =
+    new Block(t.path, t.dataset, t.dims.toArray, t.origin.toArray,
+      t.chunkDims.toArray, values, 0.0)
+
+  /** One partition's (path, offset)-sorted tasks as blocks. With
+    * `withValues` each file's run coalesces byte-adjacent chunk windows
+    * into ONE positioned read per span (one GET per span instead of per
+    * chunk on an object store; the span cap bounds the buffer); without
+    * it no chunk byte is read. */
+  private[sources] def decode(tasks: Seq[Task], withValues: Boolean,
+      stats: ReadStats, files: OpenFiles): Iterator[Block] = {
+    val chunks = tasks.collect { case t: ChunkTask => t }
+    if (!withValues) return chunks.iterator.map(block(_, null))
+    MountDsv2.runs(chunks)(_.path).iterator.flatMap { run =>
+      val windows = run.map(t => (t.offset, t.nbytes))
+      MountDsv2.coalesceWindows(windows).iterator.flatMap { g =>
+        val gStart = run(g.start).offset
+        val gEnd = g.map(i => run(i).offset + run(i).nbytes).max
+        val buf = files(run.head.path).readFully(gStart, (gEnd - gStart).toInt)
+        stats.bytes += buf.length
+        g.iterator.map { i =>
+          val t = run(i)
+          stats.chunks += 1
+          block(t, HDF5.chunkValues(java.util.Arrays.copyOfRange(buf,
+            (t.offset - gStart).toInt, (t.offset - gStart + t.nbytes).toInt), t.variable))
         }
       }
-      .toDF("path", "dataset", "idx", "value")
+    }
+  }
+
+  /** Every block of one dataset, values read — a driver-side coordinate
+    * read ([[GridFormat.arrayValues]]). */
+  private[sources] def arrayBlocks(path: String, name: String,
+      files: OpenFiles): Iterator[Block] = {
+    val tasks = chunkTasks(Seq(path), Some(name)).sortBy(_.offset)
+    if (tasks.isEmpty)
+      throw new IllegalArgumentException(s"coord crop: no dataset '$name' in $path")
+    decode(tasks, withValues = true, new ReadStats, files)
   }
 }

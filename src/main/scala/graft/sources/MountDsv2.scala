@@ -4,8 +4,9 @@ import org.apache.spark.sql.connector.read.{ScanBuilder, SupportsPushDownFilters
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 
-/** Shared scaffolding for the five DSv2 mounts (HDF5 / Arrow / zarr /
-  * netCDF-3 / npy), so sibling behavior can't drift: ONE place defines
+/** Shared scaffolding for the DSv2 mounts (the grid scan over HDF5 /
+  * zarr / netCDF-3, plus Arrow and npy), so sibling behavior can't
+  * drift: ONE place defines
   * which filters push into the plan phase, how a pushed filter prunes,
   * how tasks slice into InputPartitions, and the plan-time parallelism
   * rule.

@@ -171,13 +171,12 @@ object NetCDF3 {
     * ([[NetCDF3ChunkIngest]]): record offsets are closed-form. */
   def recordStrideOf(h: Header): Long = recordStride(h)
 
-  /** Decode one raw big-endian slab of `n` elements to doubles — the
-    * positioned-read path of [[NetCDF3ChunkIngest]]. */
-  def decodeSlab(raw: Array[Byte], ncType: Int, n: Int): Array[Double] = {
-    val out = new Array[Double](n)
-    readSlab(ByteBuffer.wrap(raw), 0L, n, ncType, out, 0)
-    out
-  }
+  /** Decode the `n` big-endian elements at byte `at` of `raw` into
+    * `out` from `outOff` — the positioned-read path of
+    * [[NetCDF3ChunkIngest]]. */
+  def decodeSlabInto(raw: Array[Byte], at: Int, ncType: Int, n: Int,
+      out: Array[Double], outOff: Int): Unit =
+    readSlab(ByteBuffer.wrap(raw), at.toLong, n, ncType, out, outOff)
 
   private def readSlab(b: ByteBuffer, at: Long, n: Int, ncType: Int, out: Array[Double], outOff: Int): Unit = {
     b.position(at.toInt)

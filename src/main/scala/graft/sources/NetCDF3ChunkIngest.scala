@@ -1,33 +1,36 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import GridScan.{Block, OpenFiles, Prune, ReadStats, Task}
 
-/** Chunk-parallel two-phase ingest for consolidated netCDF-3 record
-  * files — the [[HDF5ChunkIngest]] pattern for the classic format. A
-  * multi-year LES/ERA5 store concatenated along the unlimited dimension
-  * is ONE file whose record offsets are closed-form (record r of
-  * variable v starts at v.begin + r·recordStride), so there is no
-  * reason to decode it whole-file per task:
+/** netCDF classic's plan and decode for the grid scan ([[GridScan]]) —
+  * the consolidated record-file path. A multi-year LES/ERA5 store
+  * concatenated along the unlimited dimension is ONE file whose record
+  * offsets are closed-form (record r of variable v starts at v.begin +
+  * r·recordStride), so there is no reason to decode it whole-file per
+  * task:
   *
-  *  - phase 1 (driver): header-only parse — a bounded prefix read, KB
-  *    of metadata regardless of data volume — yields record-batch tasks
-  *    (path, var, recStart, nRecs) sized to `targetBytes`;
-  *  - phase 2: tasks range-partition by (path, recStart) and decode
-  *    with positioned reads — one file handle per (path, partition),
-  *    byte-monotone access, peak memory one record batch.
-  *
-  * Output matches [[HDF5ChunkIngest.readValues]]: (path, dataset, idx,
-  * value) with idx the global row-major linear element index.
+  *  - plan (driver): header-only parse — a bounded prefix read, KB of
+  *    metadata regardless of data volume — yields record-batch tasks
+  *    (path, var, recStart, nRecs) sized to `targetBytes`, narrowed to
+  *    the pushed record window;
+  *  - decode (executors): positioned reads — one file handle per (path,
+  *    partition), byte-monotone access, peak memory one record batch.
   */
 object NetCDF3ChunkIngest {
 
   /** `dims` is the variable's full shape (record dimension included,
-    * as its CURRENT record count) — the mount's per-dimension
-    * coordinate columns and bbox prune derive from it. */
+    * as its CURRENT record count). A record task is the box (recStart,
+    * 0, …) × (nRecs, dims.tail); a non-record variable's single task
+    * (stride 0) is its whole shape. */
   final case class RecordTask(
       path: String, dataset: String, ncType: Int,
       begin: Long, stride: Long, perRec: Int,
-      recStart: Int, nRecs: Int, dims: Seq[Long])
+      recStart: Int, nRecs: Int, dims: Seq[Long]) extends Task {
+    def origin: Seq[Long] =
+      if (stride == 0L) Seq.fill(dims.size)(0L)
+      else recStart.toLong +: Seq.fill(dims.size - 1)(0L)
+    def extent: Seq[Long] = if (stride == 0L) dims else nRecs.toLong +: dims.drop(1)
+  }
 
   /** Header-only parse: read a growing prefix until the header parses
     * (the classic header is self-delimiting; data begins after it). */
@@ -48,7 +51,7 @@ object NetCDF3ChunkIngest {
     } finally f.close()
   }
 
-  /** Phase 1: record-batch tasks for `varName` in each path. Non-record
+  /** Record-batch tasks for `varName` in each path. Non-record
     * variables become a single whole-slab task (stride 0). Per-file
     * headers read in one [[ByteStore.parMap]] wave (KB-scale each);
     * plan-time latency tracks one header's round trips, not file
@@ -85,69 +88,107 @@ object NetCDF3ChunkIngest {
       }
     }.flatten
 
-  /** One task's (global idx, value) elements through `in`. The
-    * per-record positioned reads coalesce into ONE span read when the
-    * task's variable owns at least HALF the record stride (records of
-    * one variable are interleaved with every other record variable's,
-    * so an unconditional span read could fetch mostly junk; at >= 1/2
-    * the junk is bounded by the useful bytes, and one request replaces
-    * nRecs — the object-store arithmetic of MountDsv2.coalesceWindows
-    * applied to the classic format's strided layout). Shared by the
-    * RDD ingest and the [[NetCDF3DataSource]] DSv2 reader. */
-  private[sources] def taskValues(t: RecordTask,
-      in: ByteStore.ReadAt): Iterator[(Long, Double)] = {
-    val elemSize = NetCDF3.typeSize(t.ncType)
-    val perRecBytes = t.perRec.toLong * elemSize
-    val span =
-      if (t.nRecs <= 1 || t.stride <= 0L) -1L
-      else (t.nRecs - 1).toLong * t.stride + perRecBytes
-    def decodeRec(rec: Int, raw: Array[Byte]): Iterator[(Long, Double)] = {
-      val vals = NetCDF3.decodeSlab(raw, t.ncType, t.perRec)
-      (0 until t.perRec).iterator.map(i => (rec.toLong * t.perRec + i, vals(i)))
-    }
-    if (span > 0 && 2 * perRecBytes >= t.stride && span <= Int.MaxValue - 8) {
-      val buf = in.readFully(t.begin + t.recStart * t.stride, span.toInt)
-      (0 until t.nRecs).iterator.flatMap { r =>
-        val off = (r.toLong * t.stride).toInt
-        decodeRec(t.recStart + r, java.util.Arrays.copyOfRange(buf, off,
-          off + perRecBytes.toInt))
-      }
-    } else (0 until t.nRecs).iterator.flatMap { r =>
-      val rec = t.recStart + r
-      decodeRec(rec, in.readFully(t.begin + rec * t.stride, perRecBytes.toInt))
-    }
+  /** The mount's record tasks: files the pushed filters exclude never
+    * have their header read; record batches prune on their box and
+    * narrow to the pushed record window. */
+  private[sources] def plan(path: String, targetBytes: Long,
+      prune: Prune): Seq[Seq[Task]] = {
+    val paths = HDF5ChunkIngest.resolvePaths(path).filter(prune.store)
+    Seq(paths.flatMap { p =>
+      headerOf(p).vars.map(_.name).filter(prune.variable(p, _))
+        .flatMap(v => recordTasks(Seq(p), v, targetBytes))
+    }.filter(t => prune.box(t.path, t.dataset, t.origin, t.extent, t.dims))
+      .map(narrow(_, prune))
+      .sortBy(t => (t.path, t.begin, t.recStart)))
   }
 
-  /** Phase 2 fan-out. */
-  def readValues(spark: SparkSession, pathGlob: String, varName: String,
-      targetBytes: Long = 4L << 20, partitions: Int = 0): DataFrame = {
-    import spark.implicits._
-    val tasks = recordTasks(HDF5ChunkIngest.resolvePaths(pathGlob), varName,
-      targetBytes)
-    require(tasks.nonEmpty, s"no netCDF records matched $pathGlob / $varName")
-    val par = if (partitions > 0) partitions
-      else math.max(1, math.min(tasks.size, spark.sparkContext.defaultParallelism))
-    val hconf = ByteStore.confSnapshot(spark)
-    spark.createDataset(tasks)
-      .repartitionByRange(par, $"path", $"recStart")
-      .sortWithinPartitions($"path", $"recStart")
-      .mapPartitions { it =>
-        ByteStore.install(hconf) // executor JVMs have no session
-        var cur: ByteStore.ReadAt = null
-        def fileFor(p: String): ByteStore.ReadAt = {
-          if (cur == null || cur.path != p) {
-            if (cur != null) cur.close()
-            cur = ByteStore.open(p)
-          }
-          cur
+  /** NARROW a surviving record batch to the pushed d0 / idx window:
+    * record r is exactly d0 = r and idx [r*perRec, (r+1)*perRec), so
+    * out-of-window records inside an intersecting batch are never read —
+    * a 4-of-64-record crop issues a 4-record ranged GET, not the batch's
+    * span (S3FsSpec pins the byte counts). The store's hull narrows the
+    * window too, and tree-shaped (per-store disjunction) crops narrow
+    * through THIS file's d0/idx hull in the tree (colHull — each store's
+    * branch yields exactly its pushed range); every filter remains
+    * residual either way. */
+  private def narrow(t: RecordTask, prune: Prune): RecordTask =
+    if (t.stride == 0L) t
+    else {
+      val d0 = prune.dimRanges(t.path)(0)
+      var lo = math.max(math.max(t.recStart.toLong, d0.lo),
+        Math.floorDiv(prune.range.lo, t.perRec.toLong))
+      var hi = math.min(math.min(t.recStart.toLong + t.nRecs - 1, d0.hi),
+        Math.floorDiv(prune.range.hi, t.perRec.toLong))
+      prune.trees.foreach { tr =>
+        MountDsv2.colHull(tr, "d0", t.path, t.dataset).foreach { h =>
+          lo = math.max(lo, h.lo); hi = math.min(hi, h.hi)
         }
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => if (cur != null) cur.close()))
-        it.flatMap { t =>
-          taskValues(t, fileFor(t.path))
-            .map { case (gi, v) => (t.path, t.dataset, gi, v) }
+        MountDsv2.colHull(tr, "idx", t.path, t.dataset).foreach { h =>
+          lo = math.max(lo, Math.floorDiv(h.lo, t.perRec.toLong))
+          hi = math.min(hi, Math.floorDiv(h.hi, t.perRec.toLong))
         }
       }
-      .toDF("path", "dataset", "idx", "value")
+      // the batch survived the box test, so the window is non-empty;
+      // clamp defensively anyway
+      if (lo <= hi && (lo > t.recStart || hi < t.recStart + t.nRecs - 1))
+        t.copy(recStart = lo.toInt, nRecs = (hi - lo + 1).toInt)
+      else t
+    }
+
+  /** One task as a [[Block]], its values read through `in` (null: an
+    * index-only read, no payload byte is read). The per-record
+    * positioned reads coalesce into ONE span read when the task's
+    * variable owns at least HALF the record stride (records of one
+    * variable are interleaved with every other record variable's, so an
+    * unconditional span read could fetch mostly junk; at >= 1/2 the junk
+    * is bounded by the useful bytes, and one request replaces nRecs —
+    * the object-store arithmetic of MountDsv2.coalesceWindows applied to
+    * the classic format's strided layout). */
+  private def taskBlock(t: RecordTask, in: ByteStore.ReadAt, stats: ReadStats): Block = {
+    val values =
+      if (in == null) null
+      else {
+        val elemSize = NetCDF3.typeSize(t.ncType)
+        val perRecBytes = t.perRec.toLong * elemSize
+        val span =
+          if (t.nRecs <= 1 || t.stride <= 0L) -1L
+          else (t.nRecs - 1).toLong * t.stride + perRecBytes
+        val out = new Array[Double](t.nRecs * t.perRec)
+        if (span > 0 && 2 * perRecBytes >= t.stride && span <= Int.MaxValue - 8) {
+          val buf = in.readFully(t.begin + t.recStart * t.stride, span.toInt)
+          stats.bytes += buf.length
+          var r = 0
+          while (r < t.nRecs) {
+            NetCDF3.decodeSlabInto(buf, (r.toLong * t.stride).toInt, t.ncType, t.perRec,
+              out, r * t.perRec)
+            r += 1
+          }
+        } else {
+          var r = 0
+          while (r < t.nRecs) {
+            val raw = in.readFully(t.begin + (t.recStart + r) * t.stride, perRecBytes.toInt)
+            stats.bytes += raw.length
+            NetCDF3.decodeSlabInto(raw, 0, t.ncType, t.perRec, out, r * t.perRec)
+            r += 1
+          }
+        }
+        stats.chunks += 1
+        out
+      }
+    new Block(t.path, t.dataset, t.dims.toArray, t.origin.toArray,
+      t.extent.map(_.toInt).toArray, values, 0.0)
   }
+
+  /** One partition's tasks as blocks, in task order. */
+  private[sources] def decode(tasks: Seq[Task], withValues: Boolean,
+      stats: ReadStats, files: OpenFiles): Iterator[Block] =
+    tasks.iterator.collect { case t: RecordTask => t }.map(t =>
+      taskBlock(t, if (withValues) files(t.path) else null, stats))
+
+  /** Every block of one variable, values read — a driver-side coordinate
+    * read ([[GridFormat.arrayValues]]); record-dimension coordinate
+    * variables' strided slabs read correctly and coalesced. */
+  private[sources] def arrayBlocks(path: String, name: String,
+      files: OpenFiles): Iterator[Block] =
+    decode(recordTasks(Seq(path), name), withValues = true, new ReadStats, files)
 }

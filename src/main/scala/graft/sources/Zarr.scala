@@ -161,7 +161,7 @@ object Zarr {
   }
 
   /** Decode ONE chunk file's raw bytes to its full chunk-sized value
-    * array (pad regions included) — the [[ZarrChunkIngest]] unit. */
+    * array (pad regions included) — the grid scan's unit ([[ZarrChunkIngest]]). */
   private[sources] def decodeChunkBytes(raw: Array[Byte], meta: ArrayMeta): Array[Double] = {
     val bytes = meta.compressor match {
       case Some("zlib") => inflate(raw)

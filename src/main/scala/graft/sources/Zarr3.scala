@@ -231,7 +231,7 @@ object Zarr3 {
   }
 
   /** Decode ONE chunk file's raw bytes to its full chunk-sized value
-    * array (pad regions included) — the [[ZarrChunkIngest]] unit. A
+    * array (pad regions included) — the grid scan's unit ([[ZarrChunkIngest]]). A
     * sharded array's chunk file is a SHARD: the inner-chunk index at
     * its start/end (16 bytes per inner chunk, optional crc32c) locates
     * each inner chunk's bytes; absent inner chunks read as fill. */
@@ -306,7 +306,7 @@ object Zarr3 {
   }
 
   /** Decode ONE inner chunk's raw bytes (inner pipeline applied) to its
-    * inner-chunk-sized value array — the [[ZarrChunkIngest]] unit for
+    * inner-chunk-sized value array — the grid scan's unit ([[ZarrChunkIngest]]) for
     * shard-inner-parallel reads. */
   private[sources] def decodeInnerChunk(innerRaw: Array[Byte], meta: Meta,
       sh: Sharding): Array[Double] = {

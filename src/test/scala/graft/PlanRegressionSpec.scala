@@ -177,19 +177,16 @@ class PlanRegressionSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
-  test("q129: chunk ingest fans out via one range exchange and nothing else") {
-    // the chunk-parallel contract: the only exchange in the plan is the
-    // deliberate range partitioning of the chunk map on (path, offset) —
-    // decode itself introduces no shuffle, and no chunk payload bytes
-    // ride any exchange (the map rows carry offsets, not data)
+  test("q129: the chunk-parallel HDF5 read plans no exchange") {
+    // q191's contract for the chunk-parallel path: split planning IS
+    // the fan-out (the manifest's chunk map sliced into partitions), so
+    // decode introduces no shuffle and the plan carries no exchange at
+    // all — neither a range partitioning of the chunk map nor any other
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val exec = SparkEntry.queries("q129_hdf5_chunk_parallel")(spark, sf)
-        .queryExecution.executedPlan
-      val exchanges = exec.toString.linesIterator.filter(_.contains("Exchange")).toSeq
-      assert(exchanges.size == 1, s"expected exactly one exchange:\n${exchanges.mkString("\n")}")
-      assert(exchanges.head.contains("rangepartitioning"),
-        s"fan-out must be the (path, offset) range partitioning:\n${exchanges.head}")
+        .queryExecution.executedPlan.toString
+      assert(!exec.contains("Exchange"), s"expected no exchange:\n${exec.take(1200)}")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 

@@ -87,7 +87,7 @@ class CfCalendarSpec extends SparkSpec {
     val (lo, hi) = CfCalendar.numericRange("days since 2000-02-25", "360_day",
       "2000-02-28", "2000-03-02")
     assert((lo, hi) == ((3.0, 7.0)))
-    val df = CoordCrop.netcdf3(spark, p.toString, "v", Map("time" -> (lo, hi)))
+    val df = CoordCrop.crop(spark, GridFormat.NetCDF3, p.toString, "v", Map("time" -> (lo, hi)))
       .select(CfCalendar.datetimeFromValues(col("d0"),
         "days since 2000-02-25", "360_day",
         Array.tabulate(8)(_.toDouble)).as("dt"), col("d1"), col("value"))

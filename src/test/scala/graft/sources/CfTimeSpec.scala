@@ -96,7 +96,7 @@ class CfTimeSpec extends SparkSpec {
     val units = CfTime.hdf5Units(p.toString, "time")
     // 2021-06-04 .. 2021-06-07 -> day numbers 3..6 -> d0 1..4
     val (lo, hi) = CfTime.numericRange(units, "2021-06-04", "2021-06-07")
-    val df = CoordCrop.hdf5Netcdf4(spark, p.toString, "v",
+    val df = CoordCrop.crop(spark, GridFormat.Hdf5, p.toString, "v",
         Map("time" -> (lo, hi)))
       .select(CfTime.hdf5AffineTimestamp(p.toString, "time", col("d0")).as("ts"),
         col("idx"), col("value"))

@@ -46,7 +46,7 @@ class CoordCropSpec extends SparkSpec {
       zlibLevel = Some(6)).count()
     val store = s"$dir/s0.zarr"
     assert(CoordCrop.zarrDimNames(store, "lwp") == Seq("y", "x"))
-    val cropped = CoordCrop.zarr(spark, store, "lwp",
+    val cropped = GridOpen.open(spark, GridFormat.Zarr, store, "lwp",
         Map("y" -> (300.0, 600.0), "x" -> (100.0, 300.0)))
       .select("idx", "value").collect().map(r => (r.getLong(0), r.getDouble(1))).sorted
     val residual = spark.read.format("graft.sources.ZarrDataSource")
@@ -73,11 +73,11 @@ class CoordCropSpec extends SparkSpec {
     assert(CoordCrop.zarrDimNames(store, "lwp") == Seq("y", "x"))
     // driver-side array reads come back idx-ordered on BOTH branches:
     // the plain-chunk coord array and the sharded data array
-    assert(CoordCrop.zarrArrayValues(store, "y").toSeq ==
+    assert(GridFormat.Zarr.arrayValues(store, "y").toSeq ==
       (0 until ny).map(_ * 10.0))
-    assert(CoordCrop.zarrArrayValues(store, "lwp").toSeq ==
+    assert(GridFormat.Zarr.arrayValues(store, "lwp").toSeq ==
       (0 until ny * nx).map(_.toDouble))
-    val got = CoordCrop.zarr(spark, store, "lwp", Map("y" -> (20.0, 50.0)))
+    val got = GridOpen.open(spark, GridFormat.Zarr, store, "lwp", Map("y" -> (20.0, 50.0)))
       .agg(sum("value")).head.getDouble(0)
     val want = (0 until ny * nx).filter(i => (i / nx) >= 2 && (i / nx) <= 5).sum.toDouble
     assert(math.abs(got - want) < 1e-9)
@@ -91,7 +91,7 @@ class CoordCropSpec extends SparkSpec {
       (expr("id % 4") * 1.0).as("x"), (expr("id div 4") * 1.0).as("y"),
       col("id").cast("double").as("value"))
     ZarrSink.writeScenes(grid, dir, "lwp").count()
-    assert(CoordCrop.zarr(spark, s"$dir/s0.zarr", "lwp",
+    assert(GridOpen.open(spark, GridFormat.Zarr, s"$dir/s0.zarr", "lwp",
       Map("y" -> (100.0, 200.0))).count() == 0)
   }
 
@@ -104,7 +104,7 @@ class CoordCropSpec extends SparkSpec {
       col("id").cast("double").as("value"))
     ZarrSink.writeScenes(grid, dir, "lwp").count()
     val e = intercept[IllegalArgumentException] {
-      CoordCrop.zarr(spark, s"$dir/s0.zarr", "lwp", Map("lat" -> (0.0, 1.0)))
+      GridOpen.open(spark, GridFormat.Zarr, s"$dir/s0.zarr", "lwp", Map("lat" -> (0.0, 1.0)))
     }
     assert(e.getMessage.contains("not among"))
   }

@@ -2,10 +2,10 @@ package graft.sources
 
 import graft.SparkSpec
 
-/** Chunk-parallel HDF5 ingest: the two-phase (manifest -> fan-out)
-  * path must agree bit-for-bit with whole-file [[HDF5.read]] across
+/** Chunk-parallel HDF5 reads through the grid scan: the manifest-planned
+  * mount must agree bit-for-bit with whole-file [[HDF5.read]] across
   * every writer generation / chunk index / filter combination, and the
-  * phase-1 manifest must touch only metadata pages. */
+  * planning manifest must touch only metadata pages. */
 class HDF5ChunkIngestSpec extends SparkSpec {
 
   private def tmpFile(name: String, bytes: Array[Byte]): String = {
@@ -22,7 +22,7 @@ class HDF5ChunkIngestSpec extends SparkSpec {
 
   private def chunkParallelRows(path: String): Map[(String, Long), Double] = {
     import spark.implicits._
-    HDF5ChunkIngest.readValues(spark, path)
+    GridFormat.Hdf5.reader(spark).option("path", path).load()
       .select("dataset", "idx", "value").as[(String, Long, Double)]
       .collect().map { case (d, i, v) => ((d, i), v) }.toMap
   }
@@ -103,9 +103,13 @@ class HDF5ChunkIngestSpec extends SparkSpec {
     val path = tmpFile("fanout.h5", bytes)
     val tasks = HDF5ChunkIngest.chunkTasks(Seq(path), Some("lwp"))
     assert(tasks.size == 12 * 4 * 4, s"expected 192 chunk tasks, got ${tasks.size}")
-    val df = HDF5ChunkIngest.readValues(spark, path, Some("lwp"))
+    val df = GridFormat.Hdf5.reader(spark).option("path", path).load()
+      .where(org.apache.spark.sql.functions.col("dataset") === "lwp")
     assert(df.rdd.getNumPartitions == spark.sparkContext.defaultParallelism,
       s"expected fan-out to default parallelism, got ${df.rdd.getNumPartitions}")
+    // every partition decodes its own run of the 192 chunks
+    val perPart = df.rdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(perPart.forall(_ > 0), s"idle partition in ${perPart.toSeq}")
     assert(df.count() == 24 * 12 * 16)
   }
 

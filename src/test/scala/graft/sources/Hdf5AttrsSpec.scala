@@ -77,9 +77,10 @@ class Hdf5AttrsSpec extends SparkSpec {
 
   test("hdf5Netcdf4 crop: auto-discovered dims match the explicit mapping and the residual filter") {
     val bounds = Map("y" -> (20.0, 40.0), "x" -> (35.0, 75.0))
-    val auto = CoordCrop.hdf5Netcdf4(spark, storePath, "tair", bounds)
+    val auto = CoordCrop.crop(spark, GridFormat.Hdf5, storePath, "tair", bounds)
       .select("idx", "value").collect().map(r => (r.getLong(0), r.getDouble(1))).sorted
-    val explicit = CoordCrop.hdf5(spark, storePath, "tair", Seq("y", "x"), bounds)
+    val explicit = CoordCrop.crop(spark, GridFormat.Hdf5, storePath, "tair", bounds,
+      dims = Seq("y", "x"))
       .select("idx", "value").collect().map(r => (r.getLong(0), r.getDouble(1))).sorted
     val residual = spark.read.format("graft.sources.Hdf5DataSource")
       .option("path", storePath).load()
@@ -92,7 +93,7 @@ class Hdf5AttrsSpec extends SparkSpec {
 
   test("hdf5Netcdf4 fails loudly when the variable has no DIMENSION_LIST") {
     val e = intercept[IllegalArgumentException] {
-      CoordCrop.hdf5Netcdf4(spark, storePath, "y", Map("y" -> (0.0, 1.0)))
+      CoordCrop.crop(spark, GridFormat.Hdf5, storePath, "y", Map("y" -> (0.0, 1.0)))
     }
     assert(e.getMessage.contains("DIMENSION_LIST"))
   }

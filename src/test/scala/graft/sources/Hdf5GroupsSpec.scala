@@ -70,7 +70,7 @@ class Hdf5GroupsSpec extends SparkSpec {
     // the auto coord crop rides DIMENSION_LIST across groups: y in
     // [10, 20] -> d0 1-2 -> both (2,6) chunk rows 0-1 plan, row 0
     // residual-filtered
-    val cropped = CoordCrop.hdf5Netcdf4(spark, storePath, "model/t2m",
+    val cropped = CoordCrop.crop(spark, GridFormat.Hdf5, storePath, "model/t2m",
       Map("model/y" -> (10.0, 20.0)))
     assert(cropped.select("idx").collect().map(_.getLong(0)).sorted.toSeq ==
       (6 until 18).map(_.toLong))

@@ -233,4 +233,170 @@ class IoCountingSpec extends SparkSpec {
       s"expected ~2-3 reads (metadata pages + one span), got ${r.reads(f.getAbsolutePath)}")
     assert(r.opens(f.getAbsolutePath) <= 3)
   }
+
+  // ---- the grid scan, format by format ------------------------------------
+
+  /** One store per format whose scan decodes a known number of chunks:
+    * (mount path, extra mount options, chunks decoded). A format with
+    * no case here fails the spec, so a new format cannot ship without
+    * a columnar reader that reports its metrics. */
+  private def metricsStore(f: GridFormat): (String, Map[String, String], Long) = {
+    val dir = Files.createTempDirectory(s"graft-iocount-metrics-${f.name}").toString
+    f match {
+      case GridFormat.Zarr =>
+        // 3 scenes' (6, 4) lwp grids in 2-row bands, zlib: 3 chunk files
+        // per scene plus the y (3 bands) and x (one chunk) coordinates
+        val px = spark.range(3 * 24).select(
+          concat(lit("s"), expr("id div 24")).as("scene_id"),
+          expr("timestamp_seconds(1577836800)").as("time"),
+          (expr("id % 4") * 10.0).as("x"), (expr("(id % 24) div 4") * 10.0).as("y"),
+          (col("id") * 0.5).as("value"))
+        ZarrSink.writeScenes(px, dir, "lwp", chunkRows = Some(2), zlibLevel = Some(6)).count()
+        (dir, Map.empty, 3L * (3 + 3 + 1))
+      case GridFormat.Hdf5 =>
+        // (32, 4) in (2, 4) deflate chunks plus a contiguous (5) dataset
+        val p = s"$dir/m.h5"
+        ByteStore.writeAllBytes(p, HDF5.write(Seq(
+          HDF5.DsSpec("v", Seq(32, 4), Array.tabulate(128)(_ * 0.25 - 3.0),
+            chunkDims = Some(Seq(2, 4))),
+          HDF5.DsSpec("c", Seq(5), Array.tabulate(5)(_ * 2.0))), deflate = true))
+        (p, Map.empty, 16L + 1)
+      case GridFormat.NetCDF3 =>
+        // 40 records of sst in 10-record batches (span reads), tiny's 40
+        // records in one batch (per-record reads), the fixed yc slab
+        val (nrec, ny, nx) = (40, 6, 5)
+        val p = s"$dir/m.nc"
+        ByteStore.writeAllBytes(p, NetCDF3.write(
+          dims = Seq(NetCDF3.Dim("time", 0), NetCDF3.Dim("y", ny), NetCDF3.Dim("x", nx)),
+          gattrs = Nil,
+          vars = Seq(
+            NetCDF3.VarSpec("yc", Seq("y"), NetCDF3.NcFloat, Nil,
+              Array.tabulate(ny)(_ * 1.5)),
+            NetCDF3.VarSpec("sst", Seq("time", "y", "x"), NetCDF3.NcDouble, Nil,
+              Array.tabulate(nrec * ny * nx)(_ * 0.5)),
+            NetCDF3.VarSpec("tiny", Seq("time"), NetCDF3.NcShort, Nil,
+              Array.tabulate(nrec)(_ * 7.0))),
+          numRecs = nrec))
+        (p, Map("targetBytes" -> (10 * ny * nx * 8).toString), 4L + 1 + 1)
+    }
+  }
+
+  private def scanMetrics(df: DataFrame): (Long, Long) = {
+    val scan = df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }
+      .getOrElse(fail(s"no BatchScanExec in ${df.queryExecution.executedPlan}"))
+    assert(scan.scan.isInstanceOf[GridScan] && scan.supportsColumnar,
+      s"not a columnar grid scan: $scan")
+    (scan.metrics("chunksDecoded").value, scan.metrics("bytesRead").value)
+  }
+
+  test("every grid format plans a columnar scan whose metrics equal the recorded chunk reads") {
+    assert(GridFormat.all.size == 3)
+    GridFormat.all.foreach { f =>
+      val (path, opts, chunks) = metricsStore(f)
+      def mount = f.reader(spark).option("path", path).option("partitions", "2")
+        .options(opts).load()
+      def totalBytes(r: ByteStore.IoRecorder): Long = r.pathsTouched.toSeq.map(r.bytes).sum
+      val values = mount.select("idx", "value")
+      val (rows, rv) = recording(values.collect())
+      // index-only: the same plan and planning I/O, no chunk read or decoded
+      val idx = mount.select("idx")
+      val (idxRows, ri) = recording(idx.collect())
+      assert(rows.length == idxRows.length && rows.nonEmpty, f.name)
+      assert(scanMetrics(idx) == ((0L, 0L)), s"${f.name}: index-only read decoded chunks")
+      val (decoded, bytes) = scanMetrics(values)
+      assert(decoded == chunks, s"${f.name}: chunksDecoded $decoded, want $chunks")
+      // what the value read adds over the index-only read is the chunk reads
+      assert(bytes > 0 && bytes == totalBytes(rv) - totalBytes(ri),
+        s"${f.name}: bytesRead $bytes vs recorded ${totalBytes(rv) - totalBytes(ri)}")
+    }
+  }
+
+  /** One store per format holding `a` on a (time = 4, x = 3) grid with
+    * time and x coordinate variables. */
+  private def axesStore(f: GridFormat, dir: String): String = {
+    val (times, xs) = (Array(0.0, 6.0, 12.0, 18.0), Array(0.0, 10.0, 20.0))
+    val a = Array.tabulate(12)(_ * 1.5)
+    val units = "hours since 2021-03-01"
+    f match {
+      case GridFormat.Zarr =>
+        val store = s"$dir/s.zarr"
+        ByteStore.writeString(s"$store/.zgroup", """{"zarr_format": 2}""")
+        def arr(name: String, shape: Seq[Int], dims: Seq[String], data: Array[Double],
+            extra: String = ""): Unit = {
+          ByteStore.writeString(s"$store/$name/.zarray",
+            s"""{"zarr_format": 2, "shape": [${shape.mkString(",")}],
+               | "chunks": [${shape.mkString(",")}], "dtype": "<f8",
+               | "compressor": null, "fill_value": "NaN", "filters": null,
+               | "order": "C"}""".stripMargin)
+          ByteStore.writeString(s"$store/$name/.zattrs",
+            s"""{"_ARRAY_DIMENSIONS": [${dims.map("\"" + _ + "\"").mkString(",")}]$extra}""")
+          val bb = java.nio.ByteBuffer.allocate(data.length * 8)
+            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+          data.foreach(bb.putDouble)
+          ByteStore.writeAllBytes(s"$store/$name/${shape.map(_ => "0").mkString(".")}",
+            bb.array())
+        }
+        arr("a", Seq(4, 3), Seq("time", "x"), a)
+        arr("time", Seq(4), Seq("time"), times, s""", "units": "$units"""")
+        arr("x", Seq(3), Seq("x"), xs)
+        store
+      case GridFormat.NetCDF3 =>
+        val p = s"$dir/s.nc"
+        ByteStore.writeAllBytes(p, NetCDF3.write(
+          dims = Seq(NetCDF3.Dim("time", 0), NetCDF3.Dim("x", 3)), gattrs = Nil,
+          vars = Seq(
+            NetCDF3.VarSpec("time", Seq("time"), NetCDF3.NcDouble,
+              Seq(NetCDF3.Attr("units", NetCDF3.NcChar, units)), times),
+            NetCDF3.VarSpec("x", Seq("x"), NetCDF3.NcDouble, Nil, xs),
+            NetCDF3.VarSpec("a", Seq("time", "x"), NetCDF3.NcDouble, Nil, a)),
+          numRecs = 4))
+        p
+      case GridFormat.Hdf5 =>
+        val p = s"$dir/s.h5"
+        ByteStore.writeAllBytes(p, HDF5.write(Seq(
+          HDF5.DsSpec("a", Seq(4, 3), a, chunkDims = Some(Seq(2, 3)),
+            attrs = Seq(HDF5.WAttrDimList("DIMENSION_LIST", Seq("time", "x")))),
+          HDF5.DsSpec("time", Seq(4), times, attrs = Seq(
+            HDF5.WAttrString("NAME", "time"), HDF5.WAttrString("units", units))),
+          HDF5.DsSpec("x", Seq(3), xs, attrs = Seq(HDF5.WAttrString("NAME", "x"))))))
+        p
+    }
+  }
+
+  /** A bounded open builds its `dK` predicates from the coordinates its
+    * axes read already holds: it costs exactly the unbounded open's I/O,
+    * so each bounded axis's coordinate values are read once. */
+  private def boundedOpenReadsCoordsOnce(f: GridFormat): Unit = {
+    val dir = Files.createTempDirectory(s"graft-iocount-open-${f.name}").toString
+    val store = axesStore(f, dir)
+    val bounds = Map("time" -> (5.0, 13.0), "x" -> (5.0, 25.0))
+    val (plain, rp) = recording(GridOpen.open(spark, f, store, "a"))
+    val (bounded, rb) = recording(GridOpen.open(spark, f, store, "a", bounds))
+    val touched = rp.pathsTouched ++ rb.pathsTouched
+    assert(touched.nonEmpty)
+    touched.foreach { p =>
+      assert((rb.opens(p), rb.reads(p), rb.bytes(p)) == ((rp.opens(p), rp.reads(p), rp.bytes(p))),
+        s"${f.name}: bounded open of $p read (opens, reads, bytes) " +
+          s"${(rb.opens(p), rb.reads(p), rb.bytes(p))}, unbounded ${(rp.opens(p), rp.reads(p), rp.bytes(p))}")
+    }
+    assert(rb.metaOps == rp.metaOps, s"${f.name}: metadata ops ${rb.metaOps} vs ${rp.metaOps}")
+    if (f == GridFormat.Zarr) Seq("time/0", "x/0").foreach(c =>
+      assert(rb.reads(s"$store/$c") == 1, s"coordinate chunk $c read ${rb.reads(s"$store/$c")} times"))
+    // time 6 and 12 (records 1-2) x x 10 and 20 (columns 1-2)
+    assert(bounded.select("value").collect().map(_.getDouble(0)).sorted.toSeq ==
+      Seq(4, 5, 7, 8).map(_ * 1.5), f.name)
+    assert(plain.count() == 12, f.name)
+  }
+
+  test("a bounded zarr open reads each bounded axis's coordinate values once") {
+    boundedOpenReadsCoordsOnce(GridFormat.Zarr)
+  }
+
+  test("a bounded netCDF-3 open reads each bounded axis's coordinate values once") {
+    boundedOpenReadsCoordsOnce(GridFormat.NetCDF3)
+  }
+
+  test("a bounded HDF5 open reads each bounded axis's coordinate values once") {
+    boundedOpenReadsCoordsOnce(GridFormat.Hdf5)
+  }
 }

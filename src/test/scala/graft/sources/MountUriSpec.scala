@@ -230,12 +230,12 @@ class MountUriSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-uri-ing").toString
     val ncPath = s"$dir/rec.nc"
     writeNc3(ncPath, nRecs = 6, ny = 2, nx = 3)
-    val plain = NetCDF3ChunkIngest.readValues(spark, ncPath, "flux")
+    def flux(p: String) = GridFormat.NetCDF3.reader(spark).option("path", p).load()
+      .where(org.apache.spark.sql.functions.col("dataset") === "flux")
       .select("idx", "value").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
-    val viaUri = NetCDF3ChunkIngest.readValues(spark, uri(ncPath), "flux")
-      .select("idx", "value").collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
+    val plain = flux(ncPath)
+    val viaUri = flux(uri(ncPath))
     assert(plain.size == 36 && viaUri == plain)
   }
 

@@ -2,10 +2,10 @@ package graft.sources
 
 import graft.SparkSpec
 
-/** Chunk-parallel netCDF-3 record ingest: equality with the whole-file
-  * decode on foreign CDF-2 fixtures (single-record-var no-padding case
-  * AND the general multi-record-var stride), fan-out geometry, and the
-  * q129-style single-exchange plan assert. */
+/** Chunk-parallel netCDF-3 record reads through the grid scan: equality
+  * with the whole-file decode on foreign CDF-2 fixtures (single-record-
+  * var no-padding case AND the general multi-record-var stride), fan-out
+  * geometry, and the exchange-free plan. */
 class NetCDF3ChunkIngestSpec extends SparkSpec {
 
   private def fixturePath(name: String): String = {
@@ -20,9 +20,14 @@ class NetCDF3ChunkIngestSpec extends SparkSpec {
     vals.zipWithIndex.map { case (v, i) => i.toLong -> v }.toMap
   }
 
+  private def mount(path: String, varName: String, targetBytes: Long) =
+    GridFormat.NetCDF3.reader(spark).option("path", path)
+      .option("targetBytes", targetBytes.toString).load()
+      .where(org.apache.spark.sql.functions.col("dataset") === varName)
+
   private def chunked(path: String, varName: String,
       targetBytes: Long): Map[Long, Double] =
-    NetCDF3ChunkIngest.readValues(spark, path, varName, targetBytes)
+    mount(path, varName, targetBytes)
       .collect().map(r => r.getLong(2) -> r.getDouble(3)).toMap
 
   test("multi-record-var CDF-2 store: chunked read equals whole-file " +
@@ -59,16 +64,15 @@ class NetCDF3ChunkIngestSpec extends SparkSpec {
     assert(got == data.zipWithIndex.map { case (v, i) => i.toLong -> v }.toMap)
   }
 
-  test("plan: the fan-out is one range exchange and nothing else") {
+  test("plan: the scan's own partitions fan out, no exchange") {
     val p = fixturePath("consolidated_rec.nc")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val exec = NetCDF3ChunkIngest.readValues(spark, p, "flux", targetBytes = 64)
-        .queryExecution.executedPlan
-      val exchanges = exec.toString.linesIterator.filter(_.contains("Exchange")).toSeq
-      assert(exchanges.size == 1, s"expected one exchange:\n${exchanges.mkString("\n")}")
-      assert(exchanges.head.contains("rangepartitioning"),
-        s"fan-out must be (path, recStart) range partitioning:\n${exchanges.head}")
+      val df = mount(p, "flux", targetBytes = 64)
+      val exec = df.queryExecution.executedPlan.toString
+      assert(!exec.contains("Exchange"), s"expected no exchange:\n$exec")
+      // one partition per record task, up to the default parallelism
+      assert(df.rdd.getNumPartitions == math.min(24, spark.sparkContext.defaultParallelism))
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 }

@@ -43,7 +43,7 @@ class ParallelDiscoverySpec extends SparkSpec {
       i <- 0 until n; a <- Seq("lwp", "x", "y")
     } yield (s"$dir/sc${"%02d".format(i)}.zarr", a)).sorted
     val r = ByteStore.startRecording()
-    val got = try ZarrDataSource.discover(dir) finally ByteStore.stopRecording()
+    val got = try ZarrChunkIngest.discover(dir) finally ByteStore.stopRecording()
     assert(got == expected)
     // round-trip budget: the walk's METADATA op count is proportional
     // to directory count (each dir: one list + ~3 node probes), and the
@@ -52,7 +52,7 @@ class ParallelDiscoverySpec extends SparkSpec {
     info(s"discover over $n stores: ${r.metaOps} metadata ops")
     assert(r.metaOps <= n.toLong * 16 + 8, s"metadata ops blew up: ${r.metaOps}")
     // repeat runs are deterministic (the walk sorts after the wave)
-    assert(ZarrDataSource.discover(dir) == got)
+    assert(ZarrChunkIngest.discover(dir) == got)
     // and the mount over the many-store dir reads every scene's rows
     val cnt = spark.read.format("graft.sources.ZarrDataSource")
       .option("path", dir).load().where(col("dataset") === "lwp").count()
@@ -76,6 +76,6 @@ class ParallelDiscoverySpec extends SparkSpec {
     mkArray("top")
     mkArray("grp/a")
     mkArray("grp/sub/b")
-    assert(ZarrDataSource.arraysIn(store) == Seq("grp/a", "grp/sub/b", "top"))
+    assert(ZarrChunkIngest.arraysIn(store) == Seq("grp/a", "grp/sub/b", "top"))
   }
 }

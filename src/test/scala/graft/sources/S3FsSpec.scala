@@ -41,7 +41,7 @@ class S3FsSpec extends SparkSpec {
       .where(col("dataset") === "lwp").select("value")
       .collect().map(_.getDouble(0)).sorted
     assert(vals.toSeq == (0 until 24).map(_ * 0.5))
-    assert(CoordCrop.nc3VarValues(s"s3test:$dir/one.nc", "v").toSeq == Seq(1.0, 2.0))
+    assert(GridFormat.NetCDF3.arrayValues(s"s3test:$dir/one.nc", "v").toSeq == Seq(1.0, 2.0))
   }
 
   test("a cropped open issues bounded ranged reads, never whole-object GETs") {
@@ -164,7 +164,7 @@ class S3FsSpec extends SparkSpec {
         s"pending object leaked into a listing: $listed")
       // but direct-key reads DO see it (S3 read-after-write on keys)
       assert(ByteStore.isFile(s"s3test:$dir/c.nc"))
-      assert(CoordCrop.nc3VarValues(s"s3test:$dir/c.nc", "lwp").nonEmpty)
+      assert(GridFormat.NetCDF3.arrayValues(s"s3test:$dir/c.nc", "lwp").nonEmpty)
       // the manifest-planned open never lists: full, correct rows for
       // the manifested members while the window is open
       val got = GridOpen.catalogFromManifest(spark, manifest, "lwp")

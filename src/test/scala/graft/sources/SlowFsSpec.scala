@@ -43,7 +43,7 @@ class SlowFsSpec extends SparkSpec {
     val rtt = 20L
     SlowFs.reset(rtt)
     val t0 = System.nanoTime()
-    val got = ZarrDataSource.discover(s"slowfs:$dir")
+    val got = ZarrChunkIngest.discover(s"slowfs:$dir")
     val wallMs = (System.nanoTime() - t0) / 1000000
     val nOps = SlowFs.opCount.get()
     SlowFs.reset(0)

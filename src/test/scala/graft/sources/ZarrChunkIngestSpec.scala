@@ -2,9 +2,9 @@ package graft.sources
 
 import graft.SparkSpec
 
-/** Chunk-parallel zarr ingest: equality with the whole-array readers
-  * on v2 and v3 stores (incl. the foreign fixtures with a missing
-  * chunk), fan-out geometry. */
+/** Chunk-parallel zarr reads through the grid scan: equality with the
+  * whole-array readers on v2 and v3 stores (incl. the foreign fixtures
+  * with a missing chunk), fan-out geometry. */
 class ZarrChunkIngestSpec extends SparkSpec {
 
   private def fixture(name: String): java.io.File = {
@@ -14,7 +14,8 @@ class ZarrChunkIngestSpec extends SparkSpec {
   }
 
   private def chunked(store: String, name: String): Map[Long, Double] =
-    ZarrChunkIngest.readValues(spark, store, name)
+    GridFormat.Zarr.reader(spark).option("path", store).load()
+      .where(org.apache.spark.sql.functions.col("dataset") === name)
       .collect().map(r => r.getLong(2) -> r.getDouble(3)).toMap
 
   test("v2 foreign store: chunked == whole-array") {
@@ -35,9 +36,8 @@ class ZarrChunkIngestSpec extends SparkSpec {
   }
 
   test("sharded + blosc foreign stores ride the chunk-parallel path too") {
-    // decodeChunkBytes handles the full pipeline, so the task unit for
-    // a sharded array is the SHARD (its inner grid decodes in-task) and
-    // blosc chunks decode like any other compressor
+    // a sharded array's tasks are its inner chunks, and blosc chunks
+    // decode like any other compressor
     val sharded = fixture("golden_sharded_v3.zarr")
     val (_, wantS) = Zarr3.readArray(sharded, "temp")
     assert(chunked(sharded.getAbsolutePath, "temp") ==
@@ -57,9 +57,7 @@ class ZarrChunkIngestSpec extends SparkSpec {
     assert(tasks.size == 8) // 2 shards x (2x2) inner grid
     assert(tasks.count(_.length == -1L) == 1) // the absent inner chunk
     assert(tasks.filter(_.length >= 0).forall(_.offset >= 0))
-    val got = ZarrChunkIngest.readValuesShardInner(
-      spark, sharded.getAbsolutePath, "temp")
-      .collect().map(r => r.getLong(2) -> r.getDouble(3)).toMap
+    val got = chunked(sharded.getAbsolutePath, "temp")
     val (_, want) = Zarr3.readArray(sharded, "temp")
     assert(got == want.zipWithIndex.map { case (v, i) => i.toLong -> v }.toMap)
     // non-sharded arrays reject loudly on this path

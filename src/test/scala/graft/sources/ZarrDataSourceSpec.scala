@@ -34,8 +34,10 @@ class ZarrDataSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     def key(r: org.apache.spark.sql.Row) =
       (r.getString(1), r.getLong(2), r.getDouble(3))
     val got = df.collect().map(key).sorted.toSeq
+    // the library path is the whole-array decode
     val lib = Seq("cnt", "lwp", "wind").flatMap(a =>
-      ZarrChunkIngest.readValues(spark, V2Store, a).collect().map(key)).sorted
+      Zarr.readArray(new java.io.File(V2Store), a)._2.zipWithIndex
+        .map { case (v, i) => (a, i.toLong, v) }).sorted
     assert(got == lib)
     assert(df.schema.fieldNames.toSeq ==
       Seq("path", "dataset", "idx", "value", "d0", "d1", "d2", "d3"))
@@ -177,10 +179,8 @@ class ZarrDataSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val expect = for (r <- 0 until 6; c <- 0 until 8)
       yield if (r >= 4 && c < 4) -1.0 else r * 10.0 + c // absent inner chunk
     assert(got == expect)
-    // matches the library shard-inner path exactly
-    val lib = ZarrChunkIngest.readValuesShardInner(spark, ShardStore, "temp")
-      .orderBy("idx").collect().map(_.getDouble(3)).toSeq
-    assert(got == lib)
+    // matches the whole-array decode exactly
+    assert(got == Zarr3.readArray(new java.io.File(ShardStore), "temp")._2.toSeq)
   }
 
   test("index-only projection never opens chunk files") {
@@ -236,8 +236,8 @@ class ZarrDataSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(t2m.collect().map(_.getDouble(3)).toSeq ==
       Seq(271.5, 272.25, 273.0, 274.75))
     assert(df.where(col("dataset") === "xc").count() == 3)
-    // the library chunk ingest reads group-path names too
-    assert(ZarrChunkIngest.readValues(spark, store, "model/lwp").count() == 6)
+    // the whole-array reader resolves group-path names too
+    assert(Zarr.readArray(new java.io.File(store), "model/lwp")._2.length == 6)
   }
 
   test("a directory of stores discovers all of them; path filter prunes") {
@@ -251,9 +251,9 @@ class ZarrDataSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val one = all.where(col("path") === s1.toString)
     assert(one.rdd.getNumPartitions == 7)
     assert(one.where(col("dataset") === "wind").count() == 3)
-    // dataset option narrows discovery like the library path
-    val ds = spark.read.format(Fmt).option("path", tmp.toString)
-      .option("dataset", "wind").load()
+    // a dataset filter narrows discovery like the library path
+    val ds = spark.read.format(Fmt).option("path", tmp.toString).load()
+      .where(col("dataset") === "wind")
     assert(ds.select("dataset").distinct().collect().map(_.getString(0)).toSeq
       == Seq("wind"))
     assert(ds.count() == 6)
@@ -277,7 +277,7 @@ class ZarrDataSourceSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(df.collect().length == 2 * 6 * 3)
     val plan = df.queryExecution.executedPlan
     val scans = collect(plan) {
-      case b: BatchScanExec if b.scan.isInstanceOf[ZarrScan] => b
+      case b: BatchScanExec if b.scan.isInstanceOf[GridScan] => b
     }
     assert(scans.nonEmpty, plan.toString)
     assert(scans.forall(_.supportsColumnar), plan.toString)
