@@ -7,11 +7,12 @@ import org.apache.spark.sql.{DataFrameReader, SparkSession}
   * as a value (a manifest-planned open reads it from the manifest's own
   * `format` column) and each case owns the primitives that differ by
   * format: raw axes, CF pack attrs, store listing, variable membership,
-  * the mount over a member list, and the grid scan's two format steps —
-  * [[plan]] (stores to pruned chunk tasks) and [[decode]] (tasks to
-  * blocks). Everything else about a read is [[GridScan]]'s. */
-sealed abstract class GridFormat(val name: String, source: String)
-    extends Product with Serializable {
+  * the mount over a member list, and, through its [[GridScan.Codec]],
+  * the grid scan's two format steps — [[plan]] (stores to pruned chunk
+  * tasks) and [[decode]] (tasks to blocks). Everything else about a read
+  * is [[GridScan]]'s. */
+sealed abstract class GridFormat(val name: String, source: String,
+    codec: GridScan.Codec) extends Product with Serializable {
 
   /** A reader on this format's mount. */
   def reader(spark: SparkSession): DataFrameReader = spark.read.format(source)
@@ -48,23 +49,20 @@ sealed abstract class GridFormat(val name: String, source: String)
     * stores' chunk tasks surviving `prune`, as lists of one task kind
     * each ([[GridScan]] slices each list into its own partitions). */
   private[sources] def plan(path: String, options: Map[String, String],
-      prune: GridScan.Prune): Seq[Seq[GridScan.Task]]
+      prune: GridScan.Prune): Seq[Seq[GridScan.Task]] = codec.plan(path, options, prune)
 
   /** Decode one partition's tasks (all of one kind, in plan order) into
     * blocks; without `withValues` no payload byte is read. */
   private[sources] def decode(tasks: Seq[GridScan.Task], withValues: Boolean,
-      stats: GridScan.ReadStats, files: GridScan.OpenFiles): Iterator[GridScan.Block]
-
-  /** Every block of one variable of one store, values read. */
-  protected def arrayBlocks(store: String, variable: String,
-      files: GridScan.OpenFiles): Iterator[GridScan.Block]
+      stats: GridScan.ReadStats, files: GridScan.OpenFiles): Iterator[GridScan.Block] =
+    codec.decode(tasks, withValues, stats, files)
 
   /** One variable's full values in global C order, read driver-side
     * (the KB-scale 1-D coordinate arrays of the axes): the blocks of its
     * unpruned plan, decoded into place. */
   def arrayValues(store: String, variable: String): Array[Double] = {
     val files = new GridScan.OpenFiles
-    try GridScan.scatter(arrayBlocks(store, variable, files)) finally files.close()
+    try GridScan.scatter(codec.arrayBlocks(store, variable, files)) finally files.close()
   }
 
   override def toString: String = name
@@ -75,7 +73,8 @@ object GridFormat {
   /** Zarr v2/v3 scene stores. Membership comes from the one discover
     * walk that lists them, and the mount takes the catalog dir as
     * `path` plus every (store, variable) pair as `arrays`. */
-  case object Zarr extends GridFormat("zarr", "graft.sources.ZarrDataSource") {
+  case object Zarr extends GridFormat("zarr", "graft.sources.ZarrDataSource",
+      ZarrChunkIngest) {
     def rawAxes(store: String, variable: String): Seq[GridOpen.RawAxis] = {
       val dims = dimNames(store, variable)
       GridOpen.checkRank(dims.length, s"$store/$variable")
@@ -116,22 +115,13 @@ object GridFormat {
     def mountCatalog(spark: SparkSession, dir: String, members: Seq[String],
         variables: Seq[String]): DataFrameReader =
       mountMembers(spark, dir, members, variables)
-    private[sources] def plan(path: String, options: Map[String, String],
-        prune: GridScan.Prune): Seq[Seq[GridScan.Task]] =
-      ZarrChunkIngest.plan(path, options, prune)
-    private[sources] def decode(tasks: Seq[GridScan.Task], withValues: Boolean,
-        stats: GridScan.ReadStats, files: GridScan.OpenFiles): Iterator[GridScan.Block] =
-      ZarrChunkIngest.decode(tasks, withValues, stats, files)
-    protected def arrayBlocks(store: String, variable: String,
-        files: GridScan.OpenFiles): Iterator[GridScan.Block] =
-      ZarrChunkIngest.arrayBlocks(store, variable, files)
   }
 
   /** A catalog of per-scene files: a dir (every file in it) or a glob.
     * The member-list mount takes the files as a newline list; the live
     * catalog mount takes the dir's glob. */
-  sealed abstract class FileFormat(name: String, source: String)
-      extends GridFormat(name, source) {
+  sealed abstract class FileFormat(name: String, source: String, codec: GridScan.Codec)
+      extends GridFormat(name, source, codec) {
     def stores(dir: String): Seq[String] = CoordCrop.catalogFiles(dir)
     // membership is one header read per file, a latency round trip on
     // an object store, so the scan rides one parMap wave, not N x RTT
@@ -152,7 +142,8 @@ object GridFormat {
   }
 
   /** netCDF classic (CDF-1/2/5) scene files. */
-  case object NetCDF3 extends FileFormat("netcdf3", "graft.sources.NetCDF3DataSource") {
+  case object NetCDF3 extends FileFormat("netcdf3", "graft.sources.NetCDF3DataSource",
+      NetCDF3ChunkIngest) {
     def rawAxes(path: String, variable: String): Seq[GridOpen.RawAxis] = {
       val h = NetCDF3ChunkIngest.headerOf(path)
       val v = h.vars.find(_.name == variable).getOrElse(throw
@@ -174,20 +165,11 @@ object GridFormat {
       CoordCrop.nc3DimNames(path, variable)
     def variablesIn(path: String): Set[String] =
       NetCDF3ChunkIngest.headerOf(path).vars.map(_.name).toSet
-    private[sources] def plan(path: String, options: Map[String, String],
-        prune: GridScan.Prune): Seq[Seq[GridScan.Task]] =
-      NetCDF3ChunkIngest.plan(path,
-        options.get("targetBytes").map(_.toLong).getOrElse(4L << 20), prune)
-    private[sources] def decode(tasks: Seq[GridScan.Task], withValues: Boolean,
-        stats: GridScan.ReadStats, files: GridScan.OpenFiles): Iterator[GridScan.Block] =
-      NetCDF3ChunkIngest.decode(tasks, withValues, stats, files)
-    protected def arrayBlocks(path: String, variable: String,
-        files: GridScan.OpenFiles): Iterator[GridScan.Block] =
-      NetCDF3ChunkIngest.arrayBlocks(path, variable, files)
   }
 
   /** netCDF-4/HDF5 scene files, axes named by their dimension scales. */
-  case object Hdf5 extends FileFormat("hdf5", "graft.sources.Hdf5DataSource") {
+  case object Hdf5 extends FileFormat("hdf5", "graft.sources.Hdf5DataSource",
+      HDF5ChunkIngest) {
     def rawAxes(path: String, variable: String): Seq[GridOpen.RawAxis] = {
       val dims = dimNames(path, variable)
       GridOpen.checkRank(dims.length, s"$path/$variable")
@@ -208,15 +190,6 @@ object GridFormat {
       val in = new PagedFileInput(path)
       try HDF5.dimensionNames(in).keySet finally in.close()
     }
-    private[sources] def plan(path: String, options: Map[String, String],
-        prune: GridScan.Prune): Seq[Seq[GridScan.Task]] =
-      HDF5ChunkIngest.plan(path, prune)
-    private[sources] def decode(tasks: Seq[GridScan.Task], withValues: Boolean,
-        stats: GridScan.ReadStats, files: GridScan.OpenFiles): Iterator[GridScan.Block] =
-      HDF5ChunkIngest.decode(tasks, withValues, stats, files)
-    protected def arrayBlocks(path: String, variable: String,
-        files: GridScan.OpenFiles): Iterator[GridScan.Block] =
-      HDF5ChunkIngest.arrayBlocks(path, variable, files)
   }
 
   /** Every format, in the order unknown-name messages list them. */

@@ -265,6 +265,20 @@ object GridScan {
     * [[GridPartition]]; only the format that planned it decodes it. */
   trait Task extends Serializable
 
+  /** The steps that differ by format, behind each [[GridFormat]]
+    * (shipped with it to the executors). */
+  trait Codec extends Serializable {
+    /** The mount's chunk tasks surviving `prune`, one list per kind. */
+    private[sources] def plan(path: String, options: Map[String, String],
+        prune: Prune): Seq[Seq[Task]]
+    /** One partition's tasks as blocks, in task order. */
+    private[sources] def decode(tasks: Seq[Task], withValues: Boolean,
+        stats: ReadStats, files: OpenFiles): Iterator[Block]
+    /** Every block of one variable of one store, values read. */
+    private[sources] def arrayBlocks(store: String, variable: String,
+        files: OpenFiles): Iterator[Block]
+  }
+
   /** The pushed filters and catalog hulls a plan prunes on. */
   private[sources] final class Prune(pushed: Array[Filter],
       hulls: Option[Map[String, IndexedSeq[MountDsv2.IdxRange]]]) {

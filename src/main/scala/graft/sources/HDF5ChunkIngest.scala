@@ -30,7 +30,7 @@ import GridScan.{Block, OpenFiles, Prune, ReadStats, Task}
   * (`file://`/`hdfs://`/`s3a://`) via `org.apache.hadoop.fs` — object
   * stores mount directly, no fuse layer needed.
   */
-object HDF5ChunkIngest {
+object HDF5ChunkIngest extends GridScan.Codec {
 
   /** One decode task: a chunk plus everything needed to decode it with
     * no further metadata access. */
@@ -68,7 +68,8 @@ object HDF5ChunkIngest {
 
   /** The mount's chunk tasks: files the pushed filters exclude never
     * have their manifest read; chunks prune on their box. */
-  private[sources] def plan(path: String, prune: Prune): Seq[Seq[Task]] = {
+  private[sources] def plan(path: String, options: Map[String, String],
+      prune: Prune): Seq[Seq[Task]] = {
     val paths = resolvePaths(path).filter(prune.store)
     Seq(chunkTasks(paths)
       .filter(t => prune.variable(t.path, t.dataset) &&

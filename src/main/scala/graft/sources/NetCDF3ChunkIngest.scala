@@ -16,7 +16,7 @@ import GridScan.{Block, OpenFiles, Prune, ReadStats, Task}
   *  - decode (executors): positioned reads — one file handle per (path,
   *    partition), byte-monotone access, peak memory one record batch.
   */
-object NetCDF3ChunkIngest {
+object NetCDF3ChunkIngest extends GridScan.Codec {
 
   /** `dims` is the variable's full shape (record dimension included,
     * as its CURRENT record count). A record task is the box (recStart,
@@ -91,8 +91,9 @@ object NetCDF3ChunkIngest {
   /** The mount's record tasks: files the pushed filters exclude never
     * have their header read; record batches prune on their box and
     * narrow to the pushed record window. */
-  private[sources] def plan(path: String, targetBytes: Long,
+  private[sources] def plan(path: String, options: Map[String, String],
       prune: Prune): Seq[Seq[Task]] = {
+    val targetBytes = options.get("targetBytes").map(_.toLong).getOrElse(4L << 20)
     val paths = HDF5ChunkIngest.resolvePaths(path).filter(prune.store)
     Seq(paths.flatMap { p =>
       headerOf(p).vars.map(_.name).filter(prune.variable(p, _))

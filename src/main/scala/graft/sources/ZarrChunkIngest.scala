@@ -20,7 +20,7 @@ import GridScan.{Block, OpenFiles, Prune, ReadStats, Task}
   * recursively (v2 `.zgroup`/`.zarray` markers, v3 `zarr.json`
   * node_type), the layout xarray writes for multi-variable output.
   */
-object ZarrChunkIngest {
+object ZarrChunkIngest extends GridScan.Codec {
 
   /** One chunk task: store path, array name (possibly a group path),
     * and the chunk's grid index. */

@@ -23,7 +23,7 @@ class ManifestFormatSpec extends SparkSpec {
   private def aRaw(k: Int) = Array.tabulate(6)(j => k * 100.0 + j)
   private def bRaw(k: Int) = Array.tabulate(6)(j => -k * 10.0 - j)
 
-  private def writeZarr(dir: String, k: Int): Unit = {
+  private def writeZarr(dir: String, k: Int, withA: Boolean): Unit = {
     val store = s"$dir/s$k.zarr"
     ByteStore.writeString(s"$store/.zgroup", """{"zarr_format": 2}""")
     def arr(name: String, shape: Seq[Int], dims: Seq[String],
@@ -41,13 +41,13 @@ class ManifestFormatSpec extends SparkSpec {
       ByteStore.writeAllBytes(s"$store/$name/${shape.map(_ => "0").mkString(".")}",
         bb.array())
     }
-    arr("a", Seq(2, 3), Seq("time", "x"), aRaw(k), s""", "scale_factor": ${scale(k)}""")
+    if (withA) arr("a", Seq(2, 3), Seq("time", "x"), aRaw(k), s""", "scale_factor": ${scale(k)}""")
     arr("b", Seq(2, 3), Seq("time", "x"), bRaw(k))
     arr("time", Seq(2), Seq("time"), times, s""", "units": "${units(k)}"""")
     arr("x", Seq(3), Seq("x"), xs)
   }
 
-  private def writeNetcdf3(dir: String, k: Int): Unit =
+  private def writeNetcdf3(dir: String, k: Int, withA: Boolean): Unit =
     ByteStore.writeAllBytes(s"$dir/s$k.nc", NetCDF3.write(
       dims = Seq(NetCDF3.Dim("time", 2), NetCDF3.Dim("x", 3)),
       gattrs = Nil,
@@ -58,9 +58,10 @@ class ManifestFormatSpec extends SparkSpec {
         NetCDF3.VarSpec("a", Seq("time", "x"), NetCDF3.NcDouble,
           Seq(NetCDF3.Attr("scale_factor", NetCDF3.NcDouble, Array(scale(k)))),
           aRaw(k)),
-        NetCDF3.VarSpec("b", Seq("time", "x"), NetCDF3.NcDouble, Nil, bRaw(k)))))
+        NetCDF3.VarSpec("b", Seq("time", "x"), NetCDF3.NcDouble, Nil, bRaw(k)))
+        .filter(v => withA || v.name != "a")))
 
-  private def writeHdf5(dir: String, k: Int): Unit = {
+  private def writeHdf5(dir: String, k: Int, withA: Boolean): Unit = {
     val dimList = HDF5.WAttrDimList("DIMENSION_LIST", Seq("time", "x"))
     ByteStore.writeAllBytes(s"$dir/s$k.h5", HDF5.write(Seq(
       HDF5.DsSpec("a", Seq(2, 3), aRaw(k), chunkDims = Some(Seq(1, 3)),
@@ -69,18 +70,21 @@ class ManifestFormatSpec extends SparkSpec {
         attrs = Seq(dimList)),
       HDF5.DsSpec("time", Seq(2), times, attrs = Seq(
         HDF5.WAttrString("NAME", "time"), HDF5.WAttrString("units", units(k)))),
-      HDF5.DsSpec("x", Seq(3), xs, attrs = Seq(HDF5.WAttrString("NAME", "x"))))))
+      HDF5.DsSpec("x", Seq(3), xs, attrs = Seq(HDF5.WAttrString("NAME", "x"))))
+      .filter(d => withA || d.name != "a")))
   }
+
+  private val writers: Seq[(GridFormat, (String, Int, Boolean) => Unit)] = Seq(
+    (GridFormat.Zarr, writeZarr), (GridFormat.NetCDF3, writeNetcdf3),
+    (GridFormat.Hdf5, writeHdf5))
 
   /** One manifest per format over the same three scenes. */
   private lazy val manifests: Seq[(GridFormat, String)] = {
     val root = Files.createTempDirectory("graft-manifest-format").toString
-    Seq[(GridFormat, (String, Int) => Unit)](
-      (GridFormat.Zarr, writeZarr), (GridFormat.NetCDF3, writeNetcdf3),
-      (GridFormat.Hdf5, writeHdf5)).map { case (f, write) =>
+    writers.map { case (f, write) =>
       val dir = s"$root/${f.name}"
       ByteStore.mkdirs(dir)
-      (0 until 3).foreach(write(dir, _))
+      (0 until 3).foreach(write(dir, _, true))
       val manifest = s"$root/_manifest_${f.name}"
       CatalogManifest.build(spark, f.name, dir, Seq("a", "b"), manifest)
       (f, manifest)
@@ -123,6 +127,20 @@ class ManifestFormatSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("unknown grid format 'grib' (zarr/netcdf3/hdf5)"),
       e.getMessage)
+  }
+
+  test("a live catalog open fails loudly on a store lacking the variable, in every format") {
+    val root = Files.createTempDirectory("graft-manifest-member").toString
+    writers.foreach { case (f, write) =>
+      val dir = s"$root/${f.name}"
+      ByteStore.mkdirs(dir)
+      // scene 2 holds `b` only
+      (0 until 3).foreach(k => write(dir, k, k < 2))
+      assert(GridOpen.catalog(spark, f, dir, "b").count() == 18, f.name)
+      val e = intercept[IllegalArgumentException](GridOpen.catalog(spark, f, dir, "a"))
+      assert(e.getMessage.contains("s2.") && e.getMessage.contains("a"),
+        s"${f.name}: ${e.getMessage}")
+    }
   }
 
   test("catalogFromManifest decodes the same rows from zarr, netCDF-3 and HDF5 manifests") {
