@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Path}
 
 import graft.SparkSpec
