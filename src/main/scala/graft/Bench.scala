@@ -165,15 +165,14 @@ object Bench {
     val set = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(headline)
 
-    runOnce(set.head) // JIT/session warmup, not reported
-    graft.operators.Dedup.releaseCaches()
+    // one cache scope per run: the operator-persisted caches drop after
+    // EVERY run (round-21 methodology fix), so each run executes the
+    // complete plan including cache materialization — the median is
+    // per-execution cost
+    def scopedRun(n: String): Double = graft.core.Caching.scope(spark)(runOnce(n))
+    scopedRun(set.head) // JIT/session warmup, not reported
     val firstPass = set.map { n =>
-      // release operator-persisted caches after EVERY run (round-21
-      // methodology fix): each run executes the complete plan including
-      // cache materialization — the median is per-execution cost
-      val times = (1 to nRuns).map { _ =>
-        val t = runOnce(n); graft.operators.Dedup.releaseCaches(); t
-      }
+      val times = (1 to nRuns).map(_ => scopedRun(n))
       n -> times
     }
     // Spread guard (round-7, after BENCH_r06's load-contaminated medians):
@@ -183,9 +182,7 @@ object Bench {
     val runs = firstPass.map { case (n, ts) =>
       val ok = ts.forall(_ >= 0)
       if (ok && ts.min > 0 && ts.max / ts.min > 2.0 && nRuns > 1) {
-        val more = (1 to nRuns).map { _ =>
-          val t = runOnce(n); graft.operators.Dedup.releaseCaches(); t
-        }
+        val more = (1 to nRuns).map(_ => scopedRun(n))
         n -> (ts ++ more)
       } else n -> ts
     }

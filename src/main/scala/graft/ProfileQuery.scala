@@ -45,7 +45,8 @@ object ProfileQuery {
       }
     })
 
-    def once(tag: String): Double = {
+    // one cache scope per run, so every run pays its own cache builds
+    def once(tag: String): Double = graft.core.Caching.scope(spark) {
       spark.sparkContext.setJobDescription(s"$name $tag")
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir)
@@ -54,12 +55,10 @@ object ProfileQuery {
     }
 
     val warm = once("warmup")
-    graft.operators.Dedup.releaseCaches()
     println(f"[profile] $name warmup ${warm}%.3f s; measuring $runs runs")
     (1 to runs).foreach { i =>
       stages.clear(); jobs = 0
       val t = once(s"run$i")
-      graft.operators.Dedup.releaseCaches()
       // stage completion events are posted asynchronously; drain the bus
       Thread.sleep(300)
       println(f"\n[profile] $name run$i%d total ${t}%.3f s, $jobs%d jobs, ${stages.size}%d stages, stage-ms sum ${stages.map(_.ms).sum}%d")

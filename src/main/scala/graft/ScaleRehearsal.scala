@@ -116,23 +116,21 @@ object ScaleRehearsal {
     val docs = Tables.documents(spark, dir)
 
     // ---- LSH near-dup, shuffled verify joins (the >broadcast-budget mode)
-    // timed through an eager localCheckpoint so the SAME materialized
-    // pair set feeds the CC measurement without a second LSH pass
+    // timed through an eager lineage truncation so the SAME materialized
+    // pair set feeds the CC measurement without a second LSH pass; the
+    // LSH caches drop when the scope closes
     if (wanted("lsh_neardup_bcast_off") || wanted("altstar_cc")) {
       var pairs: org.apache.spark.sql.DataFrame = null
+      def lshPairs(): org.apache.spark.sql.DataFrame = graft.core.Caching.scope(spark) {
+        graft.core.Checkpointing.truncate(graft.operators.Dedup.lshNearDupPairs(
+          docs, "doc_id", "text", k = 8, bands = 4, threshold = 0.35,
+          broadcastShingles = false))
+      }
       timed("lsh_neardup_bcast_off") {
-        pairs = graft.operators.Dedup.lshNearDupPairs(docs, "doc_id", "text",
-          k = 8, bands = 4, threshold = 0.35, broadcastShingles = false)
-          .localCheckpoint(true)
-        graft.operators.Dedup.releaseCaches()
+        pairs = lshPairs()
         pairs.count()
       }
-      if (pairs == null) { // altstar requested alone: build pairs untimed
-        pairs = graft.operators.Dedup.lshNearDupPairs(docs, "doc_id", "text",
-          k = 8, bands = 4, threshold = 0.35, broadcastShingles = false)
-          .localCheckpoint(true)
-        graft.operators.Dedup.releaseCaches()
-      }
+      if (pairs == null) pairs = lshPairs() // altstar requested alone: build pairs untimed
       // ---- alt-star CC on the x-scale near-dup pair graph --------------
       timed("altstar_cc") {
         graft.operators.Dedup.connectedComponentsAltStar(pairs, "doc_a", "doc_b").count()

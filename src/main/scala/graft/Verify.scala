@@ -18,7 +18,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try {
+      try graft.core.Caching.scope(spark) {
         val df = fn(spark, sfDir)
         // session TZ is UTC, so LTZ->NTZ keeps the instant; NTZ parquet
         // matches DuckDB's naive timestamps byte-for-byte in the compare
@@ -33,7 +33,6 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      finally graft.operators.Dedup.releaseCaches()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

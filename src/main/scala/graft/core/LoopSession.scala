@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Loop-scoped planning session for iterative operators (connected
   * components and friends).
@@ -17,7 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * session only. The caller's session — and every other thread planning
   * against it — keeps its own conf untouched.
   *
-  * Frames cross the boundary via [[org.apache.spark.sql.GraftSessionBridge.rebind]],
+  * Frames cross the boundary via [[org.apache.spark.sql.GraftPartitionedCache.rebind]],
   * and only in lineage-truncated (LogicalRDD) form.
   */
 object LoopSession {
@@ -39,8 +39,4 @@ object LoopSession {
     s.conf.set("spark.sql.shuffle.partitions", p.toString)
     s
   }
-
-  /** Move a lineage-truncated frame onto `to`. */
-  def rebind(df: DataFrame, to: SparkSession): DataFrame =
-    org.apache.spark.sql.GraftSessionBridge.rebind(df, to)
 }

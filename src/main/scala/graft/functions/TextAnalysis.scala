@@ -229,7 +229,7 @@ object TextAnalysis {
     // cache, column pruning specializes each branch's plan and the
     // tokenizer re-runs per branch, single-task on a one-split corpus.
     // Cache holds tokens packed per doc; every cache here stays until
-    // the consuming wrapper releases it (Dedup.releaseCaches).
+    // the caller's cache scope closes (graft.core.Caching).
     // partition-VISIBLE floor cache (Caching.persist keyed on doc_id):
     // the per-doc bigram aggregation clusters on (doc_id, w1, w2), which
     // hash(doc_id) satisfies — with a plain cache the AQE wrapper hides

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Checkpointing
 import graft.functions.TextAnalysis
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -19,8 +20,8 @@ import org.apache.spark.sql.functions._
   * corpus). Per round: one pair explode + one map-side-combinable sum +
   * a 1-row collect (the argmax — bounded driver state, the q112/HDBSCAN
   * pattern), then one projection applying the merge. Lineage truncates
-  * every round ([[Checkpointing]]; pass `checkpointDir` for the reliable
-  * cluster mode).
+  * every round ([[Checkpointing]]: reliable when the context has a
+  * checkpoint dir).
   *
   * Determinism: the round winner is (count DESC, left, right) — fully
   * ordered, so the learned table is independent of partitioning. The
@@ -83,13 +84,11 @@ object BpeTrainer {
     * `textCol` (tokens = TextAnalysis.tokens: lower, trim, split \s+).
     * Returns fewer merges only if the vocabulary runs out of adjacent
     * pairs (every word reduced to a single symbol). */
-  def learnMerges(df: DataFrame, textCol: String, nMerges: Int,
-      checkpointDir: Option[String] = None): Seq[Merge] = {
+  def learnMerges(df: DataFrame, textCol: String, nMerges: Int): Seq[Merge] = {
     val vocab = df
       .select(explode(TextAnalysis.tokens(col(textCol))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("cnt"))
-    mergeLoop(vocab.select(spaced(col("tok")).as("seg"), col("cnt")),
-      nMerges, checkpointDir)
+    mergeLoop(vocab.select(spaced(col("tok")).as("seg"), col("cnt")), nMerges)
   }
 
   /** BYTE-LEVEL variant (the GPT-2 recipe, Radford et al. 2019 §2.2):
@@ -99,22 +98,20 @@ object BpeTrainer {
     * to themselves (space -> 'Ġ'), multi-byte characters split into one
     * symbol per byte and merge back byte-by-byte. Any UTF-8 corpus
     * trains; there is no ASCII restriction. */
-  def learnByteMerges(df: DataFrame, textCol: String, nMerges: Int,
-      checkpointDir: Option[String] = None): Seq[Merge] = {
+  def learnByteMerges(df: DataFrame, textCol: String, nMerges: Int): Seq[Merge] = {
     val vocab = df
       .select(explode(regexp_extract_all(lower(col(textCol)),
         lit(ByteLevelPretokenRegex), lit(0))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("cnt"))
     mergeLoop(vocab.select(spaced(byteSymbols(col("tok"))).as("seg"), col("cnt")),
-      nMerges, checkpointDir)
+      nMerges)
   }
 
   /** The shared round loop: pair-count argmax + double boundary-anchored
     * replace over a (seg, cnt) vocabulary frame. */
-  private def mergeLoop(segInit: DataFrame, nMerges: Int,
-      checkpointDir: Option[String]): Seq[Merge] = {
+  private def mergeLoop(segInit: DataFrame, nMerges: Int): Seq[Merge] = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    var seg = Checkpointing.truncate(segInit, checkpointDir)
+    var seg = Checkpointing.truncate(segInit)
     val merges = Seq.newBuilder[Merge]
     var round = 0
     var exhausted = false
@@ -143,8 +140,7 @@ object BpeTrainer {
         val rep = lit(s" $l$r ")
         def applied(c: Column): Column = call_function("replace", c, pat, rep)
         seg = Checkpointing.truncate(
-          seg.select(applied(applied(col("seg"))).as("seg"), col("cnt")),
-          checkpointDir)
+          seg.select(applied(applied(col("seg"))).as("seg"), col("cnt")))
         round += 1
       }
     }

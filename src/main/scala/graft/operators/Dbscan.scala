@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
 object Dbscan {
 
   def cluster(points: DataFrame, idCol: String, xCol: String, yCol: String,
-      eps: Double, minPts: Int, checkpointDir: Option[String] = None): DataFrame = {
+      eps: Double, minPts: Int): DataFrame = {
     require(eps > 0, "eps must be positive")
     // delegate to the shared n-dim candidate join with vec = [x, y]:
     // dist2 is the identical two-term (dx*dx + dy*dy) sum (SqL2Dist is a
@@ -39,7 +39,7 @@ object Dbscan {
     val pts = points.select(
       col(idCol).cast("long").as("pid"),
       array(col(xCol).cast("double"), col(yCol).cast("double")).as("vec"))
-    clusterBinned(pts, eps, minPts, binDims = 2, checkpointDir)
+    clusterBinned(pts, eps, minPts, binDims = 2)
   }
 
   /** DBSCAN over n-dim vectors (the embedding-space form the reference's
@@ -59,35 +59,34 @@ object Dbscan {
     * The exact distance (a left-to-right squared-diff fold, restatable
     * in SQL) runs on candidates only — never all pairs. */
   def clusterVectors(points: DataFrame, idCol: String, vecCol: String,
-      eps: Double, minPts: Int, binDims: Int = 2,
-      checkpointDir: Option[String] = None): DataFrame = {
+      eps: Double, minPts: Int, binDims: Int = 2): DataFrame = {
     require(eps > 0, "eps must be positive")
     require(binDims >= 1 && binDims <= 3,
       s"binDims must be in 1..3 neighbor-cell dims, got $binDims")
     val pts = points.select(col(idCol).cast("long").as("pid"),
       transform(col(vecCol), x => x.cast("double")).as("vec"))
-    clusterBinned(pts, eps, minPts, binDims, checkpointDir)
+    clusterBinned(pts, eps, minPts, binDims)
   }
 
   /** Shared body of [[cluster]] / [[clusterVectors]] over (pid, vec). */
   private def clusterBinned(pts: DataFrame, eps: Double, minPts: Int,
-      binDims: Int, checkpointDir: Option[String]): DataFrame = {
+      binDims: Int): DataFrame = {
     val eps2 = eps * eps
     val (joined, dist2, _) = candidateJoin(pts, eps, binDims)
     // HALF pairs: each unordered ε-pair once (arbitrary orientation),
     // self-pairs (a,a) once — the exact distance runs once per unordered
     // pair; consumers re-symmetrize below (a cheap projection over the
     // cache, vs. paying dist2 on both orientations of every candidate).
-    // The bin and pair caches stay until the consuming wrapper releases
-    // them (Dedup.releaseCaches) after the output is consumed, so the
-    // labeling tail needs no eager materialization pass of its own just
-    // to release them early — that would cost one full tail execution +
+    // The bin and pair caches stay until the caller's cache scope closes
+    // (graft.core.Caching) after the output is consumed, so the labeling
+    // tail needs no eager materialization pass of its own just to
+    // release them early — that would cost one full tail execution +
     // action.
     val pairs = graft.core.Caching.persist(joined
       .where(dist2 <= eps2)
       .select(col("a_id"), col("b_id"))).df
 
-    labelFromPairs(symmetrized(pairs), minPts, checkpointDir)
+    labelFromPairs(symmetrized(pairs), minPts)
   }
 
   /** Both orientations of every a != b row, self rows once — rebuilds the
@@ -155,8 +154,7 @@ object Dbscan {
     * is_core). Core = degree >= minPts; clusters = alt-star components
     * over core-core edges labeled by min core id; borders adopt the min
     * neighbor cluster; everything else is noise (-1). */
-  private def labelFromPairs(pairs: DataFrame, minPts: Int,
-      checkpointDir: Option[String]): DataFrame = {
+  private def labelFromPairs(pairs: DataFrame, minPts: Int): DataFrame = {
     val core = graft.core.Caching.persist(
       pairs.groupBy(col("a_id")).agg(count(lit(1)).as("deg"))
         .where(col("deg") >= minPts)
@@ -167,8 +165,7 @@ object Dbscan {
       .join(core.withColumnRenamed("pid", "b_id"), "b_id")
       .where(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"))
-    val comp = Dedup.connectedComponentsAltStar(coreEdges, "a_id", "b_id",
-      checkpointDir = checkpointDir)
+    val comp = Dedup.connectedComponentsAltStar(coreEdges, "a_id", "b_id")
     // singleton cores (no core neighbor) label themselves
     val coreLabels = graft.core.Caching.persist(core
       .join(comp.withColumnRenamed("node", "pid"), Seq("pid"), "left")

@@ -1,7 +1,8 @@
 package graft.operators
 
+import graft.core.Checkpointing
 import graft.functions.TextAnalysis
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftPartitionedCache}
 import org.apache.spark.sql.functions._
 
 /** Document deduplication suite for training-data pipelines:
@@ -21,15 +22,13 @@ import org.apache.spark.sql.functions._
 object Dedup {
   val P: Long = TextAnalysis.HashMod
 
-  /** Drop every cache the operators created on this thread
-    * ([[graft.core.Caching.persist]] registers each one it owns). A
-    * DataFrame result must stay cached until the caller consumes it, so
-    * an operator can't drop its caches on return — wrappers that fully
-    * consume the result (Verify, Bench) call this afterwards, also after
-    * a failed query, to stop cached blocks accumulating over a
-    * long-lived session. A cache the caller persisted is never
-    * registered, so it survives. */
-  def releaseCaches(): Unit = graft.core.Caching.releaseTracked()
+  /** Close the root cache scope ([[graft.core.Caching.root]]): drop
+    * every cache the operators built with no scope open. Callers that
+    * fully consume a query's result run it inside
+    * [[graft.core.Caching.scope]] instead; this stays for the perfbench
+    * harness, which releases between passes with it. A cache the caller
+    * persisted is never owned, so it survives. */
+  def releaseCaches(): Unit = graft.core.Caching.root.close()
 
   /** MinHash parameter schedule: hash_i(x) = (a_i * x + b_i) mod P with
     * a_i,b_i derived deterministically from i. Shared with the oracle SQL
@@ -284,14 +283,14 @@ object Dedup {
     * (AltStarSpec proves equality on random graphs). Self-pairs are
     * ignored: a node appearing only as (a, a) gets no label row. */
   def connectedComponentsAltStar(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 50, checkpointDir: Option[String] = None): DataFrame =
-    altStarWithRounds(pairs, aCol, bCol, maxIter, checkpointDir)._1
+      maxIter: Int = 50): DataFrame =
+    altStarWithRounds(pairs, aCol, bCol, maxIter)._1
 
   private[operators] def altStarWithRounds(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int, checkpointDir: Option[String] = None): (DataFrame, Int) =
+      maxIter: Int): (DataFrame, Int) =
     altStarAnyWithRounds(
       pairs.select(col(aCol).cast("long").as("__a"), col(bCol).cast("long").as("__b")),
-      "__a", "__b", maxIter, checkpointDir)
+      "__a", "__b", maxIter)
 
   /** [[connectedComponentsAltStar]] over ANY orderable key type (e.g. a
     * `struct(graph_id, node)` composite, which runs the components of
@@ -299,8 +298,8 @@ object Dedup {
     * per graph — Spark orders structs lexicographically, so the
     * component id is `struct(graph_id, min node)`). */
   private[operators] def altStarAny(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 50, checkpointDir: Option[String] = None): DataFrame =
-    altStarAnyWithRounds(pairs, aCol, bCol, maxIter, checkpointDir)._1
+      maxIter: Int = 50): DataFrame =
+    altStarAnyWithRounds(pairs, aCol, bCol, maxIter)._1
 
   /** Salt fan-out of the skew-safe min-attach (see [[withMin]]). */
   private val MinSaltK = 16L
@@ -435,7 +434,7 @@ object Dedup {
   }
 
   private[operators] def altStarAnyWithRounds(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int, checkpointDir: Option[String] = None): (DataFrame, Int) = {
+      maxIter: Int): (DataFrame, Int) = {
     // The input pair frame is consumed exactly ONCE (the oriented edge
     // set feeding the seeding contraction): the node universe is no
     // longer scanned out of the input — at the alt-star fixpoint every
@@ -451,8 +450,8 @@ object Dedup {
     //
     // eager lineage truncation each round: iterative self-referencing
     // plans grow exponentially otherwise (each round references the
-    // previous edge set several times). Default localCheckpoint; pass
-    // checkpointDir for reliable cluster checkpointing (Checkpointing.scala).
+    // previous edge set several times). Reliable checkpoints when the
+    // context has a checkpoint dir (graft.core.Checkpointing).
     val oriented = pairs.select(
         greatest(col(aCol), col(bCol)).as("u"),
         least(col(aCol), col(bCol)).as("v"))
@@ -473,8 +472,7 @@ object Dedup {
     callerSession.sparkContext.register(maxComp, "graft.cc.maxLocalComponent")
     val edges0 = Checkpointing.truncate(
       (if (contractible) contractPartitions(oriented, maxComp) else oriented)
-        .distinct(),
-      checkpointDir)
+        .distinct())
     // The rounds run under a loop-scoped session (graft.core.LoopSession):
     // shuffle partitioning is derived ONCE from the measured initial edge
     // count — the same size-adaptive decision AQE re-makes per exchange
@@ -486,7 +484,7 @@ object Dedup {
       "graft.cc.saltDegreeThreshold",
       graft.core.LoopSession.RowsPerTask.toString).toLong
     val loopSession = graft.core.LoopSession.forRows(callerSession, edges0.count())
-    var edges = graft.core.LoopSession.rebind(edges0, loopSession)
+    var edges = GraftPartitionedCache.rebind(edges0, loopSession)
     var it = 0
     var converged = false
     while (!converged && it < maxIter) {
@@ -507,8 +505,7 @@ object Dedup {
           .select(col("u"), col("v"), lit(1).as("t"))
           .union(edges.select(col("u"), col("v"), lit(2).as("t")))
           .groupBy(col("u"), col("v"))
-          .agg(max(col("t") === 1).as("inNew"), max(col("t") === 2).as("inOld")),
-        checkpointDir)
+          .agg(max(col("t") === 1).as("inNew"), max(col("t") === 2).as("inOld")))
       val changed = !f.where(col("inNew") =!= col("inOld")).isEmpty
       edges = f.where(col("inNew")).select(col("u"), col("v"))
       converged = !changed
@@ -518,7 +515,7 @@ object Dedup {
     // back onto the caller's session (edges is a filter+project over the
     // round's checkpointed frame — a LogicalRDD leaf, no session state to
     // re-resolve)
-    val edgesOut = graft.core.LoopSession.rebind(edges, callerSession)
+    val edgesOut = GraftPartitionedCache.rebind(edges, callerSession)
     // labels straight off the fixpoint star frame: every NON-ROOT node
     // appears exactly once as u (pointing at its component minimum, the
     // property the old nodes-join already relied on), and every root of
@@ -549,8 +546,8 @@ object Dedup {
     * per-doc arrays are cached pre-explode (parallelism-floored): the
     * occurrence-count side and the mark-back side both read this frame,
     * and without the cache the tokenize+hash pass re-runs per branch —
-    * single-task on a one-split corpus. Dropped by the consuming
-    * wrapper's [[releaseCaches]]. */
+    * single-task on a one-split corpus. Dropped when the consuming
+    * caller's cache scope closes ([[graft.core.Caching]]). */
   private def ngramPositions(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame =
     // partition-VISIBLE floor cache (hash(doc_id) declared through the

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Checkpointing
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -60,12 +61,11 @@ object Hdbscan {
   /** 2-D entry point (x, y columns). */
   def cluster(points: DataFrame, idCol: String, xCol: String, yCol: String,
       minClusterSize: Int, minSamples: Int, epsMax: Double,
-      checkpointDir: Option[String] = None,
       maxLocalEdges: Long = 1L << 20): DataFrame = {
     val pts = points.select(col(idCol).cast("long").as("pid"),
       array(col(xCol).cast("double"), col(yCol).cast("double")).as("vec"))
     clusterVectors(pts, "pid", "vec", minClusterSize, minSamples, epsMax,
-      binDims = 2, checkpointDir = checkpointDir, maxLocalEdges = maxLocalEdges)
+      binDims = 2, maxLocalEdges = maxLocalEdges)
   }
 
   /** n-dim entry point over an array column (the embedding-space form).
@@ -77,7 +77,6 @@ object Hdbscan {
     * two-phase distributed-MST design. 0 forces the distributed path. */
   def clusterVectors(points: DataFrame, idCol: String, vecCol: String,
       minClusterSize: Int, minSamples: Int, epsMax: Double, binDims: Int = 2,
-      checkpointDir: Option[String] = None,
       maxLocalEdges: Long = 1L << 20): DataFrame = {
     require(minClusterSize >= 2, "minClusterSize must be >= 2")
     require(minSamples >= 1, "minSamples must be >= 1")
@@ -126,7 +125,7 @@ object Hdbscan {
         greatest(col("d"), col("ca"), col("cb")).as("w")))
     val mr = mrC.df
 
-    val (mst, mstComp) = boruvkaMst(mr, checkpointDir, maxLocalEdges)
+    val (mst, mstComp) = boruvkaMst(mr, maxLocalEdges)
 
     // ---- driver-side condensed tree + stability selection --------------
     // Only the n-1 MST edges are collected (points absent from the MST
@@ -171,7 +170,7 @@ object Hdbscan {
           }.reduce(_ union _)
             .select(struct(col("cid"), col("a").as("n")).as("ua"),
               struct(col("cid"), col("b").as("n")).as("vb"))
-          val comp = Dedup.altStarAny(tagged, "ua", "vb", checkpointDir = checkpointDir)
+          val comp = Dedup.altStarAny(tagged, "ua", "vb")
           // keep only the components whose min node is a selected label,
           // at that label's own cut — an O(#clusters) semi-join (tiny
           // local side; Spark broadcasts it on its own, no hint needed)
@@ -208,7 +207,6 @@ object Hdbscan {
     * both phases, so the forest — and everything downstream — is
     * deterministic. */
   private[operators] def boruvkaMst(edges: DataFrame,
-      checkpointDir: Option[String],
       maxLocalEdges: Long = 1L << 20): (DataFrame, DataFrame) = {
     val spark = edges.sparkSession
     import org.apache.spark.sql.DataFrame
@@ -254,8 +252,7 @@ object Hdbscan {
     var mst: DataFrame = Checkpointing.truncate(
       spark.emptyDataFrame
         .withColumn("a", lit(0L)).withColumn("b", lit(0L)).withColumn("w", lit(0.0))
-        .select(col("a"), col("b"), col("w")).limit(0),
-      None)
+        .select(col("a"), col("b"), col("w")).limit(0))
     var done = false
     var it = 0
     val maxIter = 40
@@ -276,14 +273,13 @@ object Hdbscan {
           .where(col("rk") === 1)
           .select(least(col("u"), col("v")).as("a"),
             greatest(col("u"), col("v")).as("b"), col("w"))
-          .distinct(),
-        checkpointDir)
+          .distinct())
       if (pick.isEmpty) done = true
       else {
         // picks always cross CURRENT components, so an edge can repeat
         // within a round (both endpoints pick it — the distinct above)
         // but never across rounds: no full-MST distinct needed.
-        mst = Checkpointing.truncate(mst.union(pick), checkpointDir)
+        mst = Checkpointing.truncate(mst.union(pick))
         // warm-started CC: the previous component map is a star forest
         // with EXACTLY the accumulated MST's components, so CC over
         // (star edges ∪ new picks) equals CC over the full MST — but
@@ -294,13 +290,13 @@ object Hdbscan {
         val seed = comp.where(col("node") =!= col("component"))
           .select(col("node").as("a"), col("component").as("b"))
           .union(pick.select(col("a"), col("b")))
-        comp = Dedup.connectedComponentsAltStar(seed, "a", "b", checkpointDir = checkpointDir)
+        comp = Dedup.connectedComponentsAltStar(seed, "a", "b")
           .select(col("node"), col("component"))
         // isolated nodes keep their self label
         comp = nodes.select(col("u").as("node"))
           .join(comp, Seq("node"), "left")
           .select(col("node"), coalesce(col("component"), col("node")).as("component"))
-        comp = Checkpointing.truncate(comp, checkpointDir)
+        comp = Checkpointing.truncate(comp)
       }
       it += 1
     }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Checkpointing
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -19,8 +20,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: each round is one equi-join (ranks ⋈ edges on src) and
   * one map-side-combinable sum — the canonical distributed PageRank;
-  * lineage truncates every round ([[Checkpointing]], reliable mode via
-  * `checkpointDir` for cluster runs). Dangling nodes (no out-edges)
+  * lineage truncates every round ([[Checkpointing]]: reliable when the
+  * context has a checkpoint dir). Dangling nodes (no out-edges)
   * keep receiving and simply forward nothing — their mass decays,
   * the standard "remove dangling mass" variant; nodes with no
   * in-edges hold rank = base.
@@ -29,8 +30,7 @@ object Ranking {
 
   def integerPageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int, scale: Long = 1000000000L,
-      dampNum: Long = 85L, dampDen: Long = 100L,
-      checkpointDir: Option[String] = None): DataFrame = {
+      dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
     require(dampNum > 0 && dampNum < dampDen,
       s"need 0 < dampNum < dampDen, got $dampNum/$dampDen")
@@ -42,12 +42,12 @@ object Ranking {
       .distinct()
     // the degree-weighted edge list feeds every round: join degrees in
     // ONCE, materialize, and each round pays a single equi-join + agg
-    val eT = Checkpointing.truncate(e, checkpointDir)
+    val eT = Checkpointing.truncate(e)
     val deg = eT.groupBy("src").agg(count(lit(1)).as("deg"))
-    val eW = Checkpointing.truncate(eT.join(deg, "src"), checkpointDir)
+    val eW = Checkpointing.truncate(eT.join(deg, "src"))
     val nodes = Checkpointing.truncate(
       eT.select(col("src").as("node"))
-        .union(eT.select(col("dst").as("node"))).distinct(), checkpointDir)
+        .union(eT.select(col("dst").as("node"))).distinct())
 
     var ranks = nodes.withColumn("rank", lit(scale))
     for (_ <- 0 until iterations) {
@@ -58,8 +58,7 @@ object Ranking {
         .groupBy("node").agg(sum(col("c")).as("c"))
       ranks = Checkpointing.truncate(
         nodes.join(contrib, Seq("node"), "left")
-          .select(col("node"), (lit(base) + coalesce(col("c"), lit(0L))).as("rank")),
-        checkpointDir)
+          .select(col("node"), (lit(base) + coalesce(col("c"), lit(0L))).as("rank")))
     }
     ranks
   }

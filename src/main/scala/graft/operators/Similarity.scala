@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Checkpointing
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -320,13 +321,12 @@ object Similarity {
     * 10^8-document corpora; components run on alt-star (O(log n)
     * rounds); representative election is one window over components. */
   def semDedup(df: DataFrame, idCol: String, vecCol: String,
-      cents: Seq[Seq[Double]], threshold: Double,
-      checkpointDir: Option[String] = None): DataFrame = {
+      cents: Seq[Seq[Double]], threshold: Double): DataFrame = {
     // in-operator exact assignment is O(N * nCells) — fine for a
     // bounded explicit index; at production scale pass the fit's own
     // assignments through [[semDedupPreAssigned]] instead (SCALE.md F8)
     val assigned = semDedupAssign(df, idCol, vecCol, cents)
-    semDedupTail(assigned, threshold, checkpointDir)
+    semDedupTail(assigned, threshold)
   }
 
   /** The production shape (and the paper's): cluster assignments come
@@ -335,26 +335,23 @@ object Similarity {
     * consulted for the assigned cell's centroid similarity (O(dim) per
     * row). Same output contract as [[semDedup]]. */
   def semDedupPreAssigned(df: DataFrame, idCol: String, vecCol: String,
-      cellCol: String, cents: Seq[Seq[Double]], threshold: Double,
-      checkpointDir: Option[String] = None): DataFrame = {
+      cellCol: String, cents: Seq[Seq[Double]], threshold: Double): DataFrame = {
     val assigned = withCentSim(
       graft.core.Parallelism.floor(
         df.select(col(idCol).as("id"), col(vecCol).as("v"),
           col(cellCol).cast("int").as("cell")), col("id"))
         .withColumn("nv", norm(col("v"))), cents)
-    semDedupTail(assigned, threshold, checkpointDir)
+    semDedupTail(assigned, threshold)
   }
 
   /** Stages 2-4 shared by both entry points: `assigned` is checkpointed
     * ONCE (it feeds four scans — both pair sides, the member join, the
     * final join — and recomputing the assignment each time is the
     * dominant cost at scale), then pairs -> components -> election. */
-  private def semDedupTail(assignedIn: DataFrame, threshold: Double,
-      checkpointDir: Option[String]): DataFrame = {
-    val assigned = Checkpointing.truncate(assignedIn, checkpointDir)
+  private def semDedupTail(assignedIn: DataFrame, threshold: Double): DataFrame = {
+    val assigned = Checkpointing.truncate(assignedIn)
     val pairs = semDedupPairs(assigned, threshold)
-    val comp = Dedup.connectedComponentsAltStar(pairs, "id_a", "id_b",
-      checkpointDir = checkpointDir)
+    val comp = Dedup.connectedComponentsAltStar(pairs, "id_a", "id_b")
     // cached: read by the representative election AND the final join,
     // and each read re-ran the labels-to-assigned join (plus the CC
     // labels join above it). Duplicate-member-sized; released by the

@@ -187,9 +187,11 @@ object HDF5 {
     * consolidated netCDF-4 store far bigger than one task — or than a
     * 2 GB array — is a cheap driver-side operation; decode then fans
     * out per chunk ([[HDF5ChunkIngest]]). Contiguous and compact
-    * datasets manifest as a single full-extent chunk. */
-  def manifest(in: H5Input): Seq[(H5Var, Seq[H5ChunkRef])] =
-    rootDatasets(in).map { case (name, addr) =>
+    * datasets manifest as a single full-extent chunk. Only the datasets
+    * `wanted` names have their object header and chunk index read. */
+  def manifest(in: H5Input, wanted: String => Boolean = _ => true)
+      : Seq[(H5Var, Seq[H5ChunkRef])] =
+    rootDatasets(in).filter { case (name, _) => wanted(name) }.map { case (name, addr) =>
       val h = parseHeader(in, name, addr)
       val refs = Seq.newBuilder[H5ChunkRef]
       forEachChunk(in, h)((origin, off, n) => refs += H5ChunkRef(origin, off, n))

@@ -43,16 +43,18 @@ object HDF5ChunkIngest extends GridScan.Codec {
       dtSize, bigEndian, filters, signedInt)
   }
 
-  /** Metadata-only chunk map of every HDF5 file in `paths`. Driver-side
-    * work is proportional to metadata size, not file size, and per-file
-    * manifests walk in one [[ByteStore.parMap]] wave — plan-time latency
-    * on an object store is ~one file's metadata round trips, not
-    * file-count × RTT. Order stays path-sorted. */
-  def chunkTasks(paths: Seq[String], varName: Option[String] = None): Seq[ChunkTask] =
+  /** Metadata-only chunk map of the datasets `wanted(path, dataset)`
+    * keeps in every HDF5 file in `paths`; the others' chunk indexes are
+    * never walked. Driver-side work is proportional to metadata size,
+    * not file size, and per-file manifests walk in one
+    * [[ByteStore.parMap]] wave — plan-time latency on an object store
+    * is ~one file's metadata round trips, not file-count × RTT. Order
+    * stays path-sorted. */
+  def chunkTasks(paths: Seq[String],
+      wanted: (String, String) => Boolean = (_, _) => true): Seq[ChunkTask] =
     ByteStore.parMap(paths.sorted) { p =>
       val in = new PagedFileInput(p)
-      try HDF5.manifest(in)
-        .filter { case (v, _) => varName.forall(_ == v.name) }
+      try HDF5.manifest(in, wanted(p, _))
         .flatMap { case (v, refs) =>
           refs.map(r => ChunkTask(p, v.name, v.dims, v.chunkDims, v.dtClass,
             v.dtSize, v.bigEndian, v.signedInt, v.filters,
@@ -67,13 +69,13 @@ object HDF5ChunkIngest extends GridScan.Codec {
     ByteStore.resolveGlob(pathGlob)
 
   /** The mount's chunk tasks: files the pushed filters exclude never
-    * have their manifest read; chunks prune on their box. */
+    * have their manifest read, datasets they exclude never have their
+    * chunk index walked; chunks prune on their box. */
   private[sources] def plan(path: String, options: Map[String, String],
       prune: Prune): Seq[Seq[Task]] = {
     val paths = resolvePaths(path).filter(prune.store)
-    Seq(chunkTasks(paths)
-      .filter(t => prune.variable(t.path, t.dataset) &&
-        prune.box(t.path, t.dataset, t.origin, t.chunkDims.map(_.toLong), t.dims))
+    Seq(chunkTasks(paths, prune.variable)
+      .filter(t => prune.box(t.path, t.dataset, t.origin, t.chunkDims.map(_.toLong), t.dims))
       .sortBy(t => (t.path, t.offset)))
   }
 
@@ -111,7 +113,7 @@ object HDF5ChunkIngest extends GridScan.Codec {
     * read ([[GridFormat.arrayValues]]). */
   private[sources] def arrayBlocks(path: String, name: String,
       files: OpenFiles): Iterator[Block] = {
-    val tasks = chunkTasks(Seq(path), Some(name)).sortBy(_.offset)
+    val tasks = chunkTasks(Seq(path), (_, d) => d == name).sortBy(_.offset)
     if (tasks.isEmpty)
       throw new IllegalArgumentException(s"coord crop: no dataset '$name' in $path")
     decode(tasks, withValues = true, new ReadStats, files)

@@ -51,53 +51,50 @@ object NetCDF3ChunkIngest extends GridScan.Codec {
     } finally f.close()
   }
 
-  /** Record-batch tasks for `varName` in each path. Non-record
-    * variables become a single whole-slab task (stride 0). Per-file
-    * headers read in one [[ByteStore.parMap]] wave (KB-scale each);
-    * plan-time latency tracks one header's round trips, not file
-    * count. Order stays path-sorted. */
-  def recordTasks(paths: Seq[String], varName: String,
-      targetBytes: Long = 4L << 20): Seq[RecordTask] =
-    ByteStore.parMap(paths.sorted) { p =>
-      val h = headerOf(p)
-      val v = h.vars.find(_.name == varName).getOrElse(
-        throw new IllegalArgumentException(
-          s"Requested variable `$varName` not found in datafile $p"))
-      val shape = NetCDF3.shapeOf(h, v)
-      val isRec = v.dimIds.headOption.exists(h.dims(_).isRecord)
-      if (!isRec) {
-        val total = shape.map(_.toLong).product
-        // the whole slab reads as ONE byte buffer: bound the BYTES, not
-        // just the element count (total * 8 for doubles must fit an Int)
-        require(total * NetCDF3.typeSize(v.ncType) <= Int.MaxValue - 8,
-          s"${v.name} too large for one slab")
-        Seq(RecordTask(p, v.name, v.ncType, v.begin, 0L, total.toInt, 0, 1,
-          shape.map(_.toLong)))
-      } else {
-        val perRec = shape.drop(1).map(_.toLong).product
-        // one record's slab reads as one buffer: bound its BYTES
-        require(perRec * NetCDF3.typeSize(v.ncType) <= Int.MaxValue - 8,
-          s"${v.name} record too large")
-        val stride = NetCDF3.recordStrideOf(h)
-        val recBytes = math.max(1L, perRec * NetCDF3.typeSize(v.ncType))
-        val recsPerTask = math.max(1L, targetBytes / recBytes).toInt
-        (0 until h.numRecs by recsPerTask).map { r0 =>
-          RecordTask(p, v.name, v.ncType, v.begin, stride, perRec.toInt,
-            r0, math.min(recsPerTask, h.numRecs - r0), shape.map(_.toLong))
-        }
+  /** Record-batch tasks for `varName` in file `p`, built from its
+    * header `h` ([[headerOf]]) with no further I/O. A non-record
+    * variable becomes a single whole-slab task (stride 0). */
+  def recordTasks(p: String, h: NetCDF3.Header, varName: String,
+      targetBytes: Long = 4L << 20): Seq[RecordTask] = {
+    val v = h.vars.find(_.name == varName).getOrElse(
+      throw new IllegalArgumentException(
+        s"Requested variable `$varName` not found in datafile $p"))
+    val shape = NetCDF3.shapeOf(h, v)
+    val isRec = v.dimIds.headOption.exists(h.dims(_).isRecord)
+    if (!isRec) {
+      val total = shape.map(_.toLong).product
+      // the whole slab reads as ONE byte buffer: bound the BYTES, not
+      // just the element count (total * 8 for doubles must fit an Int)
+      require(total * NetCDF3.typeSize(v.ncType) <= Int.MaxValue - 8,
+        s"${v.name} too large for one slab")
+      Seq(RecordTask(p, v.name, v.ncType, v.begin, 0L, total.toInt, 0, 1,
+        shape.map(_.toLong)))
+    } else {
+      val perRec = shape.drop(1).map(_.toLong).product
+      // one record's slab reads as one buffer: bound its BYTES
+      require(perRec * NetCDF3.typeSize(v.ncType) <= Int.MaxValue - 8,
+        s"${v.name} record too large")
+      val stride = NetCDF3.recordStrideOf(h)
+      val recBytes = math.max(1L, perRec * NetCDF3.typeSize(v.ncType))
+      val recsPerTask = math.max(1L, targetBytes / recBytes).toInt
+      (0 until h.numRecs by recsPerTask).map { r0 =>
+        RecordTask(p, v.name, v.ncType, v.begin, stride, perRec.toInt,
+          r0, math.min(recsPerTask, h.numRecs - r0), shape.map(_.toLong))
       }
-    }.flatten
+    }
+  }
 
   /** The mount's record tasks: files the pushed filters exclude never
-    * have their header read; record batches prune on their box and
-    * narrow to the pushed record window. */
+    * have their header read, the others read it once; record batches
+    * prune on their box and narrow to the pushed record window. */
   private[sources] def plan(path: String, options: Map[String, String],
       prune: Prune): Seq[Seq[Task]] = {
     val targetBytes = options.get("targetBytes").map(_.toLong).getOrElse(4L << 20)
     val paths = HDF5ChunkIngest.resolvePaths(path).filter(prune.store)
     Seq(paths.flatMap { p =>
-      headerOf(p).vars.map(_.name).filter(prune.variable(p, _))
-        .flatMap(v => recordTasks(Seq(p), v, targetBytes))
+      val h = headerOf(p)
+      h.vars.map(_.name).filter(prune.variable(p, _))
+        .flatMap(v => recordTasks(p, h, v, targetBytes))
     }.filter(t => prune.box(t.path, t.dataset, t.origin, t.extent, t.dims))
       .map(narrow(_, prune))
       .sortBy(t => (t.path, t.begin, t.recStart)))
@@ -191,5 +188,6 @@ object NetCDF3ChunkIngest extends GridScan.Codec {
     * variables' strided slabs read correctly and coalesced. */
   private[sources] def arrayBlocks(path: String, name: String,
       files: OpenFiles): Iterator[Block] =
-    decode(recordTasks(Seq(path), name), withValues = true, new ReadStats, files)
+    decode(recordTasks(path, headerOf(path), name), withValues = true, new ReadStats,
+      files)
 }

@@ -156,9 +156,11 @@ object ZarrChunkIngest extends GridScan.Codec {
   private def innerShape(meta: Zarr3.Meta): Seq[Int] =
     meta.sharding.getOrElse(fail("meta lost its sharding")).innerChunks
 
-  /** The chunk-task list of one array — a metadata-only driver step. */
-  def chunkTasks(store: String, name: String): Seq[ChunkTask] = {
-    val (shape, chunks, _) = dimsOf(metaOf(store, name))
+  /** The chunk-task list of one array from its metadata ([[metaOf]]) —
+    * a driver step with no I/O. */
+  def chunkTasks(store: String, name: String,
+      meta: Either[Zarr.ArrayMeta, Zarr3.Meta]): Seq[ChunkTask] = {
+    val (shape, chunks, _) = dimsOf(meta)
     gridOf(shape, chunks).map(ChunkTask(store, name, _))
   }
 
@@ -178,7 +180,8 @@ object ZarrChunkIngest extends GridScan.Codec {
     Zarr3.chunkKey(meta, ci).split('/')
       .foldLeft(ByteStore.join(store, dataset))(ByteStore.join)
 
-  /** The inner-chunk task list of one SHARDED v3 array: only each
+  /** The inner-chunk task list of one SHARDED v3 array (`meta`, its
+    * [[metaOf]]): only each
     * shard's (offset, nbytes) index tail is read — KBs per shard
     * regardless of shard size, crc32c-verified — and decode reads only
     * each task's byte window, never a whole shard.
@@ -188,14 +191,9 @@ object ZarrChunkIngest extends GridScan.Codec {
     * from pure arithmetic): the metadata walk is then proportional to
     * the CROP, not the store — under a bbox slice of a 100 TB store,
     * out-of-range shards cost nothing, not even a tail GET. */
-  def shardInnerTasks(store: String, name: String,
+  def shardInnerTasks(store: String, name: String, meta: Zarr3.Meta,
       shardKeep: Seq[Int] => Boolean = _ => true): Seq[InnerTask] = {
-    val meta = metaOf(store, name) match {
-      case Right(m) if m.sharding.isDefined => m
-      case Right(_) => fail(s"$store/$name is not sharded — use chunkTasks")
-      case Left(_) => fail(s"$store/$name is zarr v2 — sharding is v3-only")
-    }
-    val sh = meta.sharding.get
+    val sh = meta.sharding.getOrElse(fail(s"$store/$name is not sharded — use chunkTasks"))
     val innerGrid = gridOf(meta.chunks, sh.innerChunks)
     // one exists-probe + one index-tail read per SURVIVING shard — a
     // 10k-shard array would pay 10k serial round trips at plan time,
@@ -240,12 +238,12 @@ object ZarrChunkIngest extends GridScan.Codec {
           val shape = m.shape.map(_.toLong)
           val inner = innerShape(m)
           (Seq.empty[ChunkTask],
-            shardInnerTasks(s, a, ci => prune.box(s, a, originOf(ci, m.chunks),
+            shardInnerTasks(s, a, m, ci => prune.box(s, a, originOf(ci, m.chunks),
               m.chunks.map(_.toLong), shape))
               .filter(t => prune.box(s, a, innerOrigin(t, m, inner), inner.map(_.toLong), shape)))
         case m =>
           val (shape, chunks, _) = dimsOf(m)
-          (chunkTasks(s, a).filter(t => prune.box(s, a, originOf(t.ci, chunks),
+          (chunkTasks(s, a, m).filter(t => prune.box(s, a, originOf(t.ci, chunks),
             chunks.map(_.toLong), shape.map(_.toLong))), Seq.empty[InnerTask])
       }
     }
@@ -330,7 +328,7 @@ object ZarrChunkIngest extends GridScan.Codec {
       }
   }
 
-  private def v3Meta(store: String, dataset: String): Zarr3.Meta =
+  private[sources] def v3Meta(store: String, dataset: String): Zarr3.Meta =
     metaOf(store, dataset) match {
       case Right(m) => m
       case Left(_) => fail(s"$store/$dataset is zarr v2 but planned as shard-inner")
@@ -364,10 +362,10 @@ object ZarrChunkIngest extends GridScan.Codec {
     val stats = new ReadStats
     metaOf(store, name) match {
       case Right(m) if m.sharding.isDefined =>
-        innerBlocks(shardInnerTasks(store, name).toIndexedSeq, m, withValues = true,
+        innerBlocks(shardInnerTasks(store, name, m).toIndexedSeq, m, withValues = true,
           files, stats)
       case m =>
-        chunkTasks(store, name).iterator.map(chunkBlock(_, m, withValues = true, stats))
+        chunkTasks(store, name, m).iterator.map(chunkBlock(_, m, withValues = true, stats))
     }
   }
 }

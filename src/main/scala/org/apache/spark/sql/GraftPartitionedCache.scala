@@ -41,6 +41,15 @@ import org.apache.spark.storage.StorageLevel
   */
 object GraftPartitionedCache {
 
+  /** A lineage-truncated frame (a LogicalRDD leaf) moved onto session
+    * `to` through the same private `Dataset.ofRows` entry: an iterative
+    * operator's loop session ([[graft.core.LoopSession]]) shares the
+    * SparkContext but not the caller's SQLConf. Re-analysing a leaf plan
+    * resolves nothing against catalogs or session state. */
+  def rebind(df: Dataset[Row], to: SparkSession): Dataset[Row] =
+    classic.Dataset.ofRows(to.asInstanceOf[classic.SparkSession],
+      df.asInstanceOf[classic.Dataset[Row]].queryExecution.logical)
+
   /** `df` hash-repartitioned into `n` partitions on `keys` (top-level
     * column names), transformed by the partitioning-preserving `narrow`
     * pipeline, persisted MEMORY_AND_DISK, with the partitioning visible to

@@ -8,11 +8,31 @@ import scala.jdk.CollectionConverters._
 /** Ownership contract of Caching.persist: release() drops ONLY caches
   * this call created, so an operator can never evict a frame its caller
   * persisted (the mid-pipeline cache-loss bug); every owned cache is
-  * dropped by Dedup.releaseCaches, also after a failed query; and no main
-  * source caches around Caching. */
+  * dropped when its scope closes (Dedup.releaseCaches closes the root
+  * scope), also after a failed query and when another thread built it;
+  * and no main source caches around Caching or truncates lineage around
+  * Checkpointing. */
 class CachingSpec extends SparkSpec {
 
   private def cachedPlans: Int = org.apache.spark.sql.CachedPlans.count(spark)
+
+  /** `file:line: text` of every line under `root` matching `banned`,
+    * outside the `allowed` files. */
+  private def offenders(root: java.io.File, banned: scala.util.matching.Regex,
+      allowed: Set[java.io.File]): Seq[String] = {
+    assert(root.isDirectory, s"${root.getAbsolutePath} not found")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val all = files(root)
+    allowed.foreach(a => assert(all.exists(_.getCanonicalFile == a.getCanonicalFile),
+      s"$a not found"))
+    for {
+      f <- all if !allowed.exists(_.getCanonicalFile == f.getCanonicalFile)
+      (line, i) <- java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex
+      if banned.findFirstIn(line).isDefined
+    } yield s"${root.toPath.relativize(f.toPath)}:${i + 1}: ${line.trim}"
+  }
 
   test("persist on an uncached plan owns it; release drops it") {
     val df = spark.range(100).toDF("x").select(col("x") * 2 as "y")
@@ -90,22 +110,80 @@ class CachingSpec extends SparkSpec {
 
   test("no main source outside Caching persists, caches or picks a storage level") {
     val root = new java.io.File("src/main/scala/graft")
-    assert(root.isDirectory, s"${root.getAbsolutePath} not found")
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     // `.persist(` not preceded by `Caching` — the call sites of
     // Caching.persist itself are the one allowed form
-    val banned = """(?<!Caching)\.persist\(|\.cache\(\)|StorageLevel""".r
-    val caching = new java.io.File(root, "core/Caching.scala").getCanonicalFile
-    val all = files(root)
-    assert(all.exists(_.getCanonicalFile == caching), "core/Caching.scala not found")
-    val offenders = for {
-      f <- all if f.getCanonicalFile != caching
-      (line, i) <- java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex
-      if banned.findFirstIn(line).isDefined
-    } yield s"${root.toPath.relativize(f.toPath)}:${i + 1}: ${line.trim}"
-    assert(offenders.isEmpty,
-      s"cache outside Caching.persist:\n${offenders.mkString("\n")}")
+    val found = offenders(root, """(?<!Caching)\.persist\(|\.cache\(\)|StorageLevel""".r,
+      Set(new java.io.File(root, "core/Caching.scala")))
+    assert(found.isEmpty, s"cache outside Caching.persist:\n${found.mkString("\n")}")
+  }
+
+  test("no main source outside Checkpointing truncates lineage; core declares no ThreadLocal") {
+    val found = offenders(new java.io.File("src/main/scala"),
+      """checkpoint\(|localCheckpoint\(|setCheckpointDir""".r,
+      Set(new java.io.File("src/main/scala/graft/core/Checkpointing.scala")))
+    assert(found.isEmpty, s"lineage truncation outside Checkpointing:\n${found.mkString("\n")}")
+    val threadLocals = offenders(new java.io.File("src/main/scala/graft/core"),
+      """ThreadLocal""".r, Set.empty)
+    assert(threadLocals.isEmpty, s"ThreadLocal in graft.core:\n${threadLocals.mkString("\n")}")
+  }
+
+  test("concurrent scopes drop their own caches: on failure, from child threads, never the caller's") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val sc = spark.sparkContext
+    def callerPlan = spark.range(50).toDF("x").select(col("x") * 3 as "c")
+    val caller = callerPlan.persist()
+    try {
+      caller.count()
+      val rddsBefore = sc.getPersistentRDDs.keySet
+      val plansBefore = cachedPlans
+      val built = new CountDownLatch(2)
+      val failedClosed = new CountDownLatch(1)
+      // per query: a plain cache (a CacheManager entry), a keyed one over
+      // a 1-split input (a partition-visible persisted RDD), one built on
+      // a thread the query starts, and the caller's plan re-derived
+      def query(tag: Int, fail: Boolean): Seq[Caching.Cached] = Caching.scope(spark) {
+        val plain = Caching.persist(spark.range(100).toDF("x").select(col("x") + tag as "y"))
+        val keyed = Caching.persist(spark.range(0, 100, 1, 1).toDF("k")
+          .select(col("k"), col("k") * tag as "v"), keys = Seq("k"))
+        var child: Caching.Cached = null
+        val t = new Thread(() => {
+          child = Caching.persist(spark.range(60).toDF("x").select(col("x") - tag as "z"))
+          child.df.count(); ()
+        })
+        t.start(); t.join()
+        val reused = Caching.persist(callerPlan)
+        val cs = Seq(plain, keyed, child)
+        assert(cs.forall(_.owned) && !reused.owned, s"query $tag: ownership")
+        cs.foreach(_.df.count())
+        built.countDown()
+        assert(built.await(120, TimeUnit.SECONDS), "the other query never built its caches")
+        if (fail) throw new IllegalStateException(s"planted failure in query $tag")
+        // the failed query's scope closing leaves this scope's caches alone
+        assert(failedClosed.await(120, TimeUnit.SECONDS), "the failing query never closed")
+        assert(Seq(plain, child).forall(_.df.storageLevel != StorageLevel.NONE),
+          s"query $tag lost a cache when the other scope closed")
+        cs
+      }
+      @volatile var failure: Throwable = null
+      @volatile var passError: Throwable = null
+      @volatile var kept: Seq[Caching.Cached] = Nil
+      val failing = new Thread(() => {
+        try query(1, fail = true) catch { case e: Throwable => failure = e }
+        finally failedClosed.countDown()
+      })
+      val passing = new Thread(() =>
+        try kept = query(2, fail = false) catch { case e: Throwable => passError = e })
+      failing.start(); passing.start(); failing.join(); passing.join()
+      assert(failure != null && failure.getMessage.contains("planted failure"),
+        s"failed for another reason: $failure")
+      assert(passError == null, s"the passing query threw: $passError")
+      assert(kept.size == 3)
+      assert(sc.getPersistentRDDs.keySet == rddsBefore,
+        s"persisted RDDs survived their scopes: ${sc.getPersistentRDDs.keySet -- rddsBefore}")
+      assert(cachedPlans == plansBefore,
+        s"${cachedPlans - plansBefore} cached plans survived their scopes")
+      assert(kept.forall(_.df.storageLevel == StorageLevel.NONE))
+      assert(caller.storageLevel != StorageLevel.NONE, "a scope evicted the caller's cache")
+    } finally { caller.unpersist(); () }
   }
 }

@@ -46,12 +46,18 @@ class AltStarSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val df = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (12L, 10L)).toDF("a", "b")
     val expected = labelsOf(Dedup.connectedComponentsAltStar(df, "a", "b"))
-    val got = labelsOf(Dedup.connectedComponentsAltStar(df, "a", "b",
-      checkpointDir = Some(dir)))
-    assert(got == expected, "reliable-checkpoint run must match localCheckpoint run")
-    val ccGot = labelsOf(MinLabelCc.connectedComponents(df, "a", "b",
-      checkpointDir = Some(dir)))
-    assert(ccGot == expected, "min-label CC with checkpointDir must match too")
+    // the context's checkpoint dir switches lineage truncation to
+    // reliable checkpoints; null clears it again so later specs sharing
+    // this context stay in local mode
+    val sc = spark.sparkContext
+    sc.setCheckpointDir(dir)
+    try {
+      val got = labelsOf(Dedup.connectedComponentsAltStar(df, "a", "b"))
+      assert(got == expected, "reliable-checkpoint run must match localCheckpoint run")
+      val ccGot = labelsOf(MinLabelCc.connectedComponents(df, "a", "b"))
+      assert(ccGot == expected, "min-label CC with checkpointDir must match too")
+    } finally sc.setCheckpointDir(null)
+    assert(sc.getCheckpointDir.isEmpty)
     // the reliable path actually wrote RDD checkpoint files under dir
     def fileCount(p: java.io.File): Int =
       if (p.isDirectory) p.listFiles().map(fileCount).sum else 1

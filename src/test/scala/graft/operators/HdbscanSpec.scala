@@ -83,11 +83,11 @@ class HdbscanSpec extends SparkSpec {
       // both strategy paths must produce the same forest: the gated
       // driver-side Kruskal (default) and the forced distributed Boruvka
       val (gotLocalDf, compLocalDf) = Hdbscan.boruvkaMst(
-        edges.toDF("a_id", "b_id", "w"), checkpointDir = None)
+        edges.toDF("a_id", "b_id", "w"))
       val gotLocal = gotLocalDf
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val (gotDf, compDf) = Hdbscan.boruvkaMst(
-        edges.toDF("a_id", "b_id", "w"), checkpointDir = None, maxLocalEdges = 0L)
+        edges.toDF("a_id", "b_id", "w"), maxLocalEdges = 0L)
       val got = gotDf
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(gotLocal == got, s"trial $trial: local vs distributed MST diverge")

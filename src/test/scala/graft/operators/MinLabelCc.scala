@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Checkpointing
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -16,7 +17,7 @@ import org.apache.spark.sql.functions._
 object MinLabelCc {
 
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 25, checkpointDir: Option[String] = None): DataFrame = {
+      maxIter: Int = 25): DataFrame = {
     val symC = graft.core.Caching.persist(
       pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
         .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst"))))
@@ -27,8 +28,7 @@ object MinLabelCc {
     // propagation round folded into initialization
     var labels = Checkpointing.truncate(
       sym.groupBy(col("src")).agg(min(col("dst")).as("mn"))
-        .select(col("src").as("node"), least(col("src"), col("mn")).as("component")),
-      checkpointDir)
+        .select(col("src").as("node"), least(col("src"), col("mn")).as("component")))
     // labels only ever DECREASE, so the label sum is a complete
     // convergence witness; sum() over zero rows is SQL NULL — an empty
     // pairs input converges to an empty labeling
@@ -45,8 +45,7 @@ object MinLabelCc {
         labels
           .join(nbrMin.withColumnRenamed("src", "node"), Seq("node"), "left")
           .select(col("node"),
-            least(col("component"), coalesce(col("nbr_min"), col("component"))).as("component")),
-        checkpointDir)
+            least(col("component"), coalesce(col("nbr_min"), col("component"))).as("component")))
       val newSum = labelSum(updated)
       labels = updated
       converged = newSum.compareTo(prevSum) == 0

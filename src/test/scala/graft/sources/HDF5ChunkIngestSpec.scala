@@ -101,7 +101,7 @@ class HDF5ChunkIngestSpec extends SparkSpec {
       Array.tabulate(24 * 12 * 16)(_ * 0.0625 - 100.0), chunkDims = Some(Seq(2, 3, 4)))),
       deflate = true, shuffle = true)
     val path = tmpFile("fanout.h5", bytes)
-    val tasks = HDF5ChunkIngest.chunkTasks(Seq(path), Some("lwp"))
+    val tasks = HDF5ChunkIngest.chunkTasks(Seq(path), (_, d) => d == "lwp")
     assert(tasks.size == 12 * 4 * 4, s"expected 192 chunk tasks, got ${tasks.size}")
     val df = GridFormat.Hdf5.reader(spark).option("path", path).load()
       .where(org.apache.spark.sql.functions.col("dataset") === "lwp")

@@ -84,7 +84,8 @@ class IoCountingSpec extends SparkSpec {
     Zarr3.writeScenes(grid, dir, "lwp", chunkRows = Some(ny),
       gzipLevel = Some(6), shardInnerRows = Some(1)).count()
     val store = new java.io.File(s"$dir/s0.zarr").getAbsolutePath
-    assert(ZarrChunkIngest.shardInnerTasks(store, "lwp").size == ny)
+    assert(ZarrChunkIngest.shardInnerTasks(store, "lwp",
+      ZarrChunkIngest.v3Meta(store, "lwp")).size == ny)
     val shardFile = Option(new java.io.File(s"$store/lwp/c").listFiles())
       .getOrElse(Array.empty).flatMap(d => Option(d.listFiles()).getOrElse(Array.empty))
       .head.getAbsolutePath
@@ -184,6 +185,70 @@ class IoCountingSpec extends SparkSpec {
     for (p0 <- Seq(pa, pb))
       assert(rec.bytes(p0) < fileLen / 4,
         s"read ${rec.bytes(p0)} of $fileLen bytes for a 4/64-record crop of $p0")
+  }
+
+  test("a netCDF-3 plan reads each file's header once, whatever its variable count") {
+    // three variables (a record coordinate, a record grid, a fixed
+    // axis): one header prefix read plans all of them, not 1 + 3
+    val dir = Files.createTempDirectory("graft-iocount-nc3-header").toString
+    val (nrec, nx) = (8, 5)
+    val p = new java.io.File(dir, "h.nc").getAbsolutePath
+    ByteStore.writeAllBytes(p, NetCDF3.write(
+      dims = Seq(NetCDF3.Dim("time", 0), NetCDF3.Dim("x", nx)), gattrs = Nil,
+      vars = Seq(
+        NetCDF3.VarSpec("time", Seq("time"), NetCDF3.NcDouble, Nil,
+          Array.tabulate(nrec)(_ * 6.0)),
+        NetCDF3.VarSpec("sst", Seq("time", "x"), NetCDF3.NcDouble, Nil,
+          Array.tabulate(nrec * nx)(_ * 0.5)),
+        NetCDF3.VarSpec("x", Seq("x"), NetCDF3.NcDouble, Nil,
+          Array.tabulate(nx)(_ * 10.0))),
+      numRecs = nrec))
+    val (tasks, r) = recording(NetCDF3ChunkIngest.plan(p, Map.empty,
+      new GridScan.Prune(Array.empty, None)))
+    assert(tasks.flatten.collect { case t: NetCDF3ChunkIngest.RecordTask => t.dataset }
+      .distinct.sorted == Seq("sst", "time", "x"))
+    assert((r.opens(p), r.reads(p)) == ((1L, 1L)),
+      s"planning opened $p ${r.opens(p)} times and read it ${r.reads(p)} times")
+    val rows = GridFormat.NetCDF3.reader(spark).option("path", p).load()
+      .select("dataset", "idx", "value").collect()
+    assert(rows.length == nrec + nrec * nx + nx)
+  }
+
+  test("an HDF5 plan walks only the wanted datasets' chunk indexes") {
+    // two datasets of 128 chunks each: every chunk index is a ~5 KiB
+    // B-tree node after its object header, so at 4 KiB pages a manifest
+    // that skips b's index reads fewer pages (the group walk still reads
+    // b's object header to classify it)
+    val dir = Files.createTempDirectory("graft-iocount-h5-filter").toString
+    val p = new java.io.File(dir, "two.h5").getAbsolutePath
+    ByteStore.writeAllBytes(p, HDF5.write(Seq(
+      HDF5.DsSpec("a", Seq(128, 16), Array.tabulate(128 * 16)(_ * 0.5),
+        chunkDims = Some(Seq(1, 16))),
+      HDF5.DsSpec("b", Seq(128, 16), Array.tabulate(128 * 16)(_ * -0.25),
+        chunkDims = Some(Seq(1, 16))))))
+    def manifest(wanted: String => Boolean) = recording {
+      val in = new PagedFileInput(p, pageSizeHint = 4096)
+      try HDF5.manifest(in, wanted) finally in.close()
+    }
+    val (all, ra) = manifest(_ => true)
+    val (onlyA, rf) = manifest(_ == "a")
+    assert(all.map(_._1.name) == Seq("a", "b") && onlyA == all.take(1))
+    assert(rf.bytes(p) < ra.bytes(p),
+      s"the manifest of `a` read ${rf.bytes(p)} metadata bytes, of both ${ra.bytes(p)}")
+    // the mount's plan takes the pushed dataset filter the same way
+    def plan(pushed: Array[org.apache.spark.sql.sources.Filter]) =
+      HDF5ChunkIngest.plan(p, Map.empty, new GridScan.Prune(pushed, None)).flatten
+    assert(plan(Array(org.apache.spark.sql.sources.EqualTo("dataset", "a"))) ==
+      plan(Array.empty).filter {
+        case t: HDF5ChunkIngest.ChunkTask => t.dataset == "a"
+        case _ => false
+      })
+    def mount = GridFormat.Hdf5.reader(spark).option("path", p).load()
+    val filtered = mount.where(col("dataset") === "a").select("idx", "value").collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
+    val unfiltered = mount.select("dataset", "idx", "value").collect()
+      .filter(_.getString(0) == "a").map(r => (r.getLong(1), r.getDouble(2))).sorted.toSeq
+    assert(filtered.size == 128 * 16 && filtered == unfiltered)
   }
 
   test("colHull: interval algebra over filter trees is sound per identity") {

@@ -37,7 +37,8 @@ class NetCDF3ChunkIngestSpec extends SparkSpec {
       assert(chunked(p, v, targetBytes = 64) == wholeFile(p, v), s"var $v")
     // the record geometry is really exercised: 24 records at 48 B/rec
     // under a 64 B target -> one task per record
-    val tasks = NetCDF3ChunkIngest.recordTasks(Seq(p), "flux", targetBytes = 64)
+    val tasks = NetCDF3ChunkIngest.recordTasks(p, NetCDF3ChunkIngest.headerOf(p), "flux",
+      targetBytes = 64)
     assert(tasks.size == 24, s"expected 24 record tasks, got ${tasks.size}")
     assert(tasks.forall(_.stride == 56), "multi-var stride must be 48+8")
   }
@@ -45,7 +46,8 @@ class NetCDF3ChunkIngestSpec extends SparkSpec {
   test("single-record-var CDF-2 (no record padding): chunked equals whole") {
     val p = fixturePath("golden_rec.nc")
     assert(chunked(p, "flux", targetBytes = 4) == wholeFile(p, "flux"))
-    val tasks = NetCDF3ChunkIngest.recordTasks(Seq(p), "flux", targetBytes = 4)
+    val tasks = NetCDF3ChunkIngest.recordTasks(p, NetCDF3ChunkIngest.headerOf(p), "flux",
+      targetBytes = 4)
     assert(tasks.size == 2 && tasks.forall(_.stride == 8),
       s"no-padding stride must be 2 floats: $tasks")
   }

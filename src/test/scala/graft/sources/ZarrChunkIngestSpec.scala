@@ -53,7 +53,8 @@ class ZarrChunkIngestSpec extends SparkSpec {
   test("shard-INNER-parallel read: one task per inner chunk, positioned " +
       "byte windows, absent sentinel -> fill") {
     val sharded = fixture("golden_sharded_v3.zarr")
-    val tasks = ZarrChunkIngest.shardInnerTasks(sharded.getAbsolutePath, "temp")
+    val tasks = ZarrChunkIngest.shardInnerTasks(sharded.getAbsolutePath, "temp",
+      ZarrChunkIngest.v3Meta(sharded.getAbsolutePath, "temp"))
     assert(tasks.size == 8) // 2 shards x (2x2) inner grid
     assert(tasks.count(_.length == -1L) == 1) // the absent inner chunk
     assert(tasks.filter(_.length >= 0).forall(_.offset >= 0))
@@ -62,7 +63,8 @@ class ZarrChunkIngestSpec extends SparkSpec {
     assert(got == want.zipWithIndex.map { case (v, i) => i.toLong -> v }.toMap)
     // non-sharded arrays reject loudly on this path
     val e = intercept[IllegalArgumentException] {
-      ZarrChunkIngest.shardInnerTasks(fixture("golden_v3.zarr").getAbsolutePath, "lwp")
+      val v3 = fixture("golden_v3.zarr").getAbsolutePath
+      ZarrChunkIngest.shardInnerTasks(v3, "lwp", ZarrChunkIngest.v3Meta(v3, "lwp"))
     }
     assert(e.getMessage.contains("not sharded"))
   }
@@ -77,7 +79,8 @@ class ZarrChunkIngestSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("zarr-ci").toString
     Zarr3.writeScenes(px, dir, "lwp", chunkRows = Some(4), gzipLevel = Some(6)).count()
     val store = s"$dir/big.zarr"
-    assert(ZarrChunkIngest.chunkTasks(store, "lwp").size == 10) // 40/4 bands
+    assert(ZarrChunkIngest.chunkTasks(store, "lwp",
+      ZarrChunkIngest.metaOf(store, "lwp")).size == 10) // 40/4 bands
     val got = chunked(store, "lwp")
     val (_, want) = Zarr3.readArray(new java.io.File(store), "lwp")
     assert(got == want.zipWithIndex.map { case (v, i) => i.toLong -> v }.toMap)
