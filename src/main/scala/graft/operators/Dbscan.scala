@@ -188,8 +188,8 @@ object Dbscan {
       .groupBy(col("a_id"))
       .agg(count(lit(1)).as("deg"),
         min(when(col("b_id") =!= col("a_id"), col("nbr_cluster"))).as("min_nbr"))
-    // lazily consumed: every cache stays until the consuming wrapper
-    // releases it after the output is read — the tail runs
+    // lazily consumed: every cache stays until the caller's cache scope
+    // closes after the output is read — the tail runs
     // exactly once, in the consumer's own action (the former eager
     // truncation here executed the whole tail a second time just so the
     // caches could be released before returning)

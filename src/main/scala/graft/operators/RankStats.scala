@@ -43,7 +43,7 @@ object RankStats {
     * per-partition row counts — a bounded one-row-per-shuffle-partition
     * frame prefix-summed by a tiny triangular self-join. Same
     * (v, tieBreak) total order, same selected row, at every scale. The
-    * ranged frame is cached (released by the consuming wrapper) so the
+    * ranged frame is cached (released with the caller's cache scope) so the
     * counts pass and the rank pass see the identical partitioning. */
   def globalNearestRankPercentile(df: DataFrame, v: Column, p: Double,
       tieBreak: Column): DataFrame = {

@@ -354,8 +354,8 @@ object Similarity {
     val comp = Dedup.connectedComponentsAltStar(pairs, "id_a", "id_b")
     // cached: read by the representative election AND the final join,
     // and each read re-ran the labels-to-assigned join (plus the CC
-    // labels join above it). Duplicate-member-sized; released by the
-    // consuming wrapper.
+    // labels join above it). Duplicate-member-sized; released when the
+    // caller's cache scope closes.
     val members = graft.core.Caching.persist(
       comp.select(col("node").as("id"), col("component"))
         .join(assigned.select(col("id"), col("cent_sim").as("ms")), "id")).df
