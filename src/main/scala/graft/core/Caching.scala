@@ -38,7 +38,12 @@ import org.apache.spark.storage.StorageLevel
   * [[root]] scope, which stays open; closing it drops what it holds.
   * [[Cached.release]] drops one cache early and takes it off its scope.
   * Storage is always MEMORY_AND_DISK, so a 100 TB input degrades to a
-  * disk-backed materialization instead of an OOM. */
+  * disk-backed materialization instead of an OOM.
+  *
+  * Reuse: under AQE, Spark reuses no exchange or broadcast over a cached
+  * or checkpointed leaf (two consumers of one cache plan two exchanges),
+  * so a column several consumers need is derived once inside the cache
+  * (`narrow`), not by each consumer. */
 object Caching {
 
   private val ScopeKey = "graft.cache.scope"

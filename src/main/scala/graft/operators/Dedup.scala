@@ -62,9 +62,15 @@ object Dedup {
     (0 until k).map(i => s"mh$i" -> element_at(sig, i + 1))
   }
 
-  /** LSH band hash for band b of r consecutive minhashes. */
-  def bandHash(sig: Seq[Column], b: Int, r: Int): Column =
-    (b * r until (b + 1) * r).map(sig(_)).reduce((h, m) => (h * 31 + m) % P)
+  /** LSH band hashes of the shingle set in `xs`: `bands` longs, band b
+    * the fold `(h * 31 + m) % P` over minhashes b·r until (b+1)·r of a
+    * k-signature. Native one-pass kernel (graft.plans.MinHashBands): the
+    * signature never leaves it; bit-identical to `HofForms.bandHash` over
+    * [[minhashCols]] (spec-proven). Null for an empty set. */
+  def minhashBands(xs: Column, k: Int, bands: Int): Column = {
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    column(graft.plans.MinHashBands(expression(xs), k, bands))
+  }
 
   /** Jaccard of two distinct-element arrays via one intersection pass:
     * |A∩B| / (|A| + |B| - |A∩B|) — skips building the union array
@@ -158,35 +164,23 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       k: Int, bands: Int, threshold: Double,
       broadcastShingles: Boolean = false): DataFrame = {
-    require(k % bands == 0, "k must divide into equal bands")
-    val r = k / bands
-    // hashed shingle set once; signatures derive from it, and the verify
-    // pass intersects long arrays (no string sets ever shuffle). Persisted:
-    // read by the banding pass and twice by the verify joins, and Spark
-    // shares no DAG across join branches. Parallelism.floor: the whole
-    // shingle -> minhash -> band -> candidate pipeline runs map-side on
-    // this frame's partitioning, so a single-split scan would otherwise
-    // serialize it onto one core (measured 4.2 s of a 5.9 s q28 in one
-    // task at sf0.1).
+    // hashed shingle set and band hashes once, inside the cache: the band
+    // self-join and both verify joins read it, and under AQE Spark reuses
+    // no exchange or broadcast over a cached or checkpointed leaf (the
+    // exchange's canonical plan keeps the cache stage's id), so a column
+    // derived outside the cache is recomputed by every consumer.
+    // Parallelism.floor: the whole shingle -> minhash -> band -> candidate
+    // pipeline runs map-side on this frame's partitioning, so a
+    // single-split scan would otherwise serialize it onto one core
+    // (measured 4.2 s of a 5.9 s q28 in one task at sf0.1).
     // partition-VISIBLE floor cache (hash(doc_id) declared through the
     // cache): the verify joins meet the candidate stream on doc_a/doc_b —
     // when the shingle side is too big to broadcast, its exchange is
     // already satisfied by the declared layout and only the ids-only
     // candidate side shuffles
-    val sh = graft.core.Caching.persist(
-      df.select(col(idCol).as("doc_id"), col(textCol)), Seq("doc_id"),
-      narrow = _.select(col("doc_id"),
-        shingleHashes(col(textCol)).as("xs"))).df
-    val sigCols = minhashCols(col("xs"), k)
-    val sig = sh.select(col("doc_id") +: sigCols.map { case (n, c) => c.as(n) }: _*)
-    val sigRef = (0 until k).map(i => col(s"mh$i"))
-    val banded = sig.select(col("doc_id"),
-      explode(array((0 until bands).map(bi =>
-        struct(lit(bi).as("band"), bandHash(sigRef, bi, r).as("bh"))): _*)).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.bh").as("bh"))
-    val l = banded.select(col("doc_id").as("doc_a"), col("band"), col("bh"))
-    val rr = banded.select(col("doc_id").as("doc_b"), col("band"), col("bh"))
-    val cand = l.join(rr, Seq("band", "bh")).where(col("doc_a") < col("doc_b"))
+    val sh = bandedShingles(df, idCol, textCol, k, bands)
+    val cand = bandRows(sh, "doc_a").join(bandRows(sh, "doc_b"), Seq("band", "bh"))
+      .where(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b")).distinct()
     def shSide(idAs: String, xsAs: String) = {
       val side = sh.select(col("doc_id").as(idAs), col("xs").as(xsAs))
@@ -204,6 +198,22 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
+  /** The LSH operators' cache: (doc_id, xs = hashed shingle set, bhs =
+    * its [[minhashBands]]), hash-partitioned on doc_id through
+    * [[graft.core.Caching.persist]]. The narrow step is a projection, so
+    * the declared partitioning holds. */
+  private def bandedShingles(df: DataFrame, idCol: String, textCol: String,
+      k: Int, bands: Int): DataFrame =
+    graft.core.Caching.persist(
+      df.select(col(idCol).as("doc_id"), col(textCol)), Seq("doc_id"),
+      narrow = _.select(col("doc_id"), shingleHashes(col(textCol)).as("xs"))
+        .select(col("doc_id"), col("xs"), minhashBands(col("xs"), k, bands).as("bhs"))).df
+
+  /** One (idAs, band, bh) row per band of each document of a
+    * [[bandedShingles]] cache; none for an empty shingle set. */
+  private def bandRows(sh: DataFrame, idAs: String): DataFrame =
+    sh.select(col("doc_id").as(idAs), posexplode(col("bhs")).as(Seq("band", "bh")))
+
   /** Cross-corpus LSH near-dup JOIN — decontamination at full scale. The
     * q94 token-overlap path broadcasts the eval suites (MB-scale, the
     * common case); when the holdout side is itself corpus-sized (a
@@ -220,22 +230,9 @@ object Dedup {
   def lshCrossCorpusPairs(dfA: DataFrame, dfB: DataFrame, idCol: String,
       textCol: String, k: Int, bands: Int, threshold: Double,
       broadcastShingles: Boolean = false): DataFrame = {
-    require(k % bands == 0, "k must divide into equal bands")
-    val r = k / bands
-    def prep(df: DataFrame) = graft.core.Caching.persist(
-      df.select(col(idCol).as("doc_id"), col(textCol)), Seq("doc_id"),
-      narrow = _.select(col("doc_id"), shingleHashes(col(textCol)).as("xs"))).df
-    val shA = prep(dfA); val shB = prep(dfB)
-    def banded(sh: DataFrame, as: String) = {
-      val sigCols = minhashCols(col("xs"), k)
-      val sig = sh.select(col("doc_id") +: sigCols.map { case (n, c) => c.as(n) }: _*)
-      val sigRef = (0 until k).map(i => col(s"mh$i"))
-      sig.select(col("doc_id").as(as),
-        explode(array((0 until bands).map(bi =>
-          struct(lit(bi).as("band"), bandHash(sigRef, bi, r).as("bh"))): _*)).as("b"))
-        .select(col(as), col("b.band").as("band"), col("b.bh").as("bh"))
-    }
-    val cand = banded(shA, "doc_a").join(banded(shB, "doc_b"), Seq("band", "bh"))
+    val shA = bandedShingles(dfA, idCol, textCol, k, bands)
+    val shB = bandedShingles(dfB, idCol, textCol, k, bands)
+    val cand = bandRows(shA, "doc_a").join(bandRows(shB, "doc_b"), Seq("band", "bh"))
       .select(col("doc_a"), col("doc_b")).distinct()
     def side(sh: DataFrame, idAs: String, xsAs: String) = {
       val s = sh.select(col("doc_id").as(idAs), col("xs").as(xsAs))

@@ -35,19 +35,10 @@ object StreamDedup {
       docs: DataFrame, idCol: String, textCol: String, tsCol: String,
       k: Int, bands: Int, threshold: Double,
       withinUs: Long, watermark: String): DataFrame = {
-    require(k % bands == 0, "k must divide into equal bands")
-    val r = k / bands
-    val sh = docs.select(col(idCol).as("doc_id"), col(tsCol).as("ts"),
-      Dedup.shingleHashes(col(textCol)).as("xs"))
-    val sigCols = Dedup.minhashCols(col("xs"), k)
-    val sig = sh.select(Seq(col("doc_id"), col("ts"), col("xs")) ++
-      sigCols.map { case (n, c) => c.as(n) }: _*)
-    val sigRef = (0 until k).map(i => col(s"mh$i"))
-    val banded = sig.select(col("doc_id"), col("ts"), col("xs"),
-      explode(array((0 until bands).map(bi =>
-        struct(lit(bi).as("band"), Dedup.bandHash(sigRef, bi, r).as("bh"))): _*)).as("b"))
+    val banded = docs.select(col(idCol).as("doc_id"), col(tsCol).as("ts"),
+        Dedup.shingleHashes(col(textCol)).as("xs"))
       .select(col("doc_id"), col("ts"), col("xs"),
-        col("b.band").as("band"), col("b.bh").as("bh"))
+        posexplode(Dedup.minhashBands(col("xs"), k, bands)).as(Seq("band", "bh")))
     val l = banded.select(col("doc_id").as("doc_a"), col("ts").as("ts_a"),
       col("xs").as("sa"), col("band"), col("bh")).withWatermark("ts_a", watermark)
     val rr = banded.select(col("doc_id").as("doc_b"), col("ts").as("ts_b"),

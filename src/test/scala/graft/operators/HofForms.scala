@@ -39,6 +39,11 @@ object HofForms {
         x => (lit(Dedup.aCoef(i)) * x + lit(Dedup.bCoef(i))) % Dedup.P))
     }
 
+  /** [[Dedup.minhashBands]]'s reference: band b of a signature `sig`
+    * (e.g. [[Dedup.minhashCols]]) folds its r consecutive minhashes. */
+  def bandHash(sig: Seq[Column], b: Int, r: Int): Column =
+    (b * r until (b + 1) * r).map(sig(_)).reduce((h, m) => (h * 31 + m) % Dedup.P)
+
   /** [[Dedup.simhash16]]'s reference. */
   def simhash16Hof(textCol: Column): Column = {
     val toks = array_distinct(TextAnalysis.tokens(textCol))
