@@ -613,11 +613,13 @@ object ScaleRehearsal {
       val tb = Map("time" -> ("2021-01-11 02:00:00", "2021-01-13 23:00:00"))
       var got: (Int, Int) = (0, 0)
       timed("synmanifest_plan") {
-        got = CatalogManifest.planOnly(spark, manifest, "lwp", Map.empty, tb)
-        got._1.toLong
+        val (_, survivors, p1) =
+          CatalogManifest.planLive(spark, manifest, "lwp", Map.empty, tb)
+        got = (survivors, p1)
+        survivors.toLong
       }
       timed("synmanifest_replan") {
-        CatalogManifest.planOnly(spark, manifest, "lwp", Map.empty, tb)._1.toLong
+        CatalogManifest.planLive(spark, manifest, "lwp", Map.empty, tb)._2.toLong
       }
       println(s"""{"op":"synmanifest_io","stores":$n,""" +
         s""""survivors":${got._1},"phase1Collected":${got._2}}""")
@@ -647,8 +649,8 @@ object ScaleRehearsal {
         CatalogManifest.publishEntries(spark, entries, manifest); n.toLong
       }
       timed("synlong_plan") { // BROAD: every store survives
-        CatalogManifest.planOnly(spark, manifest, "lwp",
-          Map("t" -> (0.0, 1e9)), Map.empty)._1.toLong
+        CatalogManifest.planLive(spark, manifest, "lwp",
+          Map("t" -> (0.0, 1e9)), Map.empty)._2.toLong
       }
       println(s"""{"op":"synlong_io","stores":$n,"axisLen":$axisLen,""" +
         s""""phase2CoordCells":${CatalogManifest.lastPhase2CoordCells}}""")
@@ -842,7 +844,7 @@ object ScaleRehearsal {
           s"the refresh diff collected " +
             s"${CatalogManifest.lastDiffCollected} driver rows for $n " +
             "stores — must be O(changed), not O(catalog)")
-        val (survivors, _) = CatalogManifest.planOnly(spark, manifest,
+        val (_, survivors, _) = CatalogManifest.planLive(spark, manifest,
           "lwp", Map.empty, Map.empty)
         require(survivors == n,
           s"refreshed manifest plans $survivors of $n stores")

@@ -125,15 +125,36 @@ object Dedup {
       blockCols.map(col): _*)
     val b = sh.select(col("doc").as("doc_b") +: col("shingles").as("sb") +:
       blockCols.map(col): _*)
-    a.join(b, blockCols).where(col("doc_a") < col("doc_b"))
-      // size-ratio prefilter: jaccard <= min(|A|,|B|)/max(|A|,|B|), so a
-      // pair failing the ratio can never clear the threshold — prunes
-      // before the O(|A|+|B|) merge-walk, exactness preserved
+    verified(a.join(b, blockCols).where(col("doc_a") < col("doc_b")), threshold)
+      .select((col("doc_a") +: col("doc_b") +: blockCols.map(col)) :+ col("jaccard"): _*)
+  }
+
+  /** The exact verify step of every near-dup operator, over pair rows
+    * carrying shingle sets `sa` and `sb`: the size-ratio prefilter
+    * (jaccard <= min(|A|,|B|)/max(|A|,|B|), so a pair failing the ratio
+    * can never clear the threshold — it prunes before the O(|A|+|B|)
+    * merge-walk, exactness preserved), then `jaccard` and its
+    * `>= threshold` filter. */
+  private def verified(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs
       .where(least(size(col("sa")), size(col("sb"))).cast("double")
         >= lit(threshold) * greatest(size(col("sa")), size(col("sb"))).cast("double"))
       .withColumn("jaccard", jaccardSortedGe(col("sa"), col("sb"), threshold))
       .where(col("jaccard") >= threshold)
-      .select((col("doc_a") +: col("doc_b") +: blockCols.map(col)) :+ col("jaccard"): _*)
+
+  /** The LSH operators' verify pass: each distinct candidate pair joins
+    * `shA`'s shingles back on `doc_a` and `shB`'s on `doc_b` (broadcast
+    * when hinted), then [[verified]]. */
+  private def verifyCandidates(cand: DataFrame, shA: DataFrame, shB: DataFrame,
+      threshold: Double, broadcastShingles: Boolean): DataFrame = {
+    def side(sh: DataFrame, idAs: String, xsAs: String) = {
+      val s = sh.select(col("doc_id").as(idAs), col("xs").as(xsAs))
+      if (broadcastShingles) broadcast(s) else s
+    }
+    verified(cand
+      .join(side(shA, "doc_a", "sa"), Seq("doc_a"))
+      .join(side(shB, "doc_b", "sb"), Seq("doc_b")), threshold)
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
   /** MinHash signatures (k columns) per document. */
@@ -182,20 +203,7 @@ object Dedup {
     val cand = bandRows(sh, "doc_a").join(bandRows(sh, "doc_b"), Seq("band", "bh"))
       .where(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b")).distinct()
-    def shSide(idAs: String, xsAs: String) = {
-      val side = sh.select(col("doc_id").as(idAs), col("xs").as(xsAs))
-      if (broadcastShingles) broadcast(side) else side
-    }
-    cand
-      .join(shSide("doc_a", "sa"), Seq("doc_a"))
-      .join(shSide("doc_b", "sb"), Seq("doc_b"))
-      // same size-ratio prune as ngramJaccardPairs: skip the merge-walk
-      // for pairs that cannot reach the threshold
-      .where(least(size(col("sa")), size(col("sb"))).cast("double")
-        >= lit(threshold) * greatest(size(col("sa")), size(col("sb"))).cast("double"))
-      .withColumn("jaccard", jaccardSortedGe(col("sa"), col("sb"), threshold))
-      .where(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    verifyCandidates(cand, sh, sh, threshold, broadcastShingles)
   }
 
   /** The LSH operators' cache: (doc_id, xs = hashed shingle set, bhs =
@@ -234,18 +242,7 @@ object Dedup {
     val shB = bandedShingles(dfB, idCol, textCol, k, bands)
     val cand = bandRows(shA, "doc_a").join(bandRows(shB, "doc_b"), Seq("band", "bh"))
       .select(col("doc_a"), col("doc_b")).distinct()
-    def side(sh: DataFrame, idAs: String, xsAs: String) = {
-      val s = sh.select(col("doc_id").as(idAs), col("xs").as(xsAs))
-      if (broadcastShingles) broadcast(s) else s
-    }
-    cand
-      .join(side(shA, "doc_a", "sa"), Seq("doc_a"))
-      .join(side(shB, "doc_b", "sb"), Seq("doc_b"))
-      .where(least(size(col("sa")), size(col("sb"))).cast("double")
-        >= lit(threshold) * greatest(size(col("sa")), size(col("sb"))).cast("double"))
-      .withColumn("jaccard", jaccardSortedGe(col("sa"), col("sb"), threshold))
-      .where(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    verifyCandidates(cand, shA, shB, threshold, broadcastShingles)
   }
 
   /** Decontaminate by cross-corpus LSH: drop every train doc near-dup

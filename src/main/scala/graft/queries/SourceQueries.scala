@@ -2343,7 +2343,7 @@ object SourceQueries {
       // (metadata plane — a pixels-distinct would re-scan the catalog;
       // two separate opens re-planned the same catalog twice)
       val (pxRaw, sceneList) = graft.sources.GridOpen
-        .zarrCatalogWithScenesFromManifest(s, ensureQ228Manifest(s), "lwp",
+        .catalogWithScenesFromManifest(s, ensureQ228Manifest(s), "lwp",
           timeBounds = q228TimeBounds)
       val px = pxRaw
         .select(substring_index(col("path"), "/", -1).as("scene_id"),
@@ -2401,7 +2401,7 @@ object SourceQueries {
       // restore — and a pixels-distinct would re-scan the catalog; two
       // separate opens re-planned the same catalog twice)
       val (pxRaw229, sceneList229) = graft.sources.GridOpen
-        .zarrCatalogWithScenesFromManifest(s, ensureQ228Manifest(s), "lwp",
+        .catalogWithScenesFromManifest(s, ensureQ228Manifest(s), "lwp",
           timeBounds = q229TimeBounds)
       val px = pxRaw229
         .select(substring_index(col("path"), "/", -1).as("scene_id"),

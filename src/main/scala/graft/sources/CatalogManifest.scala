@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *    count) — and writes one Parquet row per (store, variable):
   *    raw axes (names, units, calendar, coordinate values), pack
   *    attrs, and a change-detection fingerprint.
-  *  - [[planStores]] plans a catalog crop from the manifest with ZERO
+  *  - [[planVarsStores]] plans a catalog crop from the manifest with ZERO
   *    per-store storage reads: phase 1 reads only per-store axis
   *    SUMMARIES (units/calendar/min/max — scalars, not coords) to
   *    resolve the caller's bounds per store and prune stores whose
@@ -646,8 +646,6 @@ object CatalogManifest {
   private[sources] final case class AxisSummary(k: Int, name: String,
       units: Option[String], calendar: Option[String],
       mn: Option[Double], mx: Option[Double], n: Int)
-  private[sources] final case class StoreSummary(store: String, format: String,
-      dir: String, ax: Seq[AxisSummary])
   private[sources] final case class VarSummary(store: String, variable: String,
       ax: Seq[AxisSummary])
 
@@ -775,7 +773,7 @@ object CatalogManifest {
     * distinct grid once. 4M cells = 32 MB of doubles. */
   @volatile private[graft] var directCollectCells: Long = 4L * 1024 * 1024
 
-  /** Phase-1 rows collected by the LAST planStores/planVarsStores call
+  /** Phase-1 rows collected by the LAST [[planVarsStores]] call
     * — test-scope observability for the collected == survivors claim
     * (the pushed filter's whole point). */
   @volatile private[graft] var lastPhase1Collected: Int = -1
@@ -785,88 +783,115 @@ object CatalogManifest {
     * (test/rehearsal observability for the coords-off-driver claim). */
   @volatile private[graft] var lastPhase2CoordCells: Long = -1L
 
-  /** Plan a catalog open from the manifest with ZERO per-store storage
-    * reads: phase 1 prunes stores whose [min,max] envelopes provably
-    * miss INSIDE the manifest scan ([[envelopePushdown]] over the
-    * persisted summary column — the coordinate arrays are never even
-    * read) and collects only the survivors; the driver then re-checks
-    * them with the exact [[envelopeSurvives]] (raising the live
-    * errors); phase 2 loads full coordinates for SURVIVORS only
-    * (pushed `store IN` parquet read). Envelope pruning is
-    * conservative — a surviving store can still resolve to an empty
-    * exact range downstream, which excludes it there.
-    * Returns (survivor metas store-sorted, format, dir, the REAL
+  /** Plan a catalog open of `variables` from the manifest with ZERO
+    * per-store storage reads. Members are the stores whose manifest
+    * rows cover ALL `variables` (every store with a row for a single
+    * variable, so one variable's membership costs nothing); envelope
+    * pruning runs on the head variable's axes (the shared grid).
+    *
+    * Phase 1 prunes members whose [min,max] envelopes provably miss and
+    * the driver re-checks the candidates with the exact
+    * [[envelopeSurvives]] (raising the live errors); phase 2 loads full
+    * rows for SURVIVORS only (pushed `store IN` parquet read) and
+    * verifies each store's shared grid across the variables
+    * ([[GridOpen.sharedGrid]]). Envelope pruning is conservative — a
+    * surviving store can still resolve to an empty exact range
+    * downstream, which excludes it there. One limit-probe job picks the
+    * regime:
+    *  - SMALL (the probe exhausts the rows): membership and the envelope
+    *    gate driver-side over the collected summaries — one job, cheaper
+    *    than the pushed path's extra jobs at small scale;
+    *  - PUSHED: the envelope runs INSIDE the manifest scan
+    *    ([[envelopePushdown]] over the persisted summary column — the
+    *    coordinate arrays are never even read), membership as a grouped
+    *    row-count semi-join (several variables only), and the driver
+    *    collects only surviving members, never the catalog;
+    *  - BROAD (no bounds, big catalog): every member survives by
+    *    definition — phase 1 collects ZERO rows, one aggregate job
+    *    estimates the coordinate volume for phase 2.
+    *
+    * Returns (one meta per survivor, store-sorted; format; dir; the REAL
     * envelope survivors' change fingerprints — empty when everything
-    * pruned); when everything prunes, one store's meta is kept so the
+    * pruned). When everything prunes, one member's meta is kept so the
     * empty frame still carries the right schema (it is NOT a survivor
     * and its fingerprint is not returned or checked). */
-  private[sources] def planStores(spark: SparkSession, manifestPath: String,
-      variable: String,
+  private[sources] def planVarsStores(spark: SparkSession,
+      manifestPath: String, variables: Seq[String],
       bounds: Map[String, (Double, Double)],
       timeBounds: Map[String, (String, String)],
       verifyFingerprints: Boolean = true)
       : (Seq[GridOpen.StoreMeta], GridFormat, String, Seq[(String, Fp)]) = {
     import spark.implicits._
+    require(variables.nonEmpty, "catalog manifest: no variables requested")
     val df = load(spark, manifestPath)
-      .where(col("variable") === variable)
-    val sumsDf = df.select(col("store"), col("format"), col("dir"),
-      col("axs").as("ax"))
-    // two regimes, decided by ONE limit-probe job (no separate count):
-    // a SMALL catalog's summaries collect whole — the r17 single-pass
-    // plan, cheaper than the pushed path's extra combos+filter jobs at
-    // fixture scale; a catalog the probe cannot exhaust takes the
-    // PUSHED path, where the driver sees survivors only
-    val probe = sumsDf.limit(collectAllBelow + 1).as[StoreSummary].collect()
-    require(probe.nonEmpty,
-      s"catalog manifest: no '$variable' rows in $manifestPath")
+      .where(col("variable").isin(variables: _*))
+    val allSums = df.select(col("store"), col("variable"), col("axs").as("ax"))
+    val probe = allSums.limit(collectAllBelow + 1).as[VarSummary].collect()
+    require(probe.nonEmpty, s"catalog manifest: no rows for " +
+      s"${variables.mkString(",")} in $manifestPath")
+    val noMember = s"catalog manifest: no store holds all " +
+      s"of ${variables.mkString(",")} in $manifestPath"
+    val several = variables.distinct.size > 1
+    // membership inside the scan; one variable's rows are all members
+    def members(d: org.apache.spark.sql.DataFrame) =
+      if (!several) d
+      else d.join(df.groupBy("store").agg(count(lit(1)).as("__nv"))
+        .where(col("__nv") === variables.distinct.size).select("store"),
+        Seq("store"), "left_semi")
+    val headSums = members(allSums.where(col("variable") === variables.head))
     val (full, survivors) =
       if (probe.length > collectAllBelow && bounds.isEmpty &&
           timeBounds.isEmpty) {
-        // BROAD no-bounds open over a big catalog: every store holding
-        // the variable survives by definition, so collecting O(catalog)
-        // scalar summaries to establish that would be the last
-        // O(catalog) driver term in the plan. Phase 1 collects ZERO
-        // rows; one aggregate job estimates the coordinate volume for
-        // the phase-2 regime choice, and phase 2 — which must return
-        // one meta per store regardless, that IS the result — dedups
-        // coordinate arrays through the grouped exchange, so the driver
-        // holds O(stores) scalars and O(distinct grids) coordinates,
-        // never O(stores x axis length).
         lastPhase1Collected = 0
-        // coalesce: an empty frame sums to NULL, and the domain error
-        // (below, via the loadEntries result) beats a NullPointerException
-        val cells = sumsDf.select(coalesce(sum(expr(
+        // coalesce: NO member store makes the frame empty and the sum
+        // NULL — the clean noMember require below must raise, not a
+        // NullPointerException here
+        val cells = headSums.select(coalesce(sum(expr(
           "aggregate(ax, 0L, (acc, a) -> acc + greatest(cast(a.n as bigint), 0L))")),
           lit(0L)))
-          .collect()(0).getLong(0)
-        val f = loadEntries(spark, df, cells)
+          .collect()(0).getLong(0) * variables.length
+        val f = loadEntries(spark, members(df), cells)
+        require(f.nonEmpty, noMember)
         (f, f.map(_._1.store).distinct)
       } else {
         val sums =
-          if (probe.length <= collectAllBelow) probe
-          else sumsDf.where(
+          if (probe.length <= collectAllBelow) {
+            val byStore = probe.groupBy(_.store)
+            val got = probe.filter(s => s.variable == variables.head &&
+              variables.forall(v => byStore(s.store).exists(_.variable == v)))
+            require(got.nonEmpty, noMember)
+            got.toSeq
+          } else headSums.where(
               envelopePushdown(bounds, resolveTimeCombos(df, timeBounds)))
-            .as[StoreSummary].collect()
+            .as[VarSummary].collect().toSeq
         lastPhase1Collected = sums.length
-        // pushed + everything-pruned: keep ONE store (the probe has
-        // one) for the empty frame's schema
-        val head = sums.headOption.getOrElse(probe.head)
-        // exact driver refine over the collected CANDIDATES (survivors
-        // + error-shaped rows): raises the live errors, drops
-        // conservative keeps the exact test rejects
         val surv = sums.filter(s =>
-          envelopeSurvives(s.store, s.ax, bounds, timeBounds))
-          .map(_.store).toSeq
-        val wanted = if (surv.nonEmpty) surv else Seq(head.store)
+          envelopeSurvives(s.store, s.ax, bounds, timeBounds)).map(_.store)
+        // everything pruned: ONE member for the empty frame's schema —
+        // the probe's head is one for a single variable; for several a
+        // pushed plan asks the member frame (all-pruned vs no-member:
+        // only the first is fine)
+        lazy val fallback =
+          if (!several) probe.head.store
+          else {
+            val one = headSums.limit(1).select("store").as[String].collect()
+            require(one.nonEmpty, noMember)
+            one.head
+          }
+        val wanted =
+          if (surv.nonEmpty) surv
+          else Seq(sums.headOption.map(_.store).getOrElse(fallback))
         val wantedSet = wanted.toSet
         val cells = sums.iterator.filter(s0 => wantedSet(s0.store))
-          .flatMap(_.ax).map(a => math.max(0, a.n).toLong).sum
+          .flatMap(_.ax).map(a => math.max(0, a.n).toLong)
+          .sum * variables.length
         (loadEntries(spark, df.where(col("store").isin(wanted: _*)), cells),
           surv)
       }
-    // verify only ACTUAL survivors: the everything-pruned fallback row
-    // exists for schema alone — its staleness cannot affect the (empty)
-    // result, so it must not refuse the query
+    // fps of the REAL survivors only (the everything-pruned fallback
+    // member is schema-only: its staleness cannot affect the empty
+    // result, so it must not refuse the query), returned so a
+    // materialize can verify its not-yet-done subset
     val survivorSet = survivors.toSet
     val survivorFps = full.map(_._1).filter(e => survivorSet(e.store))
       .map(e => (e.store, (e.fpMtime, e.fpBytes, e.fpCount, e.fpHash)))
@@ -874,13 +899,19 @@ object CatalogManifest {
     if (verifyFingerprints)
       checkFresh(spark, survivorFps, manifestPath)
     val (format, dir) = (GridFormat.named(full.head._1.format), full.head._1.dir)
-    // interned: metas share classified-axis seqs and attr objects
-    // across stores (a broad open's result is O(stores) StoreMeta
-    // shells + O(distinct grids) everything else)
+    // interned: metas share classified-axis seqs and attr seqs across
+    // stores (a broad open's result is O(stores) StoreMeta shells +
+    // O(distinct grids) everything else), and identical coords are ONE
+    // array instance from loadEntries, so the shared-grid check's `eq`
+    // shortcut makes it O(rank), not O(rank x axis length)
     val intern = new MetaInterner
-    val metas = full.sortBy(_._1.store).map { case (e, raw) =>
-      GridOpen.StoreMeta(e.store, intern.classify(raw, e.store),
-        intern.attrsOf(e)) }
+    val metas = full.groupBy(_._1.store).toSeq.sortBy(_._1).map { case (s, rows) =>
+      val perVar = variables.map(v => rows.find(_._1.variable == v).get)
+      GridOpen.StoreMeta(s,
+        GridOpen.sharedGrid(s, variables, perVar.map { case (e, raw) =>
+          intern.classify(raw, e.store) }),
+        intern.attrsOf(perVar.map(_._1)))
+    }
     (metas, format, dir, survivorFps)
   }
 
@@ -914,13 +945,15 @@ object CatalogManifest {
     * triggered it. */
   private final class MetaInterner {
     private val attrs = scala.collection.mutable.HashMap
-      .empty[(Double, Double, Option[Double], Option[Double]),
-        CfDecode.CfAttrs]
+      .empty[Seq[CfDecode.CfAttrs], Seq[CfDecode.CfAttrs]]
     private val classified = scala.collection.mutable.HashMap
       .empty[Seq[AnyRef], Seq[GridOpen.Axis]]
-    def attrsOf(e: ScalarEntry): CfDecode.CfAttrs =
-      attrs.getOrElseUpdate((e.scale, e.offset, e.fill, e.unsignedModulus),
+    /** The pack attrs of one store's rows, one per variable. */
+    def attrsOf(es: Seq[ScalarEntry]): Seq[CfDecode.CfAttrs] = {
+      val as = es.map(e =>
         CfDecode.CfAttrs(e.scale, e.offset, e.fill, e.unsignedModulus))
+      attrs.getOrElseUpdate(as, as)
+    }
     def classify(raw: Seq[GridOpen.RawAxis], store: String)
         : Seq[GridOpen.Axis] = {
       val key = axesKey(raw)
@@ -1021,26 +1054,13 @@ object CatalogManifest {
     * driver map — used ONLY by the read-path staleness guards, whose
     * `stores` is the PLAN'S SURVIVORS (already a driver seq the caller
     * holds), never the whole catalog; the maintenance plane's
-    * catalog-wide waves go through [[fpWaveDf]] and stay distributed.
-    * Driver parMap below [[fpDistributeAbove]], a distributed job
-    * above it. */
+    * catalog-wide waves consume [[fpWaveDf]] as a frame and stay
+    * distributed. */
   private def fpWave(spark: SparkSession,
-      stores: Seq[String]): Map[String, Fp] = {
-    def asFp(r: (String, Long, Long, Long, Long)): (String, Fp) =
-      (r._1, (r._2, r._3, r._4, r._5))
-    if (stores.size <= fpDistributeAbove)
-      ByteStore.parMap(stores)(fpRow).map(asFp).toMap
-    else {
-      val snap = ByteStore.confSnapshot(spark)
-      import spark.implicits._
-      spark.createDataset(stores)
-        .repartition(math.max(1, math.min(512, stores.size / 32)))
-        .mapPartitions { it =>
-          ByteStore.install(snap) // executor JVMs have no session
-          it.map(fpRow)
-        }.collect().map(asFp).toMap
-    }
-  }
+      stores: Seq[String]): Map[String, Fp] =
+    fpWaveDf(spark, stores).collect().iterator.map(r =>
+      r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
+      .toMap
 
   /** One store's fingerprint row. A genuinely VANISHED store
     * fingerprints as (-1,-1,-1,-1) (always "changed"); a transient I/O
@@ -1057,11 +1077,13 @@ object CatalogManifest {
         if (vanished) (s, -1L, -1L, -1L, -1L) else throw e
     }
 
-  /** Fingerprint wave over a NAMES FRAME — fully frame-native (the
-    * names never collect to the driver): the distributed mapPartitions
-    * branch of [[fpWaveDf]] applied to whatever partitioning the
-    * upstream plan produced. Used where the wave's store set is itself
-    * derived by a join ([[checkCatalogFresh]]'s known-stores side). */
+  private val FpCols = Seq("store", "__mt", "__by", "__n", "__h")
+
+  /** THE distributed fingerprint wave, over a NAMES FRAME — fully
+    * frame-native (the names never collect to the driver), on whatever
+    * partitioning the upstream plan produced. [[checkCatalogFresh]]
+    * hands it a join-derived store set; [[fpWaveDf]] a repartitioned
+    * store list. */
   private def fpWaveOnFrame(spark: SparkSession,
       names: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
@@ -1071,30 +1093,23 @@ object CatalogManifest {
       .mapPartitions { it =>
         ByteStore.install(snap) // executor JVMs have no session
         it.map(fpRow)
-      }.toDF("store", "__mt", "__by", "__n", "__h")
+      }.toDF(FpCols: _*)
   }
 
-  /** [[fpWave]] as a FRAME (store, __mt, __by, __n, __h): the
-    * maintenance plane's diff consumes fingerprints through a join
-    * ([[diffFp]]), so above the distribution threshold the per-store
-    * results never transit the driver at all — only the diff's
-    * added+changed names do. Below the threshold the driver parMap is
-    * bounded by definition and lands in a local frame. */
+  /** The fingerprints of `stores` as a FRAME (store, __mt, __by, __n,
+    * __h): a driver parMap into a local frame up to
+    * [[fpDistributeAbove]] stores (bounded by definition), above it
+    * [[fpWaveOnFrame]] over the list spread across executors — the
+    * maintenance plane's diff consumes it through a join ([[diffFp]]),
+    * so there the per-store results never transit the driver; only the
+    * diff's added+changed names do. */
   private def fpWaveDf(spark: SparkSession, stores: Seq[String])
       : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    val cols = Seq("store", "__mt", "__by", "__n", "__h")
     if (stores.size <= fpDistributeAbove)
-      ByteStore.parMap(stores)(fpRow).toDF(cols: _*)
-    else {
-      val snap = ByteStore.confSnapshot(spark)
-      spark.createDataset(stores)
-        .repartition(math.max(1, math.min(512, stores.size / 32)))
-        .mapPartitions { it =>
-          ByteStore.install(snap) // executor JVMs have no session
-          it.map(fpRow)
-        }.toDF(cols: _*)
-    }
+      ByteStore.parMap(stores)(fpRow).toDF(FpCols: _*)
+    else fpWaveOnFrame(spark, spark.createDataset(stores).toDF("store")
+      .repartition(math.max(1, math.min(512, stores.size / 32))))
   }
 
   /** Staleness guard on the stores a plan will actually READ: one
@@ -1114,137 +1129,6 @@ object CatalogManifest {
         s"${stale.take(5).mkString(", ")}${if (stale.size > 5) ", ..." else ""}" +
         s" — run CatalogManifest.refresh on $manifestPath " +
         "(or open with verifyFingerprints = false for immutable catalogs)")
-  }
-
-  /** Multi-variable plan-from-manifest: membership = stores whose
-    * manifest rows cover ALL `variables`; envelope pruning runs on the
-    * head variable's axes (the shared grid). BOTH run inside the
-    * manifest scan — membership as a grouped row-count gate, the
-    * envelope as [[envelopePushdown]] over the summary column — so
-    * phase 1 collects only surviving members, never the catalog;
-    * phase 2 loads survivors' full rows and VERIFIES the shared grid
-    * across variables (names + coords, NaN-tolerant) exactly like the
-    * live open. Returns (store, shared axes, attrs per variable in
-    * `variables` order) store-sorted, plus format and dir. ZERO
-    * per-store storage reads. */
-  private[sources] def planVarsStores(spark: SparkSession,
-      manifestPath: String, variables: Seq[String],
-      bounds: Map[String, (Double, Double)],
-      timeBounds: Map[String, (String, String)],
-      verifyFingerprints: Boolean = true)
-      : (Seq[(String, Seq[GridOpen.Axis], Seq[CfDecode.CfAttrs])], GridFormat,
-        String, Seq[(String, Fp)]) = {
-    import spark.implicits._
-    require(variables.nonEmpty, "catalog manifest: no variables requested")
-    val df = load(spark, manifestPath)
-      .where(col("variable").isin(variables: _*))
-    val allSums = df.select(col("store"), col("variable"), col("axs").as("ax"))
-    // the same two regimes as planStores, decided by one limit-probe:
-    // SMALL catalogs collect every (store, variable) summary in one
-    // job and gate membership + envelope driver-side (the r17 plan);
-    // big ones push membership (a grouped row count) and the envelope
-    // into the scan, collecting surviving members only
-    val probe = allSums.limit(collectAllBelow + 1).as[VarSummary].collect()
-    require(probe.nonEmpty, s"catalog manifest: no rows for " +
-      s"${variables.mkString(",")} in $manifestPath")
-    val noMember = s"catalog manifest: no store holds all " +
-      s"of ${variables.mkString(",")} in $manifestPath"
-    val memberDf = df.groupBy("store")
-      .agg(count(lit(1)).as("__nv"))
-      .where(col("__nv") === variables.distinct.size).select("store")
-    val (full, survivors) =
-      if (probe.length > collectAllBelow && bounds.isEmpty &&
-          timeBounds.isEmpty) {
-        // BROAD no-bounds open over a big catalog: every member store
-        // survives by definition — like planStores, phase 1 collects
-        // ZERO rows, membership stays a grouped row-count INSIDE the
-        // scan (a semi-join filter on phase 2's own read), and one
-        // aggregate job estimates the coordinate volume
-        lastPhase1Collected = 0
-        // coalesce: NO member store (nobody holds every variable) makes
-        // the semi-join empty and the sum NULL — the clean noMember
-        // require below must raise, not a NullPointerException here
-        val cells = allSums.where(col("variable") === variables.head)
-          .join(memberDf, Seq("store"), "left_semi")
-          .select(coalesce(sum(expr(
-            "aggregate(ax, 0L, (acc, a) -> acc + greatest(cast(a.n as bigint), 0L))")),
-            lit(0L)))
-          .collect()(0).getLong(0) * variables.length
-        val f = loadEntries(spark,
-          df.join(memberDf, Seq("store"), "left_semi"), cells)
-        require(f.nonEmpty, noMember)
-        (f, f.map(_._1.store).distinct)
-      } else {
-        val (sums, fallbackMember) =
-          if (probe.length <= collectAllBelow) {
-            val byStore = probe.groupBy(_.store)
-            val members = byStore.collect {
-              case (s, rows)
-                  if variables.forall(v => rows.exists(_.variable == v)) => s
-            }.toSeq.sorted
-            require(members.nonEmpty, noMember)
-            (members.map(s =>
-              byStore(s).find(_.variable == variables.head).get),
-              members.headOption)
-          } else {
-            val headDf = allSums.where(col("variable") === variables.head)
-              .join(memberDf, Seq("store"), "left_semi")
-            val pushed = headDf.where(
-              envelopePushdown(bounds, resolveTimeCombos(df, timeBounds)))
-            val got = pushed.as[VarSummary].collect()
-            // all-pruned vs no-member: only the first is fine
-            val fb =
-              if (got.nonEmpty) None
-              else {
-                val one = headDf.limit(1).select("store").as[String].collect()
-                require(one.nonEmpty, noMember)
-                Some(one.head)
-              }
-            (got.toSeq, fb)
-          }
-        lastPhase1Collected = sums.length
-        val surv = sums.filter(s =>
-          envelopeSurvives(s.store, s.ax, bounds, timeBounds))
-          .map(_.store).toSeq
-        val wanted =
-          if (surv.nonEmpty) surv
-          else Seq(sums.headOption.map(_.store).getOrElse(fallbackMember.get))
-        val wantedSet2 = wanted.toSet
-        val cells = sums.iterator.filter(s0 => wantedSet2(s0.store))
-          .flatMap(_.ax).map(a => math.max(0, a.n).toLong)
-          .sum * variables.length
-        (loadEntries(spark, df.where(col("store").isin(wanted: _*)), cells),
-          surv)
-      }
-    // fps of the REAL survivors only (the everything-pruned fallback
-    // member is schema-only), returned so a materialize can verify its
-    // not-yet-done subset
-    val survivorSet = survivors.toSet
-    val survivorFps = full.map(_._1).filter(e => survivorSet(e.store))
-      .map(e => (e.store, (e.fpMtime, e.fpBytes, e.fpCount, e.fpHash)))
-      .distinct
-    if (verifyFingerprints)
-      checkFresh(spark, survivorFps, manifestPath)
-    val fullByStore = full.groupBy(_._1.store)
-    val (format, dir) = (GridFormat.named(full.head._1.format), full.head._1.dir)
-    val intern = new MetaInterner // shared axes/attrs across stores
-    val metas = fullByStore.keySet.toSeq.sorted.map { s =>
-      val rows = fullByStore(s)
-      val perVar = variables.map(v => rows.find(_._1.variable == v).get)
-      val axesPerVar = perVar.map { case (e, raw) =>
-        intern.classify(raw, e.store) }
-      // shared-grid verification: identical coords collapsed to ONE
-      // array instance in loadEntries, so coordsEq's `eq` shortcut
-      // makes this O(rank), not O(rank x axis length)
-      axesPerVar.tail.zip(variables.tail).foreach { case (ax, v) =>
-        if (ax.map(_.name) != axesPerVar.head.map(_.name) ||
-          !ax.zip(axesPerVar.head).forall { case (a, b) =>
-            GridOpen.coordsEq(a.coords, b.coords) })
-          fail(s"variable '$v' in $s is not on the store's shared grid")
-      }
-      (s, axesPerVar.head, perVar.map { case (e, _) => intern.attrsOf(e) })
-    }
-    (metas, format, dir, survivorFps)
   }
 
   /** OPT-IN full-catalog freshness check — the complement of the
@@ -1307,7 +1191,7 @@ object CatalogManifest {
     * envelope survivors, incl. ones the exact prune then dropped — a
     * changed store could now match), never the already-done ones (a
     * done scene's later change must not wedge a skip-everything
-    * re-run). The fingerprints come from [[planStores]]' own collect,
+    * re-run). The fingerprints come from [[planVarsStores]]' own collect,
     * so this costs zero extra manifest reads. */
   private[sources] def checkFreshSubset(spark: SparkSession,
       fps: Seq[(String, (Long, Long, Long, Long))],
@@ -1324,25 +1208,17 @@ object CatalogManifest {
       entries: Dataset[Entry], manifestPath: String): Unit =
     publish(spark, entries.toDF(), manifestPath)
 
-  /** Plan-only: (survivors, phase-1 rows collected). */
-  private[graft] def planOnly(spark: SparkSession, manifestPath: String,
-      variable: String, bounds: Map[String, (Double, Double)],
-      timeBounds: Map[String, (String, String)]): (Int, Int) = {
-    val (_, survivors, p1) = planLive(spark, manifestPath, variable,
-      bounds, timeBounds)
-    (survivors, p1)
-  }
-
-  /** [[planOnly]] returning the metas themselves, so a rehearsal can
-    * HOLD the result and measure its live post-GC footprint — the
-    * host-independent form of the driver-memory claim (a peak-usage
-    * gauge also tracks GC-dependent collect transients, which scale
-    * with -Xmx, not with the result). */
+  /** Plan-only over a synthetic manifest: (the metas, survivors, phase-1
+    * rows collected). The metas let a rehearsal HOLD the result and
+    * measure its live post-GC footprint — the host-independent form of
+    * the driver-memory claim (a peak-usage gauge also tracks
+    * GC-dependent collect transients, which scale with -Xmx, not with
+    * the result). */
   private[graft] def planLive(spark: SparkSession, manifestPath: String,
       variable: String, bounds: Map[String, (Double, Double)],
       timeBounds: Map[String, (String, String)])
       : (Seq[GridOpen.StoreMeta], Int, Int) = {
-    val (metas, _, _, fps) = planStores(spark, manifestPath, variable,
+    val (metas, _, _, fps) = planVarsStores(spark, manifestPath, Seq(variable),
       bounds, timeBounds, verifyFingerprints = false)
     (metas, if (fps.isEmpty) 0 else metas.length, lastPhase1Collected)
   }

@@ -60,9 +60,10 @@ object CfDecode {
   def maskAndScale(df: DataFrame, attrs: CfAttrs): DataFrame =
     df.withColumn("value", maskAndScaleExpr(col("value"), attrs))
 
-  /** The decode as a bare expression over any raw column —
-    * [[GridOpen]]'s multi-variable open folds one per variable into a
-    * single CASE projection. */
+  /** The decode as a bare expression over any raw column — every
+    * [[GridOpen]] open decodes through it: one variable's rows take it
+    * bare, several variables' fold one per variable into a single CASE
+    * over `dataset`. */
   def maskAndScaleExpr(rawCol: Column, attrs: CfAttrs): Column = {
     def reinterpret(c: Column): Column = attrs.unsignedModulus match {
       case Some(m) => when(c < 0, c + lit(m)).otherwise(c)

@@ -182,31 +182,63 @@ object GridOpen {
     }
   }
 
-  private def decorate(cropped: DataFrame, axes: Seq[Axis],
-      attrs: CfDecode.CfAttrs): DataFrame = {
-    val withAxes = axes.foldLeft(CfDecode.maskAndScale(cropped, attrs)) {
-      (df, ax) => df.withColumn(ax.name, axisColumn(ax))
+  /** The shared grid of one store's `variables`, given each one's axes
+    * in `variables` order: every variable must have the same axis names
+    * and coordinates (NaN-tolerant, [[coordsEq]]) — a multi-variable
+    * open is one grid read once. One variable is its own grid. */
+  private[sources] def sharedGrid(store: String, variables: Seq[String],
+      axesPerVar: Seq[Seq[Axis]]): Seq[Axis] = {
+    val grid = axesPerVar.head
+    variables.zip(axesPerVar).tail.foreach { case (v, ax) =>
+      if (ax.map(_.name) != grid.map(_.name) ||
+        !ax.zip(grid).forall { case (a, b) => coordsEq(a.coords, b.coords) })
+        fail(s"variable '$v' in $store is not on the store's shared grid " +
+          s"(${grid.map(_.name).mkString(",")}) — a multi-variable open needs one grid")
     }
-    withAxes.select((Seq(col("path"), col("idx")) ++
-      axes.map(ax => col(s"`${ax.name}`")) :+ col("value")): _*)
+    grid
   }
+
+  /** Mask-and-scale of the mount's raw `value` by its row's variable: the
+    * bare [[CfDecode.maskAndScaleExpr]] for one variable, one CASE over
+    * `dataset` for several (codegen'd either way). */
+  private def decodeExpr(variables: Seq[String],
+      attrs: Seq[CfDecode.CfAttrs]): Column =
+    if (variables.size == 1) CfDecode.maskAndScaleExpr(col("value"), attrs.head)
+    else variables.zip(attrs).foldLeft(lit(null).cast("double")) {
+      case (acc, (v, a)) =>
+        when(col("dataset") === v, CfDecode.maskAndScaleExpr(col("value"), a))
+          .otherwise(acc)
+    }
+
+  /** One value column per variable, named `names`, from decoded `value`
+    * rows. Several variables pivot on `(path, idx, dK…)` — map-side
+    * partial aggregation and ONE exchange, no self-joins (k variables
+    * via joins would be k scans + k exchanges); one variable has nothing
+    * to join and keeps its rows. Returns the frame and the value
+    * columns of its final projection. */
+  private def wide(decoded: DataFrame, variables: Seq[String],
+      names: Seq[String], rank: Int): (DataFrame, Seq[Column]) =
+    if (variables.size == 1) (decoded, Seq(col("value").as(names.head)))
+    else {
+      val aggs = variables.zip(names).map { case (v, n) =>
+        max(when(col("dataset") === v, col("value"))).as(n) }
+      (decoded.groupBy((Seq(col("path"), col("idx")) ++
+        MountDsv2.DimCols.take(math.max(1, rank)).map(col)): _*)
+        .agg(aggs.head, aggs.tail: _*), names.map(n => col(s"`$n`")))
+    }
 
   // ---- single-store opens -------------------------------------------------
 
   /** Open one store's `dataset` — a zarr store, a netCDF classic file,
     * or a netCDF-4/HDF5 file (axes from its dimension scales) — with
     * named/typed coordinates, mask-and-scale, and pushed value/time
-    * crops. */
+    * crops: the one-variable [[openVars]], its value column `value`. */
   def open(spark: SparkSession, format: GridFormat, store: String,
       dataset: String,
       bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty): DataFrame = {
-    val axes = axesOf(format, store, dataset)
-    val nb = resolveBounds(axes, bounds, timeBounds, store)
-    val cropped = crop(format.reader(spark).option("path", store).load()
-      .where(col("dataset") === dataset), axes, nb, store)
-    decorate(cropped, axes, format.cfAttrs(store, dataset))
-  }
+      timeBounds: Map[String, (String, String)] = Map.empty): DataFrame =
+    openStore(spark, format, store, Seq(dataset), Seq("value"), bounds,
+      timeBounds)
 
   /** The pushable per-dim predicates of numeric bounds `nb`, built from
     * the coordinates `axes` already hold: chunks that miss the crop
@@ -228,48 +260,34 @@ object GridOpen {
     *
     * 100 TB shape: ONE scan (`dataset IN (...)` pushed, crops pruning
     * every variable's chunks), per-variable mask-and-scale as a CASE
-    * projection, then a single `(path, idx)`-keyed pivot aggregation —
-    * map-side partial agg, one exchange, NO self-joins (k variables
-    * via joins would be k scans + k exchanges). Variables must share
-    * the store's grid (same dimension names, same coords). */
+    * projection, then a single `(path, idx)`-keyed pivot ([[wide]]).
+    * Variables must share the store's grid (same dimension names, same
+    * coords). */
   def openVars(spark: SparkSession, format: GridFormat, store: String,
       variables: Seq[String],
       bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty): DataFrame = {
+      timeBounds: Map[String, (String, String)] = Map.empty): DataFrame =
+    openStore(spark, format, store, variables, variables, bounds, timeBounds)
+
+  /** [[openVars]] with the value columns named `names`. */
+  private def openStore(spark: SparkSession, format: GridFormat,
+      store: String, variables: Seq[String], names: Seq[String],
+      bounds: Map[String, (Double, Double)],
+      timeBounds: Map[String, (String, String)]): DataFrame = {
     require(variables.nonEmpty, "grid open: no variables requested")
     val perVar = ByteStore.parMap(variables)(v =>
-      (v, axesOf(format, store, v), format.cfAttrs(store, v)))
-    val axes = perVar.head._2
-    perVar.foreach { case (v, ax, _) =>
-      if (ax.map(_.name) != axes.map(_.name) ||
-        !ax.zip(axes).forall { case (a, b) => coordsEq(a.coords, b.coords) })
-        fail(s"variable '$v' in $store is not on the shared grid " +
-          s"(${axes.map(_.name).mkString(",")}) — multi-open needs one grid")
-    }
+      (axesOf(format, store, v), format.cfAttrs(store, v)))
+    val axes = sharedGrid(store, variables, perVar.map(_._1))
     val nb = resolveBounds(axes, bounds, timeBounds, store)
     // the shared coords crop the chunks of EVERY variable
     val df = crop(format.reader(spark).option("path", store).load()
       .where(col("dataset").isin(variables: _*)), axes, nb, store)
-    // per-variable mask-and-scale, folded into one CASE projection
-    val decoded = perVar.foldLeft(lit(null).cast("double")) {
-      case (acc, (v, _, attrs)) =>
-        when(col("dataset") === v,
-          CfDecode.maskAndScaleExpr(col("value"), attrs)).otherwise(acc)
-    }
-    val dimCols = MountDsv2.DimCols.take(math.max(1, axes.length))
-    val wide = df.withColumn("__v", decoded)
-      .groupBy((Seq(col("path"), col("idx")) ++ dimCols.map(col)): _*)
-      .agg(
-        perVar.map { case (v, _, _) =>
-          max(when(col("dataset") === v, col("__v"))).as(v)
-        }.head,
-        perVar.tail.map { case (v, _, _) =>
-          max(when(col("dataset") === v, col("__v"))).as(v)
-        }: _*)
-    val withAxes = axes.foldLeft(wide)((d, ax) => d.withColumn(ax.name, axisColumn(ax)))
-    withAxes.select((Seq(col("path"), col("idx")) ++
-      axes.map(ax => col(s"`${ax.name}`")) ++
-      variables.map(v => col(s"`$v`"))): _*)
+    val (out, values) = wide(
+      df.withColumn("value", decodeExpr(variables, perVar.map(_._2))),
+      variables, names, axes.length)
+    axes.foldLeft(out)((d, ax) => d.withColumn(ax.name, axisColumn(ax)))
+      .select((Seq(col("path"), col("idx")) ++
+        axes.map(ax => col(s"`${ax.name}`")) ++ values): _*)
   }
 
   // ---- scene-idempotent materialization (the luigi contract) ---------------
@@ -302,10 +320,10 @@ object GridOpen {
       bounds: Map[String, (Double, Double)] = Map.empty,
       timeBounds: Map[String, (String, String)] = Map.empty): Seq[String] =
     materializeScenes(spark, format.stores(dir), outPath) { pending =>
-      catalogOpen(spark, extra =>
-        format.mountMembers(spark, dir, pending, Seq(dataset)).options(extra)
-          .load().where(col("dataset") === dataset),
-        metaWave(format, pending, dataset), bounds, timeBounds)
+      liveCatalog(spark, format, pending, Seq(dataset), Seq("value"),
+        extra => format.mountMembers(spark, dir, pending, Seq(dataset))
+          .options(extra).load(),
+        bounds, timeBounds)
     }
 
   /** [[materialize]] planned from a persisted [[CatalogManifest]]:
@@ -322,23 +340,9 @@ object GridOpen {
       manifestPath: String, dataset: String, outPath: String,
       bounds: Map[String, (Double, Double)] = Map.empty,
       timeBounds: Map[String, (String, String)] = Map.empty,
-      verifyFingerprints: Boolean = true): Seq[String] = {
-    val (metas0, format, dir, survivorFps) = CatalogManifest.planStores(
-      spark, manifestPath, dataset, bounds, timeBounds,
-      verifyFingerprints = false)
-    if (verifyFingerprints)
-      checkPendingFresh(spark, manifestPath, outPath, survivorFps)
-    val exact = survivingRanges(metas0.map(m => (m.store, m.axes)),
-      bounds, timeBounds).map(_._1).toSet
-    val metas = metas0.filter(m => exact(m.store))
-    materializeScenes(spark, metas.map(_.store), outPath) { pending =>
-      val pendingSet = pending.toSet
-      catalogOpen(spark, extra =>
-        format.mountMembers(spark, dir, pending, Seq(dataset)).options(extra)
-          .load().where(col("dataset") === dataset),
-        metas.filter(m => pendingSet(m.store)), bounds, timeBounds)
-    }
-  }
+      verifyFingerprints: Boolean = true): Seq[String] =
+    materializeManifest(spark, manifestPath, Seq(dataset), Seq("value"),
+      outPath, bounds, timeBounds, verifyFingerprints)
 
   /** [[materializeFromManifest]] under its former zarr-only name; the
     * benchmark calls it. */
@@ -362,19 +366,27 @@ object GridOpen {
       manifestPath: String, variables: Seq[String], outPath: String,
       bounds: Map[String, (Double, Double)] = Map.empty,
       timeBounds: Map[String, (String, String)] = Map.empty,
-      verifyFingerprints: Boolean = true): Seq[String] = {
+      verifyFingerprints: Boolean = true): Seq[String] =
+    materializeManifest(spark, manifestPath, variables, variables, outPath,
+      bounds, timeBounds, verifyFingerprints)
+
+  private def materializeManifest(spark: SparkSession, manifestPath: String,
+      variables: Seq[String], names: Seq[String], outPath: String,
+      bounds: Map[String, (Double, Double)],
+      timeBounds: Map[String, (String, String)],
+      verifyFingerprints: Boolean): Seq[String] = {
     val (metas0, format, dir, survivorFps) = CatalogManifest.planVarsStores(
       spark, manifestPath, variables, bounds, timeBounds,
       verifyFingerprints = false)
     if (verifyFingerprints)
       checkPendingFresh(spark, manifestPath, outPath, survivorFps)
-    val exact = survivingRanges(metas0.map(m => (m._1, m._2)),
+    val exact = survivingRanges(metas0.map(m => (m.store, m.axes)),
       bounds, timeBounds).map(_._1).toSet
-    val metas = metas0.filter(m => exact(m._1))
-    materializeScenes(spark, metas.map(_._1), outPath) { pending =>
+    val metas = metas0.filter(m => exact(m.store))
+    materializeScenes(spark, metas.map(_.store), outPath) { pending =>
       val pendingSet = pending.toSet
-      varsCatalogFrom(spark, metas.filter(m => pendingSet(m._1)), variables,
-        extra => format.mountMembers(spark, dir, pending, variables)
+      catalogFrom(spark, metas.filter(m => pendingSet(m.store)), variables,
+        names, extra => format.mountMembers(spark, dir, pending, variables)
           .options(extra).load(),
         bounds, timeBounds)
     }
@@ -413,18 +425,12 @@ object GridOpen {
   // ---- catalog turnkeys (dir of per-scene stores) --------------------------
 
   /** One store's catalog metadata: its axes (names, coords, time
-    * classification) and its pack attrs. Produced by ONE live metadata
-    * wave per open — or loaded with ZERO per-store reads from a
-    * persisted [[CatalogManifest]]. */
+    * classification — the grid its variables share) and one set of pack
+    * attrs per variable. Produced by ONE live metadata wave per open —
+    * or loaded with ZERO per-store reads from a persisted
+    * [[CatalogManifest]]. */
   private[graft] final case class StoreMeta(store: String, axes: Seq[Axis],
-      attrs: CfDecode.CfAttrs)
-
-  /** ONE live metadata wave over `stores`: each store's `dataset` axes
-    * and pack attrs. */
-  private def metaWave(format: GridFormat, stores: Seq[String],
-      dataset: String): Seq[StoreMeta] =
-    ByteStore.parMap(stores)(s =>
-      StoreMeta(s, axesOf(format, s, dataset), format.cfAttrs(s, dataset)))
+      attrs: Seq[CfDecode.CfAttrs])
 
   /** Open a CATALOG of scene stores (zarr stores, or a DIR or glob of
     * scene files) as one DataFrame with named/typed coordinates. ONE
@@ -438,17 +444,67 @@ object GridOpen {
     * heterogeneous catalog fails loudly); per-store pack attrs
     * broadcast when they differ (the CERES per-file-scales pattern,
     * convml-data sources/ceres_syn1deg_modis/extract.py:7-69) and fold
-    * as the literal codegen'd expression when uniform. */
+    * as the literal codegen'd expression when uniform. Every store is a
+    * member: one lacking `dataset` fails the open loudly. */
   def catalog(spark: SparkSession, format: GridFormat, dir: String,
       dataset: String,
       bounds: Map[String, (Double, Double)] = Map.empty,
       timeBounds: Map[String, (String, String)] = Map.empty): DataFrame = {
     val stores = format.stores(dir)
-    catalogOpen(spark, extra =>
-      format.mountCatalog(spark, dir, stores, Seq(dataset)).options(extra)
-        .load().where(col("dataset") === dataset),
-      metaWave(format, stores, dataset), bounds, timeBounds)
+    liveCatalog(spark, format, stores, Seq(dataset), Seq("value"),
+      extra => format.mountCatalog(spark, dir, stores, Seq(dataset))
+        .options(extra).load(),
+      bounds, timeBounds)
   }
+
+  /** Multi-variable CATALOG open — the aux-fields-over-all-scenes
+    * flow (convml-data pipeline/embeddings/aux_fields/data.py:33-295
+    * derives per-scene aux variables across the whole dataset): every
+    * variable of every scene store in ONE frame, store-pruned by the
+    * bounds, pivoted wide, coordinates decoded per store. Stores
+    * lacking any requested variable are not members.
+    *
+    * 100 TB shape: one metadata wave over stores x variables, ONE scan
+    * (`dataset IN` + the per-store crop disjunction pushed, so
+    * non-intersecting STORES and chunks of every variable prune), one
+    * CASE mask-and-scale projection, one (path, idx)-keyed pivot
+    * exchange, then the catalog axis decode (expressions when grids
+    * are homogeneous, broadcast joins otherwise). Per-variable pack
+    * attrs fold as the CASE when uniform across stores and broadcast
+    * per (path, dataset) when they differ; variables must share each
+    * store's grid; axis names/time-kinds must match catalog-wide. */
+  def varsCatalog(spark: SparkSession, format: GridFormat, dir: String,
+      variables: Seq[String],
+      bounds: Map[String, (Double, Double)] = Map.empty,
+      timeBounds: Map[String, (String, String)] = Map.empty): DataFrame = {
+    require(variables.nonEmpty, "grid open: no variables requested")
+    val stores = format.holdingAll(dir, variables)
+    // the mount plans over the same listing the membership resolved; a
+    // file catalog's mount is the dir's glob, so an unbounded open
+    // prunes the non-members by path (a bounded one's crop pushes the
+    // surviving members' paths)
+    liveCatalog(spark, format, stores, variables, variables, { extra =>
+      val mount = format.mountCatalog(spark, dir, stores, variables)
+        .options(extra).load()
+      if (bounds.isEmpty && timeBounds.isEmpty)
+        mount.where(col("path").isin(stores: _*))
+      else mount
+    }, bounds, timeBounds)
+  }
+
+  /** A live catalog open over `members`: ONE metadata wave reads each
+    * member's axes and pack attrs for every variable, then
+    * [[catalogFrom]] opens it on `mount`. */
+  private def liveCatalog(spark: SparkSession, format: GridFormat,
+      members: Seq[String], variables: Seq[String], names: Seq[String],
+      mount: Map[String, String] => DataFrame,
+      bounds: Map[String, (Double, Double)],
+      timeBounds: Map[String, (String, String)]): DataFrame =
+    catalogFrom(spark, ByteStore.parMap(members) { s =>
+      StoreMeta(s,
+        sharedGrid(s, variables, variables.map(v => axesOf(format, s, v))),
+        variables.map(v => format.cfAttrs(s, v)))
+    }, variables, names, mount, bounds, timeBounds)
 
   /** Resolve the caller's bounds against EACH store's own axes (scene
     * files routinely differ in epoch, calendar, and grid) into its
@@ -561,24 +617,34 @@ object GridOpen {
       }
     }
 
-  /** Shared single-variable catalog open over one per-store metadata
-    * set: homogeneity gates, store-level crop, pack-attr decode
-    * (literal when uniform, broadcast per store otherwise), per-axis
-    * decoration — the decode tables built from SURVIVING stores only. */
-  private def catalogOpen(spark: SparkSession,
-      mkBase: Map[String, String] => DataFrame,
-      perStore: Seq[StoreMeta],
+  /** THE catalog open, live or manifest-planned, over one meta per
+    * member store: homogeneity gates, the store-level crop, the decode
+    * (attrs uniform across the kept stores fold as the literal
+    * codegen'd [[decodeExpr]]; per-store attrs — the NORM for packed
+    * satellite products, each granule carrying its own scale/offset/fill
+    * — broadcast as a tiny (path, dataset) -> attrs table and decode
+    * through the column form of the same expression), the pivot
+    * ([[wide]], several variables only) and the per-axis decoration —
+    * decode tables built from SURVIVING stores only. `mount` loads the
+    * members' rows given the crop's mount options; the value columns
+    * are named `names`. */
+  private def catalogFrom(spark: SparkSession, perStore: Seq[StoreMeta],
+      variables: Seq[String], names: Seq[String],
+      mount: Map[String, String] => DataFrame,
       bounds: Map[String, (Double, Double)],
       timeBounds: Map[String, (String, String)]): DataFrame = {
-    val names = perStore.head.axes.map(a => (a.name, a.time.getClass))
+    val kinds = perStore.head.axes.map(a => (a.name, a.time.getClass))
     perStore.foreach { m =>
-      if (m.axes.map(a => (a.name, a.time.getClass)) != names)
+      if (m.axes.map(a => (a.name, a.time.getClass)) != kinds)
         fail(s"store ${m.store} axes ${m.axes.map(_.name)} disagree with " +
-          s"${names.map(_._1)} (names and time-kinds must match catalog-wide)")
+          s"${kinds.map(_._1)} (names and time-kinds must match catalog-wide)")
     }
+    // per-store crop: bounds resolve through EACH store's own axes
+    // (epochs/calendars differ per scene) into its index ranges
     val surviving = survivingRanges(perStore.map(m => (m.store, m.axes)),
       bounds, timeBounds)
-    val base = mkBase(hullsOption(bounds, timeBounds, surviving))
+    val base = mount(hullsOption(bounds, timeBounds, surviving))
+      .where(col("dataset").isin(variables: _*))
     val cropped =
       if (bounds.isEmpty && timeBounds.isEmpty) base
       else storeCrop(spark, base, surviving)
@@ -588,31 +654,22 @@ object GridOpen {
     // catalog's broadcast decode tables for nothing
     val kept0 = perStore.filter(m => keptPaths(m.store))
     val kept = if (kept0.nonEmpty) kept0 else perStore.take(1)
-    val masked = maskAndScaleCatalog(spark, cropped,
-      kept.map(m => (m.store, m.attrs)))
-    decorateCatalogAxes(spark, masked, kept.map(m => (m.store, m.axes)),
-      Seq("value"))
+    val decoded =
+      if (kept.forall(_.attrs == kept.head.attrs))
+        cropped.withColumn("value", decodeExpr(variables, kept.head.attrs))
+      else {
+        import spark.implicits._
+        val tbl = kept.flatMap(m => variables.zip(m.attrs).map { case (v, a) =>
+          (m.store, v, a.scale, a.offset, a.fill, a.unsignedModulus) })
+          .toDF("path", "dataset", "__scale", "__offset", "__fill", "__uns")
+        cropped.join(broadcast(tbl), Seq("path", "dataset"), "left")
+          .withColumn("value", maskAndScaleCols(col("value"), col("__scale"),
+            col("__offset"), col("__fill"), col("__uns")))
+          .drop("__scale", "__offset", "__fill", "__uns")
+      }
+    val (out, values) = wide(decoded, variables, names, perStore.head.axes.length)
+    decorateCatalogAxes(spark, out, kept.map(m => (m.store, m.axes)), values)
   }
-
-  /** Mask-and-scale over a catalog frame: uniform attrs fold as the
-    * literal codegen'd expression (no join); per-store attrs — the NORM
-    * for packed satellite products, each granule carrying its own
-    * scale/offset/fill — broadcast as a tiny (path -> attrs) table and
-    * decode through the column form of the same expression. */
-  private def maskAndScaleCatalog(spark: SparkSession, df: DataFrame,
-      perStore: Seq[(String, CfDecode.CfAttrs)]): DataFrame =
-    if (perStore.forall(_._2 == perStore.head._2))
-      CfDecode.maskAndScale(df, perStore.head._2)
-    else {
-      import spark.implicits._
-      val tbl = perStore.map { case (s, a) =>
-        (s, a.scale, a.offset, a.fill, a.unsignedModulus)
-      }.toDF("path", "__scale", "__offset", "__fill", "__uns")
-      df.join(broadcast(tbl), Seq("path"), "left")
-        .withColumn("value", maskAndScaleCols(col("value"), col("__scale"),
-          col("__offset"), col("__fill"), col("__uns")))
-        .drop("__scale", "__offset", "__fill", "__uns")
-    }
 
   /** [[CfDecode.maskAndScaleExpr]] with the attrs as COLUMNS (from a
     * broadcast per-store table) instead of literals. Same order:
@@ -653,8 +710,8 @@ object GridOpen {
       bounds: Map[String, (Double, Double)] = Map.empty,
       timeBounds: Map[String, (String, String)] = Map.empty,
       verifyFingerprints: Boolean = true): DataFrame =
-    manifestCatalog(spark, manifestPath, dataset, bounds, timeBounds,
-      verifyFingerprints)._1
+    manifestCatalog(spark, manifestPath, Seq(dataset), Seq("value"), bounds,
+      timeBounds, verifyFingerprints)._1
 
   /** [[catalogFromManifest]] AND the surviving-scene list from ONE
     * planning pass. Pipelines that need both (triplet sampling, sliding
@@ -671,8 +728,8 @@ object GridOpen {
       timeBounds: Map[String, (String, String)] = Map.empty,
       verifyFingerprints: Boolean = true): (DataFrame, DataFrame) = {
     import spark.implicits._
-    val (px, scenes) = manifestCatalog(spark, manifestPath, dataset, bounds,
-      timeBounds, verifyFingerprints)
+    val (px, scenes) = manifestCatalog(spark, manifestPath, Seq(dataset),
+      Seq("value"), bounds, timeBounds, verifyFingerprints)
     (px, spark.createDataset(scenes).toDF("path"))
   }
 
@@ -686,23 +743,38 @@ object GridOpen {
     catalogWithScenesFromManifest(spark, manifestPath, dataset, bounds,
       timeBounds, verifyFingerprints)
 
+  /** Multi-variable CATALOG open FROM A PERSISTED MANIFEST — the
+    * aux-fields-over-all-scenes flow with ZERO per-store metadata
+    * reads: membership (stores holding ALL variables), the store-level
+    * crop, shared-grid verification, per-variable pack attrs, and the
+    * coordinate decode all come from the manifest; the mount receives
+    * every surviving member explicitly (no dir listing, no membership
+    * header reads). */
+  def varsCatalogFromManifest(spark: SparkSession, manifestPath: String,
+      variables: Seq[String],
+      bounds: Map[String, (Double, Double)] = Map.empty,
+      timeBounds: Map[String, (String, String)] = Map.empty,
+      verifyFingerprints: Boolean = true): DataFrame =
+    manifestCatalog(spark, manifestPath, variables, variables, bounds,
+      timeBounds, verifyFingerprints)._1
+
   /** The manifest-planned catalog open and its surviving stores,
     * store-sorted: `fps` names the REAL envelope survivors, while the
     * metas may carry the schema-fallback store when everything pruned
-    * (not a survivor). */
+    * (not a survivor). The mount's explicit member list is the
+    * membership. */
   private def manifestCatalog(spark: SparkSession, manifestPath: String,
-      dataset: String,
+      variables: Seq[String], names: Seq[String],
       bounds: Map[String, (Double, Double)],
       timeBounds: Map[String, (String, String)],
       verifyFingerprints: Boolean): (DataFrame, Seq[String]) = {
-    val (metas, format, dir, fps) =
-      CatalogManifest.planStores(spark, manifestPath, dataset, bounds,
-        timeBounds, verifyFingerprints)
-    val px = catalogOpen(spark, extra =>
-      format.mountMembers(spark, dir, metas.map(_.store), Seq(dataset))
-        .options(extra).load().where(col("dataset") === dataset),
-      metas, bounds, timeBounds)
-    val surviving = fps.map(_._1).distinct.toSet
+    val (metas, format, dir, fps) = CatalogManifest.planVarsStores(spark,
+      manifestPath, variables, bounds, timeBounds, verifyFingerprints)
+    val px = catalogFrom(spark, metas, variables, names, extra =>
+      format.mountMembers(spark, dir, metas.map(_.store), variables)
+        .options(extra).load(),
+      bounds, timeBounds)
+    val surviving = fps.map(_._1).toSet
     (px, metas.map(_.store).filter(surviving))
   }
 
@@ -727,42 +799,21 @@ object GridOpen {
       expectFormat: Option[GridFormat] = None): DataFrame = {
     import spark.implicits._
     val (metas, format, _, fps) =
-      CatalogManifest.planStores(spark, manifestPath, dataset, bounds,
+      CatalogManifest.planVarsStores(spark, manifestPath, Seq(dataset), bounds,
         timeBounds, verifyFingerprints)
     expectFormat.foreach(f => require(format == f,
       s"grid open: manifest $manifestPath holds '$format' stores, not $f"))
     // fps names the REAL envelope survivors; metas may carry the
     // schema-fallback store when everything pruned (not a survivor)
-    val surviving = fps.map(_._1).distinct.toSet
+    val surviving = fps.map(_._1).toSet
     spark.createDataset(metas.map(_.store).filter(surviving)).toDF("path")
   }
 
-  /** Multi-variable CATALOG open FROM A PERSISTED MANIFEST — the
-    * aux-fields-over-all-scenes flow with ZERO per-store metadata
-    * reads: membership (stores holding ALL variables), the store-level
-    * crop, shared-grid verification, per-variable pack attrs, and the
-    * coordinate decode all come from the manifest; the mount receives
-    * every surviving member explicitly (no dir listing, no membership
-    * header reads). */
-  def varsCatalogFromManifest(spark: SparkSession, manifestPath: String,
-      variables: Seq[String],
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty,
-      verifyFingerprints: Boolean = true): DataFrame = {
-    val (metas, format, dir, _) = CatalogManifest.planVarsStores(spark,
-      manifestPath, variables, bounds, timeBounds, verifyFingerprints)
-    varsCatalogFrom(spark, metas, variables, extra =>
-      format.mountMembers(spark, dir, metas.map(_._1), variables)
-        .options(extra).load(),
-      bounds, timeBounds)
-  }
-
-  /** Per-axis catalog decoration shared by the single- and multi-
-    * variable catalog opens: homogeneous axes decode as the single-
-    * store expression, per-store axes via a broadcast (path, dK)
-    * table; `valueCols` are carried through to the final projection. */
+  /** Per-axis catalog decoration: homogeneous axes decode as the
+    * single-store expression, per-store axes via a broadcast (path, dK)
+    * table; `values` are carried through to the final projection. */
   private def decorateCatalogAxes(spark: SparkSession, masked: DataFrame,
-      perStore: Seq[(String, Seq[Axis])], valueCols: Seq[String]): DataFrame = {
+      perStore: Seq[(String, Seq[Axis])], values: Seq[Column]): DataFrame = {
     import spark.implicits._
     val axisNames = perStore.head._2.map(_.name)
     def homogeneous(k: Int): Boolean = {
@@ -812,116 +863,6 @@ object GridOpen {
       }
     }
     val axCols = axisNames.map(n => col(s"`$n`"))
-    out.select((Seq(col("path"), col("idx")) ++ axCols ++
-      valueCols.map(v => col(s"`$v`"))): _*)
-  }
-
-  /** Multi-variable CATALOG open — the aux-fields-over-all-scenes
-    * flow (convml-data pipeline/embeddings/aux_fields/data.py:33-295
-    * derives per-scene aux variables across the whole dataset): every
-    * variable of every scene store in ONE frame, store-pruned by the
-    * bounds, pivoted wide, coordinates decoded per store. Stores
-    * lacking any requested variable are not members.
-    *
-    * 100 TB shape: one metadata wave over stores x variables, ONE scan
-    * (`dataset IN` + the per-store crop disjunction pushed, so
-    * non-intersecting STORES and chunks of every variable prune), one
-    * CASE mask-and-scale projection, one (path, idx)-keyed pivot
-    * exchange, then the catalog axis decode (expressions when grids
-    * are homogeneous, broadcast joins otherwise). Per-variable pack
-    * attrs fold as the CASE when uniform across stores and broadcast
-    * per (path, dataset) when they differ; variables must share each
-    * store's grid; axis names/time-kinds must match catalog-wide. */
-  def varsCatalog(spark: SparkSession, format: GridFormat, dir: String,
-      variables: Seq[String],
-      bounds: Map[String, (Double, Double)] = Map.empty,
-      timeBounds: Map[String, (String, String)] = Map.empty): DataFrame = {
-    require(variables.nonEmpty, "grid open: no variables requested")
-    val stores = format.holdingAll(dir, variables)
-    // one wave: per store, every variable's axes + attrs
-    val perStore = ByteStore.parMap(stores) { st =>
-      val axesPerVar = variables.map(v => axesOf(format, st, v))
-      axesPerVar.tail.zip(variables.tail).foreach { case (ax, v) =>
-        if (ax.map(_.name) != axesPerVar.head.map(_.name) ||
-          !ax.zip(axesPerVar.head).forall { case (a, b) =>
-            coordsEq(a.coords, b.coords) })
-          fail(s"variable '$v' in $st is not on the store's shared grid")
-      }
-      (st, axesPerVar.head, variables.map(v => format.cfAttrs(st, v)))
-    }
-    // the mount plans over the same listing the membership resolved,
-    // and the crop's paths prune non-members
-    varsCatalogFrom(spark, perStore, variables, extra =>
-      format.mountCatalog(spark, dir, stores, variables).options(extra).load(),
-      bounds, timeBounds)
-  }
-
-  /** The post-wave multi-variable catalog body, shared by the live
-    * opens (per-store metadata wave) and the manifest-planned opens
-    * (ZERO per-store reads): homogeneity gates, store-level crop,
-    * uniform-or-broadcast pack decode, one pivot exchange, per-axis
-    * decoration from surviving stores. */
-  private def varsCatalogFrom(spark: SparkSession,
-      perStore: Seq[(String, Seq[Axis], Seq[CfDecode.CfAttrs])],
-      variables: Seq[String], mkMount: Map[String, String] => DataFrame,
-      bounds: Map[String, (Double, Double)],
-      timeBounds: Map[String, (String, String)]): DataFrame = {
-    val stores = perStore.map(_._1)
-    val names = perStore.head._2.map(a => (a.name, a.time.getClass))
-    perStore.foreach { case (st, axes, _) =>
-      if (axes.map(a => (a.name, a.time.getClass)) != names)
-        fail(s"store $st axes disagree with ${names.map(_._1)} " +
-          "(names and time-kinds must match catalog-wide)")
-    }
-    // per-store crop: bounds resolve through EACH store's own axes
-    // (epochs/calendars differ per scene) into its index ranges
-    val surviving = survivingRanges(
-      perStore.map { case (st, axes, _) => (st, axes) }, bounds, timeBounds)
-    val mount = mkMount(hullsOption(bounds, timeBounds, surviving))
-    var df = mount.where(col("dataset").isin(variables: _*))
-    // membership itself must prune: a store lacking a variable is not
-    // in `stores`, so even with NO bounds the path set pushes
-    df =
-      if (bounds.isEmpty && timeBounds.isEmpty)
-        df.where(col("path").isin(stores: _*))
-      else storeCrop(spark, df, surviving)
-    val keptPaths = surviving.map(_._1).toSet
-    val kept0 = perStore.filter(m => keptPaths(m._1))
-    val kept = if (kept0.nonEmpty) kept0 else perStore.take(1)
-    // decode: uniform per-variable attrs fold as ONE CASE projection
-    // (codegen'd — the common case); per-store attrs (the packed-
-    // granule norm) broadcast as a (path, dataset) -> attrs table
-    val attrsPerVar = perStore.head._3
-    val decoded =
-      if (perStore.forall(_._3 == attrsPerVar))
-        df.withColumn("__v",
-          variables.zip(attrsPerVar).foldLeft(lit(null).cast("double")) {
-            case (acc, (v, attrs)) =>
-              when(col("dataset") === v,
-                CfDecode.maskAndScaleExpr(col("value"), attrs)).otherwise(acc)
-          })
-      else {
-        import spark.implicits._
-        val tbl = kept.flatMap { case (st, _, as) =>
-          variables.zip(as).map { case (v, a) =>
-            (st, v, a.scale, a.offset, a.fill, a.unsignedModulus) }
-        }.toDF("path", "dataset", "__scale", "__offset", "__fill", "__uns")
-        df.join(broadcast(tbl), Seq("path", "dataset"), "left")
-          .withColumn("__v", maskAndScaleCols(col("value"), col("__scale"),
-            col("__offset"), col("__fill"), col("__uns")))
-          .drop("__scale", "__offset", "__fill", "__uns")
-      }
-    val axes = perStore.head._2
-    val dimCols = MountDsv2.DimCols.take(math.max(1, axes.length))
-    // one pivot exchange (the multiVar shape)
-    val wide = decoded
-      .groupBy((Seq(col("path"), col("idx")) ++ dimCols.map(col)): _*)
-      .agg(
-        max(when(col("dataset") === variables.head, col("__v")))
-          .as(variables.head),
-        variables.tail.map(v =>
-          max(when(col("dataset") === v, col("__v"))).as(v)): _*)
-    decorateCatalogAxes(spark, wide,
-      kept.map { case (st, ax, _) => (st, ax) }, variables)
+    out.select((Seq(col("path"), col("idx")) ++ axCols ++ values): _*)
   }
 }

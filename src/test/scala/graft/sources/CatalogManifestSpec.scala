@@ -420,9 +420,9 @@ class CatalogManifestSpec extends SparkSpec {
           "coalesce(size(a.coords), -1) as n))"))
     // what the driver test says, evaluated on the SAME Spark-computed
     // summaries (a thrown error = the store must reach the driver)
-    val summaries = df.select(col("store"), lit("zarr").as("format"),
-        lit("/x").as("dir"), col("axs").as("ax"))
-      .as[CatalogManifest.StoreSummary].collect()
+    val summaries = df.select(col("store"), lit("lwp").as("variable"),
+        col("axs").as("ax"))
+      .as[CatalogManifest.VarSummary].collect()
     val mustKeep = summaries.filter { s =>
       try CatalogManifest.envelopeSurvives(s.store, s.ax, bounds, Map.empty)
       catch { case _: Exception => true } // error-shaped: must collect
@@ -468,9 +468,9 @@ class CatalogManifestSpec extends SparkSpec {
           "array_min(a.coords) as mn, array_max(a.coords) as mx, " +
           "coalesce(size(a.coords), -1) as n))"))
     val tb = Map("time" -> ("2021-01-10 00:00:00", "2021-01-12 23:00:00"))
-    val summaries = df.select(col("store"), lit("zarr").as("format"),
-        lit("/x").as("dir"), col("axs").as("ax"))
-      .as[CatalogManifest.StoreSummary].collect()
+    val summaries = df.select(col("store"), lit("lwp").as("variable"),
+        col("axs").as("ax"))
+      .as[CatalogManifest.VarSummary].collect()
     val mustKeep = summaries.filter { s =>
       try CatalogManifest.envelopeSurvives(s.store, s.ax, Map.empty, tb)
       catch { case _: Exception => true } // error-shaped: must collect
@@ -531,9 +531,9 @@ class CatalogManifestSpec extends SparkSpec {
           "a.units as units, a.calendar as calendar, " +
           "array_min(a.coords) as mn, array_max(a.coords) as mx, " +
           "coalesce(size(a.coords), -1) as n))"))
-    val summaries = df.select(col("store"), lit("zarr").as("format"),
-        lit("/x").as("dir"), col("axs").as("ax"))
-      .as[CatalogManifest.StoreSummary].collect()
+    val summaries = df.select(col("store"), lit("lwp").as("variable"),
+        col("axs").as("ax"))
+      .as[CatalogManifest.VarSummary].collect()
     var raisers = 0
     val mustKeep = summaries.filter { s =>
       try CatalogManifest.envelopeSurvives(s.store, s.ax, bounds, tb)
@@ -612,8 +612,8 @@ class CatalogManifestSpec extends SparkSpec {
     // would take the small direct-collect path)
     val savedCells = CatalogManifest.directCollectCells
     CatalogManifest.directCollectCells = 0L
-    val (metas, _, _, _) = try CatalogManifest.planStores(spark, manifest,
-      "lwp", Map.empty, Map.empty)
+    val (metas, _, _, _) = try CatalogManifest.planVarsStores(spark, manifest,
+      Seq("lwp"), Map.empty, Map.empty)
       finally CatalogManifest.directCollectCells = savedCells
     assert(metas.length == 12)
     def instances(k: Int): Int = metas
@@ -882,7 +882,7 @@ class CatalogManifestSpec extends SparkSpec {
       val saved = CatalogManifest.collectAllBelow
       CatalogManifest.collectAllBelow = threshold
       try intercept[IllegalArgumentException] {
-        CatalogManifest.planOnly(spark, manifest, "lwp", bounds, Map.empty)
+        CatalogManifest.planLive(spark, manifest, "lwp", bounds, Map.empty)
       } finally CatalogManifest.collectAllBelow = saved
     }
     val eAll = planAt(2048) // collect-all regime
@@ -1095,7 +1095,7 @@ class CatalogManifestSpec extends SparkSpec {
     CatalogManifest.collectAllBelow = 0 // force the big-catalog regime
     try {
       val (metas, format, _, fps) =
-        CatalogManifest.planStores(spark, manifest, "lwp", Map.empty,
+        CatalogManifest.planVarsStores(spark, manifest, Seq("lwp"), Map.empty,
           Map.empty)
       assert(metas.length == 12 && fps.length == 12 && format == GridFormat.Zarr)
       assert(CatalogManifest.lastPhase1Collected == 0,
@@ -1128,8 +1128,8 @@ class CatalogManifestSpec extends SparkSpec {
       val (metas, _, _, fps) = CatalogManifest.planVarsStores(spark,
         manifest, Seq("a", "b"), Map.empty, Map.empty,
         verifyFingerprints = false)
-      assert(metas.map(_._1).toSeq == (1 to 10).map(i => f"/syn/m$i%02d"),
-        metas.map(_._1))
+      assert(metas.map(_.store) == (1 to 10).map(i => f"/syn/m$i%02d"),
+        metas.map(_.store))
       assert(fps.length == 10)
       assert(CatalogManifest.lastPhase1Collected == 0,
         s"broad vars phase 1 collected ${CatalogManifest.lastPhase1Collected}")

@@ -2,7 +2,11 @@ package graft.sources
 
 import java.nio.file.Files
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 /** The manifest-planned opens take the storage format from the
@@ -11,7 +15,9 @@ import org.apache.spark.sql.DataFrame
   * the same rows through [[GridOpen.catalogFromManifest]],
   * [[GridOpen.varsCatalogFromManifest]] and
   * [[GridOpen.materializeFromManifest]], with no format named by the
-  * caller. */
+  * caller. Each single-variable open is the one-variable case of its
+  * multi-variable twin, and the manifest planner submits the same jobs
+  * per regime for one variable. */
 class ManifestFormatSpec extends SparkSpec {
 
   // three scenes on a (time = 2, x = 3) grid; each scene's time axis
@@ -171,5 +177,152 @@ class ManifestFormatSpec extends SparkSpec {
       assert(scenes.map(stem).sorted == Seq("s0", "s1"))
       rows(spark.read.parquet(out).select("path", "idx", "time", "x", "value"))
     }
+  }
+  private def dirOf(f: GridFormat, manifest: String): String =
+    s"${new java.io.File(manifest).getParent}/${f.name}"
+
+  /** Every row, columns as is, sorted on (path, idx). */
+  private def allRows(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).toSeq.sortBy(_.take(2).mkString("/"))
+
+  /** `single` has the rows and columns of `oneVar`, whose `b` column is
+    * `value` in `single`, and every value is scene k's raw `b` (unpacked)
+    * at its idx. Returns the row count. */
+  private def sameAsOneVar(label: String, single: DataFrame,
+      oneVar: DataFrame): Int = {
+    assert(single.columns.toSeq ==
+      oneVar.columns.toSeq.map(c => if (c == "b") "value" else c), label)
+    val got = allRows(single)
+    assert(got == allRows(oneVar), s"$label: rows differ")
+    val vi = single.columns.indexOf("value")
+    got.foreach { r =>
+      val k = stem(r(0).toString).drop(1).toInt
+      assert(r(vi) == bRaw(k)(r(1).asInstanceOf[Long].toInt), s"$label: $r")
+    }
+    got.size
+  }
+
+  test("each single-variable open returns the one-variable multi-variable open's rows, in every format") {
+    val root = Files.createTempDirectory("graft-manifest-onevar").toString
+    manifests.foreach { case (f, m) =>
+      val dir = dirOf(f, m)
+      val store = f.stores(dir).head
+      Seq((Map.empty[String, (Double, Double)], Map.empty[String, (String, String)],
+          6, 18, Seq("s0", "s1", "s2")), (bounds, timeBounds, 2, 4, Seq("s0", "s1")))
+        .foreach {
+        case (nb, tb, storeRows, catalogRows, scenes) =>
+          val label = s"${f.name} bounded=${nb.nonEmpty}"
+          assert(sameAsOneVar(s"$label open",
+            GridOpen.open(spark, f, store, "b", nb, tb),
+            GridOpen.openVars(spark, f, store, Seq("b"), nb, tb)) == storeRows)
+          assert(sameAsOneVar(s"$label catalog",
+            GridOpen.catalog(spark, f, dir, "b", nb, tb),
+            GridOpen.varsCatalog(spark, f, dir, Seq("b"), nb, tb)) == catalogRows)
+          assert(sameAsOneVar(s"$label catalogFromManifest",
+            GridOpen.catalogFromManifest(spark, m, "b", nb, tb),
+            GridOpen.varsCatalogFromManifest(spark, m, Seq("b"), nb, tb)) ==
+            catalogRows)
+          val out = s"$root/${f.name}-${nb.nonEmpty}"
+          val one = GridOpen.materializeFromManifest(spark, m, "b", s"$out-one",
+            nb, tb)
+          val vars = GridOpen.materializeVarsFromManifest(spark, m, Seq("b"),
+            s"$out-vars", nb, tb)
+          assert(one.map(stem).sorted == scenes && vars == one,
+            s"$label materialized $one and $vars")
+          assert(sameAsOneVar(s"$label materializeFromManifest",
+            spark.read.parquet(s"$out-one"), spark.read.parquet(s"$out-vars")) ==
+            catalogRows)
+      }
+    }
+  }
+  test("a live multi-variable catalog skips a store lacking a variable, in every format") {
+    val root = Files.createTempDirectory("graft-manifest-varsmember").toString
+    writers.foreach { case (f, write) =>
+      val dir = s"$root/${f.name}"
+      ByteStore.mkdirs(dir)
+      // scene 2 holds `b` only: its `b` rows must not join the wide frame
+      (0 until 3).foreach(k => write(dir, k, k < 2))
+      val got = rows(GridOpen.varsCatalog(spark, f, dir, Seq("a", "b")))
+      assert(got.size == 12 && got.map(_.head).distinct == Seq("s0", "s1"),
+        s"${f.name}: ${got.map(_.head).distinct}")
+    }
+  }
+
+  test("a single-variable open plans no pivot exchange, in every format") {
+    def exchanges(df: DataFrame): Int = "Exchange".r.findAllIn(
+      df.queryExecution.executedPlan.toString.replace("BroadcastExchange", "BX")).size
+    manifests.foreach { case (f, m) =>
+      val dir = dirOf(f, m)
+      Seq(
+        "open" -> GridOpen.open(spark, f, f.stores(dir).head, "a"),
+        "catalog" -> GridOpen.catalog(spark, f, dir, "a", bounds, timeBounds),
+        "catalogFromManifest" -> GridOpen.catalogFromManifest(spark, m, "a"),
+        "one-variable varsCatalogFromManifest" ->
+          GridOpen.varsCatalogFromManifest(spark, m, Seq("b"), bounds, timeBounds)
+      ).foreach { case (label, df) =>
+        assert(exchanges(df) == 0, s"${f.name} $label:\n" +
+          df.queryExecution.executedPlan)
+      }
+      // two variables pivot through exactly one
+      assert(exchanges(GridOpen.varsCatalogFromManifest(spark, m, Seq("a", "b"))) == 1)
+    }
+  }
+
+  /** `body`'s result and the Spark jobs it submitted: a listener counts
+    * the jobs tagged through a local property, and a differently tagged
+    * sentinel job flushes the listener bus (events arrive in order). */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobs"
+    val counted = new AtomicInteger
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some("count") => counted.incrementAndGet()
+          case Some("flush") => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "count")
+      val out = try body finally sc.setLocalProperty(key, "flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not flush")
+      (out, counted.get)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("the manifest planner submits the same jobs in every regime for one variable") {
+    // (jobs, phase-1 rows collected, phase-2 coordinate cells) per
+    // regime, the counts the dedicated single-variable planner had:
+    // membership must cost one variable nothing — no grouped semi-join,
+    // no extra limit job when everything prunes
+    val none = Map.empty[String, (Double, Double)]
+    val noTime = Map.empty[String, (String, String)]
+    val regimes = Seq(
+      ("small unbounded", 2048, none, noTime, (4, 3, 15L)),
+      ("small bounded", 2048, bounds, timeBounds, (4, 3, 10L)),
+      ("pushed bounded", 0, bounds, timeBounds, (6, 2, 10L)),
+      ("pushed all-pruned", 0, Map("x" -> (100.0, 200.0)), noTime, (4, 0, 5L)),
+      ("broad", 0, none, noTime, (5, 0, 15L)))
+    val wrong = for {
+      (f, m) <- manifests
+      (label, threshold, nb, tb, want) <- regimes
+      got = {
+        val saved = CatalogManifest.collectAllBelow
+        CatalogManifest.collectAllBelow = threshold
+        val (_, jobs) = try jobsOf(GridOpen.catalogFromManifest(spark, m, "b", nb, tb))
+          finally CatalogManifest.collectAllBelow = saved
+        (jobs, CatalogManifest.lastPhase1Collected,
+          CatalogManifest.lastPhase2CoordCells)
+      }
+      if got != want
+    } yield s"${f.name} $label: $got, want $want"
+    assert(wrong.isEmpty, wrong.mkString("; "))
   }
 }
