@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler._
+
+import scala.collection.mutable
+
 /** Benchmark main: runs the headline query set against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line for the driver.
   *
@@ -31,7 +36,22 @@ package graft
   * Medians of the cache-sharing queries are HIGHER under this rule on
   * identical code — OPTIMIZATION_r21.md records totals under both rules.
   * SPARK_GRAFT_BENCH_QUERIES (comma-separated) restricts the set for
-  * focused measurement.
+  * focused measurement; an unknown name fails before the warm-up.
+  *
+  * Next to the wall times, the runs record holds what host noise does not
+  * move, measured through one listener (`Tally`): per query and run,
+  * executor CPU-seconds, jobs, stages, tasks, shuffle read/write and
+  * input bytes, plus the 20 slowest stages of the run. Its header holds
+  * the local core count, the broadcast threshold and the shuffle
+  * partitions, so records taken under different settings are never
+  * compared blind.
+  *
+  * The scale curve is this harness over `tools/scale_gen.py` data
+  * (`SPARK_GRAFT_SF_DIR=scaledata/xM`, the scale set in
+  * SPARK_GRAFT_BENCH_QUERIES, one run, a SPARK_GRAFT_BENCH_RUNS_OUT file);
+  * session settings such as the 100 TB mode's
+  * `spark.sql.autoBroadcastJoinThreshold=-1` arrive as `-Dspark.*` JVM
+  * properties, which SparkConf loads (SCALE.md has the commands).
   */
 object Bench {
   val headline: Seq[String] = Seq(
@@ -145,11 +165,131 @@ object Bench {
     // excluded-scene zero-I/O contract).
     "q229_manifest_embedding_pipeline")
 
+  /** Fails on a name no registry defines, listing the known ones. */
+  def requireKnown(names: Seq[String]): Unit =
+    names.foreach(n => require(SparkEntry.queries.contains(n),
+      s"unknown query '$n' — known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
+
+  /** One completed stage of a run: wall ms (submission to completion),
+    * task-duration median/max, executor CPU and the stage's bytes. */
+  private final case class StageRow(id: Int, name: String, tasks: Int, ms: Long,
+      taskMsMed: Long, taskMsMax: Long, cpuS: Double,
+      shuffleReadB: Long, shuffleWriteB: Long, inputB: Long)
+
+  /** What one run did, summed over its tasks. */
+  private final case class RunStats(jobs: Long, stages: Long, tasks: Long, cpuS: Double,
+      shuffleReadB: Long, shuffleWriteB: Long, inputB: Long, slowest: Seq[StageRow])
+
+  /** Driver-side tally of the jobs, stages and tasks since the last
+    * [[take]], through public listener events only. [[take]] first runs a
+    * one-task marker job and waits until its stage completes: the listener
+    * bus delivers events in order, so every event posted before the
+    * marker has been counted. The marker's own job, stage and task are
+    * not. */
+  private final class Tally(sc: SparkContext) extends SparkListener {
+    private val lock = new Object
+    private var jobs, stages, tasks, cpuNs, shufR, shufW, inputB = 0L
+    private val rows = mutable.ArrayBuffer.empty[StageRow]
+    private val taskMs = mutable.HashMap.empty[Int, mutable.ArrayBuffer[Long]]
+    private val markerStages = mutable.HashMap.empty[Int, String]
+    private var markersSeen = Set.empty[String]
+    private var markerSeq = 0
+    sc.addSparkListener(this)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = lock.synchronized {
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .filter(_.startsWith(Tally.MarkerPrefix)) match {
+        case Some(marker) => e.stageIds.foreach(markerStages(_) = marker)
+        case None => jobs += 1
+      }
+    }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = lock.synchronized {
+      if (!markerStages.contains(e.stageId)) {
+        tasks += 1
+        taskMs.getOrElseUpdate(e.stageId, mutable.ArrayBuffer.empty) += e.taskInfo.duration
+        Option(e.taskMetrics).foreach { m =>
+          cpuNs += m.executorCpuTime
+          shufR += m.shuffleReadMetrics.totalBytesRead
+          shufW += m.shuffleWriteMetrics.bytesWritten
+          inputB += m.inputMetrics.bytesRead
+        }
+      }
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = lock.synchronized {
+      val si = e.stageInfo
+      markerStages.remove(si.stageId) match {
+        case Some(marker) =>
+          markersSeen += marker
+          lock.notifyAll()
+        case None =>
+          stages += 1
+          val ts = taskMs.remove(si.stageId).map(_.sorted).getOrElse(mutable.ArrayBuffer.empty[Long])
+          val m = si.taskMetrics
+          rows += StageRow(si.stageId, si.name.takeWhile(_ != '\n'), si.numTasks,
+            (for (s <- si.submissionTime; c <- si.completionTime) yield c - s).getOrElse(-1L),
+            if (ts.isEmpty) 0L else ts(ts.size / 2), ts.lastOption.getOrElse(0L),
+            m.executorCpuTime / 1e9, m.shuffleReadMetrics.totalBytesRead,
+            m.shuffleWriteMetrics.bytesWritten, m.inputMetrics.bytesRead)
+      }
+    }
+
+    /** Drains the bus, returns the tally since the last call and restarts it. */
+    def take(): RunStats = {
+      val name = lock.synchronized { markerSeq += 1; s"${Tally.MarkerPrefix}$markerSeq" }
+      sc.setJobGroup(name, null)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 60000L
+      lock.synchronized {
+        while (!markersSeen(name)) {
+          val left = deadline - System.currentTimeMillis()
+          require(left > 0, "listener bus did not drain within 60 s")
+          lock.wait(left)
+        }
+        markersSeen -= name
+        val out = RunStats(jobs, stages, tasks, cpuNs / 1e9, shufR, shufW, inputB,
+          rows.sortBy(-_.ms).take(20).toSeq)
+        jobs = 0; stages = 0; tasks = 0; cpuNs = 0; shufR = 0; shufW = 0; inputB = 0
+        rows.clear(); taskMs.clear()
+        out
+      }
+    }
+  }
+
+  private object Tally { private val MarkerPrefix = "graft.bench.marker." }
+
+  private def jstr(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }.mkString("\"", "", "\"")
+
+  private def r3(v: Double): Double = if (v < 0) -1.0 else math.round(v * 1000) / 1000.0
+
+  private def runJson(wall: Double, st: RunStats): String = {
+    val stages = st.slowest.map { r =>
+      s"""{"id":${r.id},"ms":${r.ms},"tasks":${r.tasks},"task_ms_med":${r.taskMsMed},""" +
+        s""""task_ms_max":${r.taskMsMax},"cpu_s":${r3(r.cpuS)},"shuffle_read_b":${r.shuffleReadB},""" +
+        s""""shuffle_write_b":${r.shuffleWriteB},"input_b":${r.inputB},"name":${jstr(r.name)}}"""
+    }.mkString("[", ",", "]")
+    s"""{"wall_s":${r3(wall)},"cpu_s":${r3(st.cpuS)},"jobs":${st.jobs},"stages":${st.stages},""" +
+      s""""tasks":${st.tasks},"shuffle_read_b":${st.shuffleReadB},""" +
+      s""""shuffle_write_b":${st.shuffleWriteB},"input_b":${st.inputB},"slowest_stages":$stages}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
+    val set = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(headline)
+    requireKnown(set)
     val spark = LocalSession(cpus, cpus, "WARN",
       "spark.sql.adaptive.enabled" -> "true")
+    val tally = new Tally(spark.sparkContext)
 
     def runOnce(name: String): Double = {
       val t0 = System.nanoTime()
@@ -161,32 +301,34 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
-    val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
-    val set = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(headline)
-
     // one cache scope per run: the operator-persisted caches drop after
     // EVERY run (round-21 methodology fix), so each run executes the
     // complete plan including cache materialization — the median is
-    // per-execution cost
-    def scopedRun(n: String): Double = graft.core.Caching.scope(spark)(runOnce(n))
+    // per-execution cost. The tally is taken after the scope closed, so
+    // a run's record holds its own jobs only.
+    def scopedRun(n: String): (Double, RunStats) = {
+      val t = graft.core.Caching.scope(spark)(runOnce(n))
+      (t, tally.take())
+    }
     scopedRun(set.head) // JIT/session warmup, not reported
     val firstPass = set.map { n =>
-      val times = (1 to nRuns).map(_ => scopedRun(n))
-      n -> times
+      val runs = (1 to nRuns).map(_ => scopedRun(n))
+      n -> runs
     }
     // Spread guard (round-7, after BENCH_r06's load-contaminated medians):
     // a query whose within-run spread exceeds 2x was almost certainly hit
     // by transient host load, not plan variance — measure it again and
     // take the median over ALL its runs. Both arrays are disclosed.
-    val runs = firstPass.map { case (n, ts) =>
+    val runs = firstPass.map { case (n, rs) =>
+      val ts = rs.map(_._1)
       val ok = ts.forall(_ >= 0)
       if (ok && ts.min > 0 && ts.max / ts.min > 2.0 && nRuns > 1) {
         val more = (1 to nRuns).map(_ => scopedRun(n))
-        n -> (ts ++ more)
-      } else n -> ts
+        n -> (rs ++ more)
+      } else n -> rs
     }
-    val results = runs.map { case (n, ts) =>
+    val results = runs.map { case (n, rs) =>
+      val ts = rs.map(_._1)
       // any run failing poisons the query (-1): a flaky query must be
       // visible, not masked by its surviving runs
       n -> (if (ts.exists(_ < 0)) -1.0
@@ -194,28 +336,34 @@ object Bench {
     }
     // The driver keeps only a 4 KB tail of stdout: the printed line is
     // MEDIANS-ONLY (values rounded to ms) so all headline entries always
-    // survive; the full per-run arrays go to BENCH_RUNS.json alongside the
-    // repo for the snapshot commit (spread disclosure lives there).
-    def r3(v: Double): Double = if (v < 0) -1.0 else math.round(v * 1000) / 1000.0
+    // survive; the full per-run arrays and metrics go to BENCH_RUNS.json
+    // alongside the repo for the snapshot commit (spread disclosure lives
+    // there).
     val qs = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-    val rs = runs.map { case (k, ts) => "\"" + k + "\":[" + ts.map(r3).mkString(",") + "]" }
+    val rs = runs.map { case (k, ts) => "\"" + k + "\":[" + ts.map(t => r3(t._1)).mkString(",") + "]" }
       .mkString("{", ",", "}")
+    val ms = runs.map { case (k, ts) =>
+      "\"" + k + "\":" + ts.map { case (t, st) => runJson(t, st) }.mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    val conf = spark.conf
+    val record = s"""{"timing":"median_of_$nRuns","runs":$rs,"sf":${jstr(sfDir)},""" +
+      s""""cores":${spark.sparkContext.defaultParallelism},"host_cores":${Runtime.getRuntime.availableProcessors},""" +
+      s""""broadcast_threshold":${jstr(conf.get("spark.sql.autoBroadcastJoinThreshold"))},""" +
+      s""""shuffle_partitions":${jstr(conf.get("spark.sql.shuffle.partitions"))},""" +
+      s""""initial_partitions":${jstr(conf.getOption("spark.sql.adaptive.coalescePartitions.initialPartitionNum").getOrElse(""))},""" +
+      s""""metrics":$ms}"""
     val total = results.map(_._2).filter(_ >= 0).sum
     // only a FULL-headline run may refresh the committed run arrays — a
-    // focused SPARK_GRAFT_BENCH_QUERIES measurement must not clobber the
-    // repo snapshot with a single-query file
-    if (sys.env.get("SPARK_GRAFT_BENCH_QUERIES").isEmpty)
-      try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_RUNS.json"),
-        s"""{"timing":"median_of_$nRuns","runs":$rs,"sf":"$sfDir"}""".getBytes("UTF-8"))
-      catch { case e: Exception => System.err.println(s"[bench] runs file: ${e.getMessage}") }
-    else sys.env.get("SPARK_GRAFT_BENCH_RUNS_OUT").foreach { p =>
-      // focused re-measure path (e.g. a 10-run idle pin of one query):
-      // write the arrays to a SIDE file so the full-headline snapshot is
-      // never clobbered; merging into BENCH_RUNS.json is an explicit,
-      // documented step by whoever asked for the re-measure
-      try java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        s"""{"timing":"median_of_$nRuns","runs":$rs,"sf":"$sfDir"}""".getBytes("UTF-8"))
-      catch { case e: Exception => System.err.println(s"[bench] runs out: ${e.getMessage}") }
+    // focused SPARK_GRAFT_BENCH_QUERIES measurement writes only to the
+    // SPARK_GRAFT_BENCH_RUNS_OUT side file (when set), so the
+    // full-headline snapshot is never clobbered; merging into
+    // BENCH_RUNS.json is an explicit, documented step
+    val out =
+      if (sys.env.get("SPARK_GRAFT_BENCH_QUERIES").isEmpty) Some("BENCH_RUNS.json")
+      else sys.env.get("SPARK_GRAFT_BENCH_RUNS_OUT")
+    out.foreach { p =>
+      try java.nio.file.Files.write(java.nio.file.Paths.get(p), record.getBytes("UTF-8"))
+      catch { case e: Exception => System.err.println(s"[bench] runs file $p: ${e.getMessage}") }
     }
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","timing":"median_of_$nRuns","queries":$qs,"sf":"$sfDir"}""")
     spark.stop()

@@ -9,8 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (args.nonEmpty) args.toSeq else Bench.headline
-    names.foreach(n => require(SparkEntry.queries.contains(n),
-      s"unknown query '$n' — known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
+    Bench.requireKnown(names)
     val spark = LocalSession("4", "4", "ERROR",
       "spark.sql.adaptive.enabled" -> "false")
     try names.foreach { n =>

@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session builder of the local mains (`Bench`, `Verify`,
-  * `Explain`, `ProfileQuery`, `ScaleRehearsal`): `local[cores]`, the
-  * given shuffle partitions, UTC session time, no UI, plus the main's
-  * own `confs` (AQE, parquet timestamp type, app name). */
+  * `Explain`): `local[cores]`, the given shuffle partitions, UTC session
+  * time, no UI, plus the main's own `confs` (AQE, parquet timestamp
+  * type, app name). Any other session setting comes from `-Dspark.*` JVM
+  * properties, which SparkConf loads; the ones set here win. */
 object LocalSession {
   def apply(cores: String, shufflePartitions: String, logLevel: String,
       confs: (String, String)*): SparkSession = {

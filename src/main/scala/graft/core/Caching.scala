@@ -29,7 +29,7 @@ import org.apache.spark.storage.StorageLevel
   * Lifecycle: every owned cache belongs to a [[Scope]]. A result frame
   * must often stay cached until the CALLER consumes it, so the operator
   * can't drop it on return; the caller that fully consumes results (one
-  * query execution in Verify, Bench or ProfileQuery) runs it inside
+  * query execution in Verify or Bench) runs it inside
   * [[scope]], and closing the scope drops every cache built in it —
   * also the ones of an operator that threw before it could release its
   * own, and the ones built on threads started inside the scope (the

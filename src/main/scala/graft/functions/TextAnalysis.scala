@@ -582,17 +582,14 @@ object TextAnalysis {
     * The document-frequency join is SIZE-GATED, not force-broadcast:
     * vocabularies are unbounded (typos, code, UTF soup — a 100 TB corpus
     * has billions of distinct tokens), so an unconditional broadcast of
-    * docFreq is a driver/executor OOM at scale.
-    * `broadcastVocab = None` (default) declares a plain equi-join and
-    * lets AQE pick: it observes the REAL docFreq shuffle size at runtime
-    * and converts to broadcast only under
-    * `spark.sql.autoBroadcastJoinThreshold` — exactly the byte budget
-    * the verdict asks for, enforced by the engine. `Some(true)` forces
-    * the broadcast (known-tiny vocab), `Some(false)` forces a shuffled
-    * hash join (the 100 TB pipeline setting — build side is one
-    * vocab partition, never a whole-vocab driver copy). */
-  def tfidfTopTerms(df: DataFrame, idCol: String, textCol: String, k: Int,
-      broadcastVocab: Option[Boolean] = None): DataFrame = {
+    * docFreq is a driver/executor OOM at scale. The join is a plain
+    * equi-join and AQE picks: it observes the REAL docFreq shuffle size
+    * at runtime and converts to broadcast only under
+    * `spark.sql.autoBroadcastJoinThreshold` — the byte budget, enforced
+    * by the engine. The 100 TB setting is that threshold at `-1`: a
+    * shuffled join whose build side is one vocab partition, never a
+    * whole-vocab driver copy. */
+  def tfidfTopTerms(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     // floored (tokenize is CPU-dense per-row work — single-task on a
     // one-split corpus) and cached: the scoring join reads perTok AND
     // docFreq derives from it, and without the cache column pruning
@@ -616,13 +613,8 @@ object TextAnalysis {
     // identically across engines, and 6 dp absorbs the libm ln ulp; the
     // tie-break is the token's integer hash, not the string, so no
     // cross-engine collation assumption is needed
-    val dfSide = broadcastVocab match {
-      case Some(true)  => broadcast(docFreq)
-      case Some(false) => docFreq.hint("shuffle_hash")
-      case None        => docFreq // AQE: runtime-size-gated broadcast
-    }
     val scored = perTok
-      .join(dfSide, "tok")
+      .join(docFreq, "tok")
       .crossJoin(broadcast(n))
       .withColumn("score_r6",
         round(col("tf").cast("double")

@@ -143,14 +143,15 @@ object Dedup {
       .where(col("jaccard") >= threshold)
 
   /** The LSH operators' verify pass: each distinct candidate pair joins
-    * `shA`'s shingles back on `doc_a` and `shB`'s on `doc_b` (broadcast
-    * when hinted), then [[verified]]. */
+    * `shA`'s shingles back on `doc_a` and `shB`'s on `doc_b`, then
+    * [[verified]]. The joins carry no hint: under
+    * `spark.sql.autoBroadcastJoinThreshold` the shingle sides broadcast
+    * and the candidate stream flows through two broadcast hash joins; at
+    * full-corpus scale (or at `-1`) they plan as shuffled joins. */
   private def verifyCandidates(cand: DataFrame, shA: DataFrame, shB: DataFrame,
-      threshold: Double, broadcastShingles: Boolean): DataFrame = {
-    def side(sh: DataFrame, idAs: String, xsAs: String) = {
-      val s = sh.select(col("doc_id").as(idAs), col("xs").as(xsAs))
-      if (broadcastShingles) broadcast(s) else s
-    }
+      threshold: Double): DataFrame = {
+    def side(sh: DataFrame, idAs: String, xsAs: String) =
+      sh.select(col("doc_id").as(idAs), col("xs").as(xsAs))
     verified(cand
       .join(side(shA, "doc_a", "sa"), Seq("doc_a"))
       .join(side(shB, "doc_b", "sb"), Seq("doc_b")), threshold)
@@ -175,16 +176,9 @@ object Dedup {
     * makes `distinct()` compare array keys — measured ~10x slower at
     * sf0.1 on a self-similar corpus.)
     */
-  /** @param broadcastShingles hint the shingle table onto the verify
-    *        joins' build side: the candidate stream (the big side) then
-    *        flows through two broadcast hash joins and the arrays never
-    *        shuffle. Right whenever #docs x avg-shingles fits the
-    *        broadcast budget (a 10^6-doc partition easily does); flip
-    *        off at full-corpus scale and AQE plans the shuffled join. */
   def lshNearDupPairs(
       df: DataFrame, idCol: String, textCol: String,
-      k: Int, bands: Int, threshold: Double,
-      broadcastShingles: Boolean = false): DataFrame = {
+      k: Int, bands: Int, threshold: Double): DataFrame = {
     // hashed shingle set and band hashes once, inside the cache: the band
     // self-join and both verify joins read it, and under AQE Spark reuses
     // no exchange or broadcast over a cached or checkpointed leaf (the
@@ -203,7 +197,7 @@ object Dedup {
     val cand = bandRows(sh, "doc_a").join(bandRows(sh, "doc_b"), Seq("band", "bh"))
       .where(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b")).distinct()
-    verifyCandidates(cand, sh, sh, threshold, broadcastShingles)
+    verifyCandidates(cand, sh, sh, threshold)
   }
 
   /** The LSH operators' cache: (doc_id, xs = hashed shingle set, bhs =
@@ -229,30 +223,28 @@ object Dedup {
     * the general form is this A x B banding join: both corpora shingle
     * and band independently, candidates meet on the shared (band,
     * bandhash) equi-join — ids-only through the exchange, never
-    * all-pairs, neither side broadcast unless hinted — and the verify
-    * pass joins each side's shingles back once per distinct candidate
-    * pair. Same shuffle discipline and size-ratio prune as
+    * all-pairs, a side broadcast only under the size gate — and the
+    * verify pass joins each side's shingles back once per distinct
+    * candidate pair. Same shuffle discipline and size-ratio prune as
     * [[lshNearDupPairs]]. Output: (doc_a from A, doc_b from B, jaccard
     * >= threshold); ids may overlap across corpora (sides stay
     * distinct). */
   def lshCrossCorpusPairs(dfA: DataFrame, dfB: DataFrame, idCol: String,
-      textCol: String, k: Int, bands: Int, threshold: Double,
-      broadcastShingles: Boolean = false): DataFrame = {
+      textCol: String, k: Int, bands: Int, threshold: Double): DataFrame = {
     val shA = bandedShingles(dfA, idCol, textCol, k, bands)
     val shB = bandedShingles(dfB, idCol, textCol, k, bands)
     val cand = bandRows(shA, "doc_a").join(bandRows(shB, "doc_b"), Seq("band", "bh"))
       .select(col("doc_a"), col("doc_b")).distinct()
-    verifyCandidates(cand, shA, shB, threshold, broadcastShingles)
+    verifyCandidates(cand, shA, shB, threshold)
   }
 
   /** Decontaminate by cross-corpus LSH: drop every train doc near-dup
     * (jaccard >= threshold) with ANY eval doc — the anti-join over
     * [[lshCrossCorpusPairs]]'s distinct left ids. */
   def lshDecontaminate(train: DataFrame, evalDf: DataFrame, idCol: String,
-      textCol: String, k: Int, bands: Int, threshold: Double,
-      broadcastShingles: Boolean = false): DataFrame = {
+      textCol: String, k: Int, bands: Int, threshold: Double): DataFrame = {
     val dirty = lshCrossCorpusPairs(train, evalDf, idCol, textCol, k, bands,
-      threshold, broadcastShingles).select(col("doc_a")).distinct()
+      threshold).select(col("doc_a")).distinct()
     train.join(dirty, train(idCol) === dirty("doc_a"), "left_anti")
   }
 

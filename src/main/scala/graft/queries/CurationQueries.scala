@@ -687,7 +687,7 @@ object CurationQueries {
     * ##all), single-piece words, and genuine [UNK]s. Ids are list
     * positions (0-based); [UNK] takes the next free id. All pieces are
     * lowercase letters only — SQL-literal inert. */
-  val WpVocab: Seq[String] = Seq( // public: ScaleRehearsal reuses it
+  private val WpVocab: Seq[String] = Seq(
     // plain (word-initial)
     "join", "hash", "row", "batch", "scan", "custom", "col", "filter",
     "slow", "merge", "order", "vec", "line", "data", "table", "agg",

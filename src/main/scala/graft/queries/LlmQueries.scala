@@ -493,10 +493,11 @@ object LlmQueries {
          |  JOIN hxd sa ON sa.doc_id = p.doc_a
          |  JOIN hxd sb ON sb.doc_id = p.doc_b)
          |WHERE jaccard >= 0.35""".stripMargin) { (s, d) =>
-      // broadcastShingles: the sf-scale shingle table is ~20 MB — the 5M
-      // candidate pairs stream through broadcast joins, arrays never shuffle
+      // the verify joins follow the broadcast threshold: at sf0.1 the
+      // shingle cache's size estimate is under it, so the 5M candidate
+      // pairs stream through broadcast joins and the arrays never shuffle
       Dedup.lshNearDupPairs(Tables.documents(s, d), "doc_id", "text",
-        k = 8, bands = 4, threshold = 0.35, broadcastShingles = true)
+        k = 8, bands = 4, threshold = 0.35)
     },
 
     // ---- sentence-aware greedy chunk packing ----------------------------
@@ -833,8 +834,7 @@ object LlmQueries {
       val docs = Tables.documents(s, d)
       Dedup.lshCrossCorpusPairs(
         docs.where(col("source") =!= "src0"), docs.where(col("source") === "src0"),
-        "doc_id", "text", k = 8, bands = 4, threshold = 0.35,
-        broadcastShingles = true)
+        "doc_id", "text", k = 8, bands = 4, threshold = 0.35)
     },
 
     // ---- STREAMING LSH near-dup, driver-gate-proven ---------------------

@@ -29,7 +29,7 @@ object UnigramQueries {
       "te" -> 12L, "or" -> 11L, "ti" -> 10L, "ar" -> 9L, "al" -> 8L,
       "se" -> 8L) ++ ('a' to 'z').map(_.toString -> 5L)
 
-  val UgVocab: Seq[(String, Double)] = {
+  private val UgVocab: Seq[(String, Double)] = {
     val tot = UgVocabCnt.map(_._2).sum.toDouble
     UgVocabCnt.map { case (p, c) => p -> math.log(c / tot) }
   }

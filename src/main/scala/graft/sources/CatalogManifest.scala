@@ -550,8 +550,8 @@ object CatalogManifest {
   }
 
   /** Test observability: driver rows the last [[diffFp]] collected
-    * (added+changed names plus the per-status counts) — the scale
-    * rehearsal pins this O(changed), never O(catalog). */
+    * (added+changed names plus the per-status counts) — CatalogManifestSpec
+    * pins this O(changed), never O(catalog). */
   @volatile private[graft] var lastDiffCollected: Int = 0
 
   /** The old-vs-current fingerprint diff as a frame join — the
@@ -764,7 +764,7 @@ object CatalogManifest {
     * pushed path's combos + filter passes cost more than they save at
     * small scale — measured 0.33 s -> 0.96 s on the 120-store bench
     * fixture); above it the envelope prune runs inside the scan and
-    * the driver sees survivors only. Mutable for tests/rehearsals. */
+    * the driver sees survivors only. Mutable for tests only. */
   @volatile private[graft] var collectAllBelow: Int = 2048
 
   /** Phase-2 regime threshold on SURVIVOR coordinate cells: under it,
@@ -780,7 +780,7 @@ object CatalogManifest {
 
   /** Coordinate CELLS phase 2 drove to the driver on the last plan —
     * the distinct-group total, NOT survivors x axis length
-    * (test/rehearsal observability for the coords-off-driver claim). */
+    * (test observability for the coords-off-driver claim). */
   @volatile private[graft] var lastPhase2CoordCells: Long = -1L
 
   /** Plan a catalog open of `variables` from the manifest with ZERO
@@ -1198,22 +1198,18 @@ object CatalogManifest {
       manifestPath: String): Unit =
     if (fps.nonEmpty) checkFresh(spark, fps, manifestPath)
 
-  // ---- rehearsal hooks ----------------------------------------------------
-  // graft.ScaleRehearsal drives PLAN-ONLY paths over SYNTHETIC
-  // manifests (no stores on disk, so no fingerprint wave): publish a
-  // generated Entry table, plan from it, and read the observability
-  // counters. Not part of the public surface.
+  // ---- synthetic-manifest hook ---------------------------------------------
+  // Specs drive PLAN-ONLY paths over SYNTHETIC manifests (no stores on
+  // disk, so no fingerprint wave): publish a generated Entry table, plan
+  // from it, and read the observability counters. Not part of the public
+  // surface.
 
   private[graft] def publishEntries(spark: SparkSession,
       entries: Dataset[Entry], manifestPath: String): Unit =
     publish(spark, entries.toDF(), manifestPath)
 
   /** Plan-only over a synthetic manifest: (the metas, survivors, phase-1
-    * rows collected). The metas let a rehearsal HOLD the result and
-    * measure its live post-GC footprint — the host-independent form of
-    * the driver-memory claim (a peak-usage gauge also tracks
-    * GC-dependent collect transients, which scale with -Xmx, not with
-    * the result). */
+    * rows collected). */
   private[graft] def planLive(spark: SparkSession, manifestPath: String,
       variable: String, bounds: Map[String, (Double, Double)],
       timeBounds: Map[String, (String, String)])

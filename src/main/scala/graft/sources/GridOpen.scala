@@ -531,7 +531,7 @@ object GridOpen {
 
   /** Survivor count above which the per-store crop switches from the
     * pushed Or disjunction to the broadcast-join residual
-    * ([[storeCrop]]). Mutable for tests and rehearsals only. */
+    * ([[storeCrop]]). Mutable for tests only. */
   private[graft] var residualJoinAbove: Int = 256
 
   /** The `hulls` mount option for a join-form crop — the exact

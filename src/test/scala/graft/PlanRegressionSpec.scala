@@ -638,24 +638,68 @@ class PlanRegressionSpec extends SparkSpec {
 
   test("tfidf vocabulary join honors the size gate in both forced modes") {
     // the unconditional-broadcast scale bug (round-3 verdict): docFreq is
-    // vocabulary-sized and vocabularies are unbounded. Some(true) must
-    // broadcast, Some(false) must plan a shuffled hash join (the 100 TB
-    // setting); the default None leaves the choice to AQE's runtime
-    // byte budget.
+    // vocabulary-sized and vocabularies are unbounded, so the join carries
+    // no hint and the broadcast threshold alone decides. A high threshold
+    // must broadcast the vocabulary; -1 (the 100 TB setting) must not.
     import graft.functions.TextAnalysis
     val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
+    def plan(threshold: String): String = {
+      spark.conf.set(key, threshold)
+      TextAnalysis.tfidfTopTerms(docs, "doc_id", "text", 3).queryExecution.executedPlan.toString
+    }
     try {
-      val b = TextAnalysis.tfidfTopTerms(docs, "doc_id", "text", 3,
-        broadcastVocab = Some(true)).queryExecution.executedPlan.toString
-      assert(b.contains("BroadcastHashJoin"), s"forced broadcast lost:\n${b.take(1200)}")
-      assert(!b.contains("ShuffledHashJoin"), "forced broadcast still shuffles the vocab")
-      val sh = TextAnalysis.tfidfTopTerms(docs, "doc_id", "text", 3,
-        broadcastVocab = Some(false)).queryExecution.executedPlan.toString
-      assert(sh.contains("ShuffledHashJoin"), s"forced shuffle mode lost:\n${sh.take(1200)}")
+      val b = plan("1g")
+      assert(b.contains("BroadcastHashJoin"), s"vocab join not broadcast under a high threshold:\n${b.take(1200)}")
+      val sh = plan("-1")
       assert(!sh.contains("BroadcastHashJoin"),
-        "vocab must not broadcast in the forced-shuffle (100 TB) mode")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+        s"vocab must not broadcast at threshold -1 (the 100 TB setting):\n${sh.take(1200)}")
+    } finally {
+      saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
+  }
+
+  test("q28 and q154: the verify joins broadcast under the default threshold, " +
+    "shuffle at -1, and return the same pairs") {
+    // the LSH verify joins carry no hint: the broadcast threshold decides,
+    // as for the vocabulary join above. Read from each final adaptive plan.
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, HashJoin, SortMergeJoinExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case o => o.children.flatMap(nodes)
+    })
+    def onIds(keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      keys.map(_.sql).exists(k => k.contains("doc_a") || k.contains("doc_b"))
+    def run(q: String): (Set[(Long, Long)], Seq[SparkPlan]) = graft.core.Caching.scope(spark) {
+      val out = SparkEntry.queries(q)(spark, sf)
+      val pairs = out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      (pairs, nodes(out.queryExecution.executedPlan).filter {
+        case j: HashJoin => onIds(j.leftKeys)
+        case j: SortMergeJoinExec => onIds(j.leftKeys)
+        case _ => false
+      })
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    Seq("q28_lsh_neardup", "q154_lsh_cross_corpus").foreach { q =>
+      val (ref, bc) = run(q)
+      assert(ref.nonEmpty, s"$q returned no pairs")
+      assert(bc.size == 2 && bc.forall(_.isInstanceOf[BroadcastHashJoinExec]),
+        s"$q: want two broadcast verify joins, got $bc")
+      val saved = spark.conf.getOption(key)
+      spark.conf.set(key, "-1")
+      try {
+        val (pairs, sh) = run(q)
+        assert(sh.size == 2 && !sh.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+          s"$q at -1: want two shuffled verify joins, got $sh")
+        assert(pairs == ref, s"$q: pairs differ at -1")
+      } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
   }
 
   test("density-clustering candidate generation plans as an equi-join on cells") {

@@ -27,33 +27,60 @@ class CatalogManifestSpec extends SparkSpec {
     ByteStore.list(manifest).filter(e => e.isDir && e.name.startsWith("_gen-"))
       .map(e => genNumOf(e.name)).sorted
 
-  /** n zarr scene stores with per-store epochs (day i%28+1), a (time,
-    * x) grid — the ScaleRehearsal catalog shape, shrunk. */
-  private def writeZarrCatalog(dir: String, n: Int): Unit =
+  /** n zarr scene stores with per-store epochs (day i%28+1) and a
+    * (time, x) grid at hours 0, 6, 12, 18; `lwp` is one chunk, or one
+    * chunk per time step when `chunkPerStep`. */
+  private def writeZarrCatalog(dir: String, n: Int, chunkPerStep: Boolean = false): Unit =
     (0 until n).foreach { i =>
       val store = s"$dir/sc${"%03d".format(i)}.zarr"
       ByteStore.writeString(s"$store/.zgroup", """{"zarr_format": 2}""")
       def arr(name: String, shape: Seq[Int], dims: Seq[String],
-          data: Array[Double], extra: String = ""): Unit = {
+          data: Array[Double], extra: String = "", chunks: Option[Seq[Int]] = None): Unit = {
+        val ch = chunks.getOrElse(shape)
         ByteStore.writeString(s"$store/$name/.zarray",
           s"""{"zarr_format": 2, "shape": [${shape.mkString(",")}],
-             | "chunks": [${shape.mkString(",")}], "dtype": ">f8",
+             | "chunks": [${ch.mkString(",")}], "dtype": ">f8",
              | "compressor": null, "fill_value": "NaN", "filters": null,
              | "order": "C"}""".stripMargin)
         ByteStore.writeString(s"$store/$name/.zattrs",
           s"""{"_ARRAY_DIMENSIONS": [${dims.map("\"" + _ + "\"").mkString(",")}]$extra}""")
-        val bb = java.nio.ByteBuffer.allocate(data.length * 8)
-        data.foreach(bb.putDouble)
-        ByteStore.writeAllBytes(s"$store/$name/${shape.map(_ => "0").mkString(".")}",
-          bb.array())
+        // row-major chunks along the first axis only
+        val per = data.length / (shape.head / ch.head)
+        data.grouped(per).zipWithIndex.foreach { case (part, c) =>
+          val bb = java.nio.ByteBuffer.allocate(part.length * 8)
+          part.foreach(bb.putDouble)
+          ByteStore.writeAllBytes(s"$store/$name/${(c +: shape.tail.map(_ => 0)).mkString(".")}",
+            bb.array())
+        }
       }
       val day = 1 + i % 28
       arr("lwp", Seq(4, 3), Seq("time", "x"),
-        Array.tabulate(12)(j => i * 100.0 + j))
+        Array.tabulate(12)(j => i * 100.0 + j),
+        chunks = if (chunkPerStep) Some(Seq(1, 3)) else None)
       arr("time", Seq(4), Seq("time"), Array(0.0, 6.0, 12.0, 18.0),
         s""", "units": "hours since 2021-01-${"%02d".format(day)}"""")
       arr("x", Seq(3), Seq("x"), Array(0.0, 10.0, 20.0))
     }
+
+  test("a crop plans no more partitions than its surviving chunks, live and manifest-planned") {
+    val dir = Files.createTempDirectory("graft-manif-parts").toString
+    writeZarrCatalog(dir, 30, chunkPerStep = true)
+    val manifest = s"$dir/_manifest"
+    assert(CatalogManifest.build(spark, "zarr", dir, Seq("lwp"), manifest) == 30L)
+    val tb = Map("time" -> ("2021-01-11 02:00:00", "2021-01-13 23:00:00"))
+    // day 11 keeps its 06, 12 and 18 h chunks, days 12 and 13 all four;
+    // every other store and chunk is pruned
+    val surviving = 3 + 4 + 4
+    Seq(
+      "live" -> GridOpen.catalog(spark, GridFormat.Zarr, dir, "lwp", timeBounds = tb),
+      "manifest" -> GridOpen.catalogFromManifest(spark, manifest, "lwp", timeBounds = tb)
+    ).foreach { case (how, df) =>
+      assert(df.count() == surviving * 3L, how)
+      val parts = df.rdd.getNumPartitions
+      assert(parts >= 1 && parts <= surviving,
+        s"$how crop planned $parts partitions for $surviving surviving chunks")
+    }
+  }
 
   test("manifest-planned crop: zero reads on excluded stores, rows match the live open") {
     val dir = Files.createTempDirectory("graft-manif-z").toString

@@ -1,46 +1,77 @@
 #!/usr/bin/env python3
-"""Scale-rehearsal report: read the per-scale ScaleRehearsal JSON lines
-and print a table of per-op seconds, output rows, and fitted scaling
-exponents (least-squares slope of log t vs log multiplier, plus the
-work-normalized seconds-per-output-row trend for candidate-bound ops).
+"""Scale-curve report: read one graft.Bench runs record per multiplier and
+print, per query, wall seconds, executor CPU-seconds and jobs at each
+multiplier, with the fitted scaling exponents of wall and CPU time
+(least-squares slope of log t vs log multiplier).
 
-Usage: python3 tools/scale_report.py /tmp/scale_x1.full.log /tmp/scale_x3.full.log /tmp/scale_x10.full.log
+Each record is the SPARK_GRAFT_BENCH_RUNS_OUT file of a focused Bench run
+over scaledata/xM (tools/scale_gen.py); the multiplier is read from the
+record's "sf" path (".../x3.16"). A query with several runs reports the
+median run.
+
+Usage: python3 tools/scale_report.py scale_x1.json scale_x3.16.json [...]
 """
 import json
 import math
+import re
 import sys
 
 
+def median(xs):
+    xs = sorted(xs)
+    return xs[len(xs) // 2]
+
+
+def slope(xs, ys):
+    n = len(xs)
+    if n < 2:
+        return float("nan")
+    mx, my = sum(xs) / n, sum(ys) / n
+    den = sum((x - mx) ** 2 for x in xs)
+    return sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / den if den else float("nan")
+
+
+def load(path):
+    rec = json.load(open(path))
+    m = re.search(r"x(\d+(?:\.\d+)?)/?$", rec["sf"])
+    if not m:
+        sys.exit(f"{path}: cannot read a multiplier from sf {rec['sf']!r}")
+    return float(m.group(1)), rec
+
+
 def main(paths):
-    runs = {}  # op -> [(mult, seconds, rows)]
+    points = {}  # query -> {mult: (wall, cpu, jobs)}
+    headers = []
     for p in paths:
-        for line in open(p):
-            line = line.strip()
-            if not line.startswith('{"op"'):
+        mult, rec = load(p)
+        headers.append(f"x{mult:g}: cores {rec.get('cores')} (host {rec.get('host_cores')}), "
+                       f"broadcast threshold {rec.get('broadcast_threshold')}, "
+                       f"shuffle partitions {rec.get('shuffle_partitions')}")
+        for q, runs in rec["metrics"].items():
+            ok = [r for r in runs if r["wall_s"] >= 0]
+            if not ok:
                 continue
-            d = json.loads(line)
-            runs.setdefault(d["op"], []).append((d["mult"], d["seconds"], d["rows"]))
-    print(f"{'op':26} " + " ".join(f"{'x%g' % m:>10}" for m in sorted({m for v in runs.values() for m, _, _ in v}))
-          + f" {'t-expon':>8} {'rows-expon':>10} {'t/row-expon':>11}")
-    for op, pts in runs.items():
-        pts.sort()
-        ms = [math.log10(m) for m, _, _ in pts]
-        ts = [math.log10(s) for _, s, _ in pts]
-        rs = [math.log10(max(r, 1)) for _, _, r in pts]
-        def slope(xs, ys):
-            n = len(xs)
-            mx, my = sum(xs) / n, sum(ys) / n
-            den = sum((x - mx) ** 2 for x in xs)
-            return sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / den if den else float("nan")
-        a_t = slope(ms, ts)
-        a_r = slope(ms, rs)
-        a_tr = slope(ms, [t - r for t, r in zip(ts, rs)])
-        cells = " ".join(f"{s:>9.1f}s" for _, s, _ in pts)
-        print(f"{op:26} {cells} {a_t:>8.2f} {a_r:>10.2f} {a_tr:>11.2f}")
-    print("\nrows per scale:")
-    for op, pts in runs.items():
-        print(f"  {op:26} " + " ".join(f"{r:>12,}" for _, _, r in sorted(pts)))
+            walls = [r["wall_s"] for r in ok]
+            mid = ok[walls.index(median(walls))]
+            points.setdefault(q, {})[mult] = (mid["wall_s"], mid["cpu_s"], mid["jobs"])
+    mults = sorted({m for v in points.values() for m in v})
+    for h in headers:
+        print(h)
+    cols = " | ".join(f"x{m:g} wall s / CPU s / jobs" for m in mults)
+    print(f"| query | {cols} | wall exp | CPU exp |")
+    print("|---|" + "---|" * len(mults) + "---|---|")
+    for q in sorted(points):
+        pts = points[q]
+        cells = " | ".join(
+            f"{pts[m][0]:.2f} / {pts[m][1]:.2f} / {pts[m][2]}" if m in pts else "-" for m in mults)
+        ms = sorted(m for m in pts if pts[m][0] > 0 and pts[m][1] > 0)
+        lm = [math.log10(m) for m in ms]
+        a_w = slope(lm, [math.log10(pts[m][0]) for m in ms])
+        a_c = slope(lm, [math.log10(pts[m][1]) for m in ms])
+        print(f"| {q} | {cells} | {a_w:.2f} | {a_c:.2f} |")
 
 
 if __name__ == "__main__":
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
     main(sys.argv[1:])
