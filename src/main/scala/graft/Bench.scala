@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import scala.collection.mutable
 
@@ -41,10 +43,10 @@ import scala.collection.mutable
   * Next to the wall times, the runs record holds what host noise does not
   * move, measured through one listener (`Tally`): per query and run,
   * executor CPU-seconds, jobs, stages, tasks, shuffle read/write and
-  * input bytes, plus the 20 slowest stages of the run. Its header holds
-  * the local core count, the broadcast threshold and the shuffle
-  * partitions, so records taken under different settings are never
-  * compared blind.
+  * input bytes, plus the 20 slowest stages of the run, each with the
+  * call site of the action it ran under. Its header holds the local core
+  * count, the broadcast threshold and the shuffle partitions, so records
+  * taken under different settings are never compared blind.
   *
   * The scale curve is this harness over `tools/scale_gen.py` data
   * (`SPARK_GRAFT_SF_DIR=scaledata/xM`, the scale set in
@@ -171,8 +173,12 @@ object Bench {
       s"unknown query '$n' — known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
 
   /** One completed stage of a run: wall ms (submission to completion),
-    * task-duration median/max, executor CPU and the stage's bytes. */
-  private final case class StageRow(id: Int, name: String, tasks: Int, ms: Long,
+    * task-duration median/max, executor CPU and the stage's bytes.
+    * `execution` is the description of the SQL execution its job ran
+    * under (the action's call site, e.g. `count at Dedup.scala:472`), ""
+    * for a job outside one; it names the operator where `name` cannot,
+    * as every stage AQE submits is named after the same Spark frame. */
+  private final case class StageRow(id: Int, name: String, execution: String, tasks: Int, ms: Long,
       taskMsMed: Long, taskMsMax: Long, cpuS: Double,
       shuffleReadB: Long, shuffleWriteB: Long, inputB: Long)
 
@@ -185,13 +191,16 @@ object Bench {
     * one-task marker job and waits until its stage completes: the listener
     * bus delivers events in order, so every event posted before the
     * marker has been counted. The marker's own job, stage and task are
-    * not. */
+    * not. Each stage takes the description of its job's root SQL
+    * execution, posted before the job starts. */
   private final class Tally(sc: SparkContext) extends SparkListener {
     private val lock = new Object
     private var jobs, stages, tasks, cpuNs, shufR, shufW, inputB = 0L
     private val rows = mutable.ArrayBuffer.empty[StageRow]
     private val taskMs = mutable.HashMap.empty[Int, mutable.ArrayBuffer[Long]]
     private val markerStages = mutable.HashMap.empty[Int, String]
+    private val executions = mutable.HashMap.empty[Long, String]
+    private val stageExecution = mutable.HashMap.empty[Int, String]
     private var markersSeen = Set.empty[String]
     private var markerSeq = 0
     sc.addSparkListener(this)
@@ -200,8 +209,20 @@ object Bench {
       Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
         .filter(_.startsWith(Tally.MarkerPrefix)) match {
         case Some(marker) => e.stageIds.foreach(markerStages(_) = marker)
-        case None => jobs += 1
+        case None =>
+          jobs += 1
+          val root = Option(e.properties).flatMap(p =>
+            Option(p.getProperty(SQLExecution.EXECUTION_ROOT_ID_KEY))
+              .orElse(Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))))
+          val desc = root.flatMap(id => executions.get(id.toLong)).getOrElse("")
+          e.stageIds.foreach(stageExecution(_) = desc)
       }
+    }
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        lock.synchronized(executions(s.executionId) = s.description)
+      case _ =>
     }
 
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = lock.synchronized {
@@ -227,7 +248,8 @@ object Bench {
           stages += 1
           val ts = taskMs.remove(si.stageId).map(_.sorted).getOrElse(mutable.ArrayBuffer.empty[Long])
           val m = si.taskMetrics
-          rows += StageRow(si.stageId, si.name.takeWhile(_ != '\n'), si.numTasks,
+          rows += StageRow(si.stageId, si.name.takeWhile(_ != '\n'),
+            stageExecution.remove(si.stageId).getOrElse(""), si.numTasks,
             (for (s <- si.submissionTime; c <- si.completionTime) yield c - s).getOrElse(-1L),
             if (ts.isEmpty) 0L else ts(ts.size / 2), ts.lastOption.getOrElse(0L),
             m.executorCpuTime / 1e9, m.shuffleReadMetrics.totalBytesRead,
@@ -252,7 +274,7 @@ object Bench {
         val out = RunStats(jobs, stages, tasks, cpuNs / 1e9, shufR, shufW, inputB,
           rows.sortBy(-_.ms).take(20).toSeq)
         jobs = 0; stages = 0; tasks = 0; cpuNs = 0; shufR = 0; shufW = 0; inputB = 0
-        rows.clear(); taskMs.clear()
+        rows.clear(); taskMs.clear(); executions.clear(); stageExecution.clear()
         out
       }
     }
@@ -273,7 +295,8 @@ object Bench {
     val stages = st.slowest.map { r =>
       s"""{"id":${r.id},"ms":${r.ms},"tasks":${r.tasks},"task_ms_med":${r.taskMsMed},""" +
         s""""task_ms_max":${r.taskMsMax},"cpu_s":${r3(r.cpuS)},"shuffle_read_b":${r.shuffleReadB},""" +
-        s""""shuffle_write_b":${r.shuffleWriteB},"input_b":${r.inputB},"name":${jstr(r.name)}}"""
+        s""""shuffle_write_b":${r.shuffleWriteB},"input_b":${r.inputB},"name":${jstr(r.name)},""" +
+        s""""execution":${jstr(r.execution)}}"""
     }.mkString("[", ",", "]")
     s"""{"wall_s":${r3(wall)},"cpu_s":${r3(st.cpuS)},"jobs":${st.jobs},"stages":${st.stages},""" +
       s""""tasks":${st.tasks},"shuffle_read_b":${st.shuffleReadB},""" +

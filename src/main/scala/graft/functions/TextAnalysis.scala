@@ -7,9 +7,11 @@ import org.apache.spark.sql.functions._
   * tokenization, n-gram shingling, rolling-hash fingerprinting, language-ID
   * heuristics and quality scoring.
   *
-  * All functions are built from Spark's higher-order array functions and
-  * codegen'd built-ins — no UDFs — so they stay inside whole-stage codegen
-  * and distribute trivially (pure per-row work, no shuffle).
+  * No function is a UDF: each is built from Spark's codegen'd built-ins and
+  * higher-order array functions or is one of graft's native expressions
+  * (`graft.plans`: the whitespace tokenizer, [[polyHash]],
+  * [[nfcNormalize]]), so all stay inside whole-stage codegen and
+  * distribute trivially (pure per-row work, no shuffle).
   *
   * Cross-engine determinism notes (the DuckDB oracle recomputes these):
   * integer arithmetic only in hashes (mod 1e9+7 keeps products < 2^63),
@@ -20,10 +22,19 @@ object TextAnalysis {
 
   def normText(c: Column): Column = lower(trim(c))
 
-  /** Whitespace tokens of the normalized text. */
-  def tokens(c: Column): Column = split(normText(c), "\\s+")
+  /** Whitespace tokens of the normalized text: exactly
+    * `split(normText(c), "\\s+")`, in one native pass over the bytes
+    * ([[graft.plans.WhitespaceTokens]]). */
+  def tokens(c: Column): Column = {
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    column(graft.plans.WhitespaceTokens(expression(c)))
+  }
 
-  def tokenCount(c: Column): Column = size(tokens(c))
+  /** `size(tokens(c))` from the same pass, with no token array. */
+  def tokenCount(c: Column): Column = {
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    column(new graft.plans.WhitespaceTokenCount(expression(c)))
+  }
 
   /** Distinct character n-grams (shingles) of the raw text; empty array if
     * the text is shorter than n (guards Spark's descending `sequence`). */

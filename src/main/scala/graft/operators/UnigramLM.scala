@@ -150,7 +150,7 @@ object UnigramLM {
     val pre = graft.core.Caching.persist(
       df.select(col(idCol).as("doc_id"), col(textCol)), Seq("doc_id"),
       narrow = _.select(col("doc_id"),
-        posexplode(split(TextAnalysis.normText(col(textCol)), "\\s+"))
+        posexplode(TextAnalysis.tokens(col(textCol)))
           .as(Seq("pos", "tok")))).df
     // spread BELOW the distinct (its aggregation reuses the spread's
     // tok-keyed exchange — one exchange where distinct-then-respread
@@ -184,7 +184,7 @@ object UnigramLM {
   def roundTrip(df: DataFrame, idCol: String, textCol: String,
       vocab: Seq[(String, Double)], maxWordLen: Int): DataFrame = {
     val pre = df.select(col(idCol).as("doc_id"),
-      explode(split(TextAnalysis.normText(col(textCol)), "\\s+")).as("tok"))
+      explode(TextAnalysis.tokens(col(textCol))).as("tok"))
       .where(length(col("tok")).between(1, maxWordLen))
     val seg = pre.select("tok").distinct()
       .withColumn("ok",
@@ -212,7 +212,7 @@ object UnigramLM {
       cfg: TrainConfig = TrainConfig()): Seq[Piece] = {
     val spark = df.sparkSession
     val wordsC = graft.core.Caching.persist(df.select(
-      explode(split(TextAnalysis.normText(col(textCol)), "\\s+")).as("tok"))
+      explode(TextAnalysis.tokens(col(textCol))).as("tok"))
       .where(length(col("tok")).between(1, cfg.maxWordLen))
       .groupBy("tok").agg(count(lit(1)).as("wcnt")))
     val words = wordsC.df

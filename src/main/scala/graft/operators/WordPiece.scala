@@ -97,7 +97,7 @@ object WordPiece {
     val unkId = vocab.size.toLong
     val idMap = typedlit(vocabIds(vocab))
     val pre = df.select(col(idCol).as("doc_id"),
-      posexplode(split(TextAnalysis.normText(col(textCol)), "\\s+"))
+      posexplode(TextAnalysis.tokens(col(textCol)))
         .as(Seq("pos", "tok")))
     val seg = pre.select("tok").distinct()
       .withColumn("pieces", segment(col("tok"), vocab))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.core.Projection.{DegPerRad, RadPerDeg}
-import graft.functions.{DerivedVariables, Solar, UserFunctions}
+import graft.functions.{DerivedVariables, Solar, TextAnalysis, UserFunctions}
 import graft.operators.{RankStats, Sessionize}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -448,8 +448,8 @@ object PipelineQueries {
       }
       val S = 8
       val prepped = Tables.documents(s, d).select(col("doc_id"),
-        expr(s"transform(slice(split(lower(trim(text)), '\\\\s+'), 1, $S), " +
-          "t -> (17 * length(t) + ascii(t)) % 64)").as("ids"))
+        transform(slice(TextAnalysis.tokens(col("text")), 1, S),
+          t => (lit(17) * length(t) + ascii(t)) % 64).as("ids"))
         // parity with the oracle's `WHERE tok IS NOT NULL`: a null/empty
         // text row yields no tokens there and must yield no row here
         // (otherwise getSeq returns null -> NPE, and an all-zero mask

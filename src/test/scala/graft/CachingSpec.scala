@@ -1,9 +1,9 @@
 package graft
 
+import graft.SourceScan.offenders
 import graft.core.Caching
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import scala.jdk.CollectionConverters._
 
 /** Ownership contract of Caching.persist: release() drops ONLY caches
   * this call created, so an operator can never evict a frame its caller
@@ -15,24 +15,6 @@ import scala.jdk.CollectionConverters._
 class CachingSpec extends SparkSpec {
 
   private def cachedPlans: Int = org.apache.spark.sql.CachedPlans.count(spark)
-
-  /** `file:line: text` of every line under `root` matching `banned`,
-    * outside the `allowed` files. */
-  private def offenders(root: java.io.File, banned: scala.util.matching.Regex,
-      allowed: Set[java.io.File]): Seq[String] = {
-    assert(root.isDirectory, s"${root.getAbsolutePath} not found")
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val all = files(root)
-    allowed.foreach(a => assert(all.exists(_.getCanonicalFile == a.getCanonicalFile),
-      s"$a not found"))
-    for {
-      f <- all if !allowed.exists(_.getCanonicalFile == f.getCanonicalFile)
-      (line, i) <- java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex
-      if banned.findFirstIn(line).isDefined
-    } yield s"${root.toPath.relativize(f.toPath)}:${i + 1}: ${line.trim}"
-  }
 
   test("persist on an uncached plan owns it; release drops it") {
     val df = spark.range(100).toDF("x").select(col("x") * 2 as "y")

@@ -26,6 +26,13 @@ object HofForms {
           sqrt(aggregate(transform(centArr, c => c * c),
             lit(0.0), (acc, p) => acc + p))), 6)
 
+  /** [[TextAnalysis.tokens]]'s reference: Spark's regex split of the
+    * trimmed, lower-cased text. */
+  def tokensHof(c: Column): Column = split(lower(trim(c)), "\\s+")
+
+  /** [[TextAnalysis.tokenCount]]'s reference. */
+  def tokenCountHof(c: Column): Column = size(tokensHof(c))
+
   /** [[Dedup.shingleHashes]]'s reference. */
   def shingleHashesHof(textCol: Column, n: Int = 3): Column =
     sort_array(array_distinct(
@@ -46,7 +53,7 @@ object HofForms {
 
   /** [[Dedup.simhash16]]'s reference. */
   def simhash16Hof(textCol: Column): Column = {
-    val toks = array_distinct(TextAnalysis.tokens(textCol))
+    val toks = array_distinct(tokensHof(textCol))
     val hs = transform(toks, t => TextAnalysis.polyHash(t) % 65536)
     val n = size(toks)
     (0 until 16).map { j =>
@@ -96,7 +103,7 @@ object HofForms {
 
   /** [[TextAnalysis.tokenNgramHashesAll]]'s reference. */
   def tokenNgramHashesAllHof(c: Column, n: Int): Column = {
-    val toks = TextAnalysis.tokens(c)
+    val toks = tokensHof(c)
     when(size(toks) >= n,
       transform(sequence(lit(0), size(toks) - n),
         i => TextAnalysis.polyHash(concat_ws(" ", slice(toks, i + lit(1), lit(n))))))
