@@ -98,7 +98,8 @@ case class WhitespaceTokenCount(child: Expression, legacySizeOfNull: Boolean)
   * own expressions as the path for rows the byte pass does not handle. */
 sealed trait WhitespaceTokenKernel extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case st: StringType if st.collationId == CollationFactory.UTF8_BINARY_COLLATION_ID => TypeCheckResult.TypeCheckSuccess
+    case st: StringType if st.collationId == CollationFactory.UTF8_BINARY_COLLATION_ID =>
+      TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
       s"$prettyName needs a UTF8_BINARY string (no collation), got ${t.catalogString}")
   }
@@ -118,8 +119,8 @@ object WhitespaceTokens {
   /** The bytes Java's `\s` matches: `\t \n \x0B \f \r` and space. */
   private def isSpace(b: Byte): Boolean = b == 0x20 || (b >= 0x09 && b <= 0x0d)
 
-  /** The tokens of one row: the lower-cased bytes of its trimmed text
-    * and each token's [start, end) in them. */
+  /** The tokens of one row: its bytes, lower-cased, and each token's
+    * [start, end) in them. */
   private final class Cuts(n: Int) {
     val bytes = new Array[Byte](n)
     var starts = new Array[Int](16)
@@ -144,23 +145,23 @@ object WhitespaceTokens {
     while (from < to && s.getByte(from) == 0x20) from += 1
     while (to > from && s.getByte(to - 1) == 0x20) to -= 1
     var k = 0
-    var start = 0 // of the current token, relative to `from`
+    var start = from // of the current token
     var i = from
     while (i < to) {
       val b = s.getByte(i)
       if (b < 0) return -1
       if (isSpace(b)) {
-        if (cuts != null) cuts.add(k, start, i - from)
+        if (cuts != null) cuts.add(k, start, i)
         k += 1
         i += 1
         while (i < to && isSpace(s.getByte(i))) i += 1
-        start = i - from
+        start = i
       } else {
-        if (cuts != null) cuts.bytes(i - from) = if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
+        if (cuts != null) cuts.bytes(i) = if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
         i += 1
       }
     }
-    if (cuts != null) cuts.add(k, start, to - from)
+    if (cuts != null) cuts.add(k, start, to)
     k + 1
   }
 
