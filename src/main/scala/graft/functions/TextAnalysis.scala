@@ -23,18 +23,14 @@ object TextAnalysis {
   def normText(c: Column): Column = lower(trim(c))
 
   /** Whitespace tokens of the normalized text: exactly
-    * `split(normText(c), "\\s+")`, in one native pass over the bytes
+    * `split(normText(c), "\\s+")`, from one native loop over the bytes
     * ([[graft.plans.WhitespaceTokens]]). */
   def tokens(c: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     column(graft.plans.WhitespaceTokens(expression(c)))
   }
 
-  /** `size(tokens(c))` from the same pass, with no token array. */
-  def tokenCount(c: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-    column(new graft.plans.WhitespaceTokenCount(expression(c)))
-  }
+  def tokenCount(c: Column): Column = size(tokens(c))
 
   /** Distinct character n-grams (shingles) of the raw text; empty array if
     * the text is shorter than n (guards Spark's descending `sequence`). */

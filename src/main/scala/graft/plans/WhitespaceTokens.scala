@@ -4,33 +4,33 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, Lower, StringSplit, StringTrim, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, CollationFactory, GenericArrayData}
-import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Whitespace tokens of the normalized text — the native one-pass form of
+/** Whitespace tokens of the normalized text — the native form of
   * `split(lower(trim(c)), "\\s+")`, which `TextAnalysis.tokens` and every
   * tokenizing operator start from.
   *
   * Why native: Spark runs that split by decoding each row to a Java
   * `String`, compiling the `\s+` pattern again for every row and
   * re-encoding each token; the lower-case and trim before it copy the
-  * row twice more. This expression trims, lower-cases and splits in one
-  * pass over the UTF-8 bytes, and [[WhitespaceTokenCount]] counts the
-  * tokens of that pass without building the array.
+  * row twice more. This expression trims, lower-cases and splits with
+  * one loop over the UTF-8 bytes, run once to count the tokens and once
+  * more to store them.
   *
-  * Exactness: for ASCII rows the pass trims 0x20 at both ends (Spark's
+  * Exactness: for ASCII rows the loop trims 0x20 at both ends (Spark's
   * `trim`), lower-cases A–Z and cuts at maximal runs of the six bytes
   * Java's `\s` matches; like `String.split(_, -1)` it keeps a leading or
   * trailing `""` and gives `[""]` for an empty row. A row holding any
   * non-ASCII byte is evaluated by Spark's own `lower`/`trim`/`split`
-  * expressions, so its case mapping follows the session's settings.
-  * Only the default UTF8_BINARY string is accepted: a collated string
-  * lower-cases and splits by its collation, which this pass does not.
+  * expressions, so its case mapping follows the session's settings;
+  * such a row pays the counting loop up to that byte and allocates
+  * nothing before Spark's path. Only the default UTF8_BINARY string is
+  * accepted: a collated string lower-cases and splits by its collation,
+  * which this loop does not.
   */
-case class WhitespaceTokens(child: Expression) extends WhitespaceTokenKernel {
+case class WhitespaceTokens(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "whitespace_tokens"
 
@@ -50,53 +50,7 @@ case class WhitespaceTokens(child: Expression) extends WhitespaceTokenKernel {
   }
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
 
-/** `size(whitespace_tokens(c))` from the same pass, with no token array.
-  * A null row gives what Spark's `size` gives for a null array under the
-  * session's settings: -1 under `spark.sql.legacy.sizeOfNull` without
-  * ANSI, null otherwise (read when the column is built, as `size` does). */
-case class WhitespaceTokenCount(child: Expression, legacySizeOfNull: Boolean)
-    extends WhitespaceTokenKernel {
-  def this(child: Expression) = this(child, SQLConf.get.legacySizeOfNull)
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = !legacySizeOfNull && child.nullable
-  override def prettyName: String = "whitespace_token_count"
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) { if (legacySizeOfNull) -1 else null }
-    else {
-      val s = v.asInstanceOf[UTF8String]
-      val n = WhitespaceTokens.count(s)
-      if (n >= 0) n else reference(s).numElements()
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("wsTokenCount", this)
-    val c = child.genCode(ctx)
-    val onNull = if (legacySizeOfNull) s"${ev.value} = -1;" else s"${ev.isNull} = true;"
-    ev.copy(code = code"""
-      |${c.code}
-      |boolean ${ev.isNull} = false;
-      |int ${ev.value} = -1;
-      |if (${c.isNull}) {
-      |  $onNull
-      |} else {
-      |  ${ev.value} = graft.plans.WhitespaceTokens.count(${c.value});
-      |  if (${ev.value} < 0) ${ev.value} = $self.reference(${c.value}).numElements();
-      |}
-    """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** The shared shape of both forms: a UTF8_BINARY string in, and Spark's
-  * own expressions as the path for rows the byte pass does not handle. */
-sealed trait WhitespaceTokenKernel extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case st: StringType if st.collationId == CollationFactory.UTF8_BINARY_COLLATION_ID =>
       TypeCheckResult.TypeCheckSuccess
@@ -119,27 +73,11 @@ object WhitespaceTokens {
   /** The bytes Java's `\s` matches: `\t \n \x0B \f \r` and space. */
   private def isSpace(b: Byte): Boolean = b == 0x20 || (b >= 0x09 && b <= 0x0d)
 
-  /** The tokens of one row: its bytes, lower-cased, and each token's
-    * [start, end) in them. */
-  private final class Cuts(n: Int) {
-    val bytes = new Array[Byte](n)
-    var starts = new Array[Int](16)
-    var ends = new Array[Int](16)
-    def add(k: Int, start: Int, end: Int): Unit = {
-      if (k == starts.length) {
-        starts = java.util.Arrays.copyOf(starts, k * 2)
-        ends = java.util.Arrays.copyOf(ends, k * 2)
-      }
-      starts(k) = start
-      ends(k) = end
-    }
-  }
-
-  /** The one pass of both forms, over the bytes of `s` between its first
-    * and last non-0x20 byte: the number of tokens, or -1 at the first
-    * non-ASCII byte. With `cuts`, also lower-cases the bytes into it and
-    * records every token's [start, end). */
-  private def scan(s: UTF8String, cuts: Cuts): Int = {
+  /** One pass over the bytes of `s` between its first and last non-0x20
+    * byte: the number of tokens, or -1 at the first non-ASCII byte. With
+    * `out`, sized by a pass without it, also stores every token,
+    * lower-cased, in it. */
+  private def scan(s: UTF8String, out: Array[Any]): Int = {
     var from = 0
     var to = s.numBytes()
     while (from < to && s.getByte(from) == 0x20) from += 1
@@ -151,34 +89,36 @@ object WhitespaceTokens {
       val b = s.getByte(i)
       if (b < 0) return -1
       if (isSpace(b)) {
-        if (cuts != null) cuts.add(k, start, i)
+        if (out != null) out(k) = lowered(s, start, i)
         k += 1
         i += 1
         while (i < to && isSpace(s.getByte(i))) i += 1
         start = i
-      } else {
-        if (cuts != null) cuts.bytes(i) = if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
-        i += 1
-      }
+      } else i += 1
     }
-    if (cuts != null) cuts.add(k, start, to)
+    if (out != null) out(k) = lowered(s, start, to)
     k + 1
   }
 
-  /** The token count of `s`, or -1 if it holds a non-ASCII byte. */
-  def count(s: UTF8String): Int = scan(s, null)
+  /** Bytes [start, end) of the ASCII `s`, A–Z lower-cased, as a new string. */
+  private def lowered(s: UTF8String, start: Int, end: Int): UTF8String = {
+    val b = new Array[Byte](end - start)
+    var i = 0
+    while (i < b.length) {
+      val c = s.getByte(start + i)
+      b(i) = if (c >= 'A' && c <= 'Z') (c + 32).toByte else c
+      i += 1
+    }
+    UTF8String.fromBytes(b)
+  }
 
-  /** The tokens of `s`, or null if it holds a non-ASCII byte. */
+  /** The tokens of `s`, or null if it holds a non-ASCII byte: the count
+    * first, so such a row allocates nothing before Spark's path. */
   def tokens(s: UTF8String): ArrayData = {
-    val cuts = new Cuts(s.numBytes())
-    val n = scan(s, cuts)
+    val n = scan(s, null)
     if (n < 0) return null
     val out = new Array[Any](n)
-    var k = 0
-    while (k < n) {
-      out(k) = UTF8String.fromBytes(cuts.bytes, cuts.starts(k), cuts.ends(k) - cuts.starts(k))
-      k += 1
-    }
+    scan(s, out)
     new GenericArrayData(out)
   }
 }

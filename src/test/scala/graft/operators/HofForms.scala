@@ -30,9 +30,6 @@ object HofForms {
     * trimmed, lower-cased text. */
   def tokensHof(c: Column): Column = split(lower(trim(c)), "\\s+")
 
-  /** [[TextAnalysis.tokenCount]]'s reference. */
-  def tokenCountHof(c: Column): Column = size(tokensHof(c))
-
   /** [[Dedup.shingleHashes]]'s reference. */
   def shingleHashesHof(textCol: Column, n: Int = 3): Column =
     sort_array(array_distinct(

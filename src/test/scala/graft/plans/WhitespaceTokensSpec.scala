@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-/** The whitespace tokenizer (graft.plans.WhitespaceTokens and its count
-  * form) against Spark's regex split, the one tokenizer rule of main
-  * code, and the inputs the kernel refuses. */
+/** The whitespace tokenizer (graft.plans.WhitespaceTokens) against
+  * Spark's regex split, the one tokenizer rule of main code, and the
+  * inputs the kernel refuses. */
 class WhitespaceTokensSpec extends SparkSpec {
 
   private val params = SCTest.Parameters.default
@@ -43,24 +43,23 @@ class WhitespaceTokensSpec extends SparkSpec {
 
   private val schema = StructType(Seq(StructField("id", LongType), StructField("s", StringType)))
 
-  private def forms(rows: Seq[String]): Seq[Map[Long, (Any, Any)]] = {
+  private def forms(rows: Seq[String]): Seq[Map[Long, Any]] = {
     // RDD-backed: over a local Seq the optimizer would fold the
     // projection interpreted and codegen would never run
     val df = spark.createDataFrame(spark.sparkContext.parallelize(
       rows.zipWithIndex.map { case (s, i) => Row(i.toLong, s) }, 2), schema)
-    def eval(toks: Column => Column, count: Column => Column): Map[Long, (Any, Any)] =
-      df.select(col("id"), toks(col("s")), count(col("s"))).collect()
-        .map(r => r.getLong(0) -> (r.get(1), r.get(2))).toMap
-    val compiled = eval(TextAnalysis.tokens, TextAnalysis.tokenCount)
-    val interpreted = withoutCodegen(eval(TextAnalysis.tokens, TextAnalysis.tokenCount))
-    val ref = eval(HofForms.tokensHof, HofForms.tokenCountHof)
+    def eval(toks: Column => Column): Map[Long, Any] =
+      df.select(col("id"), toks(col("s"))).collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    val compiled = eval(TextAnalysis.tokens)
+    val interpreted = withoutCodegen(eval(TextAnalysis.tokens))
+    val ref = eval(HofForms.tokensHof)
     Seq(compiled, interpreted, ref)
   }
 
   private def show(s: String): String =
     if (s == null) "null" else s.flatMap(c => if (c < 0x20 || c > 0x7e) f"\\u${c.toInt}%04x" else c.toString)
 
-  test("tokens and tokenCount: codegen == interpreted == HofForms' regex split") {
+  test("tokens: codegen == interpreted == HofForms' regex split") {
     val res = SCTest.check(params, Prop.forAll(batch) { rows =>
       val Seq(compiled, interpreted, ref) = forms(rows)
       val broken = rows.indices.map(_.toLong).flatMap { id =>
@@ -81,36 +80,23 @@ class WhitespaceTokensSpec extends SparkSpec {
     val rows = Seq("", "   ", "\t", " \tAb  C\n ", "x\u001fY", null)
     val Seq(compiled, _, ref) = forms(rows)
     assert(compiled == ref)
-    def toks(i: Int) = compiled(i.toLong)._1.asInstanceOf[scala.collection.Seq[String]]
+    def toks(i: Int) = compiled(i.toLong).asInstanceOf[scala.collection.Seq[String]]
     assert(toks(0) == Seq("") && toks(1) == Seq(""))
     assert(toks(2) == Seq("", ""))
     assert(toks(3) == Seq("", "ab", "c", ""))
     assert(toks(4) == Seq("x\u001fy"))
-    assert(compiled(5L) == ((null, null)))
+    assert(compiled(5L) == null)
     // same type as Spark's split, so no schema changes
     val df = spark.range(1).select(lit("a b").as("s"))
     assert(df.select(TextAnalysis.tokens(col("s"))).schema.head.dataType ==
       df.select(HofForms.tokensHof(col("s"))).schema.head.dataType)
   }
 
-  test("tokenCount of null follows size() under the legacy sizeOfNull setting") {
-    val confs = Seq("spark.sql.ansi.enabled" -> "false", "spark.sql.legacy.sizeOfNull" -> "true")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(0L, null)), 1), schema)
-      val r = df.select(TextAnalysis.tokenCount(col("s")), HofForms.tokenCountHof(col("s"))).head()
-      assert(r.getInt(0) == -1 && r.getInt(1) == -1)
-      assert(withoutCodegen(df.select(TextAnalysis.tokenCount(col("s"))).head().getInt(0)) == -1)
-    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
-
   test("a collated string fails analysis, naming the kernel") {
     val df = spark.range(1).select(collate(lit("Ab C"), "UTF8_LCASE").as("t"))
-    Seq("whitespace_tokens" -> (TextAnalysis.tokens _),
-        "whitespace_token_count" -> (TextAnalysis.tokenCount _)).foreach { case (name, f) =>
+    Seq(TextAnalysis.tokens _, TextAnalysis.tokenCount _).foreach { f =>
       val e = intercept[AnalysisException](df.select(f(col("t"))).collect())
-      assert(e.getMessage.contains(name) && e.getMessage.contains("UTF8_BINARY"), e.getMessage)
+      assert(e.getMessage.contains("whitespace_tokens") && e.getMessage.contains("UTF8_BINARY"), e.getMessage)
     }
   }
 
